@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ops._
+import graft.sources.Parquet
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -172,7 +173,7 @@ object SparkEntry {
           Tables.events(s, d).select(col("event_id"), col("user_id"), col("value")),
           p, "user_id", "value")
       }
-      s.read.parquet(dir)
+      Parquet.read(s, dir)
         .filter(col("user_id").between(100, 163) && col("value") >= 50.0)
         .orderBy(col("event_id"))
     }),
@@ -390,7 +391,7 @@ object SparkEntry {
       val dir = java.nio.file.Files.createTempDirectory("graft-q-ivfpq").toString + "/idx"
       graft.vector.IvfPqIndex.build(s, Tables.embeddings(s, d), dir)
       artifactCache.putIfAbsent(s"ivfpq|$d", dir)
-      s.read.parquet(s"$dir/vectors")
+      Parquet.read(s, s"$dir/vectors")
         .agg(count(lit(1)).as("n_vectors"),
           countDistinct(col("vec_id")).as("n_distinct_ids"),
           sum(org.apache.spark.sql.functions.size(col("codes")).cast("long")).as("n_codes"))
@@ -450,7 +451,7 @@ object SparkEntry {
       graft.vector.IvfPqIndex.build(s, Tables.embeddings(s, d), dir,
         kmeansIters = 0, pqIters = 0)
       artifactCache.putIfAbsent(s"ivfpq0|$d", dir)
-      s.read.parquet(s"$dir/vectors")
+      Parquet.read(s, s"$dir/vectors")
         .agg(count(lit(1)).as("n_vectors"),
           countDistinct(col("vec_id")).as("n_distinct_ids"),
           sum(org.apache.spark.sql.functions.size(col("codes")).cast("long")).as("n_codes"))
@@ -581,7 +582,7 @@ object SparkEntry {
       // project the oracle-bound columns: the r13 sidecar layout adds a
       // bucket partition column and carries text_hash (md5 — not oracle
       // material here; the hash pipeline is pinned by the query twin)
-      s.read.parquet(s"$dir/sizes").select(col("doc_id"), col("n_sh"))
+      Parquet.read(s, s"$dir/sizes").select(col("doc_id"), col("n_sh"))
         .orderBy(col("doc_id"))
     }),
     // Incremental ingestion dedup QUERY: an arriving batch (every 10th doc
@@ -1238,7 +1239,7 @@ object SparkEntry {
       val dir = java.nio.file.Files.createTempDirectory("graft-q-nglm").toString + "/idx"
       graft.text.NgramLm.buildAt(s, Tables.documents(s, d), dir)
       artifactCache.putIfAbsent(s"ngramlm|$d", dir)
-      s.read.parquet(s"$dir/model").orderBy(col("kind"), col("key"))
+      Parquet.read(s, s"$dir/model").orderBy(col("kind"), col("key"))
     }),
     // Serve-from-artifact scoring — no retraining in the query. The
     // transcendental ppl column is spec-pinned (`NgramLmSpec`) and dropped
@@ -1714,7 +1715,7 @@ object SparkEntry {
         }), Duration.Inf)
       finally pool.shutdown()
       dirs.map { case (kind, dir) =>
-        val vecs = s.read.parquet(
+        val vecs = Parquet.read(s,
           graft.vector.ServeIndex.sidecarPath(dir) + "/vectors")
         val nCodes =
           if (kind == "ivf") sum(lit(0L)) // the ivf layout carries no codes column

@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.crm.CrmOps
 
@@ -30,14 +30,24 @@ object GraftApi {
     * defining dataflow (`handlers/base_handler.py:78-90`): every read tool
     * embeds its result rows and appends them to the vector index, so the
     * search tool can later retrieve anything a read tool has returned.
+    * The leg stores the page the tool returned, from one execution: the
+    * tool's plan runs once, and the append writes exactly the collected rows.
     */
   case class IndexSink(path: String, ingestDate: java.sql.Date,
       embedder: graft.vector.Embedder = new graft.vector.HashingEmbedder())
 
-  private def indexLeg(df: org.apache.spark.sql.DataFrame, textCol: String,
-      dataType: String, sink: Option[IndexSink]): Unit =
+  /** Run `df` once and return its rows typed; with a sink, index exactly
+    * those rows. The append reads a one-partition local frame: a
+    * `LocalTableScan` otherwise splits into `defaultParallelism` slices and
+    * writes one file per slice.
+    */
+  private def collectPage[T: Encoder](s: SparkSession, df: DataFrame, textCol: String,
+      dataType: String, sink: Option[IndexSink]): Seq[T] = {
+    val local = s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
     sink.foreach(k => graft.vector.IndexPipeline.indexRecords(
-      df, textCol, dataType, k.path, k.ingestDate, k.embedder))
+      local.coalesce(1), textCol, dataType, k.path, k.ingestDate, k.embedder))
+    local.as[T].collect().toSeq
+  }
 
   private def cursor(lastmod: String, id: String): String = s"$lastmod|$id"
 
@@ -45,8 +55,7 @@ object GraftApi {
       sink: Option[IndexSink] = None): Page[Company] = {
     import s.implicits._
     val df = CrmOps.activeCompanies(s, d, limit)
-    indexLeg(df, "name", "company", sink)
-    val rows = df.as[Company].collect().toSeq
+    val rows = collectPage[Company](s, df, "name", "company", sink)
     Page(rows, rows.size.toLong, rows.lastOption.map(c => cursor(c.hs_lastmodifieddate, c.id)))
   }
 
@@ -54,8 +63,7 @@ object GraftApi {
       sink: Option[IndexSink] = None): Page[Contact] = {
     import s.implicits._
     val df = CrmOps.activeContacts(s, d, limit)
-    indexLeg(df, "email", "contact", sink)
-    val rows = df.as[Contact].collect().toSeq
+    val rows = collectPage[Contact](s, df, "email", "contact", sink)
     Page(rows, rows.size.toLong, rows.lastOption.map(c => cursor(c.lastmodifieddate, c.id)))
   }
 
@@ -91,8 +99,7 @@ object GraftApi {
     val page = resumed
       .orderBy(col("hs_lastmodifieddate").desc, col("id").cast("long"))
       .limit(limit)
-    indexLeg(page, "subject", "ticket", sink)
-    val rows = page.as[Ticket].collect().toSeq
+    val rows = collectPage[Ticket](s, page, "subject", "ticket", sink)
     Page(rows, rows.size.toLong,
       if (rows.size < limit) None
       else rows.lastOption.map(t => cursor(t.hs_lastmodifieddate, t.id)))
@@ -115,8 +122,7 @@ object GraftApi {
       (ts, id)
     }
     val page = CrmOps.emailPage(s, d, limit, cur).drop("created_at_ts", "email_id")
-    indexLeg(page, "body", "email", sink)
-    val rows = page.as[Email].collect().toSeq
+    val rows = collectPage[Email](s, page, "body", "email", sink)
     Page(rows, rows.size.toLong,
       if (rows.size < limit) None
       else rows.lastOption.map(e => cursor(e.created_at, e.id)))
@@ -172,8 +178,7 @@ object GraftApi {
       case Some(tc) => tc.recentConversations(d, limit, refresh = refreshCache)._1
       case None => CrmOps.recentConversations(s, d, limit)
     }
-    indexLeg(df, "first_msg_truncated", "conversation", sink)
-    val rows = df.as[Conversation].collect().toSeq
+    val rows = collectPage[Conversation](s, df, "first_msg_truncated", "conversation", sink)
     Page(rows, rows.size.toLong, rows.lastOption.map(c => c.thread_id.toString))
   }
 
@@ -185,8 +190,7 @@ object GraftApi {
       sink: Option[IndexSink] = None): Page[ActivityRow] = {
     import s.implicits._
     val df = CrmOps.companyActivity(s, d, fanoutCap)
-    indexLeg(df, "content", "company_activity", sink)
-    val rows = df.as[ActivityRow].collect().toSeq
+    val rows = collectPage[ActivityRow](s, df, "content", "company_activity", sink)
     Page(rows, rows.size.toLong, None)
   }
 
@@ -198,8 +202,7 @@ object GraftApi {
       sink: Option[IndexSink] = None): Page[ThreadMessage] = {
     import s.implicits._
     val df = CrmOps.ticketConversationThreads(s, d, nTickets)
-    indexLeg(df, "text", "ticket_thread", sink)
-    val rows = df.as[ThreadMessage].collect().toSeq
+    val rows = collectPage[ThreadMessage](s, df, "text", "ticket_thread", sink)
     Page(rows, rows.size.toLong, None)
   }
 

@@ -1,6 +1,7 @@
 package graft.crm
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.sources.Parquet
 
 /** Thread snapshot cache (S13): the Spark-native form of the reference's
   * `ThreadStorage` (`core/storage.py:14-67`) + the serve-or-refresh policy
@@ -31,14 +32,14 @@ class ThreadCache(spark: SparkSession, cachePath: String) {
   def recentConversations(d: String, limit: Int = 10, refresh: Boolean = false,
       paginating: Boolean = false): (DataFrame, Boolean) = {
     if (!refresh && !paginating && snapshotExists)
-      (spark.read.parquet(cachePath), true)
+      (Parquet.read(spark, cachePath), true)
     else {
       val fresh = CrmOps.recentConversations(spark, d, limit)
       if (paginating) (fresh, false)
       else {
         // First page replaces the snapshot (storage.py:22-34 save path).
         fresh.write.mode(SaveMode.Overwrite).parquet(cachePath)
-        (spark.read.parquet(cachePath), false)
+        (Parquet.read(spark, cachePath), false)
       }
     }
   }

@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Parquet
 
 /** The persisted 64-bit-perceptual-hash ingest gate, factored out of the
   * image tier so every modality with a 64-char sign/bit fingerprint
@@ -116,7 +117,7 @@ private[multimodal] object Hash64Index {
     val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p))
-      Some(spark.read.parquet(s"$path/tombstones").select(col("doc_id")).distinct())
+      Some(Parquet.read(spark, s"$path/tombstones").select(col("doc_id")).distinct())
     else None
   }
 
@@ -142,12 +143,12 @@ private[multimodal] object Hash64Index {
     // never point-prune — see the build note), so compaction also folds
     // an interim bucketed probes table back to flat
     graft.sources.CompactSwap.rewrite(spark, path, "probes") { fresh =>
-      dropTombstoned(spark, path, spark.read.parquet(s"$path/probes"))
+      dropTombstoned(spark, path, Parquet.read(spark, s"$path/probes"))
         .drop(graft.sources.KeyedSidecar.BucketCol)
         .write.mode(SaveMode.ErrorIfExists).parquet(fresh)
     }
     graft.sources.CompactSwap.rewrite(spark, path, "hashes") { fresh =>
-      val kept = dropTombstoned(spark, path, spark.read.parquet(s"$path/hashes"))
+      val kept = dropTombstoned(spark, path, Parquet.read(spark, s"$path/hashes"))
       graft.sources.KeyedSidecar.write(kept, "doc_id", fresh, SaveMode.ErrorIfExists)
     }
     val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
@@ -180,7 +181,7 @@ private[multimodal] object Hash64Index {
     val fs = hashesPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(hashesPath),
       s"no hash index at $path — build(...) it before dedupIngest")
-    val residentHashes = spark.read.parquet(s"$path/hashes")
+    val residentHashes = Parquet.read(spark, s"$path/hashes")
     val ids = batchIds.select(col("doc_id")).localCheckpoint(true)
     // One row per doc_id, enforced (the VersionedStore.upsert contract):
     // duplicated ids inside one batch would evade the batch_dup tier and
@@ -233,7 +234,7 @@ private[multimodal] object Hash64Index {
     // partition column drops like lookup would.
     mark("candidates")
     val probes = dropTombstoned(spark, path,
-      spark.read.parquet(s"$path/probes")
+      Parquet.read(spark, s"$path/probes")
         .drop(graft.sources.KeyedSidecar.BucketCol))
     mark("probes-lookup")
     val probesCarryHash = probes.columns.contains("r_hash")

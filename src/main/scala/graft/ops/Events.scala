@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Num._
+import graft.sources.Parquet
 
 /** Event-stream analytics (SURVEY.md §2.10): the batch formulations of the
   * incremental/streaming shapes. The same transforms run under Structured
@@ -463,7 +464,7 @@ object Events {
     */
   def approxUsersOverRange(spark: org.apache.spark.sql.SparkSession, path: String,
       from: String, to: String): DataFrame =
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
       .filter(col("day").between(from, to))
       .groupBy(col("event_type"))
       .agg(hll_sketch_estimate(hll_union_agg(col("sketch"), lit(false)))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.Parquet
 
 /** Text-analysis operators over `documents` — the quality/filtering stage of
   * a training-data pipeline (builder-prompt scale extensions; the reference
@@ -102,7 +103,7 @@ object TextAnalysis {
     val curated = docs.join(scored, "doc_id").join(langs, "doc_id")
       .filter(col("quality") >= minQuality)
     curated.write.mode("overwrite").partitionBy("pred_lang").parquet(path)
-    curated.sparkSession.read.parquet(path)
+    Parquet.read(curated.sparkSession, path)
       .groupBy(col("pred_lang"))
       .agg(count(lit(1)).as("n_docs"))
       .orderBy(col("pred_lang"))

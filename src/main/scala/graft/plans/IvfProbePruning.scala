@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType}
 import graft.functions.FloatVecL2Sq
+import graft.sources.Parquet
 
 /** Access-path selection for kNN (SURVEY.md §4: the one "genuinely engine-y"
   * custom piece): a `Rule[LogicalPlan]` that recognizes the brute-force kNN
@@ -142,7 +143,7 @@ object IvfProbePruning extends Rule[LogicalPlan] {
     // Evict superseded versions of this path so rebuilds don't accumulate.
     cache.keySet.removeIf(k => k.startsWith(s"$sidecarPath@") && k != key)
     Some(cache.computeIfAbsent(key, _ =>
-      SparkSession.active.read.parquet(sidecarPath.toString).collect().map(decode)))
+      Parquet.read(SparkSession.active, sidecarPath.toString).collect().map(decode)))
   }
 }
 

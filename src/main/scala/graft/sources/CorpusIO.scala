@@ -125,6 +125,6 @@ object CorpusIO {
       .write.mode(SaveMode.Overwrite)
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .parquet(path)
-    df.sparkSession.read.parquet(path).count()
+    Parquet.read(df.sparkSession, path).count()
   }
 }

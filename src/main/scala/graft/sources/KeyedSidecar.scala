@@ -254,7 +254,7 @@ object KeyedSidecar {
     */
   private[graft] def lookup(spark: SparkSession, path: String, keyCol: String,
       keys: DataFrame, minPruneBytes: Long): DataFrame = {
-    val base = spark.read.parquet(path)
+    val base = Parquet.read(spark, path)
     val bucketed = base.columns.contains(BucketCol)
     def plain = if (bucketed) base.drop(BucketCol) else base
     if (tableBytes(spark, path) < minPruneBytes) return plain

@@ -62,7 +62,7 @@ object SnapshotStore {
   }
 
   private def meta(spark: SparkSession, path: String): Int =
-    spark.read.parquet(s"$path/meta").head().getAs[Int]("n_buckets")
+    Parquet.read(spark, s"$path/meta").head().getAs[Int]("n_buckets")
 
   /** Apply one batch of upserts and deletes. `upserts` rows replace
     * resident rows with the same doc_id (and insert new ids); `deletes`
@@ -79,7 +79,7 @@ object SnapshotStore {
       del.select(col("bucket")).distinct().collect())
       .map(_.getInt(0)).distinct.toSeq
     if (dirty.isEmpty) return
-    val resident = spark.read.parquet(s"$path/snapshot")
+    val resident = Parquet.read(spark, s"$path/snapshot")
       .filter(col("bucket").isin(dirty: _*))
     // keep-latest merge inside the dirty slice: resident rows lose to a
     // same-id upsert (left_anti), then the batch unions in; deletes drop
@@ -127,5 +127,5 @@ object SnapshotStore {
 
   /** Read the current snapshot (without the layout's bucket column). */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/snapshot").drop("bucket")
+    Parquet.read(spark, s"$path/snapshot").drop("bucket")
 }

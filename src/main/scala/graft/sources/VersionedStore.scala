@@ -322,9 +322,8 @@ object VersionedStore {
       owner: Map[Int, String]): DataFrame = {
     require(owner.nonEmpty, "empty snapshot")
     owner.groupBy(_._2).toSeq.sortBy(_._1).map { case (d, entries) =>
-      spark.read.option("basePath", s"$path/files/$d")
-        .parquet(entries.keys.toSeq.sorted
-          .map(b => s"$path/files/$d/bucket=$b"): _*)
+      Parquet.readUnder(spark, s"$path/files/$d",
+        entries.keys.toSeq.sorted.map(b => s"$path/files/$d/bucket=$b"))
     }.reduce(_ unionByName _)
   }
 

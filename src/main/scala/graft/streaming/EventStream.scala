@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
+import graft.sources.Parquet
 
 /** Structured Streaming generalization of the reference's incremental
   * surfaces (SURVEY.md §2.10): pagination-token resume becomes source
@@ -377,7 +378,7 @@ object EventStream {
       fs.exists(p)
     } && {
       val mx = graft.sources.RetryingIO.withRetry(s"replayedAlready($verdictPath) read") {
-        spark.read.parquet(verdictPath)
+        Parquet.read(spark, verdictPath)
           .agg(org.apache.spark.sql.functions.max(col("batch_id"))).head
       }
       !mx.isNullAt(0) && {

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Parquet
 
 /** Persisted inverted index — the at-scale serving path for term search.
   * The scan-based family (`TextAnalysis.searchDocs`/`tfidfSearch`/
@@ -107,7 +108,7 @@ object InvertedIndex {
   }
 
   private def meta(spark: SparkSession, path: String): Int =
-    spark.read.parquet(s"$path/meta").head().getAs[Int]("n_buckets")
+    Parquet.read(spark, s"$path/meta").head().getAs[Int]("n_buckets")
 
   /** Logical deletes — the Lucene deleted-docs model: removing a doc from
     * its posting lists in place would rewrite every bucket its terms hash
@@ -132,7 +133,7 @@ object InvertedIndex {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/tombstones")))
-      Some(spark.read.parquet(s"$path/tombstones").select(col("doc_id")).distinct())
+      Some(Parquet.read(spark, s"$path/tombstones").select(col("doc_id")).distinct())
     else None
   }
 
@@ -163,7 +164,7 @@ object InvertedIndex {
     // append id-gate table): a mid-compaction crash keeps deleted ids
     // burned — conservative failure, like the LshIndex/PhashIndex order.
     graft.sources.CompactSwap.rewrite(spark, path, "postings") { fresh =>
-      dropTombstoned(spark, path, spark.read.parquet(s"$path/postings"))
+      dropTombstoned(spark, path, Parquet.read(spark, s"$path/postings"))
         .repartition(col("bucket"))
         .write.mode(SaveMode.ErrorIfExists)
         .option("maxRecordsPerFile", graft.vector.IvfIndex.MaxRecordsPerCellFile)
@@ -172,7 +173,7 @@ object InvertedIndex {
     graft.sources.CompactSwap.rewrite(spark, path, "doclens") { fresh =>
       // size-adaptive rewrite: a flat doclens that outgrew the prune
       // threshold via appends upgrades to the bucketed layout here
-      val kept = dropTombstoned(spark, path, spark.read.parquet(s"$path/doclens"))
+      val kept = dropTombstoned(spark, path, Parquet.read(spark, s"$path/doclens"))
       graft.sources.KeyedSidecar.write(kept, "doc_id", fresh, SaveMode.ErrorIfExists)
     }
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -198,7 +199,7 @@ object InvertedIndex {
     val nBuckets = meta(spark, path)
     val buckets = termBuckets(spark, terms, nBuckets).values.toSeq.distinct
     dropTombstoned(spark, path,
-      spark.read.parquet(s"$path/postings")
+      Parquet.read(spark, s"$path/postings")
         .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*)))
   }
 
@@ -240,7 +241,7 @@ object InvertedIndex {
     // doclens feeds n_docs/avgdl — tombstoned docs must leave the stats
     // too, or served BM25 would drift from the scan over the live corpus
     val doclens = dropTombstoned(spark, path,
-      spark.read.parquet(s"$path/doclens"))
+      Parquet.read(spark, s"$path/doclens"))
     val distinctTerms = terms.distinct
     val pruned = prunedPostings(spark, path, distinctTerms).localCheckpoint(true)
     // pivot the matched postings to one row per doc with per-term tfs,

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Dedup
+import graft.sources.Parquet
 
 /** Persisted MinHash-LSH index — incremental corpus ingestion's dedup
   * gate. The batch operators (`ops.Dedup`) recompute signatures over the
@@ -225,7 +226,7 @@ object LshIndex {
     // non-merging readers would miss the new rows' hashes). Layout
     // (bucketed vs flat) is KeyedSidecar.write's job, orthogonal to this.
     val residentSizesCarryHash =
-      spark.read.parquet(s"$path/sizes").columns.contains("text_hash")
+      Parquet.read(spark, s"$path/sizes").columns.contains("text_hash")
     val fpRows = Dedup.winnowFingerprints(batch)
       .select(col("doc_id"), explode(col("fps")).as("fp"))
     // shingles/sizes/winnow are mutually independent batch-sized writes
@@ -268,7 +269,7 @@ object LshIndex {
     val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p))
-      Some(spark.read.parquet(s"$path/tombstones").select(col("doc_id")).distinct())
+      Some(Parquet.read(spark, s"$path/tombstones").select(col("doc_id")).distinct())
     else None
   }
 
@@ -310,7 +311,7 @@ object LshIndex {
     // file-size-honest); bands keep their own band_id-partitioned shape
     def rewrite(table: String, key: String, partitioned: Boolean = false): Unit =
       graft.sources.CompactSwap.rewrite(spark, path, table) { fresh =>
-        val kept = dropTombstoned(spark, path, spark.read.parquet(s"$path/$table"))
+        val kept = dropTombstoned(spark, path, Parquet.read(spark, s"$path/$table"))
         if (partitioned) bandPartitioned(kept).write.mode(SaveMode.ErrorIfExists)
           .option("maxRecordsPerFile", graft.vector.IvfIndex.MaxRecordsPerCellFile)
           .option("parquet.page.row.count.limit", KeyedSidecar.PageRowLimit.toString)
@@ -371,7 +372,7 @@ object LshIndex {
       bBands: DataFrame): DataFrame = {
     import graft.sources.KeyedSidecar
     val bandsPath = s"$path/bands"
-    val full = spark.read.parquet(bandsPath)
+    val full = Parquet.read(spark, bandsPath)
     val pruneBytes = sys.props.get("graft.lsh.bandsPruneBytes").map(_.toLong)
       .getOrElse(BandsPruneBytes)
     if (KeyedSidecar.tableBytesOf(spark, bandsPath) < pruneBytes)
@@ -397,7 +398,7 @@ object LshIndex {
     keys.toSeq.sortBy(_._1)
       .filter { case (b, _) => bandDirs.contains(b.toString) }
       .map { case (b, ks) =>
-        spark.read.parquet(s"$bandsPath/band_id=$b")
+        Parquet.read(spark, s"$bandsPath/band_id=$b")
           .filter(col("band_key").isin(ks.toSeq: _*))
           .select(col("doc_id"), lit(b).cast(bandIdType).as("band_id"), col("band_key"))
       }
@@ -426,7 +427,7 @@ object LshIndex {
     // semi-join enforces the restriction on every fallback path.
     val authority =
       if (hasIds) graft.sources.KeyedSidecar.lookup(spark, s"$path/ids", "doc_id", batchIds)
-      else spark.read.parquet(s"$path/hashes").select(col("doc_id"))
+      else Parquet.read(spark, s"$path/hashes").select(col("doc_id"))
     val clash = authority
       .join(batchIds.hint("broadcast"), Seq("doc_id"), "left_semi")
       .limit(5).collect()
@@ -546,7 +547,7 @@ object LshIndex {
     val withHashes =
       if (sizesCarryHash) scored.join(bHashes.hint("broadcast"), "batch_doc_id")
       else guarded(scored.join(bHashes.hint("broadcast"), "batch_doc_id"))
-        .join(spark.read.parquet(s"$path/hashes")
+        .join(Parquet.read(spark, s"$path/hashes")
           .select(col("doc_id").as("resident_doc_id"), col("text_hash").as("r_hash")),
           "resident_doc_id")
     withHashes

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Parquet
 
 /** CCNet-style n-gram language-model quality filter (Wenzek et al. 2020):
   * train a pruned bigram LM with stupid backoff (Brants et al. 2007) on a
@@ -129,7 +130,7 @@ object NgramLm {
     * DataFrame-backed path for anything larger without materializing.
     */
   def load(spark: SparkSession, path: String): LmModel = {
-    val t = spark.read.parquet(s"$path/model")
+    val t = Parquet.read(spark, s"$path/model")
     def part(kind: String) = t.filter(col("kind") === kind)
       .orderBy(col("cnt").desc, col("key"))
       .collect().map(r => (r.getAs[String]("key"), r.getAs[Long]("cnt")))
@@ -191,7 +192,7 @@ object NgramLm {
 
   private def scoredUnsortedFrom(spark: SparkSession, docs: DataFrame,
       path: String): DataFrame = {
-    val t = spark.read.parquet(s"$path/model")
+    val t = Parquet.read(spark, s"$path/model")
     // Two driver scalars (entry count + total), the bounded-artifact rule.
     val meta = t.agg(
       sum(when(col("kind") =!= "total", 1L).otherwise(0L)).as("entries"),

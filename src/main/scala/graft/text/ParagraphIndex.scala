@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Parquet
 
 /** Persisted paragraph-hash index — the incremental (shard-at-a-time) form
   * of [[graft.ops.Curation.paragraphDedup]], which is exactly how CCNet
@@ -122,7 +123,7 @@ object ParagraphIndex {
   def delete(spark: SparkSession, path: String, docIds: Seq[Long]): Unit = {
     recover(spark, path)
     graft.sources.CompactSwap.rewrite(spark, path, "hashes") { dst =>
-      val kept = spark.read.parquet(s"$path/hashes")
+      val kept = Parquet.read(spark, s"$path/hashes")
         .filter(!col("first_doc").isin(docIds: _*))
       graft.sources.KeyedSidecar.write(kept, "norm", dst, SaveMode.Overwrite)
     }

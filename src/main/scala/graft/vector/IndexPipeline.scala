@@ -2,6 +2,7 @@ package graft.vector
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Parquet
 
 /** The defining dataflow of the reference (SURVEY.md §3.2 step 6): every
   * read tool embeds its result rows and appends them to the vector index;
@@ -15,6 +16,12 @@ object IndexPipeline {
     * `faiss_manager.py:221-252`). `data_json` keeps the full record
     * (dual-fidelity: the index stores full text even when the tool response
     * truncates, `handlers/conversation_handler.py:63-67`).
+    *
+    * The read tools pass the page they returned, already collected, as a
+    * one-partition local frame: the index stores the page the tool
+    * returned, from one execution of the tool's plan, and the append is
+    * the call's only extra Spark job. A null text stores a null embedding;
+    * every search skips such rows.
     */
   def indexRecords(records: DataFrame, textCol: String, dataType: String,
       indexPath: String, ingestDate: java.sql.Date,
@@ -66,7 +73,7 @@ object IndexPipeline {
       val idx = anchor match {
         case Some(d) => VectorIndex.loadRecent(spark, indexPath, d)
         case None => // empty/legacy layout: nothing to prune; deletes still honored
-          VectorIndex.dropTombstoned(spark, indexPath, spark.read.parquet(indexPath))
+          VectorIndex.dropTombstoned(spark, indexPath, Parquet.read(spark, indexPath))
       }
       VectorIndex.search(idx, qv, k)
     }
@@ -110,11 +117,12 @@ object IndexPipeline {
     val idx = anchor match {
       case Some(d) => VectorIndex.loadRecent(spark, indexPath, d)
       case None =>
-        VectorIndex.dropTombstoned(spark, indexPath, spark.read.parquet(indexPath))
+        VectorIndex.dropTombstoned(spark, indexPath, Parquet.read(spark, indexPath))
     }
     val q = qEmbedded
-    val corpus = idx.select(col("vec_id"), col("embedding"), col("data_type"),
-      col("data_json"))
+    // a row without an embedding (a null indexed text) never ranks
+    val corpus = idx.filter(col("embedding").isNotNull)
+      .select(col("vec_id"), col("embedding"), col("data_type"), col("data_json"))
     q.crossJoin(corpus)
       .withColumn("d2", l2Sq(col("q_emb"), col("embedding")))
       .groupBy(col("query_id"))

@@ -3,6 +3,7 @@ package graft.vector
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
+import graft.sources.Parquet
 
 /** Physical IVF index: the at-scale layout behind ops.Similarity.ivfSearch.
   *
@@ -268,7 +269,7 @@ object IvfIndex {
   def appendBatch(spark: SparkSession, batch: DataFrame, path: String,
       ingestDate: java.sql.Date = DefaultIngestDate): Unit = {
     recover(spark, path)
-    val centroids = spark.read.parquet(s"$path/centroids")
+    val centroids = Parquet.read(spark, s"$path/centroids")
       .select(col("cid"), col("c_embedding"))
     val dated = (
       if (batch.columns.contains("ingest_date")) assign(batch, centroids)
@@ -312,7 +313,7 @@ object IvfIndex {
     val fs = radiiPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val existing =
       if (fs.exists(radiiPath))
-        spark.read.parquet(s"$path/radii").collect()
+        Parquet.read(spark, s"$path/radii").collect()
           .map(r => r.getAs[Long]("cid") -> r.getAs[Double]("radius")).toMap
       else Map.empty[Long, Double]
     import spark.implicits._
@@ -391,7 +392,7 @@ object IvfIndex {
       rounds: Int = 3): Seq[graft.ops.Similarity.KmeansRound] = {
     recover(spark, path)
     val wasDateMajor = layoutDateMajor(spark, path)
-    val resident = dropTombstoned(spark, path, spark.read.parquet(s"$path/vectors"))
+    val resident = dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
       .select(col("vec_id"), col("label"), col("embedding"), col("ingest_date"))
       .localCheckpoint(true) // consumed by training rounds AND the rewrite
     val (cents, stats) = graft.ops.Similarity.kmeansTrain(resident, nCells, rounds)
@@ -424,7 +425,7 @@ object IvfIndex {
     val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p))
-      Some(spark.read.parquet(s"$path/tombstones").select(col("vec_id")).distinct())
+      Some(Parquet.read(spark, s"$path/tombstones").select(col("vec_id")).distinct())
     else None
   }
 
@@ -454,7 +455,7 @@ object IvfIndex {
     if (tombstones(spark, path).isEmpty) return
     val wasDateMajor = layoutDateMajor(spark, path)
     graft.sources.CompactSwap.rewrite(spark, path, "vectors") { fresh =>
-      writeCells(dropTombstoned(spark, path, spark.read.parquet(s"$path/vectors")),
+      writeCells(dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors")),
         fresh, SaveMode.ErrorIfExists, dateMajor = wasDateMajor)
     }
     // Fold tombstones out of the id sidecar too (AFTER vectors: a crash
@@ -465,7 +466,7 @@ object IvfIndex {
     if (idsP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(idsP))
       graft.sources.CompactSwap.rewrite(spark, path, "ids") { fresh =>
         graft.sources.KeyedSidecar.write(
-          dropTombstoned(spark, path, spark.read.parquet(s"$path/ids"))
+          dropTombstoned(spark, path, Parquet.read(spark, s"$path/ids"))
             .select(col("vec_id")),
           "vec_id", fresh, SaveMode.ErrorIfExists)
       }
@@ -490,7 +491,7 @@ object IvfIndex {
     */
   def cellBalance(spark: SparkSession, path: String): DataFrame = {
     recover(spark, path)
-    val cells = spark.read.parquet(s"$path/centroids")
+    val cells = Parquet.read(spark, s"$path/centroids")
       .select(col("cid").cast("long").as("cell")).distinct()
     // The partition column discovers as int; normalize to long so the
     // audit's schema matches the operator form's. With no tombstone log,
@@ -498,7 +499,7 @@ object IvfIndex {
     // is empty (row counts come from parquet row-group metadata, no data
     // pages decoded); only a pending tombstone fold needs the vec_id
     // column for its anti-join.
-    val base = spark.read.parquet(s"$path/vectors")
+    val base = Parquet.read(spark, s"$path/vectors")
     val counts = (tombstones(spark, path) match {
       case Some(t) => base.select(col("vec_id"), col("cell").cast("long").as("cell"))
         .join(broadcast(t), Seq("vec_id"), "left_anti")
@@ -543,7 +544,7 @@ object IvfIndex {
   private def miningFront(spark: SparkSession, path: String, anchors: DataFrame,
       nProbe: Int): (org.apache.spark.sql.Column, DataFrame, Int) = {
     recover(spark, path)
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = Parquet.read(spark, s"$path/centroids")
       .select(col("cid").cast("int").as("cid"), col("c_embedding"))
       .collect().map(r => (r.getInt(0), r.getSeq[Float](1)))
     require(cents.nonEmpty, s"no centroid sidecar under $path — not a built index")
@@ -559,10 +560,10 @@ object IvfIndex {
     // instead of the whole cells×dates tree (the dedupIngest convention)
     val residentBase = probedCellDirs(spark, path, probed) match {
       case Some(dirs) if dirs.nonEmpty =>
-        spark.read.option("basePath", s"$path/vectors").parquet(dirs: _*)
+        Parquet.readUnder(spark, s"$path/vectors", dirs)
       case Some(_) => anchors.select(col("vec_id"), col("embedding"),
         col("label"), lit(0L).cast("int").as("cell")).limit(0)
-      case None => spark.read.parquet(s"$path/vectors")
+      case None => Parquet.read(spark, s"$path/vectors")
     }
     val resident = dropTombstoned(spark, path, residentBase)
       .select(col("vec_id").as("c_vec_id"), col("embedding").as("c_emb"),
@@ -650,7 +651,7 @@ object IvfIndex {
     * (see [[assign]]).
     */
   private def probeCellsExpr(spark: SparkSession, path: String, nProbe: Int): org.apache.spark.sql.Column = {
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = Parquet.read(spark, s"$path/centroids")
       .select(col("cid").cast("long"), col("c_embedding"))
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
     orderedCellCids(col("embedding"), cents, nProbe)
@@ -677,7 +678,7 @@ object IvfIndex {
     val probeCells = probeCellsExpr(spark, path, nProbe)
     val q = queries.select(col("vec_id").as("q_vec_id"), col("embedding").as("q_emb"),
       explode(probeCells).as("cell"))
-    val base = dropTombstoned(spark, path, spark.read.parquet(s"$path/vectors"))
+    val base = dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
     val windowed =
       if (asOf == null) base
       else base.filter(col("ingest_date") > date_sub(lit(asOf), maxDays) &&
@@ -708,14 +709,14 @@ object IvfIndex {
       radius: Double, asOf: java.sql.Date = null,
       maxDays: Int = VectorIndex.RetentionDays): DataFrame = {
     recover(spark, path)
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = Parquet.read(spark, s"$path/centroids")
       .select(col("cid").cast("long"), col("c_embedding"))
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
     val radiiPath = new org.apache.hadoop.fs.Path(s"$path/radii")
     val fs = radiiPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val radii: Map[Long, Double] =
       if (fs.exists(radiiPath))
-        spark.read.parquet(s"$path/radii").collect()
+        Parquet.read(spark, s"$path/radii").collect()
           .map(r => r.getAs[Long]("cid") -> r.getAs[Double]("radius")).toMap
       else Map.empty
     def l2(a: Seq[Float], b: Seq[Float]): Double =
@@ -724,7 +725,7 @@ object IvfIndex {
     val qualifying = cents.collect {
       case (cid, c) if l2(c, query) - radii.getOrElse(cid, Double.MaxValue) <= radius => cid
     }
-    val base = dropTombstoned(spark, path, spark.read.parquet(s"$path/vectors"))
+    val base = dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
       .filter(col("cell").isin(qualifying: _*)) // partition pruning on disk
     val windowed =
       if (asOf == null) base
@@ -747,12 +748,12 @@ object IvfIndex {
       maxDays: Int = VectorIndex.RetentionDays): DataFrame = {
     recover(spark, path)
     val q = lit(query.toArray)
-    val probed = spark.read.parquet(s"$path/centroids")
+    val probed = Parquet.read(spark, s"$path/centroids")
       .withColumn("qd2", l2Sq(col("c_embedding"), q))
       .orderBy(col("qd2"), col("cid"))
       .limit(nProbe)
       .select(col("cid")).collect().map(_.getLong(0))
-    val base = dropTombstoned(spark, path, spark.read.parquet(s"$path/vectors"))
+    val base = dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
       .filter(col("cell").isin(probed: _*)) // partition pruning: only probed dirs read
     val windowed =
       if (asOf == null) base
@@ -812,7 +813,7 @@ object IvfIndex {
     // measured 100×-resident wall) that the sidecar-gated path never
     // needs — the cosine tier below lists ONLY the probed cell
     // directories.
-    def fullVectors = spark.read.parquet(s"$path/vectors")
+    def fullVectors = Parquet.read(spark, s"$path/vectors")
     // one batch materialization feeds every tier (the LshIndex.ingestBatch
     // r14 move): losers, candidates, the probe fan-out, the survivor
     // append and the report each replanned the caller's source scan +
@@ -871,7 +872,7 @@ object IvfIndex {
     // cells×dates tree; the value filter stays as the semantic guard.
     val residentProbed = probedCellDirs(spark, path, probedCells) match {
       case Some(dirs) if dirs.nonEmpty =>
-        spark.read.option("basePath", s"$path/vectors").parquet(dirs: _*)
+        Parquet.readUnder(spark, s"$path/vectors", dirs)
       case Some(_) => // probed cells hold no resident rows at all
         b.select(col("vec_id"), col("embedding"),
           lit(0L).cast("int").as("cell")).limit(0)

@@ -3,6 +3,7 @@ package graft.vector
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
+import graft.sources.Parquet
 
 /** IVF-PQ: the composed on-disk ANN index — IVF coarse cells bound what a
   * query READS (partition pruning), residual product quantization bounds
@@ -111,7 +112,7 @@ object IvfPqIndex {
       ingestDate: java.sql.Date = IvfIndex.DefaultIngestDate): Unit = {
     IvfIndex.recover(spark, path)
     val books = PqIndex.readBooks(spark, path)
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = Parquet.read(spark, s"$path/centroids")
       .select(col("cid").cast("long"), col("c_embedding"))
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
     val nearest = graft.functions.VectorFunctions.nearestCellCid(
@@ -149,13 +150,13 @@ object IvfPqIndex {
     val m = books.length
     val ksub = books(0).length
     val dsub = books(0)(0).length
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = Parquet.read(spark, s"$path/centroids")
       .select(col("cid").cast("long"), col("c_embedding"))
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
     def l2(a: Seq[Float], b: Seq[Float]): Double =
       a.zip(b).map { case (x, y) => (x.toDouble - y.toDouble) * (x.toDouble - y.toDouble) }.sum
     val probed = cents.map { case (cid, c) => (l2(c, query), cid) }.sorted.take(nProbe)
-    val raw = IvfIndex.dropTombstoned(spark, path, spark.read.parquet(s"$path/vectors"))
+    val raw = IvfIndex.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
     // With asOf, both the ADC candidate scans and the re-rank are pruned
     // to the retention window's date directories (probe × retention, both
     // at the partition level — the IvfIndex contract).
@@ -226,7 +227,7 @@ object IvfPqIndex {
     val m = books.length
     val ksub = books(0).length
     val dsub = books(0)(0).length
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = Parquet.read(spark, s"$path/centroids")
       .select(col("cid").cast("long"), col("c_embedding"))
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
     val probeCells = graft.functions.VectorFunctions.orderedCellCids(
@@ -250,7 +251,7 @@ object IvfPqIndex {
         zip_with(col("q_emb"), element_at(centMap, col("cell")), (a, b) => a - b))
       .withColumn("lut", lutExpr)
       .select(col("q_vec_id"), col("q_emb"), col("cell"), col("lut"))
-    val raw = IvfIndex.dropTombstoned(spark, path, spark.read.parquet(s"$path/vectors"))
+    val raw = IvfIndex.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
     val base =
       if (asOf == null) raw
       else raw.filter(col("ingest_date") > date_sub(lit(asOf), maxDays) &&
@@ -289,7 +290,7 @@ object IvfPqIndex {
     val m = books.length
     val ksub = books(0).length
     val dsub = books(0)(0).length
-    val centroid = spark.read.parquet(s"$path/centroids")
+    val centroid = Parquet.read(spark, s"$path/centroids")
       .filter(col("cid") === cid).select(col("c_embedding")).head.getSeq[Float](0)
     val qRes = query.zip(centroid).map { case (q, c) => q - c }
     val lutFlat: Seq[Double] = (0 until m * ksub).map { i =>
@@ -303,7 +304,7 @@ object IvfPqIndex {
     val approx = aggregate(
       expr(s"zip_with(sequence(0, ${m - 1}), codes, (s, c) -> s * $ksub + c)"),
       lit(0.0), (acc, i) => acc + element_at(lut, i + 1))
-    IvfIndex.dropTombstoned(spark, path, spark.read.parquet(s"$path/vectors"))
+    IvfIndex.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
       .filter(col("cell") === cid)
       .select(col("vec_id"), approx.as("adc_d2"))
   }

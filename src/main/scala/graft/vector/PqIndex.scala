@@ -3,6 +3,7 @@ package graft.vector
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
+import graft.sources.Parquet
 
 /** Product quantization (PQ) — the memory-scale path for ANN.
   *
@@ -125,7 +126,7 @@ object PqIndex {
 
   /** Load the codebook sidecar back into driver-side form. */
   def readBooks(spark: SparkSession, path: String): Codebooks = {
-    val rows = spark.read.parquet(s"$path/codebooks")
+    val rows = Parquet.read(spark, s"$path/codebooks")
       .collect().map(r => (r.getAs[Int]("sub_id"), r.getAs[Int]("code"),
         r.getSeq[Float](2).toArray))
     val m = rows.map(_._1).max + 1

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
+import graft.sources.Parquet
 
 /** ANN acceleration sidecar for the flat serving index — the piece that
   * lets `GraftApi.searchData` stop brute-forcing the retained window once
@@ -66,7 +67,7 @@ object ServeIndex {
 
   /** Trained per-dimension SQ bounds of an `sq`-kind sidecar. */
   private def readBounds(spark: SparkSession, sc: String): (Seq[Double], Seq[Double]) = {
-    val rows = spark.read.parquet(s"$sc/sq_bounds").orderBy(col("dim")).collect()
+    val rows = Parquet.read(spark, s"$sc/sq_bounds").orderBy(col("dim")).collect()
     (rows.map(_.getAs[Double]("lo")).toSeq, rows.map(_.getAs[Double]("hi")).toSeq)
   }
 
@@ -76,7 +77,7 @@ object ServeIndex {
     * not persisted — the rotation never whitens).
     */
   private def readRotation(spark: SparkSession, sc: String): Pca.PcaModel = {
-    val rows = spark.read.parquet(s"$sc/rotation").collect()
+    val rows = Parquet.read(spark, s"$sc/rotation").collect()
     val mean = rows.find(_.getLong(0) == -1L).get.getSeq[Double](1).toArray
     val comps = rows.filter(_.getLong(0) >= 0).sortBy(_.getLong(0))
       .map(_.getSeq[Double](1).toArray)
@@ -114,7 +115,7 @@ object ServeIndex {
       // metadata IO as the probe — one throttle must not fail the query
       // either (ADVICE r9)
       val r = graft.sources.RetryingIO.withRetry(s"ServeIndex.meta($indexPath) read") {
-        spark.read.parquet(mp).head
+        Parquet.read(spark, mp).head
       }
       Some((r.getAs[String]("kind"), r.getAs[java.sql.Date]("watermark")))
     }
@@ -271,7 +272,7 @@ object ServeIndex {
     val q = query.toArray
     val qAnn: Array[Float] =
       if (kind == "opq") rotateQuery(spark, sc, query) else q
-    val cents = spark.read.parquet(s"$sc/centroids")
+    val cents = Parquet.read(spark, s"$sc/centroids")
       .select(col("cid").cast("long"), col("c_embedding"))
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
     def l2(a: Seq[Float]): Double = a.zip(qAnn).map { case (x, y) =>
@@ -281,7 +282,7 @@ object ServeIndex {
     // sealed arm: probed cells × retained sealed days, tombstones dropped
     // BEFORE any top-k so a post-build delete never holds a candidate slot
     val sealedAll = VectorIndex.dropTombstoned(spark, indexPath,
-      spark.read.parquet(s"$sc/vectors")
+      Parquet.read(spark, s"$sc/vectors")
         .filter(col("cell").isin(probed: _*))
         .filter(col("ingest_date") > windowLo && col("ingest_date") < lit(m)))
     val sealedCand =
@@ -337,12 +338,13 @@ object ServeIndex {
       }
     // hot arm: the watermark day (and anything newer within the window)
     // straight from the flat source of truth — appends since the build
-    // are here, brute-forced
+    // are here, brute-forced; a row without an embedding never ranks
     graft.sources.CompactSwap.recoverAllHidden(spark, indexPath)
     val hot = VectorIndex.dropTombstoned(spark, indexPath,
-      spark.read.parquet(indexPath)
+      Parquet.read(spark, indexPath)
         .filter(col("ingest_date") >= lit(m) && col("ingest_date") <= lit(anchor) &&
           col("ingest_date") > windowLo))
+      .filter(col("embedding").isNotNull)
       .withColumn("d2", l2Sq(col("embedding"), lit(q)))
       .select(col("vec_id"), col("d2"), col("data_type"), col("data_json"))
     Some(sealedCand.unionByName(hot)
@@ -382,7 +384,7 @@ object ServeIndex {
       .getOrElse(return None)
     if (anchor.before(m)) return None
     val windowLo = date_sub(lit(anchor), VectorIndex.RetentionDays)
-    val cents = spark.read.parquet(s"$sc/centroids")
+    val cents = Parquet.read(spark, s"$sc/centroids")
       .select(col("cid").cast("long"), col("c_embedding"))
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
     // opq: the per-query rotation moves INTO the plan (the projectCol
@@ -400,7 +402,7 @@ object ServeIndex {
     val q = queries.select(col("query_id"), col("q_emb"))
     val qSide = q.withColumn("q_ann", qAnnCol).withColumn("cell", explode(probeCells))
     val sealedAll = VectorIndex.dropTombstoned(spark, indexPath,
-      spark.read.parquet(s"$sc/vectors")
+      Parquet.read(spark, s"$sc/vectors")
         .filter(col("ingest_date") > windowLo && col("ingest_date") < lit(m)))
     val sealedCand =
       if (kind == "ivf")
@@ -472,9 +474,10 @@ object ServeIndex {
     graft.sources.CompactSwap.recoverAllHidden(spark, indexPath)
     val hot = q.crossJoin(
         VectorIndex.dropTombstoned(spark, indexPath,
-          spark.read.parquet(indexPath)
+          Parquet.read(spark, indexPath)
             .filter(col("ingest_date") >= lit(m) && col("ingest_date") <= lit(anchor) &&
               col("ingest_date") > windowLo))
+          .filter(col("embedding").isNotNull)
           .select(col("vec_id"), col("embedding"), col("data_type"), col("data_json")))
       .withColumn("d2", l2Sq(col("q_emb"), col("embedding")))
       .select(col("query_id"), col("vec_id"), col("d2"),

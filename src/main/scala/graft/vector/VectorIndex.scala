@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
+import graft.sources.Parquet
 
 /** The vector-store subsystem: Spark-native replacement for the reference's
   * per-day FAISS index files (`faiss_manager.py`).
@@ -57,7 +58,7 @@ object VectorIndex {
     val p = new org.apache.hadoop.fs.Path(tombstonePath(indexPath))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p))
-      Some(spark.read.parquet(p.toString).select(col("vec_id")).distinct())
+      Some(Parquet.read(spark, p.toString).select(col("vec_id")).distinct())
     else None
   }
 
@@ -80,7 +81,7 @@ object VectorIndex {
       case Some(t) => t.localCheckpoint(true)
       case None => return
     }
-    val dirtyDays = spark.read.parquet(indexPath)
+    val dirtyDays = Parquet.read(spark, indexPath)
       .select(col("vec_id"), col("ingest_date"))
       .join(broadcast(ts), "vec_id")
       .select(date_format(col("ingest_date"), "yyyy-MM-dd")).distinct()
@@ -90,7 +91,7 @@ object VectorIndex {
         // reading the day directory directly drops the (directory-encoded)
         // partition column; the rewrite lands under the same dir name, so
         // discovery re-derives it
-        spark.read.parquet(s"$indexPath/ingest_date=$day")
+        Parquet.read(spark, s"$indexPath/ingest_date=$day")
           .join(broadcast(ts), Seq("vec_id"), "left_anti")
           .write.mode(SaveMode.ErrorIfExists).parquet(fresh)
       }
@@ -112,7 +113,7 @@ object VectorIndex {
       maxDays: Int = RetentionDays): DataFrame = {
     graft.sources.CompactSwap.recoverAllHidden(spark, indexPath)
     dropTombstoned(spark, indexPath,
-      spark.read.parquet(indexPath)
+      Parquet.read(spark, indexPath)
         .filter(col("ingest_date") > date_sub(lit(asOf), maxDays) &&
           col("ingest_date") <= lit(asOf)))
   }
@@ -169,11 +170,12 @@ object VectorIndex {
     * `{rank, similarity_score, data_type, data_json}` — similarity is the
     * verbatim `1 - d/2` on squared L2. Per-partition top-k + global merge is
     * Spark's TakeOrderedAndProject, the exact analog of the reference's
-    * per-index search + merge loop.
+    * per-index search + merge loop. A row without an embedding (a null
+    * indexed text) has no distance and never ranks.
     */
   def search(index: DataFrame, query: Seq[Float], k: Int = 10): DataFrame = {
     val q = lit(query.toArray)
-    index
+    index.filter(col("embedding").isNotNull)
       .withColumn("d2", l2Sq(col("embedding"), q))
       .orderBy(col("d2"), col("vec_id"))
       .limit(k)

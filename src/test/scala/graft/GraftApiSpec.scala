@@ -53,6 +53,37 @@ class GraftApiSpec extends SparkSpec {
     assert(hits.results.head.data_json.startsWith("{"))
   }
 
+  test("the index leg stores exactly the page each read tool returned, for one extra job") {
+    import org.apache.spark.sql.Encoder
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-api-leg").toString + "/idx"
+    var day = 0
+    def stored(d: java.sql.Date): Seq[String] = spark.read.parquet(dir)
+      .filter(col("ingest_date") === lit(d)).select("data_json").as[String].collect().toSeq.sorted
+    def rendered[T <: Product: Encoder](rows: Seq[T]): Seq[String] =
+      spark.createDataset(rows).select(to_json(struct(col("*")))).as[String]
+        .collect().toSeq.sorted
+    def check[T <: Product: Encoder](tool: String)(
+        call: Option[GraftApi.IndexSink] => GraftApi.Page[T]): Unit = {
+      day += 1
+      val d = java.sql.Date.valueOf(java.time.LocalDate.of(2024, 3, day))
+      val (plain, plainJobs) = JobCounter(spark)(call(None))
+      val (page, sinkJobs) = JobCounter(spark)(call(Some(GraftApi.IndexSink(dir, d))))
+      assert(page.results.nonEmpty && page.results == plain.results, tool)
+      assert(stored(d) == rendered(page.results), s"$tool: the index must hold the returned page")
+      assert(sinkJobs <= plainJobs + 1,
+        s"$tool: $sinkJobs Spark jobs with a sink, $plainJobs without")
+    }
+    check("companies")(k => GraftApi.getActiveCompanies(spark, sf, 10, k))
+    check("contacts")(k => GraftApi.getActiveContacts(spark, sf, 10, k))
+    check("tickets")(k => GraftApi.getTickets(spark, sf, limit = 10, sink = k))
+    check("emails")(k => GraftApi.getRecentEmails(spark, sf, limit = 10, sink = k))
+    check("conversations")(k => GraftApi.getRecentConversations(spark, sf, limit = 5, sink = k))
+    check("activity")(k => GraftApi.getCompanyActivity(spark, sf, fanoutCap = 5, sink = k))
+    check("threads")(k => GraftApi.getTicketThreads(spark, sf, nTickets = 5, sink = k))
+  }
+
   test("emails paged scan: keyset resume covers the suffix without overlap; body coalesces") {
     val p1 = GraftApi.getRecentEmails(spark, sf, limit = 20)
     assert(p1.results.size == 20 && p1.after.isDefined)
@@ -157,6 +188,36 @@ class GraftApiSpec extends SparkSpec {
     }
     assert(hitBits(served2) == hitBits(flat2))
     assert(hitBits(served2) != hitBits(flat), "the deleted top hit must vanish")
+  }
+
+  test("search skips an indexed null-text row: flat single, flat batch and the serve hot arm") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-api-null").toString + "/idx"
+    val docs = Tables.documents(spark, sf).limit(50)
+    graft.vector.IndexPipeline.indexRecords(docs, "text", "document", dir,
+      java.sql.Date.valueOf("2024-03-01"))
+    graft.vector.IndexPipeline.buildServeIndex(spark, dir, "ivf", nCells = 8)
+    // a conversation thread without a MESSAGE-type message indexes a null text
+    val query = "alpha beta gamma delta"
+    graft.vector.IndexPipeline.indexRecords(
+      Seq(("t1", null: String), ("t2", query)).toDF("id", "text"), "text", "thread", dir,
+      java.sql.Date.valueOf("2024-03-02"))
+    assert(spark.read.parquet(dir).filter(col("embedding").isNull).count() == 1L)
+    def searchAll(): Unit = {
+      val single = GraftApi.searchData(spark, dir, query, 60)
+      assert(single.results.head.data_json.contains("\"id\":\"t2\""),
+        s"top hit ${single.results.head}")
+      assert(!single.results.exists(_.data_json.contains("\"t1\"")))
+      // the batch joins its payload back on vec_id, which appends reuse, so
+      // only the rank-1 score is checked here
+      val batch = GraftApi.searchDataBatch(spark, dir, Seq(0L -> query, 1L -> "x"), 60)
+      assert(batch.results.find(h => h.query_id == 0L && h.rank == 1L)
+        .exists(_.similarity_score == 1.0))
+      assert(!batch.results.exists(_.data_json.contains("\"t1\"")))
+    }
+    searchAll()
+    withServeConf("ivf", nProbe = 8, refine = 1)(searchAll())
   }
 
   test("serve.index=ivfpq probe-all + window-covering refine ≡ flat bitwise") {
