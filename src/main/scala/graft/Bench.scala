@@ -69,14 +69,21 @@ object Bench {
     // Optional comma-separated name filter for targeted timing runs
     // (SPARK_GRAFT_ONLY=doc_blocked_jaccard,doc_minhash_pairs).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+    // A query that throws is listed by name under "failed" — never timed,
+    // never in `queries` or `total`.
+    val outcomes = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try materialize(fn(spark, sfDir))
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}") }
-      name -> (System.nanoTime() - t0) / 1e9
+      try { materialize(fn(spark, sfDir)); Right(name -> (System.nanoTime() - t0) / 1e9) }
+      catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          Left(name)
+      }
     }
+    val results = outcomes.collect { case Right(r) => r }
+    val failed = outcomes.collect { case Left(n) => "\"" + n + "\"" }.mkString("[", ",", "]")
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
@@ -92,7 +99,7 @@ object Bench {
     // local[32] executor threads always raise the END average, so only
     // pre-existing contention invalidates a capture.
     val prov = if (loadAvgStart < 1.0) "idle" else "loaded"
-    val line = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"sf":"$sfDir","load_avg_start":${f"$loadAvgStart%.2f"},"load_avg_end":${f"$loadAvg%.2f"},"cpus":$cpus,"provenance":"$prov; compare cross-round idle-to-idle only"}"""
+    val line = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir","load_avg_start":${f"$loadAvgStart%.2f"},"load_avg_end":${f"$loadAvg%.2f"},"cpus":$cpus,"provenance":"$prov; compare cross-round idle-to-idle only"}"""
     // Mirror the contract line to BENCH_LINE.json (cwd + repo root when they
     // differ): at 206 queries the line is ~6 KB and a capture that keeps only
     // a bounded output tail truncates it mid-JSON — the file copy is

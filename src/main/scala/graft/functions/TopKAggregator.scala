@@ -258,7 +258,6 @@ case class TopKByValueAgg(
 }
 
 object TopKAggregator {
-  import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 
   /** Catalyst-native bounded top-k column (value DESC, id ASC). */
   def topK(k: Int, value: Column, id: Column): Column = {
@@ -281,12 +280,6 @@ object TopKAggregator {
       .select(col("user_id"), (col("pos") + 1).cast("long").as("rank"),
         col("col.id").as("event_id"), col("col.value").as("value"))
       .orderBy(col("user_id"), col("rank"))
-
-  /** Cap a group's fan-out to the k earliest rows. Input columns must be
-    * (ts, engagement_id, etype, content) in EngRow field order.
-    */
-  def earliestKUdaf(k: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udaf(new EarliestKEngagements(k), ExpressionEncoder[EngRow]())
 
   /** Catalyst-native form of the fan-out cap (preferred): builds the
     * `EarliestKAgg` aggregate expression directly — ObjectHashAggregate

@@ -2,7 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Parquet
+import graft.sources.{IndexLifecycle, Parquet}
 
 /** The persisted 64-bit-perceptual-hash ingest gate, factored out of the
   * image tier so every modality with a 64-char sign/bit fingerprint
@@ -44,7 +44,7 @@ import graft.sources.Parquet
   * payloads the wrapper's decoder could not judge pass through as
   * `undecodable`. Single-writer per index path.
   */
-private[multimodal] object Hash64Index {
+private[graft] object Hash64Index {
 
   def flipsOf(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     val flips = (0 until 64).map { i =>
@@ -99,63 +99,26 @@ private[multimodal] object Hash64Index {
         .write.mode(SaveMode.Overwrite).parquet(s"$path/probes")))
   }
 
-  private def recover(spark: SparkSession, path: String): Unit =
-    graft.sources.CompactSwap.recover(spark, path, Seq("probes", "hashes"))
-
-  /** Logical point deletes (takedowns): ids append to a tombstone log;
-    * resident matching anti-joins it immediately, while the id gate still
-    * sees the tombstoned row — deleted ids stay BURNED until [[compact]]
-    * (delete → compact → append is the replacement path).
+  /** Logical point deletes (takedowns) on the shared
+    * [[graft.sources.IndexLifecycle]] contract: resident matching
+    * anti-joins the log immediately, while the id gate still sees the
+    * tombstoned row. `hashes` (the id gate) compacts LAST; it rewrites
+    * through the size-adaptive writer, while probes rewrite FLAT at every
+    * size (a key-bucketed probes layout can never point-prune — see the
+    * build note), so compaction also folds an interim bucketed probes
+    * table back to flat.
     */
-  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    recover(spark, path)
-    ids.select(col("doc_id")).write.mode(SaveMode.Append)
-      .parquet(s"$path/tombstones")
-  }
+  private[graft] val Lifecycle = IndexLifecycle("doc_id", IndexLifecycle.Inside, Seq(
+    IndexLifecycle.Table("probes", (_, kept, fresh) =>
+      kept.drop(graft.sources.KeyedSidecar.BucketCol)
+        .write.mode(SaveMode.ErrorIfExists).parquet(fresh)),
+    IndexLifecycle.Table("hashes", IndexLifecycle.keyed("doc_id"))))
 
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      Some(Parquet.read(spark, s"$path/tombstones").select(col("doc_id")).distinct())
-    else None
-  }
+  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit =
+    Lifecycle.delete(spark, path, ids)
 
-  private def dropTombstoned(spark: SparkSession, path: String,
-      df: DataFrame): DataFrame =
-    tombstones(spark, path) match {
-      case Some(t) => df.join(broadcast(t), Seq("doc_id"), "left_anti")
-      case None => df
-    }
-
-  /** Fold the tombstone log: both tables rewrite through the crash-safe
-    * fresh-sibling swap; `hashes` LAST so a mid-compaction crash keeps
-    * deleted ids burned in the id gate (conservative failure), the log
-    * drops last of all.
-    */
-  def compact(spark: SparkSession, path: String): Unit = {
-    recover(spark, path)
-    if (tombstones(spark, path).isEmpty) return
-    // hashes rewrites through the size-adaptive writer (compaction is
-    // where a flat table that outgrew the prune threshold upgrades to the
-    // bucketed layout — parquet-scan stats here are file-size-honest);
-    // probes rewrite FLAT at every size (a key-bucketed probes layout can
-    // never point-prune — see the build note), so compaction also folds
-    // an interim bucketed probes table back to flat
-    graft.sources.CompactSwap.rewrite(spark, path, "probes") { fresh =>
-      dropTombstoned(spark, path, Parquet.read(spark, s"$path/probes"))
-        .drop(graft.sources.KeyedSidecar.BucketCol)
-        .write.mode(SaveMode.ErrorIfExists).parquet(fresh)
-    }
-    graft.sources.CompactSwap.rewrite(spark, path, "hashes") { fresh =>
-      val kept = dropTombstoned(spark, path, Parquet.read(spark, s"$path/hashes"))
-      graft.sources.KeyedSidecar.write(kept, "doc_id", fresh, SaveMode.ErrorIfExists)
-    }
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    ()
-  }
+  def compact(spark: SparkSession, path: String): Unit =
+    Lifecycle.compact(spark, path)
 
   /** The gate. `batchIds` is every offered doc_id (one row per id);
     * `batchHashes` the wrapper-decoded hash table over the same batch
@@ -176,7 +139,7 @@ private[multimodal] object Hash64Index {
       System.err.println(f"[gate-timing] hash64.$phase ${(now - tLast) / 1e9}%.2fs")
       tLast = now
     }
-    recover(spark, path)
+    Lifecycle.recover(spark, path)
     val hashesPath = new org.apache.hadoop.fs.Path(s"$path/hashes")
     val fs = hashesPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(hashesPath),
@@ -233,7 +196,7 @@ private[multimodal] object Hash64Index {
     // Legacy bucketed layouts (the interim r13 cut) read fine; the
     // partition column drops like lookup would.
     mark("candidates")
-    val probes = dropTombstoned(spark, path,
+    val probes = Lifecycle.dropTombstoned(spark, path,
       Parquet.read(spark, s"$path/probes")
         .drop(graft.sources.KeyedSidecar.BucketCol))
     mark("probes-lookup")

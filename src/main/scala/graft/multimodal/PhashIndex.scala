@@ -29,7 +29,7 @@ object PhashIndex {
     Hash64Index.build(spark, hashTable(media), "ahash", path)
 
   /** Logical point deletes — image takedowns are the modality's most
-    * common removal case; see [[Hash64Index.delete]] for the contract.
+    * common removal case; see [[Hash64Index.Lifecycle]] for the contract.
     */
   def delete(spark: SparkSession, path: String, ids: DataFrame): Unit =
     Hash64Index.delete(spark, path, ids)

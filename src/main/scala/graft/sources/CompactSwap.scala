@@ -26,11 +26,8 @@ import org.apache.spark.sql.SparkSession
   * deletes) — needs no recovery; the next compact sweeps them. Idempotent
   * and cheap: one exists() per table, metadata-only.
   *
-  * Multi-table indexes swap table-at-a-time in burn-order (id-gate
-  * authority tables LAST), so a mid-sequence crash leaves earlier tables
-  * compacted and later ones restored-on-open — consistent either way,
-  * because the still-present tombstones mask the restored tables' deleted
-  * rows.
+  * Which tables swap, in what order, and when the tombstone log drops is
+  * [[IndexLifecycle]]'s job.
   */
 object CompactSwap {
 
@@ -55,20 +52,8 @@ object CompactSwap {
     * `ingest_date=X._old` would itself parse as a partition directory and
     * corrupt discovery for every concurrent reader.
     */
-  def rewriteHidden(spark: SparkSession, base: String, table: String)(write: String => Unit): Unit = {
-    val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fresh = new Path(s"$base/.$table._compact")
-    val live = new Path(s"$base/$table")
-    val old = new Path(s"$base/.$table._old")
-    fs.delete(fresh, true); fs.delete(old, true) // dead-writer leftovers
-    write(fresh.toString)
-    require(fs.rename(live, old), s"compact: cannot stage $table aside at $base")
-    require(fs.rename(fresh, live), s"compact: cannot swap $table into place at $base")
-    fs.delete(old, true)
-    // the swap changed the live path's contents without a write() on it
-    KeyedSidecar.invalidateSize(s"$base/$table")
-    KeyedSidecar.invalidateSize(fresh.toString)
-  }
+  def rewriteHidden(spark: SparkSession, base: String, table: String)(write: String => Unit): Unit =
+    swap(spark, base, table, s".$table")(write)
 
   /** `recover` for `rewriteHidden` layouts, where table names are dynamic:
     * restore EVERY `.{table}._old` sibling whose live directory vanished.
@@ -94,11 +79,16 @@ object CompactSwap {
     * fully materialize the compacted table there (ErrorIfExists mode —
     * leftovers are swept first).
     */
-  def rewrite(spark: SparkSession, base: String, table: String)(write: String => Unit): Unit = {
+  def rewrite(spark: SparkSession, base: String, table: String)(write: String => Unit): Unit =
+    swap(spark, base, table, table)(write)
+
+  /** The one swap body; `staged` names the `._compact`/`._old` siblings. */
+  private def swap(spark: SparkSession, base: String, table: String, staged: String)(
+      write: String => Unit): Unit = {
     val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fresh = new Path(s"$base/$table._compact")
+    val fresh = new Path(s"$base/$staged._compact")
     val live = new Path(s"$base/$table")
-    val old = new Path(s"$base/$table._old")
+    val old = new Path(s"$base/$staged._old")
     fs.delete(fresh, true); fs.delete(old, true) // dead-writer leftovers
     write(fresh.toString)
     require(fs.rename(live, old), s"compact: cannot stage $table aside at $base")

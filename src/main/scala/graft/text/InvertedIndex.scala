@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Parquet
+import graft.sources.{IndexLifecycle, Parquet}
 
 /** Persisted inverted index — the at-scale serving path for term search.
   * The scan-based family (`TextAnalysis.searchDocs`/`tfidfSearch`/
@@ -47,19 +47,22 @@ object InvertedIndex {
       .agg(count(lit(1)).as("tf"))
       .withColumn("bucket", pmod(hash(col("term")), lit(nBuckets)))
 
+  /** Bucket-aligned repartition: one file per bucket directory instead of
+    * tasks × buckets (the IvfIndex.writeCells / SnapshotStore.init
+    * rationale; 64 buckets ≥ the core count, so write parallelism holds).
+    */
+  private def writePostings(postings: DataFrame, path: String, mode: SaveMode): Unit =
+    postings.repartition(col("bucket"))
+      .write.mode(mode)
+      .option("maxRecordsPerFile", graft.vector.IvfIndex.MaxRecordsPerCellFile)
+      .partitionBy("bucket").parquet(path)
+
   /** Tokenize, count, and persist the posting lists. */
   def build(spark: SparkSession, docs: DataFrame, path: String,
       nBuckets: Int = 64): Unit = {
     require(nBuckets > 0, "nBuckets must be positive")
     val postings = postingsOf(docs, nBuckets).localCheckpoint(true)
-    // bucket-aligned repartition: one file per bucket directory instead of
-    // tasks × buckets (the IvfIndex.writeCells / SnapshotStore.init
-    // rationale; 64 buckets ≥ the core count, so write parallelism holds)
-    postings.repartition(col("bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", graft.vector.IvfIndex.MaxRecordsPerCellFile)
-      .partitionBy("bucket")
-      .parquet(s"$path/postings")
+    writePostings(postings, s"$path/postings", SaveMode.Overwrite)
     // doc_id-keyed sidecar (r13): the append id-gate point-prunes to the
     // batch's id buckets/pages instead of scanning every resident doclen
     graft.sources.KeyedSidecar.write(
@@ -79,7 +82,7 @@ object InvertedIndex {
     * doc with length-only presence — never double-counted postings.
     */
   def appendBatch(spark: SparkSession, batch: DataFrame, path: String): Unit = {
-    recover(spark, path)
+    Lifecycle.recover(spark, path)
     val nBuckets = meta(spark, path)
     // Id gate, resident-side streamed (the r11 LshIndex.dedupBatch
     // inversion): the batch is bounded by contract and broadcasts; with
@@ -100,87 +103,30 @@ object InvertedIndex {
       .agg(sum(col("tf")).as("dl"))
     graft.sources.KeyedSidecar.write(dlRows, "doc_id",
       s"$path/doclens", SaveMode.Append)
-    postings.repartition(col("bucket"))
-      .write.mode(SaveMode.Append)
-      .option("maxRecordsPerFile", graft.vector.IvfIndex.MaxRecordsPerCellFile)
-      .partitionBy("bucket")
-      .parquet(s"$path/postings")
+    writePostings(postings, s"$path/postings", SaveMode.Append)
   }
 
   private def meta(spark: SparkSession, path: String): Int =
     Parquet.read(spark, s"$path/meta").head().getAs[Int]("n_buckets")
 
-  /** Logical deletes — the Lucene deleted-docs model: removing a doc from
-    * its posting lists in place would rewrite every bucket its terms hash
-    * into, so deletes append to a tombstone log and every serving path
-    * anti-joins it (the log is bounded by deletes-since-compaction and
-    * broadcasts). The append id-gate keys on doclens, which keeps the
-    * tombstoned row until compaction — so a deleted id stays burned until
-    * `compact`, after which re-offering it is the document-REPLACEMENT
-    * path: delete → compact → append.
+  /** Logical deletes on the shared [[graft.sources.IndexLifecycle]]
+    * contract: removing a doc from its posting lists in place would
+    * rewrite every bucket its terms hash into. The append id-gate keys on
+    * doclens, so doclens compacts LAST — a mid-compaction crash keeps
+    * deleted ids burned. Compaction is per-bucket embarrassingly parallel
+    * and would run bucket-at-a-time against a 100-TB layout; the
+    * whole-table form keeps this surface small.
     */
-  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    recover(spark, path)
-    ids.select(col("doc_id")).write.mode(SaveMode.Append)
-      .parquet(s"$path/tombstones")
-  }
+  private[graft] val Lifecycle = IndexLifecycle("doc_id", IndexLifecycle.Inside, Seq(
+    IndexLifecycle.Table("postings", (_, kept, fresh) =>
+      writePostings(kept, fresh, SaveMode.ErrorIfExists)),
+    IndexLifecycle.Table("doclens", IndexLifecycle.keyed("doc_id"))))
 
-  /** Open-time compact-swap crash recovery (see [[graft.sources.CompactSwap]]). */
-  private def recover(spark: SparkSession, path: String): Unit =
-    graft.sources.CompactSwap.recover(spark, path, Seq("postings", "doclens"))
+  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit =
+    Lifecycle.delete(spark, path, ids)
 
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/tombstones")))
-      Some(Parquet.read(spark, s"$path/tombstones").select(col("doc_id")).distinct())
-    else None
-  }
-
-  private def dropTombstoned(spark: SparkSession, path: String,
-      df: DataFrame): DataFrame =
-    tombstones(spark, path) match {
-      case Some(ts) => df.join(broadcast(ts), Seq("doc_id"), "left_anti")
-      case None => df
-    }
-
-  /** Fold the tombstone log into the layout: rewrite postings and doclens
-    * WITHOUT the deleted docs, then drop the log LAST — a crash before
-    * the drop leaves tombstones that no longer match anything, which
-    * anti-join as no-ops (safe; never resurrects a doc). The rewritten
-    * tables localCheckpoint first: they derive from the very files the
-    * overwrite replaces (the SnapshotStore read-before-overwrite
-    * barrier). Production note: compaction is per-bucket embarrassingly
-    * parallel and would run bucket-at-a-time against a 100-TB layout;
-    * the whole-table form keeps this surface small.
-    */
-  def compact(spark: SparkSession, path: String): Unit = {
-    recover(spark, path)
-    if (tombstones(spark, path).isEmpty) return
-    // fresh-sibling swap (CompactSwap), not Overwrite-in-place: the old
-    // form's localCheckpoint barrier survives Spark-level failures but
-    // loses the table outright if the application dies between the
-    // delete and the rewrite landing. doclens rewrites LAST (it is the
-    // append id-gate table): a mid-compaction crash keeps deleted ids
-    // burned — conservative failure, like the LshIndex/PhashIndex order.
-    graft.sources.CompactSwap.rewrite(spark, path, "postings") { fresh =>
-      dropTombstoned(spark, path, Parquet.read(spark, s"$path/postings"))
-        .repartition(col("bucket"))
-        .write.mode(SaveMode.ErrorIfExists)
-        .option("maxRecordsPerFile", graft.vector.IvfIndex.MaxRecordsPerCellFile)
-        .partitionBy("bucket").parquet(fresh)
-    }
-    graft.sources.CompactSwap.rewrite(spark, path, "doclens") { fresh =>
-      // size-adaptive rewrite: a flat doclens that outgrew the prune
-      // threshold via appends upgrades to the bucketed layout here
-      val kept = dropTombstoned(spark, path, Parquet.read(spark, s"$path/doclens"))
-      graft.sources.KeyedSidecar.write(kept, "doc_id", fresh, SaveMode.ErrorIfExists)
-    }
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-    ()
-  }
+  def compact(spark: SparkSession, path: String): Unit =
+    Lifecycle.compact(spark, path)
 
   /** The bucket a term's postings live in — computed with the SAME
     * Murmur3 the build used, via Spark's own `hash` expression so build
@@ -198,7 +144,7 @@ object InvertedIndex {
       terms: Seq[String]): DataFrame = {
     val nBuckets = meta(spark, path)
     val buckets = termBuckets(spark, terms, nBuckets).values.toSeq.distinct
-    dropTombstoned(spark, path,
+    Lifecycle.dropTombstoned(spark, path,
       Parquet.read(spark, s"$path/postings")
         .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*)))
   }
@@ -212,7 +158,7 @@ object InvertedIndex {
   def search(spark: SparkSession, path: String, terms: Seq[String],
       k: Int = 20): DataFrame = {
     require(terms.nonEmpty, "need at least one term")
-    recover(spark, path)
+    Lifecycle.recover(spark, path)
     val distinctTerms = terms.distinct
     prunedPostings(spark, path, distinctTerms)
       .groupBy(col("doc_id"), col("source"))
@@ -236,11 +182,11 @@ object InvertedIndex {
   def bm25(spark: SparkSession, path: String, terms: Seq[String],
       k: Int = 20, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "need at least one term")
-    recover(spark, path)
+    Lifecycle.recover(spark, path)
     val tfNames = terms.indices.map(i => s"_tf$i")
     // doclens feeds n_docs/avgdl — tombstoned docs must leave the stats
     // too, or served BM25 would drift from the scan over the live corpus
-    val doclens = dropTombstoned(spark, path,
+    val doclens = Lifecycle.dropTombstoned(spark, path,
       Parquet.read(spark, s"$path/doclens"))
     val distinctTerms = terms.distinct
     val pruned = prunedPostings(spark, path, distinctTerms).localCheckpoint(true)
@@ -273,7 +219,7 @@ object InvertedIndex {
     */
   def docFreq(spark: SparkSession, path: String, terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "need at least one term")
-    recover(spark, path)
+    Lifecycle.recover(spark, path)
     prunedPostings(spark, path, terms.distinct)
       .groupBy(col("term"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("total_tf"))

@@ -3,7 +3,8 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Dedup
-import graft.sources.Parquet
+import graft.sources.{IndexLifecycle, Parquet}
+import graft.sources.IndexLifecycle.{Table, keyed}
 
 /** Persisted MinHash-LSH index — incremental corpus ingestion's dedup
   * gate. The batch operators (`ops.Dedup`) recompute signatures over the
@@ -62,13 +63,17 @@ object LshIndex {
     * directory at ≤ 8 files (a directory's files = the distinct tasks
     * among its 8 sub-keys).
     */
-  private def bandPartitioned(bands: DataFrame): DataFrame =
+  private def writeBands(bands: DataFrame, path: String, mode: SaveMode): Unit =
     bands.repartition(col("band_id"), pmod(crc32(col("band_key")), lit(8)))
       // band_key-sorted files: page-level column-index stats then prune
       // pushed band-key predicates at scale (the KeyedSidecar sort rule;
       // band_id leads so the writer's partition ordering is satisfied
       // and no writer-inserted re-sort destroys the key order)
       .sortWithinPartitions(col("band_id"), col("band_key"))
+      .write.mode(mode)
+      .option("maxRecordsPerFile", graft.vector.IvfIndex.MaxRecordsPerCellFile)
+      .option("parquet.page.row.count.limit", graft.sources.KeyedSidecar.PageRowLimit.toString)
+      .partitionBy("band_id").parquet(path)
 
   /** Broadcast-BYTE cap for the gate's candidate-derived join sides.
     * Explicit `hint("broadcast")` bypasses autoBroadcastJoinThreshold
@@ -152,11 +157,8 @@ object LshIndex {
         sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
           .join(hashRows, Seq("doc_id")),
         "doc_id", s"$path/sizes", SaveMode.Overwrite),
-      () => bandPartitioned(Dedup.bandKeys(Dedup.minhashWide(sh)))
-        .write.mode(SaveMode.Overwrite)
-        .option("maxRecordsPerFile", graft.vector.IvfIndex.MaxRecordsPerCellFile)
-        .option("parquet.page.row.count.limit", KeyedSidecar.PageRowLimit.toString)
-        .partitionBy("band_id").parquet(s"$path/bands"),
+      () => writeBands(Dedup.bandKeys(Dedup.minhashWide(sh)), s"$path/bands",
+        SaveMode.Overwrite),
       () => KeyedSidecar.write(Dedup.winnowFingerprints(d)
         .select(col("doc_id"), explode(col("fps")).as("fp")),
         "fp", s"$path/winnow", SaveMode.Overwrite,
@@ -176,12 +178,6 @@ object LshIndex {
     */
   private val BandsPruneBytes: Long = 2L * 1024 * 1024 * 1024
 
-  private val allTables = Seq("ids", "shingles", "sizes", "bands", "winnow", "hashes")
-
-  /** Open-time compact-swap crash recovery (see [[graft.sources.CompactSwap]]). */
-  private def recover(spark: SparkSession, path: String): Unit =
-    graft.sources.CompactSwap.recover(spark, path, allTables)
-
   /** Append a batch's derived rows into the index (no resident rewrite).
     * Every write matches the RESIDENT layout — bucketed sidecar appends
     * on r13 layouts, flat appends on legacy ones (mixing the two inside
@@ -196,7 +192,7 @@ object LshIndex {
     * — caught by the gate and exact tier, never double-counted.
     */
   def appendBatch(spark: SparkSession, batch: DataFrame, path: String): Unit = {
-    recover(spark, path)
+    Lifecycle.recover(spark, path)
     // a delivery is bounded by contract — one checkpoint feeds the five
     // derivations below instead of five source re-reads
     val b = batch.select(col("doc_id"), col("text")).localCheckpoint(true)
@@ -243,95 +239,30 @@ object LshIndex {
         else sizeRows,
         "doc_id", s"$path/sizes", SaveMode.Append),
       () => KeyedSidecar.write(fpRows, "fp", s"$path/winnow", SaveMode.Append)))
-    bandPartitioned(Dedup.bandKeys(Dedup.minhashWide(sh)))
-      .write.mode(SaveMode.Append)
-      .option("maxRecordsPerFile", graft.vector.IvfIndex.MaxRecordsPerCellFile)
-      .option("parquet.page.row.count.limit",
-        graft.sources.KeyedSidecar.PageRowLimit.toString)
-      .partitionBy("band_id").parquet(s"$path/bands")
+    writeBands(Dedup.bandKeys(Dedup.minhashWide(sh)), s"$path/bands", SaveMode.Append)
   }
 
   /** Logical deletes — a doc retracted from the corpus must stop matching
-    * future batches. Same Lucene-style contract as `InvertedIndex.delete`:
-    * ids append to a tombstone log and every serving path anti-joins it
-    * (bounded by deletes-since-compaction). The disjointness gate still
-    * sees the tombstoned row in `hashes`, so a deleted id stays BURNED
-    * until `compact` — delete → compact → append is the document-
-    * replacement path, exactly as on the inverted-index side.
+    * future batches — on the shared [[graft.sources.IndexLifecycle]]
+    * contract. Table order: the gate tables go LAST — `hashes`, then the
+    * `ids` authority — so a crash mid-compaction keeps the deleted ids
+    * burned in the disjointness gate. Legacy layouts predate `winnow` and
+    * `ids`. Each keyed table rewrites through the size-adaptive writer;
+    * bands keep their own band_id-partitioned shape.
     */
-  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    recover(spark, path)
-    ids.select(col("doc_id")).write.mode(SaveMode.Append)
-      .parquet(s"$path/tombstones")
-  }
+  private[graft] val Lifecycle = IndexLifecycle("doc_id", IndexLifecycle.Inside, Seq(
+    Table("shingles", keyed("doc_id")),
+    Table("sizes", keyed("doc_id")),
+    Table("bands", (_, kept, fresh) => writeBands(kept, fresh, SaveMode.ErrorIfExists)),
+    Table("winnow", keyed("fp"), optional = true),
+    Table("hashes", keyed("text_hash")),
+    Table("ids", keyed("doc_id"), optional = true)))
 
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      Some(Parquet.read(spark, s"$path/tombstones").select(col("doc_id")).distinct())
-    else None
-  }
+  def delete(spark: SparkSession, path: String, ids: DataFrame): Unit =
+    Lifecycle.delete(spark, path, ids)
 
-  private def dropTombstoned(spark: SparkSession, path: String,
-      df: DataFrame): DataFrame =
-    tombstones(spark, path) match {
-      case Some(t) => df.join(t, Seq("doc_id"), "left_anti")
-      case None => df
-    }
-
-  /** Fold the tombstone log into the layout: rewrite every table WITHOUT
-    * the deleted docs, then drop the log LAST (a crash beforehand leaves
-    * tombstones that no longer match anything — harmless). `hashes` is
-    * rewritten last of the tables so a crash mid-compaction keeps the
-    * deleted ids burned in the disjointness gate (conservative failure:
-    * an id can stay burned longer, never come back early).
-    *
-    * Each table rewrites into a FRESH sibling directory that is renamed
-    * into place (old dir staged aside, then dropped) — the VersionedStore
-    * move. The old Overwrite-in-place form relied on localCheckpoint as
-    * its read-before-overwrite barrier, which survives Spark-level
-    * failures but loses the table outright if the whole application dies
-    * after the delete and before the rewrite lands (checkpoint blocks
-    * live only in executor storage). Now a crash during the rewrite job
-    * leaves the live directory untouched; the exposure shrinks to the
-    * two metadata renames, and a dead writer's `._compact`/`._old`
-    * leftovers are swept on the next compaction.
-    */
-  def compact(spark: SparkSession, path: String): Unit = {
-    import graft.sources.KeyedSidecar
-    recover(spark, path)
-    if (tombstones(spark, path).isEmpty) return
-    def exists(table: String) = new org.apache.hadoop.fs.Path(s"$path/$table")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(s"$path/$table"))
-    // each table rewrites through the size-adaptive writer: compaction is
-    // where a flat table that outgrew the prune threshold via appends
-    // upgrades to the bucketed layout (parquet-scan stats here are
-    // file-size-honest); bands keep their own band_id-partitioned shape
-    def rewrite(table: String, key: String, partitioned: Boolean = false): Unit =
-      graft.sources.CompactSwap.rewrite(spark, path, table) { fresh =>
-        val kept = dropTombstoned(spark, path, Parquet.read(spark, s"$path/$table"))
-        if (partitioned) bandPartitioned(kept).write.mode(SaveMode.ErrorIfExists)
-          .option("maxRecordsPerFile", graft.vector.IvfIndex.MaxRecordsPerCellFile)
-          .option("parquet.page.row.count.limit", KeyedSidecar.PageRowLimit.toString)
-          .partitionBy("band_id").parquet(fresh)
-        else KeyedSidecar.write(kept, key, fresh, SaveMode.ErrorIfExists)
-      }
-    rewrite("shingles", "doc_id")
-    rewrite("sizes", "doc_id")
-    rewrite("bands", "", partitioned = true)
-    // legacy layouts predate the winnow and ids tables; nothing to fold
-    if (exists("winnow")) rewrite("winnow", "fp")
-    rewrite("hashes", "text_hash")
-    // the gate-authority sidecar folds LAST of the tables: a crash before
-    // this keeps deleted ids burned — conservative failure, like hashes
-    if (exists("ids")) rewrite("ids", "doc_id")
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    ()
-  }
+  def compact(spark: SparkSession, path: String): Unit =
+    Lifecycle.compact(spark, path)
 
   /** The resident band-candidate scan, batch-pruned where the layout
     * allows (r14 — the VERDICT r13 "O(resident) band scan" floor). The
@@ -342,7 +273,7 @@ object LshIndex {
     * parquet OR-of-eq pushdown cap PER BAND even though the total key set
     * exceeds it. Mechanically: one scan per band_id partition directory
     * with that band's `In(band_key, …)` pushed to parquet — band files
-    * are band_key-sorted (bandPartitioned), so page-level column-index
+    * are band_key-sorted (writeBands), so page-level column-index
     * stats skip everything outside the batch's keys. The r13 attempt at
     * this keyed the whole probe family globally and died on the 1000-key
     * cap; splitting per band is what sidesteps it.
@@ -446,7 +377,7 @@ object LshIndex {
     */
   def dedupBatch(spark: SparkSession, path: String, batch: DataFrame,
       jaccardThreshold: Double = 0.3): DataFrame = {
-    recover(spark, path)
+    Lifecycle.recover(spark, path)
     requireDisjointIds(spark, path, batch)
     dedupBatchChecked(spark, path, batch, jaccardThreshold)
   }
@@ -485,7 +416,7 @@ object LshIndex {
     // tombstoned residents drop out of the candidate side; every later
     // join (shingles/sizes/hashes) is keyed by surviving candidates, so
     // one anti-join covers the whole near-dup path
-    val rBands = dropTombstoned(spark, path, residentBands(spark, path, bBands))
+    val rBands = Lifecycle.dropTombstoned(spark, path, residentBands(spark, path, bBands))
     val cand = bBands.as("b").hint("broadcast").join(rBands.as("r"),
         col("b.band_id") === col("r.band_id") && col("b.band_key") === col("r.band_key") &&
           col("b.doc_id") =!= col("r.doc_id"))
@@ -568,7 +499,7 @@ object LshIndex {
   def ingestBatch(spark: SparkSession, path: String, rawBatch: DataFrame,
       jaccardThreshold: Double = 0.3, winnowMinShared: Int = 0,
       winnowMaxDf: Int = 1000): DataFrame = {
-    recover(spark, path)
+    Lifecycle.recover(spark, path)
     // One batch materialization feeds every tier: the four-tier cascade
     // references the batch ~8× (losers, candidates, hashes, rest, the
     // near-dup shingles, the winnow fps, the survivor append, the final
@@ -596,7 +527,7 @@ object LshIndex {
     // resident hash (the join enforces the restriction on fallbacks).
     val batchHashes = candidates
       .select(col("doc_id"), md5(col("text")).as("h"))
-    val residentHashes = dropTombstoned(spark, path,
+    val residentHashes = Lifecycle.dropTombstoned(spark, path,
       graft.sources.KeyedSidecar.lookup(spark, s"$path/hashes", "text_hash",
         batchHashes.select(col("h").as("text_hash"))))
       .select(col("text_hash").as("h"))
@@ -645,7 +576,7 @@ object LshIndex {
           graft.sources.KeyedSidecar.lookup(spark, s"$path/winnow", "fp",
             bFp.select(col("fp")))
         else spark.range(0).select(col("id").as("doc_id"), lit("").as("fp"))
-      val rFp = dropTombstoned(spark, path, resident)
+      val rFp = Lifecycle.dropTombstoned(spark, path, resident)
       // Only fingerprints the BATCH carries can form pairs, and their
       // resident df is unchanged by the restriction — so the resident fp
       // table is first filtered map-locally against the broadcast batch

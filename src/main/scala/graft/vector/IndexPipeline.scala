@@ -73,7 +73,7 @@ object IndexPipeline {
       val idx = anchor match {
         case Some(d) => VectorIndex.loadRecent(spark, indexPath, d)
         case None => // empty/legacy layout: nothing to prune; deletes still honored
-          VectorIndex.dropTombstoned(spark, indexPath, Parquet.read(spark, indexPath))
+          VectorIndex.Lifecycle.dropTombstoned(spark, indexPath, Parquet.read(spark, indexPath))
       }
       VectorIndex.search(idx, qv, k)
     }
@@ -117,7 +117,7 @@ object IndexPipeline {
     val idx = anchor match {
       case Some(d) => VectorIndex.loadRecent(spark, indexPath, d)
       case None =>
-        VectorIndex.dropTombstoned(spark, indexPath, Parquet.read(spark, indexPath))
+        VectorIndex.Lifecycle.dropTombstoned(spark, indexPath, Parquet.read(spark, indexPath))
     }
     val q = qEmbedded
     // a row without an embedding (a null indexed text) never ranks

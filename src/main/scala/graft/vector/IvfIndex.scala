@@ -3,7 +3,7 @@ package graft.vector
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
-import graft.sources.Parquet
+import graft.sources.{IndexLifecycle, Parquet}
 
 /** Physical IVF index: the at-scale layout behind ops.Similarity.ivfSearch.
   *
@@ -96,7 +96,7 @@ object IvfIndex {
     * by the partition key ALONE over-corrects: each (cell, ingest_date)
     * lands wholly in ONE task, so a skewed hot cell serializes its whole
     * write through a single writer — and `compact`/`retrain` push the full
-    * corpus through this path (the `LshIndex.bandPartitioned` lesson).
+    * corpus through this path (the `LshIndex.writeBands` lesson).
     *
     * The sub-key is COUNT-AWARE, not constant: a constant k-way crc32 salt
     * k-tuples the file count of every SMALL cell too (measured: 5,983
@@ -332,33 +332,50 @@ object IvfIndex {
   }
 
   /** Logical point deletes — takedown/GDPR removal for the vector tier,
-    * the lifecycle `text.LshIndex`/`text.InvertedIndex` already have:
-    * vec_ids append to a tombstone log and EVERY serving path
-    * (`search`/`knnJoin`/`rangeSearch`, and the dedupIngest candidate
-    * side) anti-joins it, so a deleted vector stops matching immediately,
-    * pre-compaction. The dedupIngest id gate still sees the tombstoned
-    * row in the layout — a deleted id stays BURNED until `compact`
-    * (delete → compact → append is the replacement path). The log is
-    * bounded by deletes-since-compaction; the anti-join broadcasts.
-    * Shared by [[IvfPqIndex]], whose layout is identical.
+    * on the shared [[graft.sources.IndexLifecycle]] contract: EVERY
+    * serving path (`search`/`knnJoin`/`rangeSearch`, and the dedupIngest
+    * candidate side) anti-joins the log, while the dedupIngest id gate
+    * still sees a tombstoned id until `compact`. Shared by [[IvfPqIndex]],
+    * whose layout is identical: every column (incl. `codes`) and the
+    * `cell × ingest_date` partitioning are preserved row-for-row.
+    *
+    * Table order: `vectors` first, the `ids` gate sidecar LAST (a crash
+    * between the two leaves deleted ids burned longer); legacy/PQ layouts
+    * without the sidecar skip it. Centroids and radii are deliberately not
+    * compacted: centroids define the layout's assignment function (a fresh
+    * k-means would re-cell the corpus), and the per-cell radii stay
+    * conservatively LARGE — the only safe direction for `rangeSearch`'s
+    * triangle-inequality bound (the appendBatch crash-ordering contract).
     */
+  private[graft] val Lifecycle = IndexLifecycle("vec_id", IndexLifecycle.Inside, Seq(
+    IndexLifecycle.Table("vectors", (path, kept, fresh) =>
+      writeCells(kept, fresh, SaveMode.ErrorIfExists,
+        dateMajor = layoutDateMajor(kept.sparkSession, path))),
+    IndexLifecycle.Table("ids", IndexLifecycle.keyed("vec_id"), optional = true)))
+
   def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    recover(spark, path)
-    ids.select(col("vec_id")).write.mode(SaveMode.Append)
-      .parquet(s"$path/tombstones")
+    recoverRoot(spark, path); Lifecycle.delete(spark, path, ids)
+  }
+
+  def compact(spark: SparkSession, path: String): Unit = {
+    recoverRoot(spark, path); Lifecycle.compact(spark, path)
   }
 
   /** Open-time compact-swap crash recovery (see [[graft.sources.CompactSwap]]).
     * Shared by [[IvfPqIndex]], whose layout is identical. Two levels: the
     * whole ROOT first (a [[retrain]] that died between its two renames —
-    * the staged-aside old index is authoritative), then the `vectors`
-    * table (a `compact` that died likewise).
+    * the staged-aside old index is authoritative), then the lifecycle's
+    * tables (a `compact` that died likewise).
     */
   private[vector] def recover(spark: SparkSession, path: String): Unit = {
+    recoverRoot(spark, path)
+    Lifecycle.recover(spark, path)
+  }
+
+  private def recoverRoot(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     Option(p.getParent).foreach(parent =>
       graft.sources.CompactSwap.recover(spark, parent.toString, Seq(p.getName)))
-    graft.sources.CompactSwap.recover(spark, path, Seq("vectors", "ids"))
   }
 
   /** Retrain the index in place: fresh centroids from the CURRENT resident
@@ -392,7 +409,7 @@ object IvfIndex {
       rounds: Int = 3): Seq[graft.ops.Similarity.KmeansRound] = {
     recover(spark, path)
     val wasDateMajor = layoutDateMajor(spark, path)
-    val resident = dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
+    val resident = Lifecycle.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
       .select(col("vec_id"), col("label"), col("embedding"), col("ingest_date"))
       .localCheckpoint(true) // consumed by training rounds AND the rewrite
     val (cents, stats) = graft.ops.Similarity.kmeansTrain(resident, nCells, rounds)
@@ -421,61 +438,6 @@ object IvfIndex {
     stats
   }
 
-  private[vector] def tombstones(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      Some(Parquet.read(spark, s"$path/tombstones").select(col("vec_id")).distinct())
-    else None
-  }
-
-  private[vector] def dropTombstoned(spark: SparkSession, path: String,
-      df: DataFrame): DataFrame =
-    tombstones(spark, path) match {
-      case Some(t) => df.join(broadcast(t), Seq("vec_id"), "left_anti")
-      case None => df
-    }
-
-  /** Fold the tombstone log into the layout: rewrite `vectors` WITHOUT the
-    * deleted rows into a fresh sibling directory, rename it into place
-    * (the crash-safe swap `LshIndex.compact` uses — the live directory is
-    * never the write target, so an application crash mid-rewrite loses
-    * nothing), then drop the log. Works unchanged for [[IvfPqIndex]]:
-    * every column (incl. `codes`) and the `cell × ingest_date`
-    * partitioning are preserved row-for-row.
-    *
-    * Sidecars are deliberately untouched: centroids define the layout's
-    * assignment function and must survive compaction (a fresh k-means
-    * would re-cell the corpus), and the per-cell radii stay conservatively
-    * LARGE — the only safe direction for `rangeSearch`'s
-    * triangle-inequality bound (the appendBatch crash-ordering contract).
-    */
-  def compact(spark: SparkSession, path: String): Unit = {
-    recover(spark, path)
-    if (tombstones(spark, path).isEmpty) return
-    val wasDateMajor = layoutDateMajor(spark, path)
-    graft.sources.CompactSwap.rewrite(spark, path, "vectors") { fresh =>
-      writeCells(dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors")),
-        fresh, SaveMode.ErrorIfExists, dateMajor = wasDateMajor)
-    }
-    // Fold tombstones out of the id sidecar too (AFTER vectors: a crash
-    // between the two leaves deleted ids burned longer — conservative,
-    // like every ordering on this store). Legacy/PQ layouts without the
-    // sidecar skip it.
-    val idsP = new org.apache.hadoop.fs.Path(s"$path/ids")
-    if (idsP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(idsP))
-      graft.sources.CompactSwap.rewrite(spark, path, "ids") { fresh =>
-        graft.sources.KeyedSidecar.write(
-          dropTombstoned(spark, path, Parquet.read(spark, s"$path/ids"))
-            .select(col("vec_id")),
-          "vec_id", fresh, SaveMode.ErrorIfExists)
-      }
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    ()
-  }
-
   /** Cell-occupancy balance audit over the PHYSICAL layout — the
     * production twin of `Similarity.cellBalance`: an indexed corpus
     * already carries its cell assignment in the `cell=` directory
@@ -499,12 +461,9 @@ object IvfIndex {
     // is empty (row counts come from parquet row-group metadata, no data
     // pages decoded); only a pending tombstone fold needs the vec_id
     // column for its anti-join.
-    val base = Parquet.read(spark, s"$path/vectors")
-    val counts = (tombstones(spark, path) match {
-      case Some(t) => base.select(col("vec_id"), col("cell").cast("long").as("cell"))
-        .join(broadcast(t), Seq("vec_id"), "left_anti")
-      case None => base.select(col("cell").cast("long").as("cell"))
-    }).groupBy(col("cell")).agg(count(lit(1)).as("n_vectors"))
+    val counts = Lifecycle.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors")
+        .select(col("vec_id"), col("cell").cast("long").as("cell")))
+      .groupBy(col("cell")).agg(count(lit(1)).as("n_vectors"))
     val full = cells.join(counts, Seq("cell"), "left")
       .select(col("cell"), coalesce(col("n_vectors"), lit(0L)).as("n_vectors"))
       .localCheckpoint() // two consumers: the total and the per-cell rows
@@ -565,7 +524,7 @@ object IvfIndex {
         col("label"), lit(0L).cast("int").as("cell")).limit(0)
       case None => Parquet.read(spark, s"$path/vectors")
     }
-    val resident = dropTombstoned(spark, path, residentBase)
+    val resident = Lifecycle.dropTombstoned(spark, path, residentBase)
       .select(col("vec_id").as("c_vec_id"), col("embedding").as("c_emb"),
         col("label").as("c_label"), col("cell").cast("long").as("cell"))
       .filter(col("cell").isin(probed: _*))
@@ -678,7 +637,7 @@ object IvfIndex {
     val probeCells = probeCellsExpr(spark, path, nProbe)
     val q = queries.select(col("vec_id").as("q_vec_id"), col("embedding").as("q_emb"),
       explode(probeCells).as("cell"))
-    val base = dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
+    val base = Lifecycle.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
     val windowed =
       if (asOf == null) base
       else base.filter(col("ingest_date") > date_sub(lit(asOf), maxDays) &&
@@ -725,7 +684,7 @@ object IvfIndex {
     val qualifying = cents.collect {
       case (cid, c) if l2(c, query) - radii.getOrElse(cid, Double.MaxValue) <= radius => cid
     }
-    val base = dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
+    val base = Lifecycle.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
       .filter(col("cell").isin(qualifying: _*)) // partition pruning on disk
     val windowed =
       if (asOf == null) base
@@ -753,7 +712,7 @@ object IvfIndex {
       .orderBy(col("qd2"), col("cid"))
       .limit(nProbe)
       .select(col("cid")).collect().map(_.getLong(0))
-    val base = dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
+    val base = Lifecycle.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
       .filter(col("cell").isin(probed: _*)) // partition pruning: only probed dirs read
     val windowed =
       if (asOf == null) base
@@ -878,7 +837,7 @@ object IvfIndex {
           lit(0L).cast("int").as("cell")).limit(0)
       case None => fullVectors
     }
-    val resident = dropTombstoned(spark, path, residentProbed)
+    val resident = Lifecycle.dropTombstoned(spark, path, residentProbed)
       .select(col("vec_id").as("r_vec_id"), col("embedding").as("r_emb"),
         col("cell").cast("long").as("cell"))
       .filter(col("cell").isin(probedCells: _*))

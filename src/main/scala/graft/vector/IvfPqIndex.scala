@@ -156,7 +156,7 @@ object IvfPqIndex {
     def l2(a: Seq[Float], b: Seq[Float]): Double =
       a.zip(b).map { case (x, y) => (x.toDouble - y.toDouble) * (x.toDouble - y.toDouble) }.sum
     val probed = cents.map { case (cid, c) => (l2(c, query), cid) }.sorted.take(nProbe)
-    val raw = IvfIndex.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
+    val raw = IvfIndex.Lifecycle.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
     // With asOf, both the ADC candidate scans and the re-rank are pruned
     // to the retention window's date directories (probe × retention, both
     // at the partition level — the IvfIndex contract).
@@ -251,7 +251,7 @@ object IvfPqIndex {
         zip_with(col("q_emb"), element_at(centMap, col("cell")), (a, b) => a - b))
       .withColumn("lut", lutExpr)
       .select(col("q_vec_id"), col("q_emb"), col("cell"), col("lut"))
-    val raw = IvfIndex.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
+    val raw = IvfIndex.Lifecycle.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
     val base =
       if (asOf == null) raw
       else raw.filter(col("ingest_date") > date_sub(lit(asOf), maxDays) &&
@@ -304,7 +304,7 @@ object IvfPqIndex {
     val approx = aggregate(
       expr(s"zip_with(sequence(0, ${m - 1}), codes, (s, c) -> s * $ksub + c)"),
       lit(0.0), (acc, i) => acc + element_at(lut, i + 1))
-    IvfIndex.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
+    IvfIndex.Lifecycle.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
       .filter(col("cell") === cid)
       .select(col("vec_id"), approx.as("adc_d2"))
   }

@@ -281,7 +281,7 @@ object ServeIndex {
       .take(math.max(1, nProbe)).map(_._2)
     // sealed arm: probed cells × retained sealed days, tombstones dropped
     // BEFORE any top-k so a post-build delete never holds a candidate slot
-    val sealedAll = VectorIndex.dropTombstoned(spark, indexPath,
+    val sealedAll = VectorIndex.Lifecycle.dropTombstoned(spark, indexPath,
       Parquet.read(spark, s"$sc/vectors")
         .filter(col("cell").isin(probed: _*))
         .filter(col("ingest_date") > windowLo && col("ingest_date") < lit(m)))
@@ -340,7 +340,7 @@ object ServeIndex {
     // straight from the flat source of truth — appends since the build
     // are here, brute-forced; a row without an embedding never ranks
     graft.sources.CompactSwap.recoverAllHidden(spark, indexPath)
-    val hot = VectorIndex.dropTombstoned(spark, indexPath,
+    val hot = VectorIndex.Lifecycle.dropTombstoned(spark, indexPath,
       Parquet.read(spark, indexPath)
         .filter(col("ingest_date") >= lit(m) && col("ingest_date") <= lit(anchor) &&
           col("ingest_date") > windowLo))
@@ -401,7 +401,7 @@ object ServeIndex {
       math.max(1, nProbe))
     val q = queries.select(col("query_id"), col("q_emb"))
     val qSide = q.withColumn("q_ann", qAnnCol).withColumn("cell", explode(probeCells))
-    val sealedAll = VectorIndex.dropTombstoned(spark, indexPath,
+    val sealedAll = VectorIndex.Lifecycle.dropTombstoned(spark, indexPath,
       Parquet.read(spark, s"$sc/vectors")
         .filter(col("ingest_date") > windowLo && col("ingest_date") < lit(m)))
     val sealedCand =
@@ -473,7 +473,7 @@ object ServeIndex {
       }
     graft.sources.CompactSwap.recoverAllHidden(spark, indexPath)
     val hot = q.crossJoin(
-        VectorIndex.dropTombstoned(spark, indexPath,
+        VectorIndex.Lifecycle.dropTombstoned(spark, indexPath,
           Parquet.read(spark, indexPath)
             .filter(col("ingest_date") >= lit(m) && col("ingest_date") <= lit(anchor) &&
               col("ingest_date") > windowLo))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
-import graft.sources.Parquet
+import graft.sources.{CompactSwap, IndexLifecycle, Parquet}
 
 /** The vector-store subsystem: Spark-native replacement for the reference's
   * per-day FAISS index files (`faiss_manager.py`).
@@ -33,41 +33,23 @@ object VectorIndex {
   def append(batch: DataFrame, indexPath: String): Unit =
     batch.write.mode(SaveMode.Append).partitionBy("ingest_date").parquet(indexPath)
 
-  /** The tombstone log lives as a SIBLING of the index root: anything
-    * inside the root would enter partition discovery (the layout's
-    * directories are the partition values themselves).
-    */
-  private def tombstonePath(indexPath: String): String =
-    indexPath.stripSuffix("/") + "._tombstones"
-
   /** Point deletes — the takedown/GDPR path the reference lacks entirely
-    * (its only removal is whole-day retention, `faiss_manager.py:151-172`).
-    * Same Lucene-style contract as the IVF/LSH/inverted/phash tiers: ids
-    * append to a log, every serve path anti-joins it (bounded by
-    * deletes-since-compaction, broadcast), `compact` folds it into the
-    * layout. Deleting a vec_id removes EVERY copy (a record re-ingested on
-    * several days dies everywhere — the semantics a takedown wants).
+    * (its only removal is whole-day retention, `faiss_manager.py:151-172`);
+    * the contract is [[graft.sources.IndexLifecycle]]'s. The log lives
+    * BESIDE the index root: anything inside the root would enter partition
+    * discovery. No declared tables: the layout is partition-discovered, so
+    * [[compact]] keeps its own dirty-day swap loop.
+    */
+  private[graft] val Lifecycle =
+    IndexLifecycle("vec_id", IndexLifecycle.Beside, Seq.empty)
+
+  /** Deleting a vec_id removes EVERY copy (a record re-ingested on several
+    * days dies everywhere — the semantics a takedown wants).
     */
   def delete(spark: SparkSession, indexPath: String, ids: DataFrame): Unit = {
-    graft.sources.CompactSwap.recoverAllHidden(spark, indexPath)
-    ids.select(col("vec_id")).write.mode(SaveMode.Append)
-      .parquet(tombstonePath(indexPath))
+    CompactSwap.recoverAllHidden(spark, indexPath)
+    Lifecycle.delete(spark, indexPath, ids)
   }
-
-  private[vector] def tombstones(spark: SparkSession, indexPath: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(tombstonePath(indexPath))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      Some(Parquet.read(spark, p.toString).select(col("vec_id")).distinct())
-    else None
-  }
-
-  private[vector] def dropTombstoned(spark: SparkSession, indexPath: String,
-      df: DataFrame): DataFrame =
-    tombstones(spark, indexPath) match {
-      case Some(t) => df.join(broadcast(t), Seq("vec_id"), "left_anti")
-      case None => df
-    }
 
   /** Fold the tombstone log into the layout — rewriting ONLY the dirty
     * ingest-day directories (found by one column-pruned scan of
@@ -76,30 +58,25 @@ object VectorIndex {
     * rest of the layout is untouched.
     */
   def compact(spark: SparkSession, indexPath: String): Unit = {
-    graft.sources.CompactSwap.recoverAllHidden(spark, indexPath)
-    val ts = tombstones(spark, indexPath) match {
-      case Some(t) => t.localCheckpoint(true)
-      case None => return
-    }
-    val dirtyDays = Parquet.read(spark, indexPath)
-      .select(col("vec_id"), col("ingest_date"))
-      .join(broadcast(ts), "vec_id")
-      .select(date_format(col("ingest_date"), "yyyy-MM-dd")).distinct()
-      .collect().map(_.getString(0))
-    dirtyDays.foreach { day =>
-      graft.sources.CompactSwap.rewriteHidden(spark, indexPath, s"ingest_date=$day") { fresh =>
-        // reading the day directory directly drops the (directory-encoded)
-        // partition column; the rewrite lands under the same dir name, so
-        // discovery re-derives it
-        Parquet.read(spark, s"$indexPath/ingest_date=$day")
-          .join(broadcast(ts), Seq("vec_id"), "left_anti")
-          .write.mode(SaveMode.ErrorIfExists).parquet(fresh)
+    CompactSwap.recoverAllHidden(spark, indexPath)
+    Lifecycle.fold(spark, indexPath) { log =>
+      val ts = log.localCheckpoint(true)
+      val dirtyDays = Parquet.read(spark, indexPath)
+        .select(col("vec_id"), col("ingest_date"))
+        .join(broadcast(ts), "vec_id")
+        .select(date_format(col("ingest_date"), "yyyy-MM-dd")).distinct()
+        .collect().map(_.getString(0))
+      dirtyDays.foreach { day =>
+        CompactSwap.rewriteHidden(spark, indexPath, s"ingest_date=$day") { fresh =>
+          // reading the day directory directly drops the (directory-encoded)
+          // partition column; the rewrite lands under the same dir name, so
+          // discovery re-derives it
+          Parquet.read(spark, s"$indexPath/ingest_date=$day")
+            .join(broadcast(ts), Seq("vec_id"), "left_anti")
+            .write.mode(SaveMode.ErrorIfExists).parquet(fresh)
+        }
       }
     }
-    val p = new org.apache.hadoop.fs.Path(tombstonePath(indexPath))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    ()
   }
 
   /** S11 load-side: only the `maxDays` daily partitions in `(asOf−maxDays,
@@ -111,8 +88,8 @@ object VectorIndex {
     */
   def loadRecent(spark: SparkSession, indexPath: String, asOf: java.sql.Date,
       maxDays: Int = RetentionDays): DataFrame = {
-    graft.sources.CompactSwap.recoverAllHidden(spark, indexPath)
-    dropTombstoned(spark, indexPath,
+    CompactSwap.recoverAllHidden(spark, indexPath)
+    Lifecycle.dropTombstoned(spark, indexPath,
       Parquet.read(spark, indexPath)
         .filter(col("ingest_date") > date_sub(lit(asOf), maxDays) &&
           col("ingest_date") <= lit(asOf)))
@@ -124,7 +101,7 @@ object VectorIndex {
     */
   def maxIngestDate(spark: SparkSession, indexPath: String): Option[java.sql.Date] = {
     import org.apache.hadoop.fs.Path
-    graft.sources.CompactSwap.recoverAllHidden(spark, indexPath)
+    CompactSwap.recoverAllHidden(spark, indexPath)
     val root = new Path(indexPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // driver-side metadata IO rides the transient-retry policy — one

@@ -29,6 +29,7 @@ def main() -> None:
         "value": round(sum(qs.values()), 3),
         "unit": "sec",
         "queries": qs,
+        "failed": sorted({n for c in caps for n in c.get("failed", [])}),
         "sf": caps[0].get("sf"),
         "provenance": (
             f"per-query min of {len(caps)} same-HEAD captures at start-loads "
