@@ -1,76 +1,26 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Typed top-k aggregator (SURVEY.md §2.11 "Top-k UDAF"): keeps a bounded
-  * buffer of the k best (value desc, id asc) pairs per group instead of
-  * sorting the whole group — the map-side-combining form of the
-  * reference's per-index top-k + merge (`faiss_manager.py:254-291`). The
-  * buffer is at most 2k elements on every executor, so group skew cannot
-  * blow memory, and partial aggregation cuts the shuffle to k rows per
-  * (partition, key).
-  *
-  * Pruning is amortized: append until the buffer hits 2k, then one
-  * sort+take(k) — O(log k) amortized per row instead of the naive
-  * O(k log k) per-row re-sort.
-  */
-case class ScoredId(value: Double, id: Long)
-
-class TopKByValue(k: Int) extends Aggregator[ScoredId, Seq[ScoredId], Seq[ScoredId]] {
-  import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-  private val ord: Ordering[ScoredId] = Ordering.by(s => (-s.value, s.id))
-  private def prune(buf: Seq[ScoredId]): Seq[ScoredId] =
-    if (buf.size >= 2 * k) buf.sorted(ord).take(k) else buf
-
-  override def zero: Seq[ScoredId] = Seq.empty
-  override def reduce(buf: Seq[ScoredId], a: ScoredId): Seq[ScoredId] = prune(buf :+ a)
-  override def merge(a: Seq[ScoredId], b: Seq[ScoredId]): Seq[ScoredId] = prune(a ++ b)
-  override def finish(buf: Seq[ScoredId]): Seq[ScoredId] = buf.sorted(ord).take(k)
-  override def bufferEncoder: Encoder[Seq[ScoredId]] = ExpressionEncoder()
-  override def outputEncoder: Encoder[Seq[ScoredId]] = ExpressionEncoder()
-}
-
-/** Bounded earliest-k rows per group, ordered (ts asc, id asc) — the
-  * association fan-out cap (reference `clients/company_client.py:97`:
-  * limit=500 engagements per company) WITHOUT the full per-group window
-  * sort: a hot company with 10^8 engagements costs each executor at most a
-  * 2k-element buffer, and the map-side partial aggregation means at most k
-  * rows per (partition, company) ever reach the shuffle.
-  */
-case class EngRow(ts: java.sql.Timestamp, engagement_id: Long, etype: String, content: String)
-
-class EarliestKEngagements(k: Int) extends Aggregator[EngRow, Seq[EngRow], Seq[EngRow]] {
-  import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-  private val ord: Ordering[EngRow] = Ordering.by(e => (e.ts.getTime, e.engagement_id))
-  private def prune(buf: Seq[EngRow]): Seq[EngRow] =
-    if (buf.size >= 2 * k) buf.sorted(ord).take(k) else buf
-
-  override def zero: Seq[EngRow] = Seq.empty
-  // Null-ts rows are EXCLUDED — the same contract as the Catalyst-native
-  // EarliestKAgg, so the two forms stay interchangeable (a row without a
-  // timestamp has no position in the earliest-k order).
-  override def reduce(buf: Seq[EngRow], a: EngRow): Seq[EngRow] =
-    if (a.ts == null) buf else prune(buf :+ a)
-  override def merge(a: Seq[EngRow], b: Seq[EngRow]): Seq[EngRow] = prune(a ++ b)
-  override def finish(buf: Seq[EngRow]): Seq[EngRow] = buf.sorted(ord).take(k)
-  override def bufferEncoder: Encoder[Seq[EngRow]] = ExpressionEncoder()
-  override def outputEncoder: Encoder[Seq[EngRow]] = ExpressionEncoder()
-}
-
-/** Catalyst-native bounded earliest-k (SURVEY §2.11 "TypedImperativeAggregate
-  * semantics", realized literally): same bounded-buffer contract as
-  * `EarliestKEngagements`, but the buffer is a mutable ArrayBuffer held as a
-  * JVM object inside ObjectHashAggregate — no Encoder round-trip per row, no
-  * O(buffer) Seq copy per append. Serialization to bytes happens ONLY at the
-  * partial/final shuffle boundary. `UTF8String`s are copied on update
-  * because eval-time references point into the current scan row's buffer.
+/** Catalyst-native bounded earliest-k rows per group, ordered (ts asc, id
+  * asc) — the association fan-out cap (reference
+  * `clients/company_client.py:97`: limit=500 engagements per company)
+  * WITHOUT the full per-group window sort (SURVEY §2.11
+  * "TypedImperativeAggregate semantics", realized literally). A hot company
+  * with 10^8 engagements costs each executor at most a 2k-element buffer,
+  * and the map-side partial aggregation means at most k rows per
+  * (partition, company) ever reach the shuffle. The buffer is a mutable
+  * ArrayBuffer held as a JVM object inside ObjectHashAggregate — no Encoder
+  * round-trip per row, no O(buffer) Seq copy per append; pruning is
+  * amortized (append until 2k, then one sort+take(k)). Serialization to
+  * bytes happens ONLY at the partial/final shuffle boundary. `UTF8String`s
+  * are copied on update because eval-time references point into the
+  * current scan row's buffer.
   *
   * Contract: rows whose `ts` evaluates to null are EXCLUDED from the
-  * buffer (they have no position in the earliest-k order). The UDAF twin
-  * `EarliestKEngagements` applies the same rule, so both forms agree; note
-  * this differs from a nulls-first `row_number` window, which would rank
+  * buffer (they have no position in the earliest-k order); note this
+  * differs from a nulls-first `row_number` window, which would rank
   * null-ts rows ahead of everything.
   */
 case class EarliestKAgg(
@@ -175,12 +125,12 @@ case class EarliestKAgg(
 
 /** Catalyst-native bounded top-k of (value, id) pairs per group, ordered
   * (value DESC, id ASC) — the generalization of `EarliestKAgg` to a
-  * value-ranked ordering, and the native replacement for the `TopKByValue`
-  * Encoder-round-trip UDAF on the hot query path. Same bounded-buffer
-  * contract: ≤2k JVM tuples per group inside ObjectHashAggregate, one
-  * sort+take(k) amortized prune, serialization only at the partial/final
-  * shuffle boundary. Rows whose `value` is null are excluded (they have no
-  * rank), matching the UDAF twin's non-null input contract.
+  * value-ranked ordering, and the map-side-combining form of the
+  * reference's per-index top-k + merge (`faiss_manager.py:254-291`). Same
+  * bounded-buffer contract: ≤2k JVM tuples per group inside
+  * ObjectHashAggregate, so group skew cannot blow memory, one sort+take(k)
+  * amortized prune, serialization only at the partial/final shuffle
+  * boundary. Rows whose `value` is null are excluded (they have no rank).
   */
 case class TopKByValueAgg(
     value: org.apache.spark.sql.catalyst.expressions.Expression,
@@ -268,9 +218,7 @@ object TopKAggregator {
   }
 
   /** Top-k events per user as flat ranked rows — rides the native
-    * `TopKByValueAgg` (ObjectHashAggregate, no per-row Encoder round-trip);
-    * the `TopKByValue` UDAF twin stays as the property-tested reference
-    * implementation.
+    * `TopKByValueAgg` (ObjectHashAggregate, no per-row Encoder round-trip).
     */
   def topEventsPerUser(events: DataFrame, k: Int = 3): DataFrame =
     events
@@ -281,7 +229,7 @@ object TopKAggregator {
         col("col.id").as("event_id"), col("col.value").as("value"))
       .orderBy(col("user_id"), col("rank"))
 
-  /** Catalyst-native form of the fan-out cap (preferred): builds the
+  /** The fan-out cap as a column: builds the
     * `EarliestKAgg` aggregate expression directly — ObjectHashAggregate
     * keeps the buffer as a JVM object, so there is no per-row Encoder
     * round-trip.

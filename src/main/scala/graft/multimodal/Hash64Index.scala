@@ -130,15 +130,6 @@ private[graft] object Hash64Index {
       batchHashes: DataFrame, hashCol: String, maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 2,
       "the persisted probe family covers Hamming radius ≤ 2")
-    // phase timing to stderr under SPARK_GRAFT_GATE_TIMING=1 (the
-    // IvfIndex.dedupIngest knob — costs two clock reads otherwise)
-    val timing = sys.env.get("SPARK_GRAFT_GATE_TIMING").contains("1")
-    var tLast = System.nanoTime()
-    def mark(phase: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      System.err.println(f"[gate-timing] hash64.$phase ${(now - tLast) / 1e9}%.2fs")
-      tLast = now
-    }
     Lifecycle.recover(spark, path)
     val hashesPath = new org.apache.hadoop.fs.Path(s"$path/hashes")
     val fs = hashesPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -149,7 +140,6 @@ private[graft] object Hash64Index {
     // One row per doc_id, enforced (the VersionedStore.upsert contract):
     // duplicated ids inside one batch would evade the batch_dup tier and
     // burn the id twice into the authority table. Fail fast.
-    mark("setup")
     val dupId = ids.groupBy(col("doc_id")).count()
       .filter(col("count") > 1).limit(1).collect()
     require(dupId.isEmpty,
@@ -162,7 +152,6 @@ private[graft] object Hash64Index {
     // r13 the hashes table is doc_id-keyed, so the gate read point-prunes
     // to the batch's id buckets/pages on big corpora (the semi-join
     // enforces the restriction on small/legacy fallbacks).
-    mark("dup-id-check")
     val clash = graft.sources.KeyedSidecar
       .lookup(spark, s"$path/hashes", "doc_id", ids)
       .select(col("doc_id"))
@@ -171,12 +160,10 @@ private[graft] object Hash64Index {
     require(clash.isEmpty,
       s"batch doc_ids collide with resident ids (e.g. ${clash.map(_.get(0)).mkString(", ")}): " +
         "ingest requires batch ids disjoint from the resident corpus")
-    mark("id-clash-gate")
     val bHashes = batchHashes.localCheckpoint(true)
     val undecodable = ids
       .join(broadcast(bHashes.select(col("doc_id"))), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), lit("undecodable").as("verdict"))
-    mark("batch-hash-ckpt")
     val batchLosers = bHashes
       .groupBy(col(hashCol))
       .agg(min(col("doc_id")).as("keep_id"), collect_list(col("doc_id")).as("ids"))
@@ -184,7 +171,6 @@ private[graft] object Hash64Index {
       .filter(col("doc_id") =!= col("keep_id"))
       .select(col("doc_id"), lit("batch_dup").as("verdict"))
       .localCheckpoint(true)
-    mark("batch-dup-tier")
     val candidates = bHashes
       .join(broadcast(batchLosers.select("doc_id")), Seq("doc_id"), "left_anti")
     // tombstoned residents stop vetoing offers; the id clash gate above
@@ -195,11 +181,9 @@ private[graft] object Hash64Index {
     // this narrow table is the mm family's band-candidate consultation.
     // Legacy bucketed layouts (the interim r13 cut) read fine; the
     // partition column drops like lookup would.
-    mark("candidates")
     val probes = Lifecycle.dropTombstoned(spark, path,
       Parquet.read(spark, s"$path/probes")
         .drop(graft.sources.KeyedSidecar.BucketCol))
-    mark("probes-lookup")
     val probesCarryHash = probes.columns.contains("r_hash")
     // Probe tier, resident-streamed: the exploded batch side (batch × 65
     // probes) is contract-bounded and broadcasts, so the corpus-sized
@@ -234,7 +218,6 @@ private[graft] object Hash64Index {
       .select(col("doc_id")).distinct()
       .select(col("doc_id"), lit("near_dup").as("verdict"))
       .localCheckpoint(true)
-    mark("near-dup-tier")
     val keep = candidates
       .join(broadcast(nearDups.select("doc_id")), Seq("doc_id"), "left_anti")
       .localCheckpoint(true) // two consumers below; appends must not re-derive
@@ -242,17 +225,14 @@ private[graft] object Hash64Index {
     // the resident layout on Append — bucketed extends bucketed, flat
     // extends flat); legacy probes keep two columns (widening in place
     // would leave new rows' r_hash invisible to non-merging readers)
-    mark("keep-ckpt")
     import graft.sources.KeyedSidecar
     KeyedSidecar.write(keep, "doc_id", s"$path/hashes", SaveMode.Append)
-    mark("hashes-append")
     val probeRows =
       if (probesCarryHash)
         keep.select(explode(flipsOf(col(hashCol))).as("probe"), col("doc_id"),
           col(hashCol).as("r_hash"))
       else keep.select(explode(flipsOf(col(hashCol))).as("probe"), col("doc_id"))
     KeyedSidecar.write(probeRows, "probe", s"$path/probes", SaveMode.Append)
-    mark("probes-append")
     ids
       .join(broadcast(undecodable.unionByName(batchLosers).unionByName(nearDups)),
         Seq("doc_id"), "left")

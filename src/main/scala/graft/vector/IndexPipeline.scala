@@ -36,19 +36,11 @@ object IndexPipeline {
   }
 
   /** The search tool (§3.1): embed the query text driver-side with the SAME
-    * embedder, prune the index to the retention window, and run kNN with
-    * FAISS-parity output through the configured access path:
-    *
-    *   spark.graft.serve.index = flat | ivf | ivfpq | sq | opq  (default flat)
-    *   spark.graft.serve.nProbe, spark.graft.serve.refineFactor
-    *
-    * `flat` is the reference-parity brute scan of the retained window
-    * (`faiss_manager.py:143` only ever instantiates IndexFlatL2). `ivf` /
-    * `ivfpq` / `sq` / `opq` serve from the [[ServeIndex]] sidecar — probe-pruned
-    * sealed days + the brute hot day — and FALL BACK to the flat scan whenever the
-    * sidecar can't answer this request correctly (absent, mid-rebuild,
-    * wrong kind, or an `asOf` before its watermark): the config can only
-    * trade speed, never correctness.
+    * embedder, prune the index to the retention window, and brute-force
+    * kNN with FAISS-parity output — the reference's only access path
+    * (`faiss_manager.py:143` only ever instantiates IndexFlatL2). ANN
+    * serving is a separate call, [[ServeIndex.search]], never a session
+    * setting of this one.
     *
     * Retention is ALWAYS applied — the reference's search never scans more
     * than the retained day-indexes (`faiss_manager.py:91-99,270-272`).
@@ -59,32 +51,19 @@ object IndexPipeline {
     */
   def searchIndex(spark: SparkSession, indexPath: String, queryText: String,
       k: Int = 10, asOf: java.sql.Date = null,
-      embedder: Embedder = new HashingEmbedder()): DataFrame = {
-    val qv = embedder.embedText(queryText).toSeq
-    val mode = spark.conf.get("spark.graft.serve.index", "flat")
-    val served =
-      if (mode == "flat") None
-      else ServeIndex.search(spark, indexPath, mode, qv, k,
-        nProbe = spark.conf.get("spark.graft.serve.nProbe", "2").toInt,
-        refineFactor = spark.conf.get("spark.graft.serve.refineFactor", "4").toInt,
-        asOf = asOf)
-    served.getOrElse {
-      val anchor = Option(asOf).orElse(VectorIndex.maxIngestDate(spark, indexPath))
-      val idx = anchor match {
-        case Some(d) => VectorIndex.loadRecent(spark, indexPath, d)
-        case None => // empty/legacy layout: nothing to prune; deletes still honored
-          VectorIndex.Lifecycle.dropTombstoned(spark, indexPath, Parquet.read(spark, indexPath))
-      }
-      VectorIndex.search(idx, qv, k)
-    }
-  }
+      embedder: Embedder = new HashingEmbedder()): DataFrame =
+    VectorIndex.search(retained(spark, indexPath, asOf), embedder.embedText(queryText).toSeq, k)
 
-  /** Rebuild the ANN serving sidecar for `searchIndex`'s ivf/ivfpq modes —
-    * the periodic re-index job. See [[ServeIndex.build]].
+  /** The retained window of the flat index at `asOf` (default: its newest
+    * ingest day), tombstones dropped.
     */
-  def buildServeIndex(spark: SparkSession, indexPath: String, kind: String,
-      nCells: Int = 8, asOf: java.sql.Date = null): Unit =
-    ServeIndex.build(spark, indexPath, kind, nCells = nCells, asOf = asOf)
+  private def retained(spark: SparkSession, indexPath: String,
+      asOf: java.sql.Date): DataFrame =
+    Option(asOf).orElse(VectorIndex.maxIngestDate(spark, indexPath)) match {
+      case Some(d) => VectorIndex.loadRecent(spark, indexPath, d)
+      case None => // empty/legacy layout: nothing to prune; deletes still honored
+        VectorIndex.Lifecycle.dropTombstoned(spark, indexPath, Parquet.read(spark, indexPath))
+    }
 
   /** Batch search: top-k hits for EVERY query text at once — N queries is
     * one distributed job, not N driver round-trips. Queries embed as a
@@ -100,26 +79,9 @@ object IndexPipeline {
       k: Int = 10, asOf: java.sql.Date = null,
       embedder: Embedder = new HashingEmbedder()): DataFrame = {
     import graft.functions.VectorFunctions._
-    val qEmbedded = queries.select(col("query_id"),
+    val q = queries.select(col("query_id"),
       embedder.embedCol(col("query_text")).as("q_emb"))
-    // same access-path config as searchIndex — the sidecar answers the
-    // batch through one cell equi-join (ADC codes-only on the pq kind)
-    // plus the brute hot arm, or the flat scan serves as always
-    val mode = spark.conf.get("spark.graft.serve.index", "flat")
-    val served =
-      if (mode == "flat") None
-      else ServeIndex.searchBatch(spark, indexPath, mode, qEmbedded, k,
-        nProbe = spark.conf.get("spark.graft.serve.nProbe", "2").toInt,
-        refineFactor = spark.conf.get("spark.graft.serve.refineFactor", "4").toInt,
-        asOf = asOf)
-    if (served.isDefined) return served.get
-    val anchor = Option(asOf).orElse(VectorIndex.maxIngestDate(spark, indexPath))
-    val idx = anchor match {
-      case Some(d) => VectorIndex.loadRecent(spark, indexPath, d)
-      case None =>
-        VectorIndex.Lifecycle.dropTombstoned(spark, indexPath, Parquet.read(spark, indexPath))
-    }
-    val q = qEmbedded
+    val idx = retained(spark, indexPath, asOf)
     // a row without an embedding (a null indexed text) never ranks
     val corpus = idx.filter(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"), col("data_type"), col("data_json"))

@@ -392,9 +392,9 @@ object IvfIndex {
     * speed). `CompactSwap.rewrite` on the index root makes the new
     * generation appear in one rename; `recover` (called at every public
     * entry) restores the staged-aside old root if the writer died between
-    * its two renames. The optimizer rules' sidecar caches key on the
-    * directory listing fingerprint, so a retrain invalidates them
-    * automatically (`IvfProbePruning.loadSidecar`).
+    * its two renames. Nothing caches the centroids or radii across calls:
+    * `search`/`rangeSearch` read the sidecars each time, so the next call
+    * after a retrain sees the new generation.
     *
     * Retrain is also a compact: deletes fold into the rewrite and the
     * tombstone log does not carry into the new generation. PQ layouts
@@ -745,15 +745,6 @@ object IvfIndex {
   def dedupIngest(spark: SparkSession, path: String, batch: DataFrame,
       threshold: Double = 0.95, nProbe: Int = 4,
       ingestDate: java.sql.Date = DefaultIngestDate): DataFrame = {
-    // phase timing to stderr under SPARK_GRAFT_GATE_TIMING=1 — the
-    // resident-curve decomposition knob (costs two clock reads otherwise)
-    val timing = sys.env.get("SPARK_GRAFT_GATE_TIMING").contains("1")
-    var tLast = System.nanoTime()
-    def mark(phase: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      System.err.println(f"[gate-timing] $phase ${(now - tLast) / 1e9}%.2fs")
-      tLast = now
-    }
     recover(spark, path)
     val vecPath = new org.apache.hadoop.fs.Path(s"$path/vectors")
     val fs = vecPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -800,7 +791,6 @@ object IvfIndex {
     require(clash.isEmpty,
       s"batch vec_ids collide with resident ids (e.g. ${clash.map(_.get(0)).mkString(", ")}): " +
         "ingest requires batch ids disjoint from the resident corpus")
-    mark("id_gate")
     val batchLosers = b
       .groupBy(col("embedding"))
       .agg(min(col("vec_id")).as("keep_id"), collect_list(col("vec_id")).as("ids"))
@@ -808,7 +798,6 @@ object IvfIndex {
       .filter(col("vec_id") =!= col("keep_id"))
       .select(col("vec_id"), lit("batch_dup").as("verdict"))
       .localCheckpoint(true)
-    mark("batch_dups")
     val candidates = b
       .join(broadcast(batchLosers.select("vec_id")), Seq("vec_id"), "left_anti")
     val probed = candidates
@@ -823,7 +812,6 @@ object IvfIndex {
     // fixed batch, all of it scan time (shuffle/output flat).
     val probedCells = probed.select(col("cell")).distinct()
       .collect().map(_.getLong(0))
-    mark("probed_cells")
     // tombstoned residents stop matching as dup candidates; the id-clash
     // gate above still reads them (deleted ids stay burned until compact).
     // The probed-dir read (r13) lists and reads ONLY the probed cells'
@@ -852,12 +840,10 @@ object IvfIndex {
       .select(col("vec_id")).distinct()
       .select(col("vec_id"), lit("near_dup").as("verdict"))
       .localCheckpoint(true)
-    mark("near_dups")
     val keep = candidates
       .join(broadcast(nearDups.select("vec_id")), Seq("vec_id"), "left_anti")
     appendBatch(spark, keep.select(col("vec_id"), col("label"), col("embedding")),
       path, ingestDate)
-    mark("append")
     batchIds
       .join(broadcast(batchLosers.unionByName(nearDups)), Seq("vec_id"), "left")
       .select(col("vec_id"), coalesce(col("verdict"), lit("ingested")).as("verdict"))

@@ -6,9 +6,11 @@ import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
 import graft.sources.Parquet
 
-/** ANN acceleration sidecar for the flat serving index — the piece that
-  * lets `GraftApi.searchData` stop brute-forcing the retained window once
-  * that window is big. The flat `VectorIndex` layout stays the source of
+/** ANN acceleration sidecar for the flat serving index — an explicit
+  * alternative to the flat retained-window scan of
+  * `IndexPipeline.searchIndex` for a caller whose window is big: the
+  * caller picks it by calling `search`/`searchBatch` here, never through
+  * session state. The flat `VectorIndex` layout stays the source of
   * truth (appends, tombstones, retention, payload); `build` reorganizes its
   * CURRENT retained window into an IVF, IVF-PQ, IVF-SQ8, or OPQ (PCA-rotated
   * residual PQ — FAISS `PCAMatrix,IVFx,PQy` posture) layout at
@@ -46,8 +48,8 @@ import graft.sources.Parquet
   * max ingest day; backfilling a day older than the watermark requires a
   * sidecar rebuild (the hot-day arm only covers `ingest_date ≥ watermark`).
   * `search` refuses anchors before the watermark (time travel into days the
-  * sidecar's window never covered) by returning None — the facade falls
-  * back to the flat scan, trading speed, never correctness.
+  * sidecar's window never covered) by returning None — the caller then
+  * runs the flat scan, trading speed, never correctness.
   */
 object ServeIndex {
 
@@ -101,7 +103,7 @@ object ServeIndex {
   /** (kind, watermark) of the live sidecar, if one is fully built. The
     * existence probe is driver-side metadata IO and rides the
     * transient-retry policy (`graft.sources.RetryingIO`) — a throttled
-    * object-store response must downgrade to the flat scan only when the
+    * object-store response must make `search` answer None only when the
     * sidecar is genuinely absent, not because one HEAD got a 503.
     */
   def meta(spark: SparkSession, indexPath: String): Option[(String, java.sql.Date)] = {
@@ -132,7 +134,7 @@ object ServeIndex {
     * The build lands in a staging sibling and swaps in with
     * delete-then-rename: a crash mid-build leaves the old sidecar live; a
     * crash between delete and rename leaves NO sidecar — and a missing
-    * sidecar only ever downgrades the facade to the flat scan.
+    * sidecar only ever makes `search` answer None.
     */
   def build(spark: SparkSession, indexPath: String, kind: String,
       nCells: Int = 8, kmeansIters: Int = 3, m: Int = 8, ksub: Int = 16,

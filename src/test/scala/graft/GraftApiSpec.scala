@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import graft.api.GraftApi
 
 class GraftApiSpec extends SparkSpec {
@@ -135,25 +136,60 @@ class GraftApiSpec extends SparkSpec {
     assert(page.results.head.similarity_score > 0.99)
   }
 
-  // ---- config-switched ANN serving path (spark.graft.serve.index) ----
+  // ---- explicit ANN serving API (ServeIndex) vs the flat search tool ----
 
-  /** Bitwise image of a search page: rank, raw IEEE bits of the score,
+  /** Bitwise image of search hits: rank, raw IEEE bits of the score,
     * payload columns.
     */
-  private def hitBits(p: GraftApi.Page[GraftApi.SearchHit]) =
-    p.results.map(h => (h.rank, java.lang.Double.doubleToRawLongBits(h.similarity_score),
+  private def hitBits(hits: Seq[GraftApi.SearchHit]) =
+    hits.map(h => (h.rank, java.lang.Double.doubleToRawLongBits(h.similarity_score),
       h.data_type, h.data_json))
 
-  private def withServeConf[A](mode: String, nProbe: Int, refine: Int)(body: => A): A = {
-    spark.conf.set("spark.graft.serve.index", mode)
-    spark.conf.set("spark.graft.serve.nProbe", nProbe.toString)
-    spark.conf.set("spark.graft.serve.refineFactor", refine.toString)
-    try body finally {
-      spark.conf.set("spark.graft.serve.index", "flat")
-      spark.conf.unset("spark.graft.serve.nProbe")
-      spark.conf.unset("spark.graft.serve.refineFactor")
-    }
+  private def batchBits(hits: Seq[GraftApi.BatchSearchHit]) =
+    hits.map(h => (h.query_id, h.rank,
+      java.lang.Double.doubleToRawLongBits(h.similarity_score), h.data_type, h.data_json))
+
+  /** The flat search tool's hits, bitwise. */
+  private def flatBits(dir: String, text: String, k: Int = 5, asOf: java.sql.Date = null) =
+    hitBits(GraftApi.searchData(spark, dir, text, k, asOf).results)
+
+  private def flatBatchBits(dir: String, texts: Seq[(Long, String)], k: Int = 5) =
+    batchBits(GraftApi.searchDataBatch(spark, dir, texts, k).results)
+
+  private val embedder = new graft.vector.HashingEmbedder()
+
+  /** `ServeIndex.search` for a query text, embedded as the search tool
+    * embeds it; None when the sidecar cannot answer.
+    */
+  private def serveOpt(dir: String, kind: String, text: String, nProbe: Int, refine: Int,
+      k: Int = 5, asOf: java.sql.Date = null): Option[Seq[GraftApi.SearchHit]] = {
+    import spark.implicits._
+    graft.vector.ServeIndex.search(spark, dir, kind, embedder.embedText(text).toSeq, k,
+      nProbe, refine, asOf).map(_.as[GraftApi.SearchHit].collect().toSeq)
   }
+
+  private def serve(dir: String, kind: String, text: String, nProbe: Int, refine: Int,
+      k: Int = 5): Seq[GraftApi.SearchHit] =
+    serveOpt(dir, kind, text, nProbe, refine, k)
+      .getOrElse(fail(s"the $kind sidecar must answer a current-anchor query"))
+
+  /** `ServeIndex.searchBatch` over query texts, embedded as the batch tool
+    * embeds them.
+    */
+  private def serveBatchOpt(dir: String, kind: String, texts: Seq[(Long, String)],
+      nProbe: Int, refine: Int, k: Int = 5): Option[Seq[GraftApi.BatchSearchHit]] = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val q = texts.toDF("query_id", "query_text")
+      .select(col("query_id"), embedder.embedCol(col("query_text")).as("q_emb"))
+    graft.vector.ServeIndex.searchBatch(spark, dir, kind, q, k, nProbe, refine)
+      .map(_.as[GraftApi.BatchSearchHit].collect().toSeq)
+  }
+
+  private def serveBatch(dir: String, kind: String, texts: Seq[(Long, String)],
+      nProbe: Int, refine: Int, k: Int = 5): Seq[GraftApi.BatchSearchHit] =
+    serveBatchOpt(dir, kind, texts, nProbe, refine, k)
+      .getOrElse(fail(s"the $kind sidecar must answer a current-anchor batch"))
 
   test("serve.index=ivf probe-all ≡ flat bitwise; hot-day appends and late deletes honored") {
     import org.apache.spark.sql.functions._
@@ -162,32 +198,32 @@ class GraftApiSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf).limit(50)
     graft.vector.IndexPipeline.indexRecords(docs, "text", "document", dir,
       java.sql.Date.valueOf("2024-03-01"))
-    graft.vector.IndexPipeline.buildServeIndex(spark, dir, "ivf", nCells = 8)
+    graft.vector.ServeIndex.build(spark, dir, "ivf", nCells = 8)
     // appended AFTER the sidecar build, on a newer day: the hot arm must see it
     graft.vector.IndexPipeline.indexRecords(docs.limit(5), "text", "late", dir,
       java.sql.Date.valueOf("2024-03-02"))
     val probe = docs.select("text").head.getString(0)
-    val flat = GraftApi.searchData(spark, dir, probe, 5)
-    val served = withServeConf("ivf", nProbe = 8, refine = 1) {
-      GraftApi.searchData(spark, dir, probe, 5)
-    }
-    assert(hitBits(served) == hitBits(flat),
+    val flat = flatBits(dir, probe)
+    val served = serve(dir, "ivf", probe, nProbe = 8, refine = 1)
+    assert(hitBits(served) == flat,
       "probe-all IVF over sealed days + brute hot day must equal the flat scan bit-for-bit")
-    assert(served.results.exists(_.data_type == "late"),
+    assert(served.exists(_.data_type == "late"),
       "a row appended after the sidecar build must be served from the hot arm")
     // a delete issued AFTER the build hides the vector on both paths
     import spark.implicits._
-    val qEmb = new graft.vector.HashingEmbedder().embedText(probe)
+    val qEmb = embedder.embedText(probe)
     val top = spark.read.parquet(dir)
       .withColumn("d2", l2Sq(col("embedding"), lit(qEmb)))
       .orderBy(col("d2"), col("vec_id")).select("vec_id").head.getLong(0)
     graft.vector.VectorIndex.delete(spark, dir, Seq(top).toDF("vec_id"))
-    val flat2 = GraftApi.searchData(spark, dir, probe, 5)
-    val served2 = withServeConf("ivf", nProbe = 8, refine = 1) {
-      GraftApi.searchData(spark, dir, probe, 5)
-    }
-    assert(hitBits(served2) == hitBits(flat2))
-    assert(hitBits(served2) != hitBits(flat), "the deleted top hit must vanish")
+    val flat2 = flatBits(dir, probe)
+    assert(hitBits(serve(dir, "ivf", probe, nProbe = 8, refine = 1)) == flat2)
+    assert(flat2 != flat, "the deleted top hit must vanish")
+    // the batch twin sees the same append and delete
+    val texts = docs.limit(3).select("doc_id", "text").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toSeq
+    assert(batchBits(serveBatch(dir, "ivf", texts, nProbe = 8, refine = 1)) ==
+      flatBatchBits(dir, texts))
   }
 
   test("search skips an indexed null-text row: flat single, flat batch and the serve hot arm") {
@@ -197,27 +233,27 @@ class GraftApiSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf).limit(50)
     graft.vector.IndexPipeline.indexRecords(docs, "text", "document", dir,
       java.sql.Date.valueOf("2024-03-01"))
-    graft.vector.IndexPipeline.buildServeIndex(spark, dir, "ivf", nCells = 8)
+    graft.vector.ServeIndex.build(spark, dir, "ivf", nCells = 8)
     // a conversation thread without a MESSAGE-type message indexes a null text
     val query = "alpha beta gamma delta"
     graft.vector.IndexPipeline.indexRecords(
       Seq(("t1", null: String), ("t2", query)).toDF("id", "text"), "text", "thread", dir,
       java.sql.Date.valueOf("2024-03-02"))
     assert(spark.read.parquet(dir).filter(col("embedding").isNull).count() == 1L)
-    def searchAll(): Unit = {
-      val single = GraftApi.searchData(spark, dir, query, 60)
-      assert(single.results.head.data_json.contains("\"id\":\"t2\""),
-        s"top hit ${single.results.head}")
-      assert(!single.results.exists(_.data_json.contains("\"t1\"")))
+    def check(single: Seq[GraftApi.SearchHit], batch: Seq[GraftApi.BatchSearchHit]): Unit = {
+      assert(single.head.data_json.contains("\"id\":\"t2\""), s"top hit ${single.head}")
+      assert(!single.exists(_.data_json.contains("\"t1\"")))
       // the batch joins its payload back on vec_id, which appends reuse, so
       // only the rank-1 score is checked here
-      val batch = GraftApi.searchDataBatch(spark, dir, Seq(0L -> query, 1L -> "x"), 60)
-      assert(batch.results.find(h => h.query_id == 0L && h.rank == 1L)
+      assert(batch.find(h => h.query_id == 0L && h.rank == 1L)
         .exists(_.similarity_score == 1.0))
-      assert(!batch.results.exists(_.data_json.contains("\"t1\"")))
+      assert(!batch.exists(_.data_json.contains("\"t1\"")))
     }
-    searchAll()
-    withServeConf("ivf", nProbe = 8, refine = 1)(searchAll())
+    val texts = Seq(0L -> query, 1L -> "x")
+    check(GraftApi.searchData(spark, dir, query, 60).results,
+      GraftApi.searchDataBatch(spark, dir, texts, 60).results)
+    check(serve(dir, "ivf", query, nProbe = 8, refine = 1, k = 60),
+      serveBatch(dir, "ivf", texts, nProbe = 8, refine = 1, k = 60))
   }
 
   test("serve.index=ivfpq probe-all + window-covering refine ≡ flat bitwise") {
@@ -229,23 +265,18 @@ class GraftApiSpec extends SparkSpec {
       java.sql.Date.valueOf("2024-03-02"))
     graft.vector.ServeIndex.build(spark, dir, "ivfpq", nCells = 8)
     val probe = docs.select("text").head.getString(0)
-    val flat = GraftApi.searchData(spark, dir, probe, 5)
+    val flat = GraftApi.searchData(spark, dir, probe, 5).results
     // probe all 8 cells, refine budget 5·20 = 100 ≥ the 60-row window:
     // the provably-exact configuration (IvfPqSpec's vec_pq_search pattern)
-    val served = withServeConf("ivfpq", nProbe = 8, refine = 20) {
-      GraftApi.searchData(spark, dir, probe, 5)
-    }
-    assert(hitBits(served) == hitBits(flat))
+    assert(hitBits(serve(dir, "ivfpq", probe, nProbe = 8, refine = 20)) == hitBits(flat))
     // the budgeted config (narrow probe, small refine — the production
     // trade whose floors IvfPqSpec pins) still finds the exact-match hit
-    val fast = withServeConf("ivfpq", nProbe = 2, refine = 4) {
-      GraftApi.searchData(spark, dir, probe, 5)
-    }
-    assert(fast.results.map(_.rank) == Seq(1L, 2L, 3L, 4L, 5L))
-    assert(fast.results.head.similarity_score > 0.99,
+    val fast = serve(dir, "ivfpq", probe, nProbe = 2, refine = 4)
+    assert(fast.map(_.rank) == Seq(1L, 2L, 3L, 4L, 5L))
+    assert(fast.head.similarity_score > 0.99,
       "the identical-text vector sits in the nearest probed cell — recall@1 holds")
-    val flatSet = flat.results.map(_.data_json).toSet
-    assert(fast.results.count(h => flatSet.contains(h.data_json)) >= 1,
+    val flatSet = flat.map(_.data_json).toSet
+    assert(fast.count(h => flatSet.contains(h.data_json)) >= 1,
       "budgeted recall floor: the fast config overlaps the exact top-k")
   }
 
@@ -258,30 +289,19 @@ class GraftApiSpec extends SparkSpec {
       java.sql.Date.valueOf("2024-03-02"))
     graft.vector.ServeIndex.build(spark, dir, "sq", nCells = 8)
     val probe = docs.select("text").head.getString(0)
-    val flat = GraftApi.searchData(spark, dir, probe, 5)
     // probe all 8 cells, refine 5·20 = 100 ≥ the 60-row window: the SQ ADC
     // stage only SELECTS candidates, the exact re-rank decides — provably
     // the flat answer (the SqIndex.searchExact rationale)
-    val served = withServeConf("sq", nProbe = 8, refine = 20) {
-      GraftApi.searchData(spark, dir, probe, 5)
-    }
-    assert(hitBits(served) == hitBits(flat),
+    assert(hitBits(serve(dir, "sq", probe, nProbe = 8, refine = 20)) == flatBits(dir, probe),
       "probe-all SQ8 over sealed days + brute hot day must equal the flat scan bit-for-bit")
     // the budgeted config still lands the identical-text hit at rank 1
-    val fast = withServeConf("sq", nProbe = 2, refine = 4) {
-      GraftApi.searchData(spark, dir, probe, 5)
-    }
-    assert(fast.results.map(_.rank) == Seq(1L, 2L, 3L, 4L, 5L))
-    assert(fast.results.head.similarity_score > 0.99)
+    val fast = serve(dir, "sq", probe, nProbe = 2, refine = 4)
+    assert(fast.map(_.rank) == Seq(1L, 2L, 3L, 4L, 5L))
+    assert(fast.head.similarity_score > 0.99)
     // batch twin: probe-all sq batch ≡ flat batch bitwise
     val texts = docs.limit(3).select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toSeq
-    def bbits(p: GraftApi.Page[GraftApi.BatchSearchHit]) =
-      p.results.map(h => (h.query_id, h.rank,
-        java.lang.Double.doubleToRawLongBits(h.similarity_score), h.data_type, h.data_json))
-    val flatB = GraftApi.searchDataBatch(spark, dir, texts, 5)
-    val servedB = withServeConf("sq", 8, 20)(GraftApi.searchDataBatch(spark, dir, texts, 5))
-    assert(bbits(servedB) == bbits(flatB),
+    assert(batchBits(serveBatch(dir, "sq", texts, 8, 20)) == flatBatchBits(dir, texts),
       "probe-all + window-covering refine SQ batch must equal the flat batch bitwise")
   }
 
@@ -303,32 +323,21 @@ class GraftApiSpec extends SparkSpec {
     assert(!cols.contains("ann_emb") && cols.contains("codes") && cols.contains("embedding"),
       "rotated vectors are never stored — codes carry the rotated-space info")
     val probe = docs.select("text").head.getString(0)
-    val flat = GraftApi.searchData(spark, dir, probe, 5)
     // probe all 8 cells, refine 5·20 = 100 ≥ the 60-row window: candidacy
     // is total whatever the rotation did, and the exact re-rank runs the
     // SAME raw-space distance expression as the flat scan — bitwise equal
-    val served = withServeConf("opq", nProbe = 8, refine = 20) {
-      GraftApi.searchData(spark, dir, probe, 5)
-    }
-    assert(hitBits(served) == hitBits(flat),
+    assert(hitBits(serve(dir, "opq", probe, nProbe = 8, refine = 20)) == flatBits(dir, probe),
       "probe-all rotated-PQ over sealed days + brute hot day must equal the flat scan bit-for-bit")
     // budgeted config: the identical-text vector still lands at rank 1
-    val fast = withServeConf("opq", nProbe = 2, refine = 4) {
-      GraftApi.searchData(spark, dir, probe, 5)
-    }
-    assert(fast.results.map(_.rank) == Seq(1L, 2L, 3L, 4L, 5L))
-    assert(fast.results.head.similarity_score > 0.99,
+    val fast = serve(dir, "opq", probe, nProbe = 2, refine = 4)
+    assert(fast.map(_.rank) == Seq(1L, 2L, 3L, 4L, 5L))
+    assert(fast.head.similarity_score > 0.99,
       "the query rotates with the same basis as the corpus — recall@1 holds")
     // batch twin: probe-all opq batch ≡ flat batch bitwise (the in-plan
     // query rotation must agree with the driver-side single-query rotation)
     val texts = docs.limit(3).select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toSeq
-    def bbits(p: GraftApi.Page[GraftApi.BatchSearchHit]) =
-      p.results.map(h => (h.query_id, h.rank,
-        java.lang.Double.doubleToRawLongBits(h.similarity_score), h.data_type, h.data_json))
-    val flatB = GraftApi.searchDataBatch(spark, dir, texts, 5)
-    val servedB = withServeConf("opq", 8, 20)(GraftApi.searchDataBatch(spark, dir, texts, 5))
-    assert(bbits(servedB) == bbits(flatB),
+    assert(batchBits(serveBatch(dir, "opq", texts, 8, 20)) == flatBatchBits(dir, texts),
       "probe-all + window-covering refine OPQ batch must equal the flat batch bitwise")
   }
 
@@ -371,26 +380,19 @@ class GraftApiSpec extends SparkSpec {
     graft.vector.IndexPipeline.indexRecords(docs.limit(8), "text", "document", dir,
       java.sql.Date.valueOf("2024-03-02"))
     val probe = docs.select("text").head.getString(0)
-    val flat = GraftApi.searchData(spark, dir, probe, 5)
-    // 1: ivf requested, no sidecar built yet
-    val noSidecar = withServeConf("ivf", 8, 1)(GraftApi.searchData(spark, dir, probe, 5))
-    assert(hitBits(noSidecar) == hitBits(flat))
-    // 2: sidecar is ivf, config asks ivfpq
+    // 1: no sidecar built yet
+    assert(serveOpt(dir, "ivf", probe, 8, 1).isEmpty)
+    // 2: sidecar is ivf, the caller asks ivfpq
     graft.vector.ServeIndex.build(spark, dir, "ivf", nCells = 4)
-    val mismatch = withServeConf("ivfpq", 8, 20)(GraftApi.searchData(spark, dir, probe, 5))
-    assert(hitBits(mismatch) == hitBits(flat))
+    assert(serveOpt(dir, "ivfpq", probe, 8, 20).isEmpty)
     // 3: asOf anchored BEFORE the watermark — time travel the sidecar's
-    // window never covered; must serve (correctly) from the flat layout
+    // window never covered; only the flat layout can answer it
     val past = java.sql.Date.valueOf("2024-03-01")
-    val flatPast = GraftApi.searchData(spark, dir, probe, 5, asOf = past)
-    val servedPast = withServeConf("ivf", 8, 1)(
-      GraftApi.searchData(spark, dir, probe, 5, asOf = past))
-    assert(hitBits(servedPast) == hitBits(flatPast))
-    assert(hitBits(flatPast) != hitBits(flat),
+    assert(serveOpt(dir, "ivf", probe, 8, 1, asOf = past).isEmpty)
+    assert(flatBits(dir, probe, asOf = past) != flatBits(dir, probe),
       "the two anchors must actually see different windows for this test to bite")
     // matched kind + current anchor serves through the sidecar and agrees
-    val servedNow = withServeConf("ivf", 8, 1)(GraftApi.searchData(spark, dir, probe, 5))
-    assert(hitBits(servedNow) == hitBits(flat))
+    assert(hitBits(serve(dir, "ivf", probe, 8, 1)) == flatBits(dir, probe))
   }
 
   test("batch serve: ivf and ivfpq probe-all ≡ the flat batch scan bitwise; fallback intact") {
@@ -402,23 +404,39 @@ class GraftApiSpec extends SparkSpec {
       java.sql.Date.valueOf("2024-03-02"))
     val texts = docs.limit(3).select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toSeq
-    def bits(p: GraftApi.Page[GraftApi.BatchSearchHit]) =
-      p.results.map(h => (h.query_id, h.rank,
-        java.lang.Double.doubleToRawLongBits(h.similarity_score), h.data_type, h.data_json))
-    val flat = GraftApi.searchDataBatch(spark, dir, texts, 5)
-    // no sidecar yet: the batch path must fall back to the flat scan
-    val noSidecar = withServeConf("ivf", 8, 1)(GraftApi.searchDataBatch(spark, dir, texts, 5))
-    assert(bits(noSidecar) == bits(flat))
+    val flat = flatBatchBits(dir, texts)
+    // no sidecar yet: the batch serve cannot answer
+    assert(serveBatchOpt(dir, "ivf", texts, 8, 1).isEmpty)
     graft.vector.ServeIndex.build(spark, dir, "ivf", nCells = 8)
-    val servedIvf = withServeConf("ivf", 8, 1)(GraftApi.searchDataBatch(spark, dir, texts, 5))
-    assert(bits(servedIvf) == bits(flat),
+    val servedIvf = serveBatch(dir, "ivf", texts, 8, 1)
+    assert(batchBits(servedIvf) == flat,
       "probe-all IVF batch (sealed cell-join + brute hot arm) must equal the flat batch " +
         "bitwise — which also proves the post-build hot-day rows entered the candidate set")
-    assert(servedIvf.results.groupBy(_.query_id).values.forall(_.map(_.rank) == Seq(1L, 2L, 3L, 4L, 5L)))
+    assert(servedIvf.groupBy(_.query_id).values.forall(_.map(_.rank) == Seq(1L, 2L, 3L, 4L, 5L)))
+    // kind mismatch: the ivf sidecar does not answer an ivfpq batch
+    assert(serveBatchOpt(dir, "ivfpq", texts, 8, 20).isEmpty)
     graft.vector.ServeIndex.build(spark, dir, "ivfpq", nCells = 8)
-    val servedPq = withServeConf("ivfpq", 8, 20)(GraftApi.searchDataBatch(spark, dir, texts, 5))
-    assert(bits(servedPq) == bits(flat),
+    assert(batchBits(serveBatch(dir, "ivfpq", texts, 8, 20)) == flat,
       "probe-all + window-covering refine IVF-PQ batch must equal the flat batch bitwise")
+  }
+
+  test("src/main picks access paths by the call, never by a spark.graft.* conf or env switch") {
+    // a session conf or env var that swaps the code path a call runs is
+    // reached only by tests that set it; the choice belongs to the caller
+    // (searchIndex vs ServeIndex.search, IvfIndex.search vs a full scan)
+    val switch = """spark\.graft\.|SPARK_GRAFT_GATE_TIMING""".r
+    val files = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try s.iterator().asScala.toList finally s.close()
+    }.filter(_.toString.endsWith(".scala"))
+    assert(files.size > 50, s"scan found only ${files.size} sources")
+    val found = files.flatMap { f =>
+      val text = java.nio.file.Files.readString(f)
+      switch.findAllMatchIn(text).map { m =>
+        s"$f:${text.substring(0, m.start).count(_ == '\n') + 1}: ${m.matched}"
+      }
+    }
+    assert(found.isEmpty, s"a switch that selects a code path:\n${found.mkString("\n")}")
   }
 
   test("batch search answers every query in one job, matching per-query searchData") {

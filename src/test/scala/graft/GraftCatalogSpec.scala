@@ -43,12 +43,12 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects the same function builders as GraftFunctions.register") {
-    // Applying the extensions must register cleanly (rule + functions)...
+    // Applying the extensions must register cleanly...
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new plans.GraftExtensions()(ext)
     // ...and the descriptor list mirrors the temp-function surface, so a
     // SQL-first cluster user (spark.sql.extensions=graft.plans.GraftExtensions)
-    // can form the vec_l2sq ORDER BY shape the IVF auto-probe rule matches.
+    // can form the vec_l2sq ORDER BY shape without programmatic setup.
     val fns = plans.GraftExtensions.functions
     assert(fns.map(_._1.funcName) == Seq("vec_dot", "vec_l2sq", "feature_hash_embed"))
     val b = fns.map(f => f._1.funcName -> f._3).toMap

@@ -122,76 +122,6 @@ class IvfIndexSpec extends SparkSpec {
     assert(cells == probed.toSet)
   }
 
-  test("IVF auto-probe rule rewrites declarative kNN into a partition-pruned probe") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf3").toString + "/ivf"
-    val emb = Tables.embeddings(spark, sf)
-    IvfIndex.build(spark, emb, dir, kmeansIters = 0)
-    val qv = emb.filter(col("vec_id") === 7L).select("embedding").head.getSeq[Float](0)
-
-    def naiveKnn() = spark.read.parquet(s"$dir/vectors")
-      .withColumn("d2", graft.functions.VectorFunctions.l2Sq(col("embedding"), lit(qv.toArray)))
-      .orderBy(col("d2"), col("vec_id")).limit(10)
-      .select(col("vec_id"), col("label"), col("cell").cast("long").as("cid"),
-        col("d2").as("dist_sq"))
-
-    val before = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = before :+ graft.plans.IvfProbePruning
-    try {
-      // Rule present but flag off (the default): plan is the full scan.
-      val unpruned = naiveKnn().queryExecution.executedPlan.toString
-      assert(unpruned.contains("PartitionFilters: []"),
-        s"expected NO partition pruning with autoProbe off:\n$unpruned")
-
-      spark.conf.set("spark.graft.ivf.autoProbe", "true")
-      val auto = naiveKnn()
-      val plan = auto.queryExecution.executedPlan.toString
-      assert(plan.contains("PartitionFilters") && plan.contains("cell") && plan.contains("IN"),
-        s"expected IN-pruned partition filter on cell:\n$plan")
-      // The rewritten declarative query reproduces the hand-built probe.
-      val manual = IvfIndex.search(spark, dir, qv, 10, nProbe = 2).collect()
-        .map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("dist_sq"))).toSeq
-      val rewritten = auto.collect()
-        .map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("dist_sq"))).toSeq
-      assert(rewritten == manual)
-    } finally {
-      spark.conf.set("spark.graft.ivf.autoProbe", "false")
-      spark.experimental.extraOptimizations = before
-    }
-  }
-
-  test("auto-probe rule re-reads centroids after an in-place index rebuild") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf4").toString + "/ivf"
-    val emb = Tables.embeddings(spark, sf)
-    IvfIndex.build(spark, emb, dir, kmeansIters = 0)
-    val qv = emb.filter(col("vec_id") === 7L).select("embedding").head.getSeq[Float](0)
-
-    def autoKnn() = spark.read.parquet(s"$dir/vectors")
-      .withColumn("d2", graft.functions.VectorFunctions.l2Sq(col("embedding"), lit(qv.toArray)))
-      .orderBy(col("d2"), col("vec_id")).limit(10)
-      .select(col("vec_id"), col("d2").as("dist_sq"))
-
-    val before = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = before :+ graft.plans.IvfProbePruning
-    spark.conf.set("spark.graft.ivf.autoProbe", "true")
-    try {
-      // Warm the centroid cache against the naive-seed layout...
-      autoKnn().collect()
-      // ...then REBUILD in place with different centroids (k-means). A
-      // path-keyed cache would now prune with stale centroids against the
-      // new cell layout; the version-fingerprinted key must re-read.
-      IvfIndex.build(spark, emb, dir, kmeansIters = 3)
-      val manual = IvfIndex.search(spark, dir, qv, 10, nProbe = 2).collect()
-        .map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("dist_sq"))).toSeq
-      val rewritten = autoKnn().collect()
-        .map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("dist_sq"))).toSeq
-      assert(rewritten == manual,
-        "auto-probe pruned with stale centroids after rebuild")
-    } finally {
-      spark.conf.set("spark.graft.ivf.autoProbe", "false")
-      spark.experimental.extraOptimizations = before
-    }
-  }
-
   test("IVF retention drops only old-date directories inside cells; probe search stays green") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf5").toString + "/ivf"
     val emb = Tables.embeddings(spark, sf)
@@ -324,49 +254,6 @@ class IvfIndexSpec extends SparkSpec {
     val after = IvfIndex.rangeSearch(spark, dir, qv, radius).collect()
       .map(r => r.getAs[Long]("vec_id")).toSeq
     assert(after.contains(900001L))
-  }
-
-  test("IVF auto-range rule adds an exact cell-IN conjunct to a declarative radius filter") {
-    import spark.implicits._
-    // Separated clusters (the geometry where the bound can prune) —
-    // interleaved ids so the deterministic seeds land one per cluster.
-    val rnd = new scala.util.Random(3)
-    val dim = 8
-    val centers = Seq.fill(4)(Array.fill(dim)(rnd.nextGaussian().toFloat * 10f))
-    val rows = for {
-      (c, ci) <- centers.zipWithIndex
-      i <- 0 until 50
-    } yield ((i * 4 + ci).toLong, ci,
-      c.map(v => v + (rnd.nextInt(100) - 50) / 100f).toSeq)
-    val emb = rows.toDF("vec_id", "label", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-ar").toString + "/ivf"
-    IvfIndex.build(spark, emb, dir, nCells = 4, kmeansIters = 3)
-    val qv = rows.head._3
-    val r2 = 9.0
-
-    def rangeQuery() = spark.read.parquet(s"$dir/vectors")
-      .filter(graft.functions.VectorFunctions.l2Sq(col("embedding"), lit(qv.toArray)) <= r2)
-      .select(col("vec_id"), col("label"))
-
-    val before = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = before :+ graft.plans.IvfRangePruning
-    try {
-      val unpruned = rangeQuery().queryExecution.executedPlan.toString
-      assert(unpruned.contains("PartitionFilters: []"),
-        s"expected no pruning with autoRange off:\n$unpruned")
-      val expected = rangeQuery().collect().map(_.getLong(0)).sorted
-
-      spark.conf.set("spark.graft.ivf.autoRange", "true")
-      val auto = rangeQuery()
-      val plan = auto.queryExecution.executedPlan.toString
-      assert(plan.contains("PartitionFilters") && plan.contains("cell") && plan.contains("IN"),
-        s"expected cell IN partition filter:\n$plan")
-      // EXACT: the pruned result equals the full scan's.
-      assert(auto.collect().map(_.getLong(0)).sorted.sameElements(expected))
-    } finally {
-      spark.conf.set("spark.graft.ivf.autoRange", "false")
-      spark.experimental.extraOptimizations = before
-    }
   }
 
   test("range-search cell bound prunes on separated clusters and stays exact") {

@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import graft.functions.{ScoredId, TopKByValue}
 import graft.vector.HashingEmbedder
 
 /** ScalaCheck properties for the pure kernels (no SparkSession needed). */
@@ -30,23 +29,6 @@ class PropertySpec extends AnyFunSuite {
   test("embedder: insensitive to surrounding whitespace") {
     check(Prop.forAll(texts) { t =>
       HashingEmbedder.embed(t, 32).toSeq == HashingEmbedder.embed(s" $t ", 32).toSeq
-    })
-  }
-
-  private val scored: Gen[List[ScoredId]] =
-    Gen.listOf(Gen.zip(Gen.choose(-100.0, 100.0), Gen.choose(0L, 50L))
-      .map { case (v, i) => ScoredId(v, i) })
-
-  test("top-k aggregator: any reduce/merge split equals global sort take k") {
-    val agg = new TopKByValue(5)
-    val ord: Ordering[ScoredId] = Ordering.by(s => (-s.value, s.id))
-    check(Prop.forAll(scored, Gen.choose(0, 10)) { (xs, splitSeed) =>
-      val expected = xs.sorted(ord).take(5)
-      val (l, r) = xs.partition(s => (s.id + splitSeed) % 3 == 0)
-      val partL = l.foldLeft(agg.zero)(agg.reduce)
-      val partR = r.foldLeft(agg.zero)(agg.reduce)
-      agg.finish(agg.merge(partL, partR)) == expected &&
-        agg.finish(agg.merge(partR, partL)) == expected
     })
   }
 
@@ -134,15 +116,10 @@ class PropertySpec extends AnyFunSuite {
       InternalRow(5L, 1L, UTF8String.fromString("EMAIL"), UTF8String.fromString(longBody)))
     val rt = agg.deserialize(agg.serialize(buf))
     assert(rt.size == 1 && rt.head._4 == longBody)
-    // Null-ts rows are excluded by contract (documented in the scaladoc) —
-    // both the native aggregate and the Encoder-based UDAF twin.
+    // Null-ts rows are excluded by contract (documented in the scaladoc).
     val afterNull = agg.update(rt,
       InternalRow(null, 2L, UTF8String.fromString("CALL"), UTF8String.fromString("x")))
     assert(afterNull.size == 1)
-    val udaf = new graft.functions.EarliestKEngagements(3)
-    val ubuf = udaf.reduce(udaf.zero,
-      graft.functions.EngRow(null, 2L, "CALL", "x"))
-    assert(ubuf.isEmpty)
   }
 
   private val tokenStreams: Gen[List[String]] =

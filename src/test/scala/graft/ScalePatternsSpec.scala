@@ -1,29 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.ScalePatterns
 
 class ScalePatternsSpec extends SparkSpec {
-
-  test("bucketed fact-fact join plans without a shuffle exchange") {
-    val joined = ScalePatterns.bucketedOrdersLineitem(spark,
-      Tables.orders(spark, sf), Tables.lineitem(spark, sf))
-    val beforeAgg = joined.queryExecution.executedPlan.toString
-    // the join itself must be exchange-free; the only Exchange allowed is
-    // the final single-column aggregation
-    val joinSection = beforeAgg.split("SortMergeJoin|ShuffledHashJoin").drop(1).mkString
-    assert(!joinSection.contains("Exchange hashpartitioning(l_orderkey") &&
-      !joinSection.contains("Exchange hashpartitioning(o_orderkey"),
-      s"bucketed join should not reshuffle keys:\n$beforeAgg")
-    // and the result matches the plain join
-    val plain = Tables.lineitem(spark, sf)
-      .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n_items"), sum(col("l_quantity")).as("sum_qty"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val bucketed = joined.collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(bucketed == plain)
-  }
 
   test("email page plan: envelope top-k lowers to TakeOrderedAndProject, detail join broadcasts") {
     val plan = graft.crm.CrmOps.recentEmails(spark, sf, 50)
@@ -60,16 +39,6 @@ class ScalePatternsSpec extends SparkSpec {
       .orderBy(col("user_id"), col("rank"))
       .collect().toSeq
     assert(df.collect().toSeq == windowed)
-  }
-
-  test("salted two-phase aggregation equals direct aggregation") {
-    val e = Tables.events(spark, sf)
-    val direct = e.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_rows")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = ScalePatterns.saltedSum(e, "event_type", "value").collect()
-      .map(r => r.getAs[String]("event_type") -> r.getAs[Long]("n_rows")).toMap
-    assert(salted == direct)
   }
 
   test("runtime bloom-filter pruning injects might_contain on a selective shuffle join") {
