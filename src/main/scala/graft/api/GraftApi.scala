@@ -37,13 +37,13 @@ object GraftApi {
       embedder: graft.vector.Embedder = new graft.vector.HashingEmbedder())
 
   /** Run `df` once and return its rows typed; with a sink, index exactly
-    * those rows. The append reads a one-partition local frame: a
-    * `LocalTableScan` otherwise splits into `defaultParallelism` slices and
-    * writes one file per slice.
+    * those rows. The append reads a one-partition [[graft.sources.LocalFrame]]:
+    * a `LocalTableScan` otherwise splits into `defaultParallelism` slices
+    * and writes one file per slice.
     */
-  private def collectPage[T: Encoder](s: SparkSession, df: DataFrame, textCol: String,
+  private def collectPage[T: Encoder](df: DataFrame, textCol: String,
       dataType: String, sink: Option[IndexSink]): Seq[T] = {
-    val local = s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    val local = graft.sources.LocalFrame(df)
     sink.foreach(k => graft.vector.IndexPipeline.indexRecords(
       local.coalesce(1), textCol, dataType, k.path, k.ingestDate, k.embedder))
     local.as[T].collect().toSeq
@@ -55,7 +55,7 @@ object GraftApi {
       sink: Option[IndexSink] = None): Page[Company] = {
     import s.implicits._
     val df = CrmOps.activeCompanies(s, d, limit)
-    val rows = collectPage[Company](s, df, "name", "company", sink)
+    val rows = collectPage[Company](df, "name", "company", sink)
     Page(rows, rows.size.toLong, rows.lastOption.map(c => cursor(c.hs_lastmodifieddate, c.id)))
   }
 
@@ -63,7 +63,7 @@ object GraftApi {
       sink: Option[IndexSink] = None): Page[Contact] = {
     import s.implicits._
     val df = CrmOps.activeContacts(s, d, limit)
-    val rows = collectPage[Contact](s, df, "email", "contact", sink)
+    val rows = collectPage[Contact](df, "email", "contact", sink)
     Page(rows, rows.size.toLong, rows.lastOption.map(c => cursor(c.lastmodifieddate, c.id)))
   }
 
@@ -99,7 +99,7 @@ object GraftApi {
     val page = resumed
       .orderBy(col("hs_lastmodifieddate").desc, col("id").cast("long"))
       .limit(limit)
-    val rows = collectPage[Ticket](s, page, "subject", "ticket", sink)
+    val rows = collectPage[Ticket](page, "subject", "ticket", sink)
     Page(rows, rows.size.toLong,
       if (rows.size < limit) None
       else rows.lastOption.map(t => cursor(t.hs_lastmodifieddate, t.id)))
@@ -122,7 +122,7 @@ object GraftApi {
       (ts, id)
     }
     val page = CrmOps.emailPage(s, d, limit, cur).drop("created_at_ts", "email_id")
-    val rows = collectPage[Email](s, page, "body", "email", sink)
+    val rows = collectPage[Email](page, "body", "email", sink)
     Page(rows, rows.size.toLong,
       if (rows.size < limit) None
       else rows.lastOption.map(e => cursor(e.created_at, e.id)))
@@ -178,7 +178,7 @@ object GraftApi {
       case Some(tc) => tc.recentConversations(d, limit, refresh = refreshCache)._1
       case None => CrmOps.recentConversations(s, d, limit)
     }
-    val rows = collectPage[Conversation](s, df, "first_msg_truncated", "conversation", sink)
+    val rows = collectPage[Conversation](df, "first_msg_truncated", "conversation", sink)
     Page(rows, rows.size.toLong, rows.lastOption.map(c => c.thread_id.toString))
   }
 
@@ -190,7 +190,7 @@ object GraftApi {
       sink: Option[IndexSink] = None): Page[ActivityRow] = {
     import s.implicits._
     val df = CrmOps.companyActivity(s, d, fanoutCap)
-    val rows = collectPage[ActivityRow](s, df, "content", "company_activity", sink)
+    val rows = collectPage[ActivityRow](df, "content", "company_activity", sink)
     Page(rows, rows.size.toLong, None)
   }
 
@@ -202,7 +202,7 @@ object GraftApi {
       sink: Option[IndexSink] = None): Page[ThreadMessage] = {
     import s.implicits._
     val df = CrmOps.ticketConversationThreads(s, d, nTickets)
-    val rows = collectPage[ThreadMessage](s, df, "text", "ticket_thread", sink)
+    val rows = collectPage[ThreadMessage](df, "text", "ticket_thread", sink)
     Page(rows, rows.size.toLong, None)
   }
 

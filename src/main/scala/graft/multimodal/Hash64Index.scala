@@ -38,11 +38,12 @@ import graft.sources.{IndexLifecycle, Parquet}
   *     schema; interim bucketed layouts read fine and fold back to flat
   *     at compact.
   *
-  * Gate tiers per batch: id disjointness (fail fast), within-batch
+  * Gate per batch: id disjointness (fails the call), within-batch
   * identical hash keeps min-id (`batch_dup`), probe-join + exact Hamming
-  * against residents (`near_dup`), survivors append (`ingested`);
-  * payloads the wrapper's decoder could not judge pass through as
-  * `undecodable`. Single-writer per index path.
+  * against residents (`near_dup`) — the three run concurrently and each
+  * doc takes its highest-priority verdict — then survivors append
+  * (`ingested`); payloads the wrapper's decoder could not judge pass
+  * through as `undecodable`. Single-writer per index path.
   */
 private[graft] object Hash64Index {
 
@@ -125,9 +126,20 @@ private[graft] object Hash64Index {
     * (ids absent here verdict as `undecodable`). Returns
     * (doc_id, verdict); survivors are appended and visible to the NEXT
     * call.
+    *
+    * Shape: the ids, the decoded hashes and every tier result stay on the
+    * driver ([[graft.sources.LocalFrame]] — a delivery is bounded by
+    * contract). The id check, the within-batch tier and the probe tier are
+    * independent reads, so they run as one
+    * [[graft.sources.ConcurrentJobs]] group with the id check first (its
+    * error wins); verdicts then resolve per doc on the driver —
+    * `undecodable`, then `batch_dup`, then `near_dup`
+    * ([[graft.sources.GateBatch.verdicts]]). The appends start after the
+    * group, `hashes` (the id gate) first.
     */
   def dedupIngest(spark: SparkSession, path: String, batchIds: DataFrame,
       batchHashes: DataFrame, hashCol: String, maxHamming: Int): DataFrame = {
+    import graft.sources.{ConcurrentJobs, GateBatch, KeyedSidecar, LocalFrame}
     require(maxHamming >= 0 && maxHamming <= 2,
       "the persisted probe family covers Hamming radius ≤ 2")
     Lifecycle.recover(spark, path)
@@ -135,46 +147,23 @@ private[graft] object Hash64Index {
     val fs = hashesPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(hashesPath),
       s"no hash index at $path — build(...) it before dedupIngest")
-    val residentHashes = Parquet.read(spark, s"$path/hashes")
-    val ids = batchIds.select(col("doc_id")).localCheckpoint(true)
+    val ids = LocalFrame(batchIds.select(col("doc_id")))
     // One row per doc_id, enforced (the VersionedStore.upsert contract):
     // duplicated ids inside one batch would evade the batch_dup tier and
-    // burn the id twice into the authority table. Fail fast.
-    val dupId = ids.groupBy(col("doc_id")).count()
-      .filter(col("count") > 1).limit(1).collect()
+    // burn the id twice into the authority table. Fail fast — on the
+    // driver, the ids are already there.
+    val offered = ids.collect().map(_.get(0))
+    val dupId = offered.groupBy(identity).collectFirst {
+      case (id, copies) if copies.length > 1 => id
+    }
     require(dupId.isEmpty,
-      s"ingest batch carries duplicate doc_id ${dupId.headOption.map(_.get(0)).orNull}" +
+      s"ingest batch carries duplicate doc_id ${dupId.orNull}" +
         " — collapse to one row per key before dedupIngest")
-    // Resident-side streamed (the r11 LshIndex.dedupBatch inversion): the
-    // batch is bounded by contract and BROADCASTS; with the batch on the
-    // left of a semi-join the corpus-sized hash table would sit on the
-    // build side and shuffle per batch once past broadcast size. Since
-    // r13 the hashes table is doc_id-keyed, so the gate read point-prunes
-    // to the batch's id buckets/pages on big corpora (the semi-join
-    // enforces the restriction on small/legacy fallbacks).
-    val clash = graft.sources.KeyedSidecar
-      .lookup(spark, s"$path/hashes", "doc_id", ids)
-      .select(col("doc_id"))
-      .join(broadcast(ids), Seq("doc_id"), "left_semi")
-      .limit(5).collect()
-    require(clash.isEmpty,
-      s"batch doc_ids collide with resident ids (e.g. ${clash.map(_.get(0)).mkString(", ")}): " +
-        "ingest requires batch ids disjoint from the resident corpus")
-    val bHashes = batchHashes.localCheckpoint(true)
-    val undecodable = ids
-      .join(broadcast(bHashes.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), lit("undecodable").as("verdict"))
-    val batchLosers = bHashes
-      .groupBy(col(hashCol))
-      .agg(min(col("doc_id")).as("keep_id"), collect_list(col("doc_id")).as("ids"))
-      .select(explode(col("ids")).as("doc_id"), col("keep_id"))
-      .filter(col("doc_id") =!= col("keep_id"))
-      .select(col("doc_id"), lit("batch_dup").as("verdict"))
-      .localCheckpoint(true)
-    val candidates = bHashes
-      .join(broadcast(batchLosers.select("doc_id")), Seq("doc_id"), "left_anti")
-    // tombstoned residents stop vetoing offers; the id clash gate above
-    // still reads them raw (deleted ids stay burned until compact).
+    val bHashes = LocalFrame(batchHashes)
+    val decoded = bHashes.select(col("doc_id")).collect().map(_.get(0)).toSet
+    val undecodable = offered.filterNot(decoded).toSet
+    // tombstoned residents stop vetoing offers; the id clash gate still
+    // reads them raw (deleted ids stay burned until compact).
     // The probes read is a PLAIN scan by design (r13 measured): the
     // batch's 65-flip probe family always exceeds the parquet OR-of-eq
     // pushdown cap, so key-literal pruning can never skip pages here —
@@ -183,61 +172,78 @@ private[graft] object Hash64Index {
     // partition column drops like lookup would.
     val probes = Lifecycle.dropTombstoned(spark, path,
       Parquet.read(spark, s"$path/probes")
-        .drop(graft.sources.KeyedSidecar.BucketCol))
+        .drop(KeyedSidecar.BucketCol))
     val probesCarryHash = probes.columns.contains("r_hash")
-    // Probe tier, resident-streamed: the exploded batch side (batch × 65
-    // probes) is contract-bounded and broadcasts, so the corpus-sized
-    // probes table scans map-locally. On a hash-carrying layout (see
-    // [[build]]) the Hamming filter runs RIGHT ON the probe-join output —
-    // one map-local pass, nothing candidate-derived to materialize.
-    val exploded = broadcast(candidates
-      .select(col("doc_id"), col(hashCol), explode(flipsOf(col(hashCol))).as("probe")))
-    val hamMatched =
-      if (probesCarryHash)
-        exploded.join(probes.select(col("probe"), col("r_hash")), "probe")
-      else {
-        // Legacy layout fallback (probes lack r_hash): fetch hashes via a
-        // second join. The HIT set is candidate-derived — NOT batch-bounded
-        // in the adversarial case (one hot probe key shared with many
-        // residents multiplies rows) — so its broadcast is SIZE-GUARDED
-        // (the LshIndex candShingled convention): rows are fixed-width
-        // (two int64 ids + the 64-char hash ≈ 150 B incl. object
-        // overhead), so rows × width is an honest byte measure; past the
-        // cap the join distributes — slower, never an OOM cliff.
-        val hits = exploded
-          .join(probes.select(col("probe"), col("doc_id").as("r_doc_id")), "probe")
-          .select(col("doc_id"), col(hashCol), col("r_doc_id"))
-          .localCheckpoint(true)
-        val hitsSmall = hits.count() * HitRowBytes <= MaxHitBroadcastBytes
-        val hitsSide = if (hitsSmall) broadcast(hits) else hits
-        hitsSide.join(residentHashes.select(col("doc_id").as("r_doc_id"),
-          col(hashCol).as("r_hash")), "r_doc_id")
-      }
-    val nearDups = hamMatched
-      .filter(hamming(col(hashCol), col("r_hash")) <= maxHamming)
-      .select(col("doc_id")).distinct()
-      .select(col("doc_id"), lit("near_dup").as("verdict"))
-      .localCheckpoint(true)
-    val keep = candidates
-      .join(broadcast(nearDups.select("doc_id")), Seq("doc_id"), "left_anti")
-      .localCheckpoint(true) // two consumers below; appends must not re-derive
+    val Seq(_, losers, nearDups) = ConcurrentJobs.run[Set[Any]](Seq(
+      () => {
+        // Resident-side streamed (the r11 LshIndex.dedupBatch inversion):
+        // the batch is bounded by contract and BROADCASTS; with the batch
+        // on the left of a semi-join the corpus-sized hash table would sit
+        // on the build side. Since r13 the hashes table is doc_id-keyed,
+        // so the gate read point-prunes to the batch's id buckets/pages on
+        // big corpora (the semi-join enforces the restriction on
+        // small/legacy fallbacks).
+        val clash = KeyedSidecar.lookup(spark, s"$path/hashes", "doc_id", ids)
+          .select(col("doc_id"))
+          .join(broadcast(ids), Seq("doc_id"), "left_semi")
+          .limit(5).collect()
+        require(clash.isEmpty,
+          s"batch doc_ids collide with resident ids (e.g. ${clash.map(_.get(0)).mkString(", ")}): " +
+            "ingest requires batch ids disjoint from the resident corpus")
+        Set.empty[Any]
+      },
+      () => GateBatch.losers(bHashes, "doc_id", col(hashCol)),
+      () => {
+        // Probe tier, resident-streamed: the exploded batch side (batch ×
+        // 65 probes) is contract-bounded and broadcasts, so the
+        // corpus-sized probes table scans map-locally. On a hash-carrying
+        // layout (see [[build]]) the Hamming filter runs RIGHT ON the
+        // probe-join output — one map-local pass, nothing
+        // candidate-derived to materialize.
+        val exploded = broadcast(bHashes
+          .select(col("doc_id"), col(hashCol), explode(flipsOf(col(hashCol))).as("probe")))
+        val hamMatched =
+          if (probesCarryHash)
+            exploded.join(probes.select(col("probe"), col("r_hash")), "probe")
+          else {
+            // Legacy layout fallback (probes lack r_hash): fetch hashes via
+            // a second join. The HIT set is candidate-derived — NOT
+            // batch-bounded in the adversarial case (one hot probe key
+            // shared with many residents multiplies rows) — so it
+            // checkpoints and its broadcast is SIZE-GUARDED (the LshIndex
+            // candShingled convention): rows are fixed-width (two int64
+            // ids + the 64-char hash ≈ 150 B incl. object overhead), so
+            // rows × width is an honest byte measure; past the cap the
+            // join distributes — slower, never an OOM cliff.
+            val hits = exploded
+              .join(probes.select(col("probe"), col("doc_id").as("r_doc_id")), "probe")
+              .select(col("doc_id"), col(hashCol), col("r_doc_id"))
+              .localCheckpoint(true)
+            val hitsSmall = hits.count() * HitRowBytes <= MaxHitBroadcastBytes
+            val hitsSide = if (hitsSmall) broadcast(hits) else hits
+            hitsSide.join(Parquet.read(spark, s"$path/hashes").select(
+              col("doc_id").as("r_doc_id"), col(hashCol).as("r_hash")), "r_doc_id")
+          }
+        hamMatched
+          .filter(hamming(col(hashCol), col("r_hash")) <= maxHamming)
+          .select(col("doc_id")).distinct()
+          .collect().map(_.get(0)).toSet
+      }))
+    val keep = GateBatch.survivors(bHashes, "doc_id", losers ++ nearDups)
     // appends in the LAYOUT's schema AND shape (KeyedSidecar.write follows
     // the resident layout on Append — bucketed extends bucketed, flat
     // extends flat); legacy probes keep two columns (widening in place
-    // would leave new rows' r_hash invisible to non-merging readers)
-    import graft.sources.KeyedSidecar
-    KeyedSidecar.write(keep, "doc_id", s"$path/hashes", SaveMode.Append)
+    // would leave new rows' r_hash invisible to non-merging readers).
+    // One file per table: the survivors are a local frame.
+    KeyedSidecar.write(keep.coalesce(1), "doc_id", s"$path/hashes", SaveMode.Append)
     val probeRows =
       if (probesCarryHash)
         keep.select(explode(flipsOf(col(hashCol))).as("probe"), col("doc_id"),
           col(hashCol).as("r_hash"))
       else keep.select(explode(flipsOf(col(hashCol))).as("probe"), col("doc_id"))
-    KeyedSidecar.write(probeRows, "probe", s"$path/probes", SaveMode.Append)
-    ids
-      .join(broadcast(undecodable.unionByName(batchLosers).unionByName(nearDups)),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("verdict"), lit("ingested")).as("verdict"))
-      .orderBy(col("doc_id"))
+    KeyedSidecar.write(probeRows.coalesce(1), "probe", s"$path/probes", SaveMode.Append)
+    GateBatch.verdicts(ids, Seq("undecodable" -> undecodable, "batch_dup" -> losers,
+      "near_dup" -> nearDups))
   }
 
   /** Estimated bytes per probe-hit row: two int64 ids + the 64-char hash

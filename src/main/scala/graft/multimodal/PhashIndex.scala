@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * as a JPEG), and the byte-exact CAS tier (`dedupStats`) cannot see it.
   *
   * All mechanics — layout (hashes = the id-gate authority written first,
-  * probes = the persisted Manku radius-2 family), tier order, crash
+  * probes = the persisted Manku radius-2 family), verdict priority, crash
   * ordering, tombstone lifecycle, compact swaps — live in the shared
   * [[Hash64Index]] engine (one implementation for every 64-bit perceptual
   * modality; [[AudioHashIndex]] is the audio twin). This wrapper owns only

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Dedup
-import graft.sources.{IndexLifecycle, Parquet}
+import graft.sources.{ConcurrentJobs, IndexLifecycle, Parquet}
 import graft.sources.IndexLifecycle.{Table, keyed}
 
 /** Persisted MinHash-LSH index — incremental corpus ingestion's dedup
@@ -61,10 +61,12 @@ object LshIndex {
     * tasks. The composite key — band_id plus an 8-way sub-key off the
     * band_key — keeps 4·8 = 32 write-parallel units AND bounds each band
     * directory at ≤ 8 files (a directory's files = the distinct tasks
-    * among its 8 sub-keys).
+    * among its 8 sub-keys). An append is one batch's bands: one writer
+    * task, one file per band directory.
     */
   private def writeBands(bands: DataFrame, path: String, mode: SaveMode): Unit =
-    bands.repartition(col("band_id"), pmod(crc32(col("band_key")), lit(8)))
+    (if (mode == SaveMode.Append) bands.coalesce(1)
+     else bands.repartition(col("band_id"), pmod(crc32(col("band_key")), lit(8))))
       // band_key-sorted files: page-level column-index stats then prune
       // pushed band-key predicates at scale (the KeyedSidecar sort rule;
       // band_id leads so the writer's partition ordering is satisfied
@@ -147,7 +149,7 @@ object LshIndex {
     // each job's tail back-fill the executors the previous one leaves idle
     // (guide §2.6) — at bench scale the build was 6 sequential sub-second
     // jobs of driver-gap-dominated wall.
-    runConcurrently(Seq(
+    ConcurrentJobs.run(Seq(
       () => KeyedSidecar.write(d.select(col("doc_id")), "doc_id",
         s"$path/ids", SaveMode.Overwrite),
       () => KeyedSidecar.write(hashRows, "text_hash", s"$path/hashes", SaveMode.Overwrite),
@@ -167,18 +169,13 @@ object LshIndex {
         estimatedBytes = shBytes)))
   }
 
-  /** See [[graft.sources.ConcurrentJobs]] — independent write jobs overlap
-    * from a bounded driver pool; ordering contracts stay outside a group.
-    */
-  private def runConcurrently(tasks: Seq[() => Unit]): Unit =
-    graft.sources.ConcurrentJobs.run(tasks)
-
   /** Default engage bound for the per-band pruned candidate read — see
     * [[residentBands]] for the measured selectivity arithmetic.
     */
   private val BandsPruneBytes: Long = 2L * 1024 * 1024 * 1024
 
-  /** Append a batch's derived rows into the index (no resident rewrite).
+  /** Append a batch's derived rows into the index (no resident rewrite),
+    * one file per table (a delivery is bounded by contract).
     * Every write matches the RESIDENT layout — bucketed sidecar appends
     * on r13 layouts, flat appends on legacy ones (mixing the two inside
     * one table breaks partition discovery; the Hash64Index legacy-append
@@ -201,9 +198,8 @@ object LshIndex {
 
   /** [[appendBatch]] body with recovery already run and the batch's
     * shingle set precomputed by the caller — `ingestBatch` passes the
-    * near-dup tier's checkpointed shingles restricted to the survivors
-    * (shingles are per-doc, so the restriction IS `shingles(keep)`),
-    * saving one explode+checkpoint job per ingest batch.
+    * near-dup tier's local shingles restricted to the survivors
+    * (shingles are per-doc, so the restriction IS `shingles(keep)`).
     */
   private def appendBatchWith(spark: SparkSession, batch: DataFrame,
       path: String, sh: DataFrame): Unit = {
@@ -212,10 +208,10 @@ object LshIndex {
     // contract in the method doc: ids visible before any derived rows).
     val idsP = new org.apache.hadoop.fs.Path(s"$path/ids")
     if (idsP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(idsP))
-      KeyedSidecar.write(batch.select(col("doc_id")), "doc_id",
+      KeyedSidecar.write(batch.select(col("doc_id")).coalesce(1), "doc_id",
         s"$path/ids", SaveMode.Append)
     val hashRows = batch.select(col("doc_id"), md5(col("text")).as("text_hash"))
-    KeyedSidecar.write(hashRows, "text_hash", s"$path/hashes", SaveMode.Append)
+    KeyedSidecar.write(hashRows.coalesce(1), "text_hash", s"$path/hashes", SaveMode.Append)
     val sizeRows = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     // r13 sizes carry the content hash; appends follow the resident
     // SCHEMA (a legacy two-column table must not widen in place —
@@ -232,13 +228,13 @@ object LshIndex {
     // may leave shingle/size/fp rows without bands (invisible — the doc is
     // never a candidate) but never bands without the shingle/size rows the
     // verify join needs (that would silently drop verdicts).
-    runConcurrently(Seq(
-      () => KeyedSidecar.write(sh, "doc_id", s"$path/shingles", SaveMode.Append),
+    ConcurrentJobs.run(Seq(
+      () => KeyedSidecar.write(sh.coalesce(1), "doc_id", s"$path/shingles", SaveMode.Append),
       () => KeyedSidecar.write(
-        if (residentSizesCarryHash) sizeRows.join(hashRows, Seq("doc_id"))
-        else sizeRows,
+        (if (residentSizesCarryHash) sizeRows.join(hashRows, Seq("doc_id"))
+         else sizeRows).coalesce(1),
         "doc_id", s"$path/sizes", SaveMode.Append),
-      () => KeyedSidecar.write(fpRows, "fp", s"$path/winnow", SaveMode.Append)))
+      () => KeyedSidecar.write(fpRows.coalesce(1), "fp", s"$path/winnow", SaveMode.Append)))
     writeBands(Dedup.bandKeys(Dedup.minhashWide(sh)), s"$path/bands", SaveMode.Append)
   }
 
@@ -379,26 +375,17 @@ object LshIndex {
       jaccardThreshold: Double = 0.3): DataFrame = {
     Lifecycle.recover(spark, path)
     requireDisjointIds(spark, path, batch)
-    dedupBatchChecked(spark, path, batch, jaccardThreshold)
+    dedupPairs(spark, path, batch, Dedup.shingles(batch).localCheckpoint(true),
+      jaccardThreshold).orderBy(col("batch_doc_id"), col("resident_doc_id"))
   }
 
-  /** [[dedupBatch]] body with the id-disjointness precondition already
-    * established by the caller. `ingestBatch` enters here with
-    * `rest` ⊆ its own entry-checked batch (anti-joins only remove rows),
-    * so re-running the gate would re-pay its sidecar key-collect and
-    * semi-join actions per batch for a predicate that cannot have
-    * changed.
+  /** [[dedupBatch]]'s pairs, unordered, with the id-disjointness
+    * precondition left to the caller and the batch's shingle set `bSh`
+    * precomputed — `ingestBatch` derives it once and restricts it to the
+    * survivors for their append (shingles are per-doc, so restriction
+    * commutes).
     */
-  private def dedupBatchChecked(spark: SparkSession, path: String, batch: DataFrame,
-      jaccardThreshold: Double): DataFrame =
-    dedupBatchOn(spark, path, batch,
-      Dedup.shingles(batch).localCheckpoint(true), jaccardThreshold)
-
-  /** [[dedupBatchChecked]] with the batch's shingle set precomputed —
-    * `ingestBatch` derives it once and reuses it for the survivors'
-    * append (shingles are per-doc, so restriction commutes).
-    */
-  private def dedupBatchOn(spark: SparkSession, path: String, batch: DataFrame,
+  private def dedupPairs(spark: SparkSession, path: String, batch: DataFrame,
       bSh: DataFrame, jaccardThreshold: Double): DataFrame = {
     val bBands = Dedup.bandKeys(Dedup.minhashWide(bSh))
     val bSizes = bSh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
@@ -484,135 +471,133 @@ object LshIndex {
     withHashes
       .select(col("batch_doc_id"), col("resident_doc_id"), col("n_shared_bands"),
         col("jaccard"), (col("b_hash") === col("r_hash")).as("is_exact"))
-      .orderBy(col("batch_doc_id"), col("resident_doc_id"))
   }
 
   /** The ingestion gate: drop every batch doc with a resident dup AND
     * within-batch exact copies (a crawl batch re-delivers its own rows
-    * too — only the min-id copy of identical text proceeds to the
-    * resident check), append the survivors' derived rows, and return
-    * (doc_id, verdict) for the whole batch — the loop a daily crawl
-    * ingest runs. Within-batch NEAR-dups are out of scope here by
-    * design: run `Dedup.minhashDupPairs` over the batch first if the
-    * source is known to self-plagiarize.
+    * too — only the min-id copy of identical text proceeds), append the
+    * survivors' derived rows, and return (doc_id, verdict) for the whole
+    * batch — the loop a daily crawl ingest runs. Within-batch NEAR-dups
+    * are out of scope here by design: run `Dedup.minhashDupPairs` over the
+    * batch first if the source is known to self-plagiarize.
+    *
+    * Verdicts by priority: `batch_dup` > `exact_dup` (the content hash —
+    * it also catches docs too short to shingle) > `near_dup` (LSH band
+    * candidates, shingle-Jaccard verified) > `overlap_dup` (shared
+    * winnowing fingerprints, only with `winnowMinShared > 0`) >
+    * `ingested`.
+    *
+    * Shape: the batch, its shingles and every tier result stay on the
+    * driver ([[graft.sources.LocalFrame]] — a delivery is bounded by
+    * contract, and each tier yields at most one id per batch doc). The
+    * id-disjointness check and the four tiers are independent reads of
+    * the batch and the resident tables, so they run as one
+    * [[graft.sources.ConcurrentJobs]] group with the id check first (its
+    * error wins), each tier over the whole batch. A doc's tier verdict
+    * depends only on that doc and the resident tables, so resolving the
+    * verdicts by priority on the driver ([[graft.sources.GateBatch]])
+    * equals a chain that hands each tier the previous tier's survivors.
+    * The candidate-derived frames inside the near and overlap tiers are
+    * NOT batch-bounded and keep their checkpoints and size guards. The
+    * survivors' append starts after the group, in [[appendBatch]]'s
+    * crash order.
     */
   def ingestBatch(spark: SparkSession, path: String, rawBatch: DataFrame,
       jaccardThreshold: Double = 0.3, winnowMinShared: Int = 0,
       winnowMaxDf: Int = 1000): DataFrame = {
+    import graft.sources.{GateBatch, LocalFrame}
     Lifecycle.recover(spark, path)
-    // One batch materialization feeds every tier: the four-tier cascade
-    // references the batch ~8× (losers, candidates, hashes, rest, the
-    // near-dup shingles, the winnow fps, the survivor append, the final
-    // report), and each un-materialized reference replanned the caller's
-    // source scan + derivation expressions per action.
-    val batch = rawBatch.select(col("doc_id"), col("text")).localCheckpoint(true)
-    requireDisjointIds(spark, path, batch)
-    // Within-batch exact tier: one hash-groupBy; losers never hit the index.
-    val batchLosers = batch
-      .groupBy(md5(col("text")).as("h"))
-      .agg(min(col("doc_id")).as("keep_id"), collect_list(col("doc_id")).as("ids"))
-      .select(explode(col("ids")).as("doc_id"), col("keep_id"))
-      .filter(col("doc_id") =!= col("keep_id"))
-      .select(col("doc_id"), lit("batch_dup").as("verdict"))
-      .localCheckpoint(true)
-    val candidates = batch.join(batchLosers.select(col("doc_id")), Seq("doc_id"), "left_anti")
-    // Resident exact tier FIRST, straight off the hashes sidecar: catches
-    // every verbatim re-offer — including docs too short to shingle, which
-    // the LSH report below cannot see — and spares them the LSH pipeline.
-    // Shape: the RESIDENT side streams map-locally against the broadcast
-    // batch hashes (inner join + distinct on the batch-bounded result) —
-    // nothing corpus-sized is ever shuffled — and since r13 the hashes
-    // table is keyed BY text_hash, so the read point-prunes to the
-    // batch's hash buckets/pages on big corpora instead of scanning every
-    // resident hash (the join enforces the restriction on fallbacks).
-    val batchHashes = candidates
-      .select(col("doc_id"), md5(col("text")).as("h"))
-    val residentHashes = Lifecycle.dropTombstoned(spark, path,
-      graft.sources.KeyedSidecar.lookup(spark, s"$path/hashes", "text_hash",
-        batchHashes.select(col("h").as("text_hash"))))
+    val batch = LocalFrame(rawBatch.select(col("doc_id"), col("text")))
+    // derived once: the near tier reads it, and its restriction to the
+    // survivors IS their shingle set for the append
+    val bSh = LocalFrame(Dedup.shingles(batch))
+    val tiers = Seq[() => Set[Any]](
+      () => { requireDisjointIds(spark, path, batch); Set.empty },
+      () => GateBatch.losers(batch, "doc_id", md5(col("text"))),
+      () => exactTier(spark, path, batch),
+      () => dedupPairs(spark, path, batch, bSh, jaccardThreshold)
+        .select(col("batch_doc_id")).distinct().collect().map(_.get(0)).toSet,
+      () => if (winnowMinShared <= 0) Set.empty
+        else overlapTier(spark, path, batch, winnowMinShared, winnowMaxDf))
+    val Seq(_, losers, exactDups, nearDups, overlapDups) =
+      ConcurrentJobs.run(tiers, parallelism = tiers.size)
+    val dead = losers ++ exactDups ++ nearDups ++ overlapDups
+    // recovery already ran at entry
+    appendBatchWith(spark, GateBatch.survivors(batch, "doc_id", dead), path,
+      GateBatch.survivors(bSh, "doc_id", dead))
+    GateBatch.verdicts(batch.select(col("doc_id")), Seq("batch_dup" -> losers,
+      "exact_dup" -> exactDups, "near_dup" -> nearDups, "overlap_dup" -> overlapDups))
+  }
+
+  /** Resident exact tier, straight off the hashes sidecar: catches every
+    * verbatim re-offer — including docs too short to shingle, which the
+    * LSH pairs cannot see. Shape: the RESIDENT side streams map-locally
+    * against the broadcast batch hashes (inner join + distinct on the
+    * batch-bounded result) — nothing corpus-sized is ever shuffled — and
+    * since r13 the hashes table is keyed BY text_hash, so the read
+    * point-prunes to the batch's hash buckets/pages on big corpora instead
+    * of scanning every resident hash (the join enforces the restriction
+    * on fallbacks). Tombstoned residents stop matching.
+    */
+  private[graft] def exactTier(spark: SparkSession, path: String, batch: DataFrame): Set[Any] = {
+    val batchHashes = batch.select(col("doc_id"), md5(col("text")).as("h"))
+    Lifecycle.dropTombstoned(spark, path,
+        graft.sources.KeyedSidecar.lookup(spark, s"$path/hashes", "text_hash",
+          batchHashes.select(col("h").as("text_hash"))))
       .select(col("text_hash").as("h"))
-    val exactDups = residentHashes
       .join(batchHashes.hint("broadcast"), "h")
       .select(col("doc_id")).distinct()
-      .select(col("doc_id"), lit("exact_dup").as("verdict"))
+      .collect().map(_.get(0)).toSet
+  }
+
+  /** Local-overlap tier: docs sharing ≥ `winnowMinShared` winnowing
+    * fingerprints with one resident doc. A doc splicing a long run out of
+    * a resident doc into fresh filler sails under the whole-doc Jaccard
+    * threshold, but by the winnowing guarantee any shared run of
+    * ≥ w+k−1 tokens forces shared fingerprints. Resident fps with
+    * df > winnowMaxDf drop first (the MOSS boilerplate cap — same bound
+    * as `Dedup.winnowDupPairs`), so one corpus-wide footer cannot make
+    * the probe join quadratic. Legacy layouts predate the winnow table
+    * (`compact` tolerates that too): residents written before it simply
+    * have no fingerprints, so the tier degrades to an empty resident side
+    * rather than throwing — from this batch on, `appendBatch` populates
+    * the table, and a full-coverage guarantee needs one `build` rerun
+    * (documented here rather than enforced, because the other tiers
+    * remain fully live either way).
+    */
+  private[graft] def overlapTier(spark: SparkSession, path: String, batch: DataFrame,
+      winnowMinShared: Int, winnowMaxDf: Int): Set[Any] = {
+    import graft.sources.LocalFrame
+    val bFp = LocalFrame(Dedup.winnowFingerprints(batch)
+      .select(col("doc_id").as("b_doc_id"), explode(col("fps")).as("fp")))
+    val bFpSet = bFp.select(col("fp"))
+    val winnowP = new org.apache.hadoop.fs.Path(s"$path/winnow")
+    val resident =
+      if (winnowP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(winnowP))
+        // r13: fp-keyed sidecar — the resident fp read point-prunes to
+        // the batch's fingerprint buckets/pages on big corpora
+        graft.sources.KeyedSidecar.lookup(spark, s"$path/winnow", "fp", bFpSet)
+      else spark.range(0).select(col("id").as("doc_id"), lit("").as("fp"))
+    val rFp = Lifecycle.dropTombstoned(spark, path, resident)
+    // Only fingerprints the BATCH carries can form pairs, and their
+    // resident df is unchanged by the restriction — so the resident fp
+    // table is first filtered map-locally against the broadcast batch fp
+    // set, and the df cap aggregates over that batch-bounded slice instead
+    // of the whole corpus keyspace. The matched slice is candidate-derived
+    // (a hot fingerprint is shared by many residents), so it checkpoints:
+    // two consumers (the df cap and the pair join) of one resident scan.
+    val fpSet = LocalFrame.of(spark, bFpSet.schema, bFpSet.collect().distinct.toSeq)
+    val rMatched = rFp.join(fpSet.hint("broadcast"), "fp")
+      .select(col("fp"), col("doc_id").as("r_doc_id"))
       .localCheckpoint(true)
-    val rest = candidates.join(exactDups.select(col("doc_id")), Seq("doc_id"), "left_anti")
-    // the near-dup tier's shingle set is derived ONCE and reused for the
-    // survivors' append below (shingles are per-doc: restricting the
-    // checkpointed set to keep-ids IS shingles(keep))
-    val restSh = Dedup.shingles(rest).localCheckpoint(true)
-    val nearDups = dedupBatchOn(spark, path, rest, restSh, jaccardThreshold)
-      .select(col("batch_doc_id").as("doc_id"), lit("near_dup").as("verdict"))
-      .distinct()
-      .localCheckpoint(true)
-    // Optional fourth tier (winnowMinShared > 0): local-overlap detection
-    // via shared winnowing fingerprints — a doc splicing a long run out of
-    // a resident doc into fresh filler sails under the whole-doc Jaccard
-    // threshold, but by the winnowing guarantee any shared run of
-    // ≥ w+k−1 tokens forces shared fingerprints. Resident fps with
-    // df > winnowMaxDf drop first (the MOSS boilerplate cap — same bound
-    // as `Dedup.winnowDupPairs`), so one corpus-wide footer cannot make
-    // the probe join quadratic. The resident fp table is scanned once per
-    // batch MAP-LOCALLY (filtered against the broadcast batch fp set —
-    // the df cap then aggregates the batch-bounded slice, never the
-    // corpus keyspace). Legacy layouts predate the winnow
-    // table (`compact` tolerates that too): residents written before it
-    // simply have no fingerprints, so the tier degrades to an empty
-    // resident side rather than throwing — from this batch on,
-    // `appendBatch` populates the table, and a full-coverage guarantee
-    // needs one `build` rerun (documented here rather than enforced,
-    // because the other three tiers remain fully live either way).
-    val overlapDups = if (winnowMinShared <= 0) {
-      batch.select(col("doc_id"), lit("overlap_dup").as("verdict")).limit(0)
-    } else {
-      val rest2 = rest.join(nearDups.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      val bFp = Dedup.winnowFingerprints(rest2)
-        .select(col("doc_id").as("b_doc_id"), explode(col("fps")).as("fp"))
-      val winnowP = new org.apache.hadoop.fs.Path(s"$path/winnow")
-      val resident =
-        if (winnowP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(winnowP))
-          // r13: fp-keyed sidecar — the resident fp read point-prunes to
-          // the batch's fingerprint buckets/pages on big corpora
-          graft.sources.KeyedSidecar.lookup(spark, s"$path/winnow", "fp",
-            bFp.select(col("fp")))
-        else spark.range(0).select(col("id").as("doc_id"), lit("").as("fp"))
-      val rFp = Lifecycle.dropTombstoned(spark, path, resident)
-      // Only fingerprints the BATCH carries can form pairs, and their
-      // resident df is unchanged by the restriction — so the resident fp
-      // table is first filtered map-locally against the broadcast batch
-      // fp set, and the df cap aggregates over that batch-bounded slice
-      // instead of the whole corpus keyspace. Identical output; the old
-      // form shuffled the full resident fp table per batch for the df
-      // count. localCheckpoint: two consumers (the df cap and the pair
-      // join) of one resident scan.
-      val bFpSet = bFp.select(col("fp")).distinct()
-      val rMatched = rFp.join(bFpSet.hint("broadcast"), "fp")
-        .select(col("fp"), col("doc_id").as("r_doc_id"))
-        .localCheckpoint(true)
-      val rare = rMatched.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= winnowMaxDf).select(col("fp"))
-      bFp.hint("broadcast")
-        .join(rMatched.join(rare.hint("broadcast"), "fp"), "fp")
-        .groupBy(col("b_doc_id"), col("r_doc_id"))
-        .agg(count(lit(1)).as("n_shared"))
-        .filter(col("n_shared") >= winnowMinShared)
-        .select(col("b_doc_id").as("doc_id"), lit("overlap_dup").as("verdict"))
-        .distinct()
-        .localCheckpoint(true)
-    }
-    val verdicts = batchLosers.unionByName(exactDups).unionByName(nearDups)
-      .unionByName(overlapDups)
-    val keep = candidates.join(
-      exactDups.select(col("doc_id")).unionByName(nearDups.select(col("doc_id")))
-        .unionByName(overlapDups.select(col("doc_id"))),
-      Seq("doc_id"), "left_anti")
-    // recovery already ran at entry; the survivors' shingles restrict the
-    // near-dup tier's checkpointed set instead of re-exploding the text
-    appendBatchWith(spark, keep, path,
-      restSh.join(keep.select(col("doc_id")), Seq("doc_id"), "left_semi"))
-    batch.select(col("doc_id"))
-      .join(verdicts, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("verdict"), lit("ingested")).as("verdict"))
-      .orderBy(col("doc_id"))
+    val rare = rMatched.groupBy(col("fp")).agg(count(lit(1)).as("df"))
+      .filter(col("df") <= winnowMaxDf).select(col("fp"))
+    bFp.hint("broadcast")
+      .join(rMatched.join(rare.hint("broadcast"), "fp"), "fp")
+      .groupBy(col("b_doc_id"), col("r_doc_id"))
+      .agg(count(lit(1)).as("n_shared"))
+      .filter(col("n_shared") >= winnowMinShared)
+      .select(col("b_doc_id")).distinct()
+      .collect().map(_.get(0)).toSet
   }
 }

@@ -23,14 +23,20 @@ object IvfIndex {
     * crossJoin and no per-vector window shuffle. Tie-break (distance, cid)
     * is identical to the windowed form it replaces. Adds a `cid` column.
     */
-  private[vector] def assign(embeddings: DataFrame, centroids: DataFrame): DataFrame = {
-    val cents = centroids.select(col("cid").cast("long"), col("c_embedding"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
+  private[vector] def assign(embeddings: DataFrame,
+      cents: Seq[(Long, Seq[Float])]): DataFrame =
     // one constant-size expression node (FloatVecNearestCells) — the
     // nCells-literal array_sort form made PLANNING linear in the cell
     // count, the r13 vec-gate resident-curve residual
     embeddings.withColumn("cid", nearestCellCid(col("embedding"), cents))
-  }
+
+  /** The (cid, c_embedding) rows of a centroid frame on the driver — the
+    * literal input of [[assign]], [[cellRadiiCounts]] and the probe-cell
+    * expression. Collect once per call and pass the rows down.
+    */
+  private[vector] def centroidRows(centroids: DataFrame): Seq[(Long, Seq[Float])] =
+    centroids.select(col("cid").cast("long"), col("c_embedding"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
 
   /** Lloyd's k-means over the corpus, seeded deterministically with the
     * first `nCells` vectors by id. Each iteration is one
@@ -49,7 +55,7 @@ object IvfIndex {
     var centroids = seeds.getOrElse(embeddings.filter(col("vec_id") < nCells)
       .select(col("vec_id").as("cid"), col("embedding").as("c_embedding")))
     for (_ <- 0 until iters) {
-      val means = assign(embeddings, centroids)
+      val means = assign(embeddings, centroidRows(centroids))
         .select(col("cid"), posexplode(col("embedding")))
         .groupBy(col("cid"), col("pos")).agg(avg(col("col")).as("m"))
         .groupBy(col("cid"))
@@ -187,12 +193,8 @@ object IvfIndex {
     * literal centroid array — one more codegen column on the assignment
     * scan, no join.
     */
-  private def nearestDist(centroids: DataFrame): org.apache.spark.sql.Column = {
-    val cents = centroids.select(col("c_embedding")).collect()
-      .map(_.getSeq[Float](0)).zipWithIndex
-      .map { case (v, i) => (i.toLong, v) }.toSeq
+  private def nearestDist(cents: Seq[(Long, Seq[Float])]): org.apache.spark.sql.Column =
     sqrt(nearestCellDistSq(col("embedding"), cents))
-  }
 
   /** Per-cell covering radius (max member↔centroid distance) — the tiny
     * sidecar that makes `rangeSearch` exact under cell pruning — PLUS the
@@ -203,9 +205,9 @@ object IvfIndex {
     * Both outputs are cells×dates-bounded and collect driver-side (the
     * appendBatch radii-merge precedent).
     */
-  private def cellRadiiCounts(assigned: DataFrame, centroids: DataFrame,
+  private def cellRadiiCounts(assigned: DataFrame, cents: Seq[(Long, Seq[Float])],
       dateCol: org.apache.spark.sql.Column): (Map[Long, Double], Seq[(String, Long)]) = {
-    val rows = assigned.withColumn("cd", nearestDist(centroids))
+    val rows = assigned.withColumn("cd", nearestDist(cents))
       .groupBy(col("cid"), dateCol.as("_d"))
       .agg(max(col("cd")).as("radius"), count(lit(1)).as("n_rows"))
       .collect()
@@ -232,8 +234,9 @@ object IvfIndex {
       ingestDate: java.sql.Date = DefaultIngestDate,
       dateMajor: Boolean = false): Unit = {
     val centroids = kmeansCentroids(embeddings, nCells, kmeansIters)
-    val assigned = assign(embeddings, centroids)
-    val (radii, counts) = cellRadiiCounts(assigned, centroids, lit(ingestDate))
+    val cents = centroidRows(centroids)
+    val assigned = assign(embeddings, cents)
+    val (radii, counts) = cellRadiiCounts(assigned, cents, lit(ingestDate))
     import spark.implicits._
     // id sidecar (r13): the dedupIngest disjointness gate's authority. A
     // compact bucketed/key-sorted table the gate point-reads per batch —
@@ -269,12 +272,24 @@ object IvfIndex {
   def appendBatch(spark: SparkSession, batch: DataFrame, path: String,
       ingestDate: java.sql.Date = DefaultIngestDate): Unit = {
     recover(spark, path)
-    val centroids = Parquet.read(spark, s"$path/centroids")
-      .select(col("cid"), col("c_embedding"))
-    val dated = (
-      if (batch.columns.contains("ingest_date")) assign(batch, centroids)
-      else assign(batch, centroids).withColumn("ingest_date", lit(ingestDate))
-    ).localCheckpoint(true) // two consumers: radii merge, vectors append
+    val cents = centroidRows(Parquet.read(spark, s"$path/centroids"))
+    appendDated(spark, dated(batch, cents, ingestDate).localCheckpoint(true), path, cents)
+  }
+
+  /** The batch assigned to its cells, stamped with `ingestDate` unless it
+    * carries its own `ingest_date`.
+    */
+  private def dated(batch: DataFrame, cents: Seq[(Long, Seq[Float])],
+      ingestDate: java.sql.Date): DataFrame =
+    if (batch.columns.contains("ingest_date")) assign(batch, cents)
+    else assign(batch, cents).withColumn("ingest_date", lit(ingestDate))
+
+  /** [[appendBatch]] body: recovery already run, the batch assigned and
+    * materialized (it has two consumers: the radii merge and the vectors
+    * append), the centroid rows collected once by the caller.
+    */
+  private def appendDated(spark: SparkSession, dated: DataFrame, path: String,
+      cents: Seq[(Long, Seq[Float])]): Unit = {
     // Max-merge the batch's covering radii into the sidecar (driver-side:
     // both sides are ≤nCells rows). Radii only grow on append; retention
     // can leave them conservatively large, which keeps the bound CORRECT
@@ -305,10 +320,10 @@ object IvfIndex {
     // table would silently blind the gate to older residents).
     val idsP = new org.apache.hadoop.fs.Path(s"$path/ids")
     if (idsP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(idsP))
-      graft.sources.KeyedSidecar.write(dated.select(col("vec_id")),
+      graft.sources.KeyedSidecar.write(dated.select(col("vec_id")).coalesce(1),
         "vec_id", s"$path/ids", SaveMode.Append)
     val (batchRadii, batchCounts) =
-      cellRadiiCounts(dated, centroids, col("ingest_date"))
+      cellRadiiCounts(dated, cents, col("ingest_date"))
     val radiiPath = new org.apache.hadoop.fs.Path(s"$path/radii")
     val fs = radiiPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val existing =
@@ -421,8 +436,9 @@ object IvfIndex {
     graft.sources.CompactSwap.rewrite(spark, root.getParent.toString, root.getName) { fresh =>
       centroidsDf.coalesce(1).write.mode(SaveMode.ErrorIfExists)
         .parquet(s"$fresh/centroids")
-      val assigned = assign(resident, centroidsDf).localCheckpoint(true)
-      val (radii, counts) = cellRadiiCounts(assigned, centroidsDf, col("ingest_date"))
+      val cents = centroidRows(centroidsDf)
+      val assigned = assign(resident, cents).localCheckpoint(true)
+      val (radii, counts) = cellRadiiCounts(assigned, cents, col("ingest_date"))
       radii.toSeq.sorted.toDF("cid", "radius")
         .coalesce(1).write.mode(SaveMode.ErrorIfExists).parquet(s"$fresh/radii")
       // fresh-generation id sidecar (retrain is also a compact: the
@@ -604,18 +620,6 @@ object IvfIndex {
     }
   }
 
-  /** Multi-probe cell list for the `embedding` column: the nProbe nearest
-    * cells, (distance, cid) tie-broken — shared by the batch kNN join and
-    * the dedup ingest gate. One constant-size FloatVecNearestCells node
-    * (see [[assign]]).
-    */
-  private def probeCellsExpr(spark: SparkSession, path: String, nProbe: Int): org.apache.spark.sql.Column = {
-    val cents = Parquet.read(spark, s"$path/centroids")
-      .select(col("cid").cast("long"), col("c_embedding"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-    orderedCellCids(col("embedding"), cents, nProbe)
-  }
-
   /** Batch kNN join against the on-disk layout — the physical twin of
     * `ops.Similarity.knnJoin`: the corpus is ALREADY cell-partitioned on
     * disk, so no assignment pass runs at query time. Queries are
@@ -634,7 +638,10 @@ object IvfIndex {
       k: Int = 10, nProbe: Int = 4, asOf: java.sql.Date = null,
       maxDays: Int = VectorIndex.RetentionDays): DataFrame = {
     recover(spark, path)
-    val probeCells = probeCellsExpr(spark, path, nProbe)
+    // the nProbe nearest cells, (distance, cid) tie-broken — one
+    // constant-size FloatVecNearestCells node (see [[assign]])
+    val probeCells = orderedCellCids(col("embedding"),
+      centroidRows(Parquet.read(spark, s"$path/centroids")), nProbe)
     val q = queries.select(col("vec_id").as("q_vec_id"), col("embedding").as("q_emb"),
       explode(probeCells).as("cell"))
     val base = Lifecycle.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
@@ -728,7 +735,7 @@ object IvfIndex {
 
   /** Incremental ingest THROUGH a cosine near-duplicate gate — the vector
     * twin of `text.LshIndex.ingestBatch`: within-batch bitwise-identical
-    * embeddings keep only the min-id copy (`batch_dup`); survivors probe
+    * embeddings keep only the min-id copy (`batch_dup`); the others probe
     * their nProbe nearest cells and die on any resident vector at
     * cos ≥ threshold (`near_dup` — candidate generation is the same
     * cell-blocked equi-join as `Similarity.cosineDupPairsBlocked`, so an
@@ -741,10 +748,21 @@ object IvfIndex {
     * genuine dup verdict and persist a second row under the id), and
     * appends to one index path are single-writer (the radii sidecar
     * contract on `appendBatch`).
+    *
+    * Shape: the batch, its probe cells and every tier result stay on the
+    * driver ([[graft.sources.LocalFrame]] — a delivery is bounded by
+    * contract). The id check, the within-batch tier and the near tier are
+    * independent reads, so they run as one [[graft.sources.ConcurrentJobs]]
+    * group with the id check first (its error wins); verdicts then resolve
+    * per doc on the driver, `batch_dup` before `near_dup`
+    * ([[graft.sources.GateBatch.verdicts]]). The append starts after the
+    * group, with appendBatch's crash order and the centroid rows this call
+    * already collected.
     */
   def dedupIngest(spark: SparkSession, path: String, batch: DataFrame,
       threshold: Double = 0.95, nProbe: Int = 4,
       ingestDate: java.sql.Date = DefaultIngestDate): DataFrame = {
+    import graft.sources.{ConcurrentJobs, GateBatch, LocalFrame}
     recover(spark, path)
     val vecPath = new org.apache.hadoop.fs.Path(s"$path/vectors")
     val fs = vecPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -764,89 +782,75 @@ object IvfIndex {
     // needs — the cosine tier below lists ONLY the probed cell
     // directories.
     def fullVectors = Parquet.read(spark, s"$path/vectors")
-    // one batch materialization feeds every tier (the LshIndex.ingestBatch
-    // r14 move): losers, candidates, the probe fan-out, the survivor
-    // append and the report each replanned the caller's source scan +
-    // expressions per action otherwise. A delivery is contract-bounded.
-    val b = batch.select(col("vec_id"), col("label"), col("embedding"))
-      .localCheckpoint(true)
-    val batchIds = b.select(col("vec_id")).localCheckpoint(true)
-    // Disjointness gate off the bucketed id SIDECAR when the layout has
-    // one (r13): a point-read pruned to the batch's key buckets/pages
-    // instead of a full metadata pass over the cell×date layout — the
-    // per-batch cost stops growing with the resident corpus. KeyedSidecar
-    // falls back to the full (tiny-table or legacy) scan, so the
-    // semi-join below is what enforces the restriction either way; on a
-    // legacy layout without the sidecar the gate reads `vectors` as
-    // before. Both read the layout RAW — tombstoned ids stay burned
-    // until compact.
-    val idsGateP = new org.apache.hadoop.fs.Path(s"$path/ids")
-    val idAuthority =
-      if (idsGateP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(idsGateP))
-        graft.sources.KeyedSidecar.lookup(spark, s"$path/ids", "vec_id", batchIds)
-      else fullVectors.select(col("vec_id"))
-    val clash = idAuthority.select(col("vec_id"))
-      .join(broadcast(batchIds), Seq("vec_id"), "left_semi")
-      .limit(5).collect()
-    require(clash.isEmpty,
-      s"batch vec_ids collide with resident ids (e.g. ${clash.map(_.get(0)).mkString(", ")}): " +
-        "ingest requires batch ids disjoint from the resident corpus")
-    val batchLosers = b
-      .groupBy(col("embedding"))
-      .agg(min(col("vec_id")).as("keep_id"), collect_list(col("vec_id")).as("ids"))
-      .select(explode(col("ids")).as("vec_id"), col("keep_id"))
-      .filter(col("vec_id") =!= col("keep_id"))
-      .select(col("vec_id"), lit("batch_dup").as("verdict"))
-      .localCheckpoint(true)
-    val candidates = b
-      .join(broadcast(batchLosers.select("vec_id")), Seq("vec_id"), "left_anti")
-    val probed = candidates
-      .select(col("vec_id"), col("embedding"),
-        explode(probeCellsExpr(spark, path, nProbe)).as("cell"))
-    // Bounded batch ⇒ one tiny job computes the probed-cell union, which
-    // statically prunes the partitioned resident scan to the probed
-    // directories (the miningFront convention). Without it the cosine
-    // tier streams the FULL resident table per batch — the join on `cell`
-    // discards non-probed rows anyway, but only after reading them: the
-    // 100× resident probe measured the unpruned scan at 4.7× wall on a
-    // fixed batch, all of it scan time (shuffle/output flat).
-    val probedCells = probed.select(col("cell")).distinct()
-      .collect().map(_.getLong(0))
-    // tombstoned residents stop matching as dup candidates; the id-clash
-    // gate above still reads them (deleted ids stay burned until compact).
-    // The probed-dir read (r13) lists and reads ONLY the probed cells'
-    // directories — one top-level listing instead of the whole
-    // cells×dates tree; the value filter stays as the semantic guard.
-    val residentProbed = probedCellDirs(spark, path, probedCells) match {
-      case Some(dirs) if dirs.nonEmpty =>
-        Parquet.readUnder(spark, s"$path/vectors", dirs)
-      case Some(_) => // probed cells hold no resident rows at all
-        b.select(col("vec_id"), col("embedding"),
-          lit(0L).cast("int").as("cell")).limit(0)
-      case None => fullVectors
-    }
-    val resident = Lifecycle.dropTombstoned(spark, path, residentProbed)
-      .select(col("vec_id").as("r_vec_id"), col("embedding").as("r_emb"),
-        col("cell").cast("long").as("cell"))
-      .filter(col("cell").isin(probedCells: _*))
-    // probed ≤ batch × nProbe rows — contract-bounded; broadcasting it also
-    // sidesteps the low-cardinality `cell` key (a shuffle on cell would
-    // funnel hot cells through single reducers).
-    val nearDups = broadcast(probed).join(resident, "cell")
-      .withColumn("cos", dot(col("embedding"), col("r_emb")) /
-        (sqrt(dot(col("embedding"), col("embedding"))) *
-          sqrt(dot(col("r_emb"), col("r_emb")))))
-      .filter(col("cos") >= threshold)
-      .select(col("vec_id")).distinct()
-      .select(col("vec_id"), lit("near_dup").as("verdict"))
-      .localCheckpoint(true)
-    val keep = candidates
-      .join(broadcast(nearDups.select("vec_id")), Seq("vec_id"), "left_anti")
-    appendBatch(spark, keep.select(col("vec_id"), col("label"), col("embedding")),
-      path, ingestDate)
-    batchIds
-      .join(broadcast(batchLosers.unionByName(nearDups)), Seq("vec_id"), "left")
-      .select(col("vec_id"), coalesce(col("verdict"), lit("ingested")).as("verdict"))
-      .orderBy(col("vec_id"))
+    val cents = centroidRows(Parquet.read(spark, s"$path/centroids"))
+    val b = LocalFrame(batch.select(col("vec_id"), col("label"), col("embedding")))
+    val batchIds = b.select(col("vec_id"))
+    // The probed-cell union statically prunes the partitioned resident
+    // scan to the probed directories (the miningFront convention). Without
+    // it the cosine tier streams the FULL resident table per batch — the
+    // join on `cell` discards non-probed rows anyway, but only after
+    // reading them: the 100× resident probe measured the unpruned scan at
+    // 4.7× wall on a fixed batch, all of it scan time. The cell lists are
+    // a projection of the local batch: evaluated on the driver, no job.
+    val withCells = LocalFrame(b.select(col("vec_id"), col("embedding"),
+      orderedCellCids(col("embedding"), cents, nProbe).as("cells")))
+    val probedCells = withCells.collect().flatMap(_.getSeq[Long](2)).distinct
+    val probed = withCells.select(col("vec_id"), col("embedding"),
+      explode(col("cells")).as("cell"))
+    val Seq(_, losers, nearDups) = ConcurrentJobs.run[Set[Any]](Seq(
+      () => {
+        // Disjointness gate off the bucketed id SIDECAR when the layout
+        // has one (r13): a point-read pruned to the batch's key
+        // buckets/pages instead of a full metadata pass over the cell×date
+        // layout. KeyedSidecar falls back to the full (tiny-table or
+        // legacy) scan, so the semi-join is what enforces the restriction
+        // either way; a legacy layout without the sidecar reads `vectors`.
+        // Both read the layout RAW — tombstoned ids stay burned until
+        // compact.
+        val idsGateP = new org.apache.hadoop.fs.Path(s"$path/ids")
+        val idAuthority =
+          if (idsGateP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(idsGateP))
+            graft.sources.KeyedSidecar.lookup(spark, s"$path/ids", "vec_id", batchIds)
+          else fullVectors.select(col("vec_id"))
+        val clash = idAuthority.select(col("vec_id"))
+          .join(broadcast(batchIds), Seq("vec_id"), "left_semi")
+          .limit(5).collect()
+        require(clash.isEmpty,
+          s"batch vec_ids collide with resident ids (e.g. ${clash.map(_.get(0)).mkString(", ")}): " +
+            "ingest requires batch ids disjoint from the resident corpus")
+        Set.empty[Any]
+      },
+      () => GateBatch.losers(b, "vec_id", col("embedding")),
+      () => {
+        // tombstoned residents stop matching as dup candidates; the id
+        // gate still reads them. The probed-dir read (r13) lists and reads
+        // ONLY the probed cells' directories; the value filter stays as
+        // the semantic guard.
+        val residentProbed = probedCellDirs(spark, path, probedCells) match {
+          case Some(dirs) if dirs.nonEmpty =>
+            Parquet.readUnder(spark, s"$path/vectors", dirs)
+          case Some(_) => // probed cells hold no resident rows at all
+            b.select(col("vec_id"), col("embedding"),
+              lit(0L).cast("int").as("cell")).limit(0)
+          case None => fullVectors
+        }
+        val resident = Lifecycle.dropTombstoned(spark, path, residentProbed)
+          .select(col("vec_id").as("r_vec_id"), col("embedding").as("r_emb"),
+            col("cell").cast("long").as("cell"))
+          .filter(col("cell").isin(probedCells: _*))
+        // probed ≤ batch × nProbe rows — contract-bounded; broadcasting it
+        // also sidesteps the low-cardinality `cell` key (a shuffle on cell
+        // would funnel hot cells through single reducers).
+        broadcast(probed).join(resident, "cell")
+          .withColumn("cos", dot(col("embedding"), col("r_emb")) /
+            (sqrt(dot(col("embedding"), col("embedding"))) *
+              sqrt(dot(col("r_emb"), col("r_emb")))))
+          .filter(col("cos") >= threshold)
+          .select(col("vec_id")).distinct()
+          .collect().map(_.get(0)).toSet
+      }))
+    val keep = GateBatch.survivors(b, "vec_id", losers ++ nearDups)
+    appendDated(spark, LocalFrame(dated(keep, cents, ingestDate)), path, cents)
+    GateBatch.verdicts(batchIds, Seq("batch_dup" -> losers, "near_dup" -> nearDups))
   }
 }

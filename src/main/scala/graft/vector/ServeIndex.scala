@@ -182,7 +182,7 @@ object ServeIndex {
     // assignment runs in the ANN space (= raw space for non-opq kinds)
     val assigned = IvfIndex.assign(
         annRows.withColumnRenamed("embedding", "orig_emb")
-          .withColumnRenamed("ann_emb", "embedding"), centroids)
+          .withColumnRenamed("ann_emb", "embedding"), IvfIndex.centroidRows(centroids))
       .withColumnRenamed("embedding", "ann_emb")
       .withColumnRenamed("orig_emb", "embedding")
       .withColumnRenamed("cid", "cell")

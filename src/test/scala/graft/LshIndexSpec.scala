@@ -329,4 +329,25 @@ class LshIndexSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(afterDel == Map(1006L -> "ingested"), s"got $afterDel")
   }
+
+  test("verdict priority: exact beats near and overlap; near beats overlap") {
+    import spark.implicits._
+    def words(tag: String, n: Int): Seq[String] = Seq.tabulate(n)(j => s"$tag$j")
+    val resident = (0 until 10).map(i => (i.toLong, words(s"r${i}w", 60).mkString(" ")))
+      .toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft-lshp").toString + "/lsh"
+    LshIndex.build(spark, resident, dir)
+    // 2001: a verbatim copy of resident 1; 2002: resident 2 plus one word
+    val batch = Seq((2001L, words("r1w", 60).mkString(" ")),
+      (2002L, (words("r2w", 60) :+ "extra").mkString(" "))).toDF("doc_id", "text")
+    // each doc qualifies for the tiers the test name says, tier by tier
+    assert(LshIndex.exactTier(spark, dir, batch) == Set(2001L))
+    val near = LshIndex.dedupBatch(spark, dir, batch).collect()
+      .map(_.getAs[Long]("batch_doc_id")).toSet
+    assert(near == Set(2001L, 2002L))
+    assert(LshIndex.overlapTier(spark, dir, batch, 2, 1000) == Set(2001L, 2002L))
+    val got = LshIndex.ingestBatch(spark, dir, batch, winnowMinShared = 2)
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got == Map(2001L -> "exact_dup", 2002L -> "near_dup"))
+  }
 }
