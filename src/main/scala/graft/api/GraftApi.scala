@@ -37,15 +37,14 @@ object GraftApi {
       embedder: graft.vector.Embedder = new graft.vector.HashingEmbedder())
 
   /** Run `df` once and return its rows typed; with a sink, index exactly
-    * those rows. The append reads a one-partition [[graft.sources.LocalFrame]]:
-    * a `LocalTableScan` otherwise splits into `defaultParallelism` slices
-    * and writes one file per slice.
+    * those rows: the append reads the collected page, a
+    * [[graft.sources.LocalFrame]], and the search tool holds it from there.
     */
   private def collectPage[T: Encoder](df: DataFrame, textCol: String,
       dataType: String, sink: Option[IndexSink]): Seq[T] = {
     val local = graft.sources.LocalFrame(df)
     sink.foreach(k => graft.vector.IndexPipeline.indexRecords(
-      local.coalesce(1), textCol, dataType, k.path, k.ingestDate, k.embedder))
+      local, textCol, dataType, k.path, k.ingestDate, k.embedder))
     local.as[T].collect().toSeq
   }
 
@@ -128,10 +127,11 @@ object GraftApi {
       else rows.lastOption.map(e => cursor(e.created_at, e.id)))
   }
 
-  /** Semantic search over a built index (§3.1 lifecycle). Scans ONLY the
+  /** Semantic search over a built index (§3.1 lifecycle). Ranks ONLY the
     * retained day-partitions — the reference's search always loads just the
     * ≤7 recent day-indexes (`faiss_manager.py:91-99,270-272`); `asOf`
-    * anchors the window (default: the index's newest ingest day).
+    * anchors the window (default: the index's newest ingest day). The
+    * window is held on the driver ([[graft.vector.IndexPipeline.searchIndex]]).
     */
   def searchData(s: SparkSession, indexPath: String, query: String,
       limit: Int = 10, asOf: java.sql.Date = null): Page[SearchHit] = {

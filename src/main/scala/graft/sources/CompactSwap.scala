@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The crash-safe table swap every persisted index compact uses, plus the
@@ -57,22 +57,28 @@ object CompactSwap {
 
   /** `recover` for `rewriteHidden` layouts, where table names are dynamic:
     * restore EVERY `.{table}._old` sibling whose live directory vanished.
-    * One directory listing of `base`.
+    * Returns the listing of `base` after recovery (empty when `base` is
+    * missing): one directory listing, a second only when something was
+    * restored.
     */
-  def recoverAllHidden(spark: SparkSession, base: String): Unit = {
+  def recoverAllHidden(spark: SparkSession, base: String): Seq[FileStatus] = {
     val basePath = new Path(base)
     val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(basePath)) return
-    fs.listStatus(basePath).toSeq
+    if (!fs.exists(basePath)) return Seq.empty
+    val listed = fs.listStatus(basePath).toSeq
+    val restored = listed
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(".") &&
         st.getPath.getName.endsWith("._old"))
-      .foreach { st =>
+      .filter { st =>
         val live = new Path(basePath,
           st.getPath.getName.stripPrefix(".").stripSuffix("._old"))
-        if (!fs.exists(live))
+        !fs.exists(live) && {
           require(fs.rename(st.getPath, live),
             s"swap recovery: cannot restore ${live.getName} at $base")
+          true
+        }
       }
+    if (restored.isEmpty) listed else fs.listStatus(basePath).toSeq
   }
 
   /** The swap itself: `write` receives the fresh sibling's path and must

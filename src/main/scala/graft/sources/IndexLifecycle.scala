@@ -42,13 +42,17 @@ final case class IndexLifecycle(key: String, log: String => String,
     ids.select(col(key)).write.mode(SaveMode.Append).parquet(log(path))
   }
 
-  /** The distinct logged ids, or None when no log exists. */
-  def tombstones(spark: SparkSession, path: String): Option[DataFrame] = {
+  /** Whether a log exists: deletes not yet folded in by `compact`. */
+  def logged(spark: SparkSession, path: String): Boolean = {
     val p = new Path(log(path))
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      Some(Parquet.read(spark, p.toString).select(col(key)).distinct())
-    else None
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
+
+  /** The distinct logged ids, or None when no log exists. */
+  def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
+    if (logged(spark, path))
+      Some(Parquet.read(spark, new Path(log(path)).toString).select(col(key)).distinct())
+    else None
 
   def dropTombstoned(spark: SparkSession, path: String, df: DataFrame): DataFrame =
     tombstones(spark, path).fold(df)(without(df, _))

@@ -1,14 +1,16 @@
 package graft.vector
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import graft.sources.Parquet
 
 /** The defining dataflow of the reference (SURVEY.md §3.2 step 6): every
   * read tool embeds its result rows and appends them to the vector index;
-  * the search tool embeds the query and scans the retained window. This
-  * module is that loop, Spark-native: one narrow projection to build the
-  * index rows, a date-partitioned append, and a partition-pruned kNN.
+  * the search tool embeds the query and ranks the retained window. This
+  * module is that loop: one narrow projection to build the index rows, a
+  * date-partitioned append, and a kNN over the window the driver holds
+  * ([[ResidentWindow]]), with the partition-pruned scan as its fallback.
   */
 object IndexPipeline {
 
@@ -18,10 +20,15 @@ object IndexPipeline {
     * truncates, `handlers/conversation_handler.py:63-67`).
     *
     * The read tools pass the page they returned, already collected, as a
-    * one-partition local frame: the index stores the page the tool
-    * returned, from one execution of the tool's plan, and the append is
-    * the call's only extra Spark job. A null text stores a null embedding;
-    * every search skips such rows.
+    * local frame ([[graft.sources.LocalFrame]]): the index stores the page
+    * the tool returned, from one execution of the tool's plan. The index
+    * rows of a driver-local `records` frame fold on the driver (the
+    * projection plans to a `LocalRelation`, no job; `vec_id` numbers them
+    * 0..n−1, deterministically), the append writes them as one partition —
+    * one job, one file — and [[ResidentWindow]] holds the folded rows under
+    * that file, so the next search reads nothing back. Any other frame
+    * appends through its own plan and is never collected. A null text stores a null embedding; every search
+    * skips such rows.
     */
   def indexRecords(records: DataFrame, textCol: String, dataType: String,
       indexPath: String, ingestDate: java.sql.Date,
@@ -32,12 +39,20 @@ object IndexPipeline {
       lit(dataType).as("data_type"),
       to_json(struct(records.columns.map(col): _*)).as("data_json"),
       lit(ingestDate).as("ingest_date"))
-    VectorIndex.append(rows, indexPath)
+    rows.queryExecution.optimizedPlan match {
+      case page: LocalRelation if ingestDate != null =>
+        ResidentWindow.appended(records.sparkSession, indexPath, ingestDate.toLocalDate, page) {
+          // a LocalTableScan splits into defaultParallelism slices and would
+          // write one file per slice; the write folds the same rows again
+          VectorIndex.append(rows.coalesce(1), indexPath)
+        }
+      case _ => VectorIndex.append(rows, indexPath)
+    }
   }
 
   /** The search tool (§3.1): embed the query text driver-side with the SAME
-    * embedder, prune the index to the retention window, and brute-force
-    * kNN with FAISS-parity output — the reference's only access path
+    * embedder and brute-force kNN over the retention window with
+    * FAISS-parity output — the reference's only access path
     * (`faiss_manager.py:143` only ever instantiates IndexFlatL2). ANN
     * serving is a separate call, [[ServeIndex.search]], never a session
     * setting of this one.
@@ -45,14 +60,28 @@ object IndexPipeline {
     * Retention is ALWAYS applied — the reference's search never scans more
     * than the retained day-indexes (`faiss_manager.py:91-99,270-272`).
     * When no `asOf` is given the anchor defaults to the index's newest
-    * ingest day (a directory listing, no data read), so the scan is
-    * partition-pruned to ≤ `VectorIndex.RetentionDays` directories however
-    * large the index has grown.
+    * ingest day. One listing of the index root gives the anchor and the
+    * window's day directories; [[ResidentWindow]] answers from the window
+    * held on the driver, reading only the files it does not hold, and the
+    * result is a local frame (no job when it holds them all). The
+    * partition-pruned scan of [[VectorIndex.loadRecent]] answers instead
+    * while a tombstone log exists, when the window is larger than
+    * [[ResidentWindow.MaxBytes]], and on a layout without `ingest_date=`
+    * directories. Both give the same hits, scores and schema.
     */
   def searchIndex(spark: SparkSession, indexPath: String, queryText: String,
       k: Int = 10, asOf: java.sql.Date = null,
-      embedder: Embedder = new HashingEmbedder()): DataFrame =
-    VectorIndex.search(retained(spark, indexPath, asOf), embedder.embedText(queryText).toSeq, k)
+      embedder: Embedder = new HashingEmbedder()): DataFrame = {
+    val q = embedder.embedText(queryText)
+    val days = VectorIndex.ingestDays(spark, indexPath)
+    Option(asOf).map(_.toLocalDate).orElse(days.map(_._1).maxOption) match {
+      case Some(anchor) if days.nonEmpty =>
+        ResidentWindow.search(spark, indexPath, days, anchor, q, k).getOrElse(
+          VectorIndex.search(VectorIndex.loadRecent(spark, indexPath,
+            Option(asOf).getOrElse(java.sql.Date.valueOf(anchor))), q.toSeq, k))
+      case _ => VectorIndex.search(retained(spark, indexPath, asOf), q.toSeq, k)
+    }
+  }
 
   /** The retained window of the flat index at `asOf` (default: its newest
     * ingest day), tombstones dropped.

@@ -24,6 +24,12 @@ import graft.sources.{CompactSwap, IndexLifecycle, Parquet}
   *  - index/metadata positional drift (FAISS's parallel-array hazard,
   *    `faiss_manager.py:278-285`) is impossible: vector and metadata live in
   *    the same row.
+  *
+  * The search tool (`IndexPipeline.searchIndex`) does not scan on every
+  * call: [[ResidentWindow]] holds the retained window's files on the driver,
+  * the way the reference holds its day indexes in memory, and falls back to
+  * `search(loadRecent(..))` — this object's scan, which the oracle's queries
+  * call directly.
   */
 object VectorIndex {
 
@@ -99,24 +105,28 @@ object VectorIndex {
     * (partition names, no data read) — the same metadata-cost contract as
     * `retain`, so deriving the default retention anchor is free at 100 TB.
     */
-  def maxIngestDate(spark: SparkSession, indexPath: String): Option[java.sql.Date] = {
-    import org.apache.hadoop.fs.Path
-    CompactSwap.recoverAllHidden(spark, indexPath)
-    val root = new Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def maxIngestDate(spark: SparkSession, indexPath: String): Option[java.sql.Date] =
+    ingestDays(spark, indexPath).map(_._1).maxOption.map(java.sql.Date.valueOf)
+
+  /** Open-time recovery, then the layout's `ingest_date=` directories by
+    * day, from the one root listing the recovery makes. A name that is not
+    * an ISO date (a null day's `__HIVE_DEFAULT_PARTITION__`) is no day: the
+    * window's date filter never keeps its rows either.
+    */
+  private[vector] def ingestDays(spark: SparkSession,
+      indexPath: String): Seq[(java.time.LocalDate, org.apache.hadoop.fs.Path)] =
     // driver-side metadata IO rides the transient-retry policy — one
     // throttled listStatus against object storage must not fail the query
     // (graft.sources.RetryingIO: the reference connector's 3×-backoff
     // contract; Spark only retries EXECUTOR-side task IO)
-    graft.sources.RetryingIO.withRetry(s"maxIngestDate($indexPath)") {
-      if (!fs.exists(root)) None
-      else fs.listStatus(root).toSeq
+    graft.sources.RetryingIO.withRetry(s"ingestDays($indexPath)") {
+      CompactSwap.recoverAllHidden(spark, indexPath)
         .filter(st => st.isDirectory && st.getPath.getName.startsWith("ingest_date="))
-        .map(st => java.time.LocalDate.parse(st.getPath.getName.stripPrefix("ingest_date=")))
-        .maxOption
-        .map(java.sql.Date.valueOf)
+        .flatMap { st =>
+          scala.util.Try(java.time.LocalDate.parse(st.getPath.getName.stripPrefix("ingest_date=")))
+            .toOption.map(_ -> st.getPath)
+        }
     }
-  }
 
   /** S11 delete-side: physically drop partitions older than the window
     * (reference: `_remove_old_indexes`, `faiss_manager.py:151-172`).

@@ -500,9 +500,11 @@ class GraftApiSpec extends SparkSpec {
     assert(hits.results.forall(_.data_type == "recent"),
       s"retention must exclude the 2024-01-01 batch: ${hits.results.map(_.data_type).distinct}")
 
-    // And the pruning is PARTITION pruning, not a post-scan filter.
-    val planned = graft.vector.IndexPipeline.searchIndex(spark, dir, probe, 10)
-    val plan = planned.queryExecution.executedPlan.toString
+    // The scan path (the search's fallback) prunes PARTITIONS, not rows
+    // after the scan.
+    val anchor = graft.vector.VectorIndex.maxIngestDate(spark, dir).get
+    val plan = graft.vector.VectorIndex.loadRecent(spark, dir, anchor)
+      .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("ingest_date"),
       s"expected ingest_date partition filter in:\n$plan")
 
@@ -510,5 +512,13 @@ class GraftApiSpec extends SparkSpec {
     val oldHits = GraftApi.searchData(spark, dir, probe, 10,
       asOf = java.sql.Date.valueOf("2024-01-02"))
     assert(oldHits.results.nonEmpty && oldHits.results.forall(_.data_type == "old"))
+
+    // The resident path never opens a file outside the window: garbage in
+    // the beyond-retention day's data file changes nothing.
+    val oldDay = new java.io.File(s"$dir/ingest_date=2024-01-01")
+    val oldFiles = oldDay.listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(oldFiles.nonEmpty)
+    oldFiles.foreach(f => java.nio.file.Files.write(f.toPath, Array.fill[Byte](64)(7)))
+    assert(GraftApi.searchData(spark, dir, probe, 10).results == hits.results)
   }
 }
