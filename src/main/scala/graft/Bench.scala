@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Driver-contract benchmark: one JSON line with per-query seconds at
-  * SPARK_GRAFT_SF_DIR. Materialization uses the noop sink so every column
-  * of every operator is actually computed (count() would let Catalyst prune
-  * the projections we mean to measure); a generic warmup pass absorbs
-  * session/JIT/parquet-footer startup so per-query numbers reflect steady
-  * state.
+  * SPARK_GRAFT_SF_DIR, then a summary of at most [[SummaryMaxBytes]] bytes
+  * as the last stdout line ([[summaryLine]]). Materialization uses the noop
+  * sink so every column of every operator is actually computed (count()
+  * would let Catalyst prune the projections we mean to measure); a generic
+  * warmup pass absorbs session/JIT/parquet-footer startup so per-query
+  * numbers reflect steady state.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -83,7 +84,8 @@ object Bench {
       }
     }
     val results = outcomes.collect { case Right(r) => r }
-    val failed = outcomes.collect { case Left(n) => "\"" + n + "\"" }.mkString("[", ",", "]")
+    val failedNames = outcomes.collect { case Left(n) => n }
+    val failed = failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
@@ -103,8 +105,8 @@ object Bench {
     // Mirror the contract line to BENCH_LINE.json (cwd + repo root when they
     // differ): at 206 queries the line is ~6 KB and a capture that keeps only
     // a bounded output tail truncates it mid-JSON — the file copy is
-    // identical bytes and can't be lost that way. stdout stays the contract;
-    // the print below remains the process's final line.
+    // identical bytes and can't be lost that way. stdout stays the contract:
+    // the full line, then the summary as the process's final line.
     def mirror(dir: String): Unit =
       try java.nio.file.Files.write(java.nio.file.Paths.get(dir, "BENCH_LINE.json"),
         (line + "\n").getBytes("UTF-8"))
@@ -118,5 +120,34 @@ object Bench {
     }
     spark.stop()
     println(line)
+    println(summaryLine(total, sfDir, cpus, loadAvgStart, failedNames))
+  }
+
+  /** Bound on the summary line: a reader that keeps only a short stdout
+    * tail still gets it whole.
+    */
+  val SummaryMaxBytes = 300
+
+  /** The last stdout line: the total, the scale factor (the data
+    * directory's name), cpus, the start load and the failed queries, by name
+    * when they all fit in [[SummaryMaxBytes]], else their count. The
+    * per-query seconds are in the full line and its `BENCH_LINE.json` copy.
+    */
+  def summaryLine(total: Double, sfDir: String, cpus: String, loadAvgStart: Double,
+      failed: Seq[String]): String = {
+    def str(s: String) = s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }.mkString("\"", "", "\"")
+    def num(d: Double, digits: Int) = s"%.${digits}f".formatLocal(java.util.Locale.ROOT, d)
+    def line(failedJson: String) = s"""{"metric":"total","value":${num(total, 3)},""" +
+      s""""sf":${str(new java.io.File(sfDir).getName.take(40))},""" +
+      s""""cpus":${cpus.toIntOption.fold(str(cpus.take(10)))(_.toString)},""" +
+      s""""load_avg_start":${num(loadAvgStart, 2)},"failed":$failedJson,""" +
+      s""""queries_file":"BENCH_LINE.json"}"""
+    val named = line(failed.map(str).mkString("[", ",", "]"))
+    if (named.getBytes("UTF-8").length <= SummaryMaxBytes) named else line(failed.size.toString)
   }
 }

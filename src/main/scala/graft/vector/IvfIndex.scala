@@ -8,12 +8,15 @@ import graft.sources.{IndexLifecycle, Parquet}
 /** Physical IVF index: the at-scale layout behind ops.Similarity.ivfSearch.
   *
   * Build assigns every vector to its nearest coarse centroid and writes the
-  * corpus partitioned by `cell`, plus a tiny centroids sidecar. Search
-  * embeds the probe, ranks centroids driver-side (the sidecar is a few KB),
-  * and scans ONLY the probed cell directories — Catalyst partition pruning
-  * on disk, so a query touches nProbe/nCells of a 100 TB corpus instead of
-  * all of it. Brute force inside the probed cells reuses the codegen'd L2
-  * expression.
+  * corpus partitioned by `cell`, plus a tiny centroids sidecar. A lookup
+  * ([[search]]) ranks the centroids driver-side and ranks only the probed
+  * cells' vectors. While the index fits the driver's resident store
+  * ([[graft.sources.ResidentFiles]], shared with the flat window), both
+  * come from files held on the driver, validated by a listing, and a lookup
+  * runs a job only to read files it does not hold. Otherwise it scans ONLY
+  * the probed cell directories — Catalyst partition pruning on disk, so a
+  * query touches nProbe/nCells of a 100 TB corpus instead of all of it —
+  * with brute force inside the probed cells on the codegen'd L2 expression.
   */
 object IvfIndex {
 
@@ -407,9 +410,11 @@ object IvfIndex {
     * speed). `CompactSwap.rewrite` on the index root makes the new
     * generation appear in one rename; `recover` (called at every public
     * entry) restores the staged-aside old root if the writer died between
-    * its two renames. Nothing caches the centroids or radii across calls:
-    * `search`/`rangeSearch` read the sidecars each time, so the next call
-    * after a retrain sees the new generation.
+    * its two renames. A new generation shows up as new files: `search`
+    * holds files on the driver only while a listing shows them with the
+    * held length and mtime, so the next lookup after a retrain lists the
+    * new centroid and vector files and reads them, never the held ones;
+    * `rangeSearch` reads the sidecars each time.
     *
     * Retrain is also a compact: deletes fold into the rewrite and the
     * tombstone log does not carry into the new generation. PQ layouts
@@ -704,15 +709,35 @@ object IvfIndex {
       .orderBy(col("vec_id"))
   }
 
-  /** Probe: rank cells against the tiny sidecar, scan only those partitions.
-    * With `asOf`, the scan is additionally pruned to the retention window's
-    * `ingest_date` directories — probe × retention, both at the partition
-    * level.
+  /** Top-`k` of the `nProbe` cells nearest `query`: (vec_id, label, cid,
+    * dist_sq), ordered by (dist_sq, vec_id). Cells rank by (squared L2 to
+    * the centroid, cid); with `asOf`, only the `(asOf − maxDays, asOf]`
+    * ingest days count.
+    *
+    * After [[recover]], the index's files held on the driver answer
+    * ([[ResidentIvf]] over [[graft.sources.ResidentFiles]]): one listing of
+    * `centroids/` and `vectors/` validates them, the first lookup after a
+    * write reads the files it does not hold in one job, and the lookups
+    * after it run no job. The result is a local frame, bitwise the scan's.
+    * The partition-pruned [[scan]] answers instead while a tombstone log
+    * exists, when the index passes `ResidentFiles.MaxBytes`, and on a
+    * layout the listing cannot read as the scan does.
     */
   def search(spark: SparkSession, path: String, query: Seq[Float],
       k: Int = 10, nProbe: Int = 2, asOf: java.sql.Date = null,
       maxDays: Int = VectorIndex.RetentionDays): DataFrame = {
     recover(spark, path)
+    ResidentIvf.search(spark, path, query.toArray, k, nProbe, asOf, maxDays)
+      .getOrElse(scan(spark, path, query, k, nProbe, asOf, maxDays))
+  }
+
+  /** Probe: rank cells against the tiny sidecar, scan only those partitions.
+    * With `asOf`, the scan is additionally pruned to the retention window's
+    * `ingest_date` directories — probe × retention, both at the partition
+    * level. Tombstones anti-join the vectors below the probed-cell filter.
+    */
+  private[graft] def scan(spark: SparkSession, path: String, query: Seq[Float],
+      k: Int, nProbe: Int, asOf: java.sql.Date, maxDays: Int): DataFrame = {
     val q = lit(query.toArray)
     val probed = Parquet.read(spark, s"$path/centroids")
       .withColumn("qd2", l2Sq(col("c_embedding"), q))

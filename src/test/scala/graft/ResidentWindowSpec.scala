@@ -4,8 +4,8 @@ import java.sql.Date
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.api.GraftApi
-import graft.sources.LocalFrame
-import graft.vector.{HashingEmbedder, IndexPipeline, ResidentWindow, VectorIndex}
+import graft.sources.{LocalFrame, ResidentFiles}
+import graft.vector.{HashingEmbedder, IndexPipeline, VectorIndex}
 
 /** The search tool's driver-resident window: through appends by the index
   * leg and by other writers, retention, a delete, a compact and a past
@@ -122,8 +122,8 @@ class ResidentWindowSpec extends SparkSpec {
       .write.mode("append").option("compression", "none").partitionBy("ingest_date").parquet(dir)
     val dayDir = new java.io.File(s"$dir/ingest_date=2024-03-01")
     val bulk = dayDir.listFiles().filter(f => f.getName.endsWith(".parquet") && f.length > 1000000L)
-    assert(bulk.length == 1 && bulk.head.length > ResidentWindow.MaxBytes,
-      s"the bulk file must pass the ${ResidentWindow.MaxBytes}-byte bound")
+    assert(bulk.length == 1 && bulk.head.length > ResidentFiles.MaxBytes,
+      s"the bulk file must pass the ${ResidentFiles.MaxBytes}-byte bound")
 
     val probes = Seq(text(3), "x x x")
     // every search scans: the over-bound window is never held
