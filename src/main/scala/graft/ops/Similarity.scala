@@ -427,22 +427,15 @@ object Similarity {
   /** The (distance, cid)-sorted probe-list expression against the SEED
     * centroids (`vec_id < cells`) — the literal-centroid driver artifact
     * every blocked operator shares, factored so layout-backed forms can
-    * swap in sidecar centroids ([[centroidProbeExpr]]) without touching
+    * swap in sidecar centroids (`IvfIndex.probeCells`) without touching
     * the mining pipelines.
     */
   private def seedProbeExpr(corpus: DataFrame, cells: Int): org.apache.spark.sql.Column = {
     val cents = corpus.filter(col("vec_id") < cells)
       .select(col("vec_id").cast("int").as("cid"), col("embedding"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Float](1)))
-    centroidProbeExpr(cents)
+      .collect().map(r => (r.getInt(0).toLong, r.getSeq[Float](1)))
+    graft.functions.VectorFunctions.orderedCellCids(col("embedding"), cents.toSeq, cents.length)
   }
-
-  /** The same probe-list expression from EXPLICIT (cid, centroid) pairs —
-    * e.g. an IVF layout's centroid sidecar.
-    */
-  private[graft] def centroidProbeExpr(cents: Array[(Int, Seq[Float])]): org.apache.spark.sql.Column =
-    graft.functions.VectorFunctions.orderedCellCids(col("embedding"),
-      cents.map { case (c, v) => (c.toLong, v) }.toSeq, cents.length)
 
   /** [[hardNegativesFor]]'s pipeline over a PRE-ASSIGNED corpus — the core
     * shared with the layout-backed form ([[graft.vector.IvfIndex.hardNegatives]]),

@@ -3,7 +3,6 @@ package graft.vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import graft.sources.Parquet
 
 /** The defining dataflow of the reference (SURVEY.md §3.2 step 6): every
   * read tool embeds its result rows and appends them to the vector index;
@@ -88,11 +87,9 @@ object IndexPipeline {
     */
   private def retained(spark: SparkSession, indexPath: String,
       asOf: java.sql.Date): DataFrame =
-    Option(asOf).orElse(VectorIndex.maxIngestDate(spark, indexPath)) match {
-      case Some(d) => VectorIndex.loadRecent(spark, indexPath, d)
-      case None => // empty/legacy layout: nothing to prune; deletes still honored
-        VectorIndex.Lifecycle.dropTombstoned(spark, indexPath, Parquet.read(spark, indexPath))
-    }
+    // an empty/legacy layout has no day: nothing to prune, deletes still honored
+    VectorIndex.loadRecent(spark, indexPath,
+      Option(asOf).orElse(VectorIndex.maxIngestDate(spark, indexPath)).orNull)
 
   /** Batch search: top-k hits for EVERY query text at once — N queries is
     * one distributed job, not N driver round-trips. Queries embed as a

@@ -1,6 +1,6 @@
 package graft.vector
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
 import graft.sources.{IndexLifecycle, Parquet}
@@ -27,19 +27,72 @@ object IvfIndex {
     * is identical to the windowed form it replaces. Adds a `cid` column.
     */
   private[vector] def assign(embeddings: DataFrame,
-      cents: Seq[(Long, Seq[Float])]): DataFrame =
+      cents: Seq[(Long, Array[Float])]): DataFrame =
     // one constant-size expression node (FloatVecNearestCells) — the
     // nCells-literal array_sort form made PLANNING linear in the cell
     // count, the r13 vec-gate resident-curve residual
-    embeddings.withColumn("cid", nearestCellCid(col("embedding"), cents))
+    embeddings.withColumn("cid", nearestCellCid(col("embedding"), literal(cents)))
 
   /** The (cid, c_embedding) rows of a centroid frame on the driver — the
-    * literal input of [[assign]], [[cellRadiiCounts]] and the probe-cell
-    * expression. Collect once per call and pass the rows down.
+    * literal input of [[assign]], [[cellRadiiCounts]], [[probeCells]],
+    * [[residual]] and [[rankCells]]. Collect once per call and pass the
+    * rows down.
     */
-  private[vector] def centroidRows(centroids: DataFrame): Seq[(Long, Seq[Float])] =
+  private[graft] def centroidRows(centroids: DataFrame): Seq[(Long, Array[Float])] =
     centroids.select(col("cid").cast("long"), col("c_embedding"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
+      .collect().map(r => (r.getLong(0), ResidentWindow.floatsOf(r, "c_embedding"))).toSeq
+
+  /** The centroid rows of the index (or serve sidecar) at `path`: from its
+    * files held on the driver ([[ResidentIvf.centroids]]: a listing
+    * validates them, unheld files read in one job and are then held), else
+    * the plain collect of the sidecar, whose errors a broken one raises.
+    */
+  private[graft] def centroidRows(spark: SparkSession, path: String): Seq[(Long, Array[Float])] =
+    ResidentIvf.centroids(spark, path)
+      .getOrElse(centroidRows(Parquet.read(spark, s"$path/centroids")))
+
+  /** The centroid rows as the `VectorFunctions` cell expressions take them. */
+  private def literal(cents: Seq[(Long, Array[Float])]): Seq[(Long, Seq[Float])] =
+    cents.map { case (cid, c) => (cid, c.toSeq) }
+
+  /** The cell ranking: the `nProbe` cells nearest `q` in probe order, by
+    * squared L2 to the centroid as `FloatVecL2Sq` folds it (a null centroid
+    * first), then by cid — the order of a Spark `orderBy(l2Sq, cid)` over
+    * the sidecar, bit for bit.
+    */
+  private[graft] def rankCells(cents: Seq[(Long, Array[Float])], q: Array[Float],
+      nProbe: Int): Seq[Long] =
+    cents.map { case (cid, c) => (if (c == null) null else ResidentIvf.d2(c, q), cid) }
+      .sorted[(java.lang.Double, Long)]((a, b) => {
+        val byD2 = ResidentIvf.compareD2(a._1, b._1)
+        if (byD2 != 0) byD2 else java.lang.Long.compare(a._2, b._2)
+      })
+      .take(nProbe).map(_._2)
+
+  /** The `nProbe` cells nearest the vector column `emb`, in (distance, cid)
+    * order, as an array column — one constant-size FloatVecNearestCells
+    * node (see [[assign]]).
+    */
+  private[vector] def probeCells(emb: Column, cents: Seq[(Long, Array[Float])],
+      nProbe: Int): Column =
+    orderedCellCids(emb, literal(cents), nProbe)
+
+  /** The residual `v − centroid(cell)` of the vector column `v`: the
+    * centroid lookup is a literal map over the constant-size centroid set,
+    * so it stays map-only.
+    */
+  private[vector] def residual(v: Column, cents: Seq[(Long, Array[Float])]): Column = {
+    val centMap = map(cents.flatMap { case (cid, c) => Seq(lit(cid), typedLit(c.toSeq)) }: _*)
+    zip_with(v, element_at(centMap, col("cell")), (a, b) => a - b)
+  }
+
+  /** `frame`'s rows whose `ingest_date` lies in the retention window
+    * `(asOf − maxDays, asOf]`; all of them without `asOf`.
+    */
+  private[vector] def retained(frame: DataFrame, asOf: java.sql.Date, maxDays: Int): DataFrame =
+    if (asOf == null) frame
+    else frame.filter(col("ingest_date") > date_sub(lit(asOf), maxDays) &&
+      col("ingest_date") <= lit(asOf))
 
   /** Lloyd's k-means over the corpus, seeded deterministically with the
     * first `nCells` vectors by id. Each iteration is one
@@ -147,7 +200,7 @@ object IvfIndex {
     * = none of the probed cells has resident rows.
     */
   private def probedCellDirs(spark: SparkSession, path: String,
-      probed: Array[Long]): Option[Seq[String]] = {
+      probed: Seq[Long]): Option[Seq[String]] = {
     val root = new org.apache.hadoop.fs.Path(s"$path/vectors")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return None
@@ -162,6 +215,21 @@ object IvfIndex {
       Some(top.filter(p => probedNames.contains(p.getName)).map(_.toString).toSeq)
     } else None
   }
+
+  /** The probed cells' resident rows, tombstones dropped: only their
+    * directories are listed and read ([[probedCellDirs]]); `like`'s
+    * (vec_id, embedding, label) with no rows when none of them holds rows;
+    * the whole layout when it is not a partitioned one. Callers keep the
+    * value filter on `cell` as the semantic guard.
+    */
+  private def probedResident(spark: SparkSession, path: String, probed: Seq[Long],
+      like: DataFrame): DataFrame =
+    Lifecycle.dropTombstoned(spark, path, probedCellDirs(spark, path, probed) match {
+      case Some(dirs) if dirs.nonEmpty => Parquet.readUnder(spark, s"$path/vectors", dirs)
+      case Some(_) => like.select(col("vec_id"), col("embedding"), col("label"),
+        lit(0L).cast("int").as("cell")).limit(0)
+      case None => Parquet.read(spark, s"$path/vectors")
+    })
 
   private[graft] def writeCells(df: DataFrame, path: String, mode: SaveMode,
       rowsPerTask: Long = CellWriteRowsPerTask,
@@ -196,8 +264,8 @@ object IvfIndex {
     * literal centroid array — one more codegen column on the assignment
     * scan, no join.
     */
-  private def nearestDist(cents: Seq[(Long, Seq[Float])]): org.apache.spark.sql.Column =
-    sqrt(nearestCellDistSq(col("embedding"), cents))
+  private def nearestDist(cents: Seq[(Long, Array[Float])]): Column =
+    sqrt(nearestCellDistSq(col("embedding"), literal(cents)))
 
   /** Per-cell covering radius (max member↔centroid distance) — the tiny
     * sidecar that makes `rangeSearch` exact under cell pruning — PLUS the
@@ -208,8 +276,8 @@ object IvfIndex {
     * Both outputs are cells×dates-bounded and collect driver-side (the
     * appendBatch radii-merge precedent).
     */
-  private def cellRadiiCounts(assigned: DataFrame, cents: Seq[(Long, Seq[Float])],
-      dateCol: org.apache.spark.sql.Column): (Map[Long, Double], Seq[(String, Long)]) = {
+  private def cellRadiiCounts(assigned: DataFrame, cents: Seq[(Long, Array[Float])],
+      dateCol: Column): (Map[Long, Double], Seq[(String, Long)]) = {
     val rows = assigned.withColumn("cd", nearestDist(cents))
       .groupBy(col("cid"), dateCol.as("_d"))
       .agg(max(col("cd")).as("radius"), count(lit(1)).as("n_rows"))
@@ -275,14 +343,14 @@ object IvfIndex {
   def appendBatch(spark: SparkSession, batch: DataFrame, path: String,
       ingestDate: java.sql.Date = DefaultIngestDate): Unit = {
     recover(spark, path)
-    val cents = centroidRows(Parquet.read(spark, s"$path/centroids"))
+    val cents = centroidRows(spark, path)
     appendDated(spark, dated(batch, cents, ingestDate).localCheckpoint(true), path, cents)
   }
 
   /** The batch assigned to its cells, stamped with `ingestDate` unless it
     * carries its own `ingest_date`.
     */
-  private def dated(batch: DataFrame, cents: Seq[(Long, Seq[Float])],
+  private def dated(batch: DataFrame, cents: Seq[(Long, Array[Float])],
       ingestDate: java.sql.Date): DataFrame =
     if (batch.columns.contains("ingest_date")) assign(batch, cents)
     else assign(batch, cents).withColumn("ingest_date", lit(ingestDate))
@@ -292,7 +360,7 @@ object IvfIndex {
     * append), the centroid rows collected once by the caller.
     */
   private def appendDated(spark: SparkSession, dated: DataFrame, path: String,
-      cents: Seq[(Long, Seq[Float])]): Unit = {
+      cents: Seq[(Long, Array[Float])]): Unit = {
     // Max-merge the batch's covering radii into the sidecar (driver-side:
     // both sides are ≤nCells rows). Radii only grow on append; retention
     // can leave them conservatively large, which keeps the bound CORRECT
@@ -327,15 +395,11 @@ object IvfIndex {
         "vec_id", s"$path/ids", SaveMode.Append)
     val (batchRadii, batchCounts) =
       cellRadiiCounts(dated, cents, col("ingest_date"))
-    val radiiPath = new org.apache.hadoop.fs.Path(s"$path/radii")
-    val fs = radiiPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existing =
-      if (fs.exists(radiiPath))
-        Parquet.read(spark, s"$path/radii").collect()
-          .map(r => r.getAs[Long]("cid") -> r.getAs[Double]("radius")).toMap
-      else Map.empty[Long, Double]
+    val existing = radii(spark, path)
     import spark.implicits._
     val tmpPath = new org.apache.hadoop.fs.Path(s"$path/.radii_tmp")
+    val radiiPath = new org.apache.hadoop.fs.Path(s"$path/radii")
+    val fs = radiiPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     (existing.keySet ++ batchRadii.keySet).toSeq.sorted
       .map(c => (c, math.max(existing.getOrElse(c, 0.0), batchRadii.getOrElse(c, 0.0))))
       .toDF("cid", "radius")
@@ -347,6 +411,14 @@ object IvfIndex {
         col("ingest_date")),
       s"$path/vectors", SaveMode.Append, knownCounts = Some(batchCounts),
       dateMajor = layoutDateMajor(spark, path))
+  }
+
+  /** The per-cell covering radii of the `radii` sidecar; none before it exists. */
+  private def radii(spark: SparkSession, path: String): Map[Long, Double] = {
+    val p = new org.apache.hadoop.fs.Path(s"$path/radii")
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) Map.empty
+    else Parquet.read(spark, s"$path/radii").collect()
+      .map(r => r.getAs[Long]("cid") -> r.getAs[Double]("radius")).toMap
   }
 
   /** Logical point deletes — takedown/GDPR removal for the vector tier,
@@ -522,13 +594,11 @@ object IvfIndex {
     * cells (better-balanced candidacy, same semantics).
     */
   private def miningFront(spark: SparkSession, path: String, anchors: DataFrame,
-      nProbe: Int): (org.apache.spark.sql.Column, DataFrame, Int) = {
+      nProbe: Int): (Column, DataFrame, Int) = {
     recover(spark, path)
-    val cents = Parquet.read(spark, s"$path/centroids")
-      .select(col("cid").cast("int").as("cid"), col("c_embedding"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Float](1)))
+    val cents = centroidRows(spark, path)
     require(cents.nonEmpty, s"no centroid sidecar under $path — not a built index")
-    val sortedCells = graft.ops.Similarity.centroidProbeExpr(cents)
+    val sortedCells = probeCells(col("embedding"), cents, cents.length)
     val probes = math.min(cents.length,
       if (nProbe > 0) nProbe else graft.ops.Similarity.autoProbe(cents.length))
     // Bounded anchors ⇒ one tiny job computes the probed-cell union, which
@@ -538,14 +608,7 @@ object IvfIndex {
       .distinct().collect().map(_.getLong(0))
     // probed-dir read (r13): list only the probed cells' directories
     // instead of the whole cells×dates tree (the dedupIngest convention)
-    val residentBase = probedCellDirs(spark, path, probed) match {
-      case Some(dirs) if dirs.nonEmpty =>
-        Parquet.readUnder(spark, s"$path/vectors", dirs)
-      case Some(_) => anchors.select(col("vec_id"), col("embedding"),
-        col("label"), lit(0L).cast("int").as("cell")).limit(0)
-      case None => Parquet.read(spark, s"$path/vectors")
-    }
-    val resident = Lifecycle.dropTombstoned(spark, path, residentBase)
+    val resident = probedResident(spark, path, probed, anchors)
       .select(col("vec_id").as("c_vec_id"), col("embedding").as("c_emb"),
         col("label").as("c_label"), col("cell").cast("long").as("cell"))
       .filter(col("cell").isin(probed: _*))
@@ -643,18 +706,10 @@ object IvfIndex {
       k: Int = 10, nProbe: Int = 4, asOf: java.sql.Date = null,
       maxDays: Int = VectorIndex.RetentionDays): DataFrame = {
     recover(spark, path)
-    // the nProbe nearest cells, (distance, cid) tie-broken — one
-    // constant-size FloatVecNearestCells node (see [[assign]])
-    val probeCells = orderedCellCids(col("embedding"),
-      centroidRows(Parquet.read(spark, s"$path/centroids")), nProbe)
     val q = queries.select(col("vec_id").as("q_vec_id"), col("embedding").as("q_emb"),
-      explode(probeCells).as("cell"))
-    val base = Lifecycle.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
-    val windowed =
-      if (asOf == null) base
-      else base.filter(col("ingest_date") > date_sub(lit(asOf), maxDays) &&
-        col("ingest_date") <= lit(asOf))
-    val corpus = windowed.select(col("vec_id").as("c_vec_id"),
+      explode(probeCells(col("embedding"), centroidRows(spark, path), nProbe)).as("cell"))
+    val corpus = retained(Lifecycle.dropTombstoned(spark, path,
+        Parquet.read(spark, s"$path/vectors")), asOf, maxDays).select(col("vec_id").as("c_vec_id"),
       col("embedding").as("c_emb"), col("cell").cast("long").as("cell"))
     q.join(corpus, "cell")
       .withColumn("d2", l2Sq(col("q_emb"), col("c_emb")))
@@ -680,30 +735,15 @@ object IvfIndex {
       radius: Double, asOf: java.sql.Date = null,
       maxDays: Int = VectorIndex.RetentionDays): DataFrame = {
     recover(spark, path)
-    val cents = Parquet.read(spark, s"$path/centroids")
-      .select(col("cid").cast("long"), col("c_embedding"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val radiiPath = new org.apache.hadoop.fs.Path(s"$path/radii")
-    val fs = radiiPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val radii: Map[Long, Double] =
-      if (fs.exists(radiiPath))
-        Parquet.read(spark, s"$path/radii").collect()
-          .map(r => r.getAs[Long]("cid") -> r.getAs[Double]("radius")).toMap
-      else Map.empty
-    def l2(a: Seq[Float], b: Seq[Float]): Double =
-      math.sqrt(a.zip(b).map { case (x, y) =>
-        (x.toDouble - y.toDouble) * (x.toDouble - y.toDouble) }.sum)
-    val qualifying = cents.collect {
-      case (cid, c) if l2(c, query) - radii.getOrElse(cid, Double.MaxValue) <= radius => cid
+    val cellRadii = radii(spark, path)
+    val q = query.toArray
+    val qualifying = centroidRows(spark, path).collect {
+      case (cid, c) if math.sqrt(ResidentIvf.d2(c, q)) -
+        cellRadii.getOrElse(cid, Double.MaxValue) <= radius => cid
     }
-    val base = Lifecycle.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
-      .filter(col("cell").isin(qualifying: _*)) // partition pruning on disk
-    val windowed =
-      if (asOf == null) base
-      else base.filter(col("ingest_date") > date_sub(lit(asOf), maxDays) &&
-        col("ingest_date") <= lit(asOf))
-    windowed
-      .withColumn("d2", l2Sq(col("embedding"), lit(query.toArray)))
+    retained(Lifecycle.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
+        .filter(col("cell").isin(qualifying: _*)), asOf, maxDays) // partition pruning on disk
+      .withColumn("d2", l2Sq(col("embedding"), lit(q)))
       .filter(col("d2") <= radius * radius)
       .select(col("vec_id"), col("label"), col("d2").as("dist_sq"))
       .orderBy(col("vec_id"))
@@ -731,7 +771,8 @@ object IvfIndex {
       .getOrElse(scan(spark, path, query, k, nProbe, asOf, maxDays))
   }
 
-  /** Probe: rank cells against the tiny sidecar, scan only those partitions.
+  /** Probe: rank cells ([[rankCells]] over [[centroidRows]]), scan only
+    * those partitions.
     * With `asOf`, the scan is additionally pruned to the retention window's
     * `ingest_date` directories — probe × retention, both at the partition
     * level. Tombstones anti-join the vectors below the probed-cell filter.
@@ -739,18 +780,9 @@ object IvfIndex {
   private[graft] def scan(spark: SparkSession, path: String, query: Seq[Float],
       k: Int, nProbe: Int, asOf: java.sql.Date, maxDays: Int): DataFrame = {
     val q = lit(query.toArray)
-    val probed = Parquet.read(spark, s"$path/centroids")
-      .withColumn("qd2", l2Sq(col("c_embedding"), q))
-      .orderBy(col("qd2"), col("cid"))
-      .limit(nProbe)
-      .select(col("cid")).collect().map(_.getLong(0))
-    val base = Lifecycle.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
-      .filter(col("cell").isin(probed: _*)) // partition pruning: only probed dirs read
-    val windowed =
-      if (asOf == null) base
-      else base.filter(col("ingest_date") > date_sub(lit(asOf), maxDays) &&
-        col("ingest_date") <= lit(asOf))
-    windowed
+    val probed = rankCells(centroidRows(spark, path), query.toArray, nProbe)
+    retained(Lifecycle.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
+        .filter(col("cell").isin(probed: _*)), asOf, maxDays) // only probed dirs read
       .withColumn("d2", l2Sq(col("embedding"), q))
       .orderBy(col("d2"), col("vec_id"))
       .limit(k)
@@ -800,14 +832,7 @@ object IvfIndex {
     // never resident shuffles. Left unhinted, AQE mis-sizing flips these to
     // sort-merge and the full resident corpus crosses the shuffle for one
     // batch (measured on the text gate: 2.6M records for a 500-doc batch).
-    //
-    // The full-layout read is LAZY (r13): creating it eagerly pays a
-    // whole-tree file listing (cells×dates directories — ~1 s of the
-    // measured 100×-resident wall) that the sidecar-gated path never
-    // needs — the cosine tier below lists ONLY the probed cell
-    // directories.
-    def fullVectors = Parquet.read(spark, s"$path/vectors")
-    val cents = centroidRows(Parquet.read(spark, s"$path/centroids"))
+    val cents = centroidRows(spark, path)
     val b = LocalFrame(batch.select(col("vec_id"), col("label"), col("embedding")))
     val batchIds = b.select(col("vec_id"))
     // The probed-cell union statically prunes the partitioned resident
@@ -818,7 +843,7 @@ object IvfIndex {
     // 4.7× wall on a fixed batch, all of it scan time. The cell lists are
     // a projection of the local batch: evaluated on the driver, no job.
     val withCells = LocalFrame(b.select(col("vec_id"), col("embedding"),
-      orderedCellCids(col("embedding"), cents, nProbe).as("cells")))
+      probeCells(col("embedding"), cents, nProbe).as("cells")))
     val probedCells = withCells.collect().flatMap(_.getSeq[Long](2)).distinct
     val probed = withCells.select(col("vec_id"), col("embedding"),
       explode(col("cells")).as("cell"))
@@ -836,7 +861,7 @@ object IvfIndex {
         val idAuthority =
           if (idsGateP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(idsGateP))
             graft.sources.KeyedSidecar.lookup(spark, s"$path/ids", "vec_id", batchIds)
-          else fullVectors.select(col("vec_id"))
+          else Parquet.read(spark, s"$path/vectors").select(col("vec_id"))
         val clash = idAuthority.select(col("vec_id"))
           .join(broadcast(batchIds), Seq("vec_id"), "left_semi")
           .limit(5).collect()
@@ -851,15 +876,7 @@ object IvfIndex {
         // gate still reads them. The probed-dir read (r13) lists and reads
         // ONLY the probed cells' directories; the value filter stays as
         // the semantic guard.
-        val residentProbed = probedCellDirs(spark, path, probedCells) match {
-          case Some(dirs) if dirs.nonEmpty =>
-            Parquet.readUnder(spark, s"$path/vectors", dirs)
-          case Some(_) => // probed cells hold no resident rows at all
-            b.select(col("vec_id"), col("embedding"),
-              lit(0L).cast("int").as("cell")).limit(0)
-          case None => fullVectors
-        }
-        val resident = Lifecycle.dropTombstoned(spark, path, residentProbed)
+        val resident = probedResident(spark, path, probedCells, b)
           .select(col("vec_id").as("r_vec_id"), col("embedding").as("r_emb"),
             col("cell").cast("long").as("cell"))
           .filter(col("cell").isin(probedCells: _*))

@@ -1,6 +1,6 @@
 package graft.vector
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
 import graft.sources.Parquet
@@ -25,11 +25,15 @@ import graft.sources.Parquet
   *   path/codebooks  — m×ksub residual sub-centroids (PqIndex sidecar form)
   *   path/vectors    — partitionBy(cell): vec_id, label, embedding, codes
   *
-  * Query plan: probe nProbe cells (driver math over the sidecar) →
-  * per-cell ADC fold over the codes column only (codegen, literal LUT) →
-  * top `k·refineFactor` by approximate distance → exact re-rank of the
-  * leaders against their true embeddings (semi-join back into the probed
-  * partitions, float column read for ≤ k·refineFactor rows per cell).
+  * Query plan: rank the cells on the driver (`IvfIndex.rankCells` over
+  * the held centroid rows) → [[cellLeaders]]: per probed cell an ADC fold
+  * over the codes column only (codegen, `PqIndex.lut` literal), top
+  * `k·refineFactor` by approximate distance → exact re-rank of the leaders
+  * against their true embeddings (semi-join back into the probed
+  * partitions, float column read for ≤ k·refineFactor rows per cell). The
+  * batch form, [[knnJoin]], moves the same steps into the plan
+  * ([[joinLeaders]]). `ServeIndex` runs both leader stages on its pq and
+  * opq sidecars.
   */
 object IvfPqIndex {
 
@@ -43,30 +47,16 @@ object IvfPqIndex {
       ingestDate: java.sql.Date = IvfIndex.DefaultIngestDate): Unit = {
     val centroids = IvfIndex.kmeansCentroids(embeddings, nCells, kmeansIters)
     centroids.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
-    val cents = centroids.select(col("cid").cast("long"), col("c_embedding"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val nearest = graft.functions.VectorFunctions.nearestCellCid(
-      col("embedding"), cents.toSeq)
-    // residual = embedding − centroid(cell): the centroid lookup is a
-    // literal map over the constant-size centroid set — still map-only.
-    val centMap = map(cents.flatMap { case (cid, v) =>
-      Seq(lit(cid), typedLit(v)) }.toSeq: _*)
-    val assigned = embeddings
-      .withColumn("cell", nearest)
-      .withColumn("residual",
-        zip_with(col("embedding"), element_at(centMap, col("cell")), (a, b) => a - b))
+    val cents = IvfIndex.centroidRows(centroids)
     // Train the residual codebooks on (vec_id, residual-as-embedding);
     // staged once — consumed by pqIters training rounds AND the final encode.
-    val residuals = assigned.select(col("vec_id"), col("cell"), col("label"),
-      col("embedding"), col("residual").as("pq_embedding"))
+    val residuals = IvfIndex.assign(embeddings, cents).withColumnRenamed("cid", "cell")
+      .select(col("vec_id"), col("cell"), col("label"), col("embedding"),
+        IvfIndex.residual(col("embedding"), cents).as("pq_embedding"))
       .localCheckpoint(true)
     val books = PqIndex.train(
       residuals.select(col("vec_id"), col("pq_embedding").as("embedding")), m, ksub, pqIters)
-    import spark.implicits._
-    books.zipWithIndex.flatMap { case (cs, s) =>
-      cs.zipWithIndex.map { case (c, j) => (s, j, c.toSeq) }
-    }.toSeq.toDF("sub_id", "code", "c_sub")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/codebooks")
+    PqIndex.writeBooks(spark, books, path)
     // cell × ingest_date layout: probe pruning composes with retention,
     // exactly like IvfIndex (reference retention applies to ALL vectors,
     // faiss_manager.py:151-172).
@@ -92,8 +82,8 @@ object IvfPqIndex {
 
   /** Point deletes + compaction ride the IvfIndex tombstone lifecycle
     * verbatim — same layout, same log, same crash-safe swap; the `codes`
-    * column rides the rewrite untouched. `search`/`knnJoin`/`adcScan`
-    * anti-join the log pre-compaction.
+    * column rides the rewrite untouched. `search`/`knnJoin` anti-join the
+    * log pre-compaction.
     */
   def delete(spark: SparkSession, path: String, ids: DataFrame): Unit =
     IvfIndex.delete(spark, path, ids)
@@ -112,23 +102,15 @@ object IvfPqIndex {
       ingestDate: java.sql.Date = IvfIndex.DefaultIngestDate): Unit = {
     IvfIndex.recover(spark, path)
     val books = PqIndex.readBooks(spark, path)
-    val cents = Parquet.read(spark, s"$path/centroids")
-      .select(col("cid").cast("long"), col("c_embedding"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val nearest = graft.functions.VectorFunctions.nearestCellCid(
-      col("embedding"), cents.toSeq)
-    val centMap = map(cents.flatMap { case (cid, v) =>
-      Seq(lit(cid), typedLit(v)) }.toSeq: _*)
+    val cents = IvfIndex.centroidRows(spark, path)
     val dated =
       if (batch.columns.contains("ingest_date")) batch
       else batch.withColumn("ingest_date", lit(ingestDate))
     // checkpointed so writeCells' counts pass reads materialized rows
     // instead of re-running the centroid assignment + codes projection
     // over the batch a second time (batch-bounded memory)
-    val encoded = dated
-      .withColumn("cell", nearest)
-      .withColumn("pq_embedding",
-        zip_with(col("embedding"), element_at(centMap, col("cell")), (a, b) => a - b))
+    val encoded = IvfIndex.assign(dated, cents).withColumnRenamed("cid", "cell")
+      .withColumn("pq_embedding", IvfIndex.residual(col("embedding"), cents))
       .select(col("vec_id"), col("label"), col("embedding"), col("cell"),
         PqIndex.codesExpr(books, col("pq_embedding")).as("codes"), col("ingest_date"))
       .localCheckpoint(true)
@@ -146,48 +128,16 @@ object IvfPqIndex {
       asOf: java.sql.Date = null,
       maxDays: Int = VectorIndex.RetentionDays): DataFrame = {
     IvfIndex.recover(spark, path)
-    val books = PqIndex.readBooks(spark, path)
-    val m = books.length
-    val ksub = books(0).length
-    val dsub = books(0)(0).length
-    val cents = Parquet.read(spark, s"$path/centroids")
-      .select(col("cid").cast("long"), col("c_embedding"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    def l2(a: Seq[Float], b: Seq[Float]): Double =
-      a.zip(b).map { case (x, y) => (x.toDouble - y.toDouble) * (x.toDouble - y.toDouble) }.sum
-    val probed = cents.map { case (cid, c) => (l2(c, query), cid) }.sorted.take(nProbe)
-    val raw = IvfIndex.Lifecycle.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
+    val cents = IvfIndex.centroidRows(spark, path)
+    val probed = IvfIndex.rankCells(cents, query.toArray, nProbe)
     // With asOf, both the ADC candidate scans and the re-rank are pruned
     // to the retention window's date directories (probe × retention, both
     // at the partition level — the IvfIndex contract).
-    val base =
-      if (asOf == null) raw
-      else raw.filter(col("ingest_date") > date_sub(lit(asOf), maxDays) &&
-        col("ingest_date") <= lit(asOf))
-    // One ADC scan per probed cell (nProbe is small), each against its own
-    // residual LUT — partition-pruned, codes-only.
-    val perCell = probed.map { case (_, cid) =>
-      val centroid = cents.find(_._1 == cid).get._2
-      val qRes = query.zip(centroid).map { case (q, c) => q - c }
-      val lutFlat: Seq[Double] = (0 until m * ksub).map { i =>
-        val s = i / ksub; val j = i % ksub
-        (0 until dsub).map { p =>
-          val d = qRes(s * dsub + p).toDouble - books(s)(j)(p).toDouble
-          d * d
-        }.sum
-      }
-      val lut = typedLit(lutFlat)
-      val approx = aggregate(
-        expr(s"zip_with(sequence(0, ${m - 1}), codes, (s, c) -> s * $ksub + c)"),
-        lit(0.0), (acc, i) => acc + element_at(lut, i + 1))
-      base.filter(col("cell") === cid)
-        .select(col("vec_id"), approx.as("adc_d2"))
-    }
-    val cand = perCell.reduce(_ unionByName _)
-      .orderBy(col("adc_d2"), col("vec_id"))
-      .limit(k * refineFactor)
-      .select(col("vec_id"))
-    base.filter(col("cell").isin(probed.map(_._2): _*))
+    val base = IvfIndex.retained(IvfIndex.Lifecycle.dropTombstoned(spark, path,
+      Parquet.read(spark, s"$path/vectors")), asOf, maxDays)
+    val cand = cellLeaders(base, cents, probed, query.toArray,
+      PqIndex.readBooks(spark, path), k * refineFactor)
+    base.filter(col("cell").isin(probed: _*))
       .join(broadcast(cand), "vec_id", "left_semi")
       .withColumn("d2", l2Sq(col("embedding"), typedLit(query)))
       .orderBy(col("d2"), col("vec_id"))
@@ -223,49 +173,16 @@ object IvfPqIndex {
       maxDays: Int = VectorIndex.RetentionDays): DataFrame = {
     IvfIndex.recover(spark, path)
     import graft.functions.TopKAggregator
-    val books = PqIndex.readBooks(spark, path)
-    val m = books.length
-    val ksub = books(0).length
-    val dsub = books(0)(0).length
-    val cents = Parquet.read(spark, s"$path/centroids")
-      .select(col("cid").cast("long"), col("c_embedding"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val probeCells = graft.functions.VectorFunctions.orderedCellCids(
-      col("q_emb"), cents.toSeq, nProbe)
-    val centMap = map(cents.flatMap { case (cid, v) =>
-      Seq(lit(cid), typedLit(v)) }.toSeq: _*)
-    // Flattened codebooks as ONE literal: flatBooks[(s*ksub + j)*dsub + p].
-    val flatBooks = typedLit(books.flatten.flatten.map(_.toDouble).toSeq)
-    val lutExpr = transform(sequence(lit(0), lit(m * ksub - 1)), i => {
-      val s = (i / lit(ksub)).cast("int") // subspace of LUT slot i
-      aggregate(sequence(lit(0), lit(dsub - 1)), lit(0.0), (acc, p) => {
-        val qv = element_at(col("q_res"), s * dsub + p + 1).cast("double")
-        val bv = element_at(flatBooks, i * dsub + p + 1)
-        acc + (qv - bv) * (qv - bv)
-      })
-    })
+    val cents = IvfIndex.centroidRows(spark, path)
     val qSide = queries
       .select(col("vec_id").as("q_vec_id"), col("embedding").as("q_emb"))
-      .withColumn("cell", explode(probeCells))
-      .withColumn("q_res",
-        zip_with(col("q_emb"), element_at(centMap, col("cell")), (a, b) => a - b))
-      .withColumn("lut", lutExpr)
-      .select(col("q_vec_id"), col("q_emb"), col("cell"), col("lut"))
-    val raw = IvfIndex.Lifecycle.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
-    val base =
-      if (asOf == null) raw
-      else raw.filter(col("ingest_date") > date_sub(lit(asOf), maxDays) &&
-        col("ingest_date") <= lit(asOf))
+      .withColumn("cell", explode(IvfIndex.probeCells(col("q_emb"), cents, nProbe)))
+    val base = IvfIndex.retained(IvfIndex.Lifecycle.dropTombstoned(spark, path,
+      Parquet.read(spark, s"$path/vectors")), asOf, maxDays)
     val corpus = base.select(col("vec_id").as("c_vec_id"), col("codes"),
       col("cell").cast("long").as("cell"))
-    val adc = aggregate(
-      expr(s"zip_with(sequence(0, ${m - 1}), codes, (s, c) -> s * $ksub + c)"),
-      lit(0.0), (acc, i) => acc + element_at(col("lut"), i + 1))
-    val leaders = qSide.join(corpus, "cell")
-      .withColumn("adc_d2", adc)
-      .groupBy(col("q_vec_id"))
-      .agg(TopKAggregator.topK(k * refineFactor, -col("adc_d2"), col("c_vec_id")).as("top"))
-      .select(col("q_vec_id"), explode(col("top.id")).as("c_vec_id"))
+    val leaders = joinLeaders(qSide, "q_vec_id", col("q_emb"), corpus, "c_vec_id",
+      cents, PqIndex.readBooks(spark, path), k * refineFactor)
     // Exact re-rank of the bounded leader set (≤ k·refineFactor per query).
     val emb = base.select(col("vec_id").as("c_vec_id"), col("embedding").as("c_emb"))
     leaders
@@ -281,31 +198,38 @@ object IvfPqIndex {
       .orderBy(col("q_vec_id"), col("rank"))
   }
 
-  /** The codes-only candidate scan for one probed cell, exposed for the
-    * spec's read-schema assert (the plan must not read `embedding`).
+  /** The top `n` ADC leaders (`vec_id`) of one query over the `probed`
+    * cells of `base`: per cell a codes-only scan scored through the
+    * `PqIndex.lut` of the query's residual to that cell's centroid, the
+    * scans unioned and ranked by (adc_d2, vec_id). `q` lives in the space of
+    * the centroids and codebooks.
     */
-  def adcScan(spark: SparkSession, path: String, query: Seq[Float], cid: Long): DataFrame = {
-    IvfIndex.recover(spark, path)
-    val books = PqIndex.readBooks(spark, path)
-    val m = books.length
-    val ksub = books(0).length
-    val dsub = books(0)(0).length
-    val centroid = Parquet.read(spark, s"$path/centroids")
-      .filter(col("cid") === cid).select(col("c_embedding")).head.getSeq[Float](0)
-    val qRes = query.zip(centroid).map { case (q, c) => q - c }
-    val lutFlat: Seq[Double] = (0 until m * ksub).map { i =>
-      val s = i / ksub; val j = i % ksub
-      (0 until dsub).map { p =>
-        val d = qRes(s * dsub + p).toDouble - books(s)(j)(p).toDouble
-        d * d
-      }.sum
-    }
-    val lut = typedLit(lutFlat)
-    val approx = aggregate(
-      expr(s"zip_with(sequence(0, ${m - 1}), codes, (s, c) -> s * $ksub + c)"),
-      lit(0.0), (acc, i) => acc + element_at(lut, i + 1))
-    IvfIndex.Lifecycle.dropTombstoned(spark, path, Parquet.read(spark, s"$path/vectors"))
-      .filter(col("cell") === cid)
-      .select(col("vec_id"), approx.as("adc_d2"))
-  }
+  private[graft] def cellLeaders(base: DataFrame, cents: Seq[(Long, Array[Float])],
+      probed: Seq[Long], q: Array[Float], books: PqIndex.Codebooks, n: Int): DataFrame =
+    probed.map { cid =>
+      val centroid = cents.find(_._1 == cid).get._2
+      val lut = PqIndex.lut(books, q.zip(centroid).map { case (x, c) => x - c })
+      base.filter(col("cell") === cid).select(col("vec_id"), PqIndex.adc(books, lut).as("adc_d2"))
+    }.reduce(_ unionByName _)
+      .orderBy(col("adc_d2"), col("vec_id"))
+      .limit(n)
+      .select(col("vec_id"))
+
+  /** [[cellLeaders]] for every query row, in the plan: per (query, probed
+    * cell) row of `qSide` the `PqIndex.lutExpr` of the residual of `qVec`,
+    * one equi-join on `cell` with the codes-only `corpus`, and a bounded
+    * native top-`n` per `qId` (map-side combining). `corpus` carries
+    * `cId`, `codes` and `cell`; returns (`qId`, `cId`) leader rows.
+    */
+  private[vector] def joinLeaders(qSide: DataFrame, qId: String, qVec: Column,
+      corpus: DataFrame, cId: String, cents: Seq[(Long, Array[Float])],
+      books: PqIndex.Codebooks, n: Int): DataFrame =
+    qSide.withColumn("q_res", IvfIndex.residual(qVec, cents))
+      .withColumn("lut", PqIndex.lutExpr(books, col("q_res")))
+      .select(col(qId), col("cell"), col("lut"))
+      .join(corpus, "cell")
+      .withColumn("adc_d2", PqIndex.adc(books, col("lut")))
+      .groupBy(col(qId))
+      .agg(graft.functions.TopKAggregator.topK(n, -col("adc_d2"), col(cId)).as("top"))
+      .select(col(qId), explode(col("top.id")).as(cId))
 }

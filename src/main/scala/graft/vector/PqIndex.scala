@@ -114,14 +114,19 @@ object PqIndex {
   def write(spark: SparkSession, embeddings: DataFrame, path: String,
       m: Int = 8, ksub: Int = 16, iters: Int = 3): Codebooks = {
     val books = train(embeddings, m, ksub, iters)
+    writeBooks(spark, books, path)
+    encode(embeddings, books)
+      .write.mode(SaveMode.Overwrite).parquet(s"$path/codes")
+    books
+  }
+
+  /** Write the codebook sidecar, `path/codebooks`: one file. */
+  private[vector] def writeBooks(spark: SparkSession, books: Codebooks, path: String): Unit = {
     import spark.implicits._
     books.zipWithIndex.flatMap { case (cs, s) =>
       cs.zipWithIndex.map { case (c, j) => (s, j, c.toSeq) }
     }.toSeq.toDF("sub_id", "code", "c_sub")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/codebooks")
-    encode(embeddings, books)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/codes")
-    books
   }
 
   /** Load the codebook sidecar back into driver-side form. */
@@ -136,36 +141,61 @@ object PqIndex {
     books
   }
 
-  /** ADC (asymmetric distance computation) scan + exact re-rank.
-    *
-    * The LUT is query-only driver math: lut(s)(j) = ‖q_sub(s) − books(s)(j)‖².
-    * Approximate distance = Σ_s lut(s)(codes(s)) — a fold over the codes
-    * array against ONE flat literal (m·ksub doubles), full codegen, no
-    * float vectors read. The `k·refineFactor` ADC leaders then join back
-    * to the float table for exact distances; output ranking/distances are
-    * exact over that candidate set.
+  /** The ADC lookup table of query `q`, built on the driver as one literal
+    * of m·ksub doubles: slot `s·ksub + j` holds ‖q_sub(s) − books(s)(j)‖²,
+    * floats widened to double and summed left to right.
     */
-  def searchAdc(encoded: DataFrame, embeddings: DataFrame, books: Codebooks,
-      query: Seq[Float], k: Int = 10, refineFactor: Int = 4): DataFrame = {
-    val m = books.length
+  private[vector] def lut(books: Codebooks, q: Array[Float]): Column = {
     val ksub = books(0).length
     val dsub = books(0)(0).length
-    val lutFlat: Array[Double] = Array.tabulate(m * ksub) { i =>
+    val lutFlat: Array[Double] = Array.tabulate(books.length * ksub) { i =>
       val s = i / ksub; val j = i % ksub
       var acc = 0.0
       var p = 0
       while (p < dsub) {
-        val d = query(s * dsub + p).toDouble - books(s)(j)(p).toDouble
+        val d = q(s * dsub + p).toDouble - books(s)(j)(p).toDouble
         acc += d * d; p += 1
       }
       acc
     }
-    val lut = typedLit(lutFlat.toSeq)
-    val approx = aggregate(
-      expr(s"zip_with(sequence(0, ${m - 1}), codes, (s, c) -> s * $ksub + c)"),
+    typedLit(lutFlat.toSeq)
+  }
+
+  /** [[lut]] in the plan: the table of the `array<float>` column `q`, per
+    * row, against the codebooks flattened into ONE literal,
+    * `flatBooks[(s·ksub + j)·dsub + p]`.
+    */
+  private[vector] def lutExpr(books: Codebooks, q: Column): Column = {
+    val ksub = books(0).length
+    val dsub = books(0)(0).length
+    val flatBooks = typedLit(books.flatten.flatten.map(_.toDouble).toSeq)
+    transform(sequence(lit(0), lit(books.length * ksub - 1)), i => {
+      val s = (i / lit(ksub)).cast("int") // subspace of LUT slot i
+      aggregate(sequence(lit(0), lit(dsub - 1)), lit(0.0), (acc, p) => {
+        val qv = element_at(q, s * dsub + p + 1).cast("double")
+        val bv = element_at(flatBooks, i * dsub + p + 1)
+        acc + (qv - bv) * (qv - bv)
+      })
+    })
+  }
+
+  /** The ADC distance of the `codes` column: Σ_s lut(s·ksub + codes(s)), a
+    * codegen'd fold over the codes array that never touches the floats.
+    */
+  private[vector] def adc(books: Codebooks, lut: Column): Column =
+    aggregate(
+      expr(s"zip_with(sequence(0, ${books.length - 1}), codes, (s, c) -> s * ${books(0).length} + c)"),
       lit(0.0), (acc, i) => acc + element_at(lut, i + 1))
+
+  /** ADC (asymmetric distance computation) scan + exact re-rank: the
+    * `k·refineFactor` leaders by [[adc]] over the query's [[lut]] join
+    * back to the float table for exact distances; output ranking and
+    * distances are exact over that candidate set.
+    */
+  def searchAdc(encoded: DataFrame, embeddings: DataFrame, books: Codebooks,
+      query: Seq[Float], k: Int = 10, refineFactor: Int = 4): DataFrame = {
     val cand = encoded
-      .withColumn("adc_d2", approx)
+      .withColumn("adc_d2", adc(books, lut(books, query.toArray)))
       .orderBy(col("adc_d2"), col("vec_id"))
       .limit(k * refineFactor)
       .select(col("vec_id"))

@@ -27,7 +27,6 @@ import graft.sources.{LocalFrame, ResidentFiles}
   */
 private[vector] object ResidentIvf {
 
-  private final case class Cent(cid: Long, emb: Array[Float])
   private final case class Vec(vecId: java.lang.Long, label: Any, emb: Array[Float])
   /** One decoded vectors file: the label's type as read, and its rows. */
   private final case class Cells(labelType: DataType, rows: IndexedSeq[Vec])
@@ -44,20 +43,14 @@ private[vector] object ResidentIvf {
     val centFiles = ResidentFiles.visible(fs, centDir)
     val vecFiles = listVectors(fs, vecDir).getOrElse(return None)
     val all = centFiles ++ vecFiles.map(_.file)
-    if (centFiles.isEmpty || !centFiles.forall(ResidentFiles.dataFile) || vecFiles.isEmpty ||
-      all.map(_.getLen).sum > ResidentFiles.MaxBytes) return None
+    if (vecFiles.isEmpty || all.map(_.getLen).sum > ResidentFiles.MaxBytes) return None
     val keep = all.map(key).toSet
     val under = Seq(centDir, vecDir).map(d => key(d) + "/")
     // held files of this index that the listing no longer shows
     def stale(f: String) = under.exists(f.startsWith) && !keep(f)
 
-    val cents = centroids(spark, centFiles, keep, stale).getOrElse(return None)
-    val probed = cents.map(c => (if (c.emb == null) null else d2(c.emb, query), c))
-      .sorted[(java.lang.Double, Cent)]((a, b) => {
-        val byD2 = compareD2(a._1, b._1)
-        if (byD2 != 0) byD2 else java.lang.Long.compare(a._2.cid, b._2.cid)
-      })
-      .take(nProbe).map(_._2.cid).toSet
+    val probed = IvfIndex.rankCells(held(spark, centFiles, keep, stale).getOrElse(return None),
+      query, nProbe).toSet
     val from = Option(asOf).map(_.toLocalDate.minusDays(maxDays))
     val needed = vecFiles.filter(l => probed(l.cell) &&
       Option(asOf).forall(a => l.day.isAfter(from.get) && !l.day.isAfter(a.toLocalDate)))
@@ -85,19 +78,36 @@ private[vector] object ResidentIvf {
       StructField("cid", LongType), StructField("dist_sq", DoubleType))), hits))
   }
 
-  /** The centroid rows, held or read in one job (and then held). */
-  private def centroids(spark: SparkSession, files: Seq[FileStatus], keep: Set[String],
-      stale: String => Boolean): Option[Seq[Cent]] = {
-    val have = ResidentFiles.snapshot[IndexedSeq[Cent]](files)
+  /** The (cid, c_embedding) rows of the centroid sidecar under `path`, held
+    * or read in one job (and then held) — the read behind
+    * [[IvfIndex.centroidRows]]. None when the store cannot answer.
+    */
+  def centroids(spark: SparkSession, path: String): Option[Seq[(Long, Array[Float])]] = {
+    val root = new Path(path)
+    val fs = ResidentFiles.fileSystem(spark, root)
+    val dir = fs.makeQualified(new Path(root, "centroids"))
+    val files = ResidentFiles.visible(fs, dir)
+    val keep = files.map(key).toSet
+    held(spark, files, keep, f => f.startsWith(key(dir) + "/") && !keep(f))
+  }
+
+  /** The centroid rows of the listed `files`, held or read in one job (and
+    * then held); None on no file, a summary or stray entry, a null cid or
+    * a schema without the columns.
+    */
+  private def held(spark: SparkSession, files: Seq[FileStatus], keep: Set[String],
+      stale: String => Boolean): Option[Seq[(Long, Array[Float])]] = {
+    if (files.isEmpty || !files.forall(ResidentFiles.dataFile)) return None
+    val have = ResidentFiles.snapshot[IndexedSeq[(Long, Array[Float])]](files)
     val missing = files.filterNot(f => have.contains(key(f)))
     ResidentFiles.read(spark, missing, Seq("cid", "c_embedding"), schema =>
       schema.fields.exists(f => f.name == "cid" && f.dataType == LongType) &&
         ResidentWindow.floats(schema.fields.find(_.name == "c_embedding").map(_.dataType))
     ).flatMap { case (_, byFile) =>
-      if (byFile.values.flatten.exists(_.isNullAt(1))) None // the scan's getLong throws
+      if (byFile.values.flatten.exists(_.isNullAt(1))) None // the plain collect's getLong throws
       else {
         val loaded = missing.map(f => key(f) -> byFile.getOrElse(key(f), Nil)
-          .map(r => Cent(r.getLong(1), ResidentWindow.floatsOf(r, "c_embedding"))).toIndexedSeq)
+          .map(r => (r.getLong(1), ResidentWindow.floatsOf(r, "c_embedding"))).toIndexedSeq)
           .toMap
         ResidentFiles.hold(missing.map(f => f -> loaded(key(f))), keep, stale)
         Some(files.flatMap(f => have.getOrElse(key(f), loaded(key(f)))))
@@ -152,11 +162,11 @@ private[vector] object ResidentIvf {
     else None
   }
 
-  private def d2(emb: Array[Float], q: Array[Float]): java.lang.Double =
+  private[vector] def d2(emb: Array[Float], q: Array[Float]): java.lang.Double =
     ResidentWindow.l2Sq(emb, q)
 
   /** SQL's ascending double order with nulls first. */
-  private def compareD2(a: java.lang.Double, b: java.lang.Double): Int = (a, b) match {
+  private[vector] def compareD2(a: java.lang.Double, b: java.lang.Double): Int = (a, b) match {
     case (null, null) => 0
     case (null, _) => -1
     case (_, null) => 1

@@ -180,9 +180,10 @@ object ServeIndex {
         seedRows.length, kmeansIters, seeds = Some(seeds))
       .localCheckpoint(true)
     // assignment runs in the ANN space (= raw space for non-opq kinds)
+    val cents = IvfIndex.centroidRows(centroids)
     val assigned = IvfIndex.assign(
         annRows.withColumnRenamed("embedding", "orig_emb")
-          .withColumnRenamed("ann_emb", "embedding"), IvfIndex.centroidRows(centroids))
+          .withColumnRenamed("ann_emb", "embedding"), cents)
       .withColumnRenamed("embedding", "ann_emb")
       .withColumnRenamed("orig_emb", "embedding")
       .withColumnRenamed("cid", "cell")
@@ -214,20 +215,13 @@ object ServeIndex {
         // residual PQ: codes encode v − centroid(cell(v)) — v in the ANN
         // space (rotated for opq, raw for ivfpq) — the IvfPqIndex
         // construction, trained on this window's residuals
-        val cents = centroids.select(col("cid").cast("long"), col("c_embedding"))
-          .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-        val centMap = map(cents.flatMap { case (cid, v) =>
-          Seq(lit(cid), typedLit(v)) }.toSeq: _*)
-        val withRes = assigned.withColumn("pq_embedding",
-          zip_with(col("ann_emb"), element_at(centMap, col("cell")), (a, b) => a - b))
+        val withRes = assigned
+          .withColumn("pq_embedding", IvfIndex.residual(col("ann_emb"), cents))
           .localCheckpoint(true) // PQ training reruns the scan per round
         val books = PqIndex.train(
           withRes.select(col("vec_id"), col("pq_embedding").as("embedding")),
           m, ksub, pqIters)
-        books.zipWithIndex.flatMap { case (cs, s) =>
-          cs.zipWithIndex.map { case (c, j) => (s, j, c.toSeq) }
-        }.toSeq.toDF("sub_id", "code", "c_sub")
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$staging/codebooks")
+        PqIndex.writeBooks(spark, books, staging)
         withRes.withColumn("codes", PqIndex.codesExpr(books, col("pq_embedding")))
           .drop("pq_embedding").drop("ann_emb")
       }
@@ -252,7 +246,9 @@ object ServeIndex {
     * answer this request correctly (missing/mid-swap, kind mismatch, or an
     * `asOf` anchored before the watermark) — the caller falls back to the
     * flat scan. Output schema and ordering are exactly
-    * `VectorIndex.search`'s.
+    * `VectorIndex.search`'s. The cells rank by `IvfIndex.rankCells` over
+    * the held centroid rows; the `ivfpq` and `opq` kinds take their leaders from
+    * `IvfPqIndex.cellLeaders`, the stage `IvfPqIndex.search` runs.
     */
   def search(spark: SparkSession, indexPath: String, kind: String,
       query: Seq[Float], k: Int = 10, nProbe: Int = 2, refineFactor: Int = 4,
@@ -274,13 +270,8 @@ object ServeIndex {
     val q = query.toArray
     val qAnn: Array[Float] =
       if (kind == "opq") rotateQuery(spark, sc, query) else q
-    val cents = Parquet.read(spark, s"$sc/centroids")
-      .select(col("cid").cast("long"), col("c_embedding"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    def l2(a: Seq[Float]): Double = a.zip(qAnn).map { case (x, y) =>
-      (x.toDouble - y.toDouble) * (x.toDouble - y.toDouble) }.sum
-    val probed = cents.map { case (cid, c) => (l2(c), cid) }.sorted
-      .take(math.max(1, nProbe)).map(_._2)
+    val cents = IvfIndex.centroidRows(spark, sc)
+    val probed = IvfIndex.rankCells(cents, qAnn, math.max(1, nProbe))
     // sealed arm: probed cells × retained sealed days, tombstones dropped
     // BEFORE any top-k so a post-build delete never holds a candidate slot
     val sealedAll = VectorIndex.Lifecycle.dropTombstoned(spark, indexPath,
@@ -291,49 +282,23 @@ object ServeIndex {
       if (kind == "ivf")
         sealedAll.withColumn("d2", l2Sq(col("embedding"), lit(q)))
           .select(col("vec_id"), col("d2"), col("data_type"), col("data_json"))
-      else if (kind == "sq") {
-        // asymmetric SQ distance over the codes column only (query stays
-        // float, corpus decodes inside the scan — SqIndex.search's ADC),
-        // bounded leaders re-ranked exactly against the raw embeddings
-        val (mins, maxs) = readBounds(spark, sc)
-        val leaders = sealedAll
-          .withColumn("adc_d2",
-            l2SqHof(SqIndex.decodeCol(col("codes"), mins, maxs), lit(q)))
-          .orderBy(col("adc_d2"), col("vec_id"))
-          .limit(k * math.max(1, refineFactor))
-          .select(col("vec_id"))
-        sealedAll.join(broadcast(leaders), "vec_id", "left_semi")
-          .withColumn("d2", l2Sq(col("embedding"), lit(q)))
-          .select(col("vec_id"), col("d2"), col("data_type"), col("data_json"))
-      } else {
-        // ADC per probed cell (query-residual LUT, codes column only),
-        // bounded leaders re-ranked exactly — the IvfPqIndex.search plan
-        // over the payload-carrying layout
-        val books = PqIndex.readBooks(spark, sc)
-        val mSub = books.length
-        val ksub = books(0).length
-        val dsub = books(0)(0).length
-        val perCell = probed.toSeq.map { cid =>
-          val centroid = cents.find(_._1 == cid).get._2
-          val qRes = qAnn.toSeq.zip(centroid).map { case (x, c) => x - c }
-          val lutFlat: Seq[Double] = (0 until mSub * ksub).map { i =>
-            val s = i / ksub; val j = i % ksub
-            (0 until dsub).map { p =>
-              val d = qRes(s * dsub + p).toDouble - books(s)(j)(p).toDouble
-              d * d
-            }.sum
-          }
-          val lut = typedLit(lutFlat)
-          val approx = aggregate(
-            expr(s"zip_with(sequence(0, ${mSub - 1}), codes, (s, c) -> s * $ksub + c)"),
-            lit(0.0), (acc, i) => acc + element_at(lut, i + 1))
-          sealedAll.filter(col("cell") === cid)
-            .select(col("vec_id"), approx.as("adc_d2"))
-        }
-        val leaders = perCell.reduce(_ unionByName _)
-          .orderBy(col("adc_d2"), col("vec_id"))
-          .limit(k * math.max(1, refineFactor))
-          .select(col("vec_id"))
+      else {
+        // bounded leaders over the codes column only, re-ranked exactly
+        // against the raw embeddings
+        val leaders =
+          if (kind == "sq") {
+            // asymmetric SQ distance (query stays float, corpus decodes
+            // inside the scan — SqIndex.search's ADC)
+            val (mins, maxs) = readBounds(spark, sc)
+            sealedAll
+              .withColumn("adc_d2",
+                l2SqHof(SqIndex.decodeCol(col("codes"), mins, maxs), lit(q)))
+              .orderBy(col("adc_d2"), col("vec_id"))
+              .limit(k * math.max(1, refineFactor))
+              .select(col("vec_id"))
+          } else // residual-PQ ADC per probed cell (the IvfPqIndex.search stage)
+            IvfPqIndex.cellLeaders(sealedAll, cents, probed, qAnn,
+              PqIndex.readBooks(spark, sc), k * math.max(1, refineFactor))
         sealedAll.join(broadcast(leaders), "vec_id", "left_semi")
           .withColumn("d2", l2Sq(col("embedding"), lit(q)))
           .select(col("vec_id"), col("d2"), col("data_type"), col("data_json"))
@@ -364,8 +329,9 @@ object ServeIndex {
     * `IvfIndex.knnJoin` construction): queries multi-probe-assign against
     * the literal centroids map-only; the sealed arm is ONE equi-join on
     * the layout's cell column (each corpus row lives in exactly one cell,
-    * so no per-pair duplication); on the `ivfpq` kind the join reads the
-    * codes column only, scored through a per-(query, cell) residual LUT,
+    * so no per-pair duplication); on the `ivfpq` and `opq` kinds the join reads
+    * the codes column only, scored through a per-(query, cell) residual
+    * LUT — `IvfPqIndex.joinLeaders`, the stage `IvfPqIndex.knnJoin` runs —
     * with the bounded leaders exactly re-ranked. The hot arm stays the
     * brute cross join over the watermark day. Union feeds the same
     * bounded top-k aggregate + payload join as the flat
@@ -386,9 +352,7 @@ object ServeIndex {
       .getOrElse(return None)
     if (anchor.before(m)) return None
     val windowLo = date_sub(lit(anchor), VectorIndex.RetentionDays)
-    val cents = Parquet.read(spark, s"$sc/centroids")
-      .select(col("cid").cast("long"), col("c_embedding"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
+    val cents = IvfIndex.centroidRows(spark, sc)
     // opq: the per-query rotation moves INTO the plan (the projectCol
     // codegen'd expression over the query column); probe assignment and
     // the residual LUT run on q_ann, the exact re-rank on the raw q_emb
@@ -398,11 +362,9 @@ object ServeIndex {
         transform(Pca.projectCol(mdl, mdl.mean.length, input = col("q_emb")),
           x => x.cast("float"))
       } else col("q_emb")
-    val probeCells = graft.functions.VectorFunctions.orderedCellCids(
-      col("q_ann"), cents.map { case (c, v) => (c.toLong, v) }.toSeq,
-      math.max(1, nProbe))
     val q = queries.select(col("query_id"), col("q_emb"))
-    val qSide = q.withColumn("q_ann", qAnnCol).withColumn("cell", explode(probeCells))
+    val qSide = q.withColumn("q_ann", qAnnCol).withColumn("cell",
+      explode(IvfIndex.probeCells(col("q_ann"), cents, math.max(1, nProbe))))
     val sealedAll = VectorIndex.Lifecycle.dropTombstoned(spark, indexPath,
       Parquet.read(spark, s"$sc/vectors")
         .filter(col("ingest_date") > windowLo && col("ingest_date") < lit(m)))
@@ -413,58 +375,24 @@ object ServeIndex {
           .withColumn("d2", l2Sq(col("q_emb"), col("embedding")))
           .select(col("query_id"), col("vec_id"), col("d2"),
             col("data_type"), col("data_json"))
-      else if (kind == "sq") {
-        // the single-query sq path's ADC + exact re-rank, with the per-query
-        // leader cut as the bounded top-k aggregate (the ivfpq batch shape)
-        val (mins, maxs) = readBounds(spark, sc)
-        val leaders = qSide
-          .join(sealedAll.select(col("vec_id"), col("codes"), col("cell")), "cell")
-          .withColumn("adc_d2",
-            l2SqHof(SqIndex.decodeCol(col("codes"), mins, maxs), col("q_emb")))
-          .groupBy(col("query_id"))
-          .agg(TopKAggregator.topK(k * math.max(1, refineFactor),
-            -col("adc_d2"), col("vec_id")).as("top"))
-          .select(col("query_id"), explode(col("top.id")).as("vec_id"))
-        leaders
-          .join(sealedAll.select(col("vec_id"), col("embedding"),
-            col("data_type"), col("data_json")), "vec_id")
-          .join(q, "query_id")
-          .withColumn("d2", l2Sq(col("q_emb"), col("embedding")))
-          .select(col("query_id"), col("vec_id"), col("d2"),
-            col("data_type"), col("data_json"))
-      } else {
-        // per-(query, cell) residual LUT in-plan; candidates scored over
-        // the codes column only (the IvfPqIndex.knnJoin construction)
-        val books = PqIndex.readBooks(spark, sc)
-        val mSub = books.length
-        val ksub = books(0).length
-        val dsub = books(0)(0).length
-        val centMap = map(cents.flatMap { case (cid, v) =>
-          Seq(lit(cid), typedLit(v)) }.toSeq: _*)
-        val flatBooks = typedLit(books.flatten.flatten.map(_.toDouble).toSeq)
-        val lutExpr = transform(sequence(lit(0), lit(mSub * ksub - 1)), i => {
-          val s = (i / lit(ksub)).cast("int")
-          aggregate(sequence(lit(0), lit(dsub - 1)), lit(0.0), (acc, p) => {
-            val qv = element_at(col("q_res"), s * dsub + p + 1).cast("double")
-            val bv = element_at(flatBooks, i * dsub + p + 1)
-            acc + (qv - bv) * (qv - bv)
-          })
-        })
-        val qLut = qSide
-          .withColumn("q_res",
-            zip_with(col("q_ann"), element_at(centMap, col("cell")), (a, b) => a - b))
-          .withColumn("lut", lutExpr)
-          .select(col("query_id"), col("cell"), col("lut"))
-        val adc = aggregate(
-          expr(s"zip_with(sequence(0, ${mSub - 1}), codes, (s, c) -> s * $ksub + c)"),
-          lit(0.0), (acc, i) => acc + element_at(col("lut"), i + 1))
-        val leaders = qLut
-          .join(sealedAll.select(col("vec_id"), col("codes"), col("cell")), "cell")
-          .withColumn("adc_d2", adc)
-          .groupBy(col("query_id"))
-          .agg(TopKAggregator.topK(k * math.max(1, refineFactor),
-            -col("adc_d2"), col("vec_id")).as("top"))
-          .select(col("query_id"), explode(col("top.id")).as("vec_id"))
+      else {
+        // per-query leaders by ADC over the codes column only, the bounded
+        // top-k aggregate as the cut, re-ranked exactly
+        val leaders =
+          if (kind == "sq") {
+            val (mins, maxs) = readBounds(spark, sc)
+            qSide
+              .join(sealedAll.select(col("vec_id"), col("codes"), col("cell")), "cell")
+              .withColumn("adc_d2",
+                l2SqHof(SqIndex.decodeCol(col("codes"), mins, maxs), col("q_emb")))
+              .groupBy(col("query_id"))
+              .agg(TopKAggregator.topK(k * math.max(1, refineFactor),
+                -col("adc_d2"), col("vec_id")).as("top"))
+              .select(col("query_id"), explode(col("top.id")).as("vec_id"))
+          } else // per-(query, cell) residual LUT in-plan (the IvfPqIndex.knnJoin stage)
+            IvfPqIndex.joinLeaders(qSide, "query_id", col("q_ann"),
+              sealedAll.select(col("vec_id"), col("codes"), col("cell")), "vec_id",
+              cents, PqIndex.readBooks(spark, sc), k * math.max(1, refineFactor))
         leaders
           .join(sealedAll.select(col("vec_id"), col("embedding"),
             col("data_type"), col("data_json")), "vec_id")

@@ -89,16 +89,15 @@ object VectorIndex {
     * asOf]`, as a pruning predicate (reference reloads recent files,
     * `faiss_manager.py:91-99`). The upper bound makes `asOf` a real
     * time-travel anchor: re-anchoring into the past excludes later-ingested
-    * partitions too, not just expired ones. Tombstoned ids anti-join out
-    * AFTER the pruning filter, so the scan keeps its PartitionFilters.
+    * partitions too, not just expired ones; a null `asOf` keeps every day.
+    * Tombstoned ids anti-join out AFTER the pruning filter, so the scan
+    * keeps its PartitionFilters.
     */
   def loadRecent(spark: SparkSession, indexPath: String, asOf: java.sql.Date,
       maxDays: Int = RetentionDays): DataFrame = {
     CompactSwap.recoverAllHidden(spark, indexPath)
     Lifecycle.dropTombstoned(spark, indexPath,
-      Parquet.read(spark, indexPath)
-        .filter(col("ingest_date") > date_sub(lit(asOf), maxDays) &&
-          col("ingest_date") <= lit(asOf)))
+      IvfIndex.retained(Parquet.read(spark, indexPath), asOf, maxDays))
   }
 
   /** Newest ingest day present in the index layout. Directory-listing only

@@ -462,4 +462,51 @@ class IvfIndexSpec extends SparkSpec {
     }
     assert(burned.getMessage.contains("collide"))
   }
+
+  test("cell ranking: distance ties break by cid and a null centroid ranks first, as Spark orders") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivfrank").toString
+    // cids 1, 2, 5 and 9 all lie at squared distance exactly 1.0 from the
+    // query; cid 3 has no embedding
+    Seq[(Long, Option[Seq[Float]])](
+      5L -> Some(Seq(1f, 0f)), 3L -> None, 9L -> Some(Seq(-1f, 0f)),
+      7L -> Some(Seq(0.5f, 0f)), 2L -> Some(Seq(0f, 1f)), 4L -> Some(Seq(2f, 0f)),
+      1L -> Some(Seq(0f, -1f)))
+      .toDF("cid", "c_embedding").coalesce(1).write.parquet(s"$dir/centroids")
+    val q = Array(0f, 0f)
+    val held = IvfIndex.centroidRows(spark, dir)
+    val collected = IvfIndex.centroidRows(spark.read.parquet(s"$dir/centroids"))
+    for (n <- 1 to 7) {
+      val sparkOrder = spark.read.parquet(s"$dir/centroids")
+        .orderBy(graft.functions.VectorFunctions.l2Sq(col("c_embedding"), lit(q)), col("cid"))
+        .limit(n).select("cid").collect().map(_.getLong(0)).toSeq
+      assert(IvfIndex.rankCells(held, q, n) == sparkOrder, s"held rows, nProbe $n")
+      assert(IvfIndex.rankCells(collected, q, n) == sparkOrder, s"collected rows, nProbe $n")
+    }
+    assert(IvfIndex.rankCells(held, q, 7) == Seq(3L, 7L, 1L, 2L, 5L, 9L, 4L))
+  }
+
+  test("src/main/scala/graft/vector keeps each IVF probe kernel step in its one home") {
+    import scala.jdk.CollectionConverters._
+    // the driver PQ lookup table, the ADC fold, the centroid row collect,
+    // the retention window and the residual's centroid map
+    val homes = Seq(
+      "lutFlat" -> "PqIndex.scala",
+      "zip_with(sequence(0," -> "PqIndex.scala",
+      "getSeq[Float](1)))" -> "IvfIndex.scala",
+      "date_sub(lit(asOf)" -> "IvfIndex.scala",
+      "val centMap" -> "IvfIndex.scala")
+    val files = {
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get("src/main/scala/graft/vector"))
+      try s.iterator().asScala.toList finally s.close()
+    }.filter(_.toString.endsWith(".scala"))
+    assert(homes.forall { case (_, home) => files.exists(_.getFileName.toString == home) },
+      s"a home file is missing among ${files.size} sources")
+    val found = for {
+      f <- files
+      (line, i) <- java.nio.file.Files.readString(f).linesIterator.zipWithIndex
+      (token, home) <- homes if f.getFileName.toString != home && line.contains(token)
+    } yield s"$f:${i + 1}: $token (home: $home)"
+    assert(found.isEmpty, s"${found.size} copies outside their home:\n${found.mkString("\n")}")
+  }
 }

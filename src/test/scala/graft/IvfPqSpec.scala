@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.vector.IvfPqIndex
+import graft.vector.{IvfIndex, IvfPqIndex, PqIndex}
 
 class IvfPqSpec extends SparkSpec {
 
@@ -27,7 +27,9 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("ADC candidate scan is partition-pruned and never reads the float column") {
-    val plan = IvfPqIndex.adcScan(spark, dir, qv, cid = 0L)
+    val plan = IvfPqIndex.cellLeaders(graft.sources.Parquet.read(spark, s"$dir/vectors"),
+      IvfIndex.centroidRows(spark, dir), probed = Seq(0L), qv.toArray,
+      PqIndex.readBooks(spark, dir), n = 40)
       .queryExecution.executedPlan.toString
     // partition pruning on the probed cell directory
     assert(plan.contains("PartitionFilters") && plan.contains("cell"), plan.take(800))
