@@ -103,16 +103,18 @@ private[graft] object Hash64Index {
   /** Logical point deletes (takedowns) on the shared
     * [[graft.sources.IndexLifecycle]] contract: resident matching
     * anti-joins the log immediately, while the id gate still sees the
-    * tombstoned row. `hashes` (the id gate) compacts LAST; it rewrites
-    * through the size-adaptive writer, while probes rewrite FLAT at every
-    * size (a key-bucketed probes layout can never point-prune — see the
-    * build note), so compaction also folds an interim bucketed probes
-    * table back to flat.
+    * tombstoned row. `hashes` (the id gate) compacts LAST, by the keyed
+    * sidecar rule; probes stay FLAT at every size (a key-bucketed probes
+    * layout can never point-prune — see the build note): their dirty
+    * files rewrite in place, and an interim bucketed probes table folds
+    * back to flat whole.
     */
   private[graft] val Lifecycle = IndexLifecycle("doc_id", IndexLifecycle.Inside, Seq(
-    IndexLifecycle.Table("probes", (_, kept, fresh) =>
-      kept.drop(graft.sources.KeyedSidecar.BucketCol)
-        .write.mode(SaveMode.ErrorIfExists).parquet(fresh)),
+    IndexLifecycle.Table("probes", (spark, table) =>
+      if (!graft.sources.KeyedSidecar.isBucketed(spark, table))
+        IndexLifecycle.DirtyFiles(smallPages = false)
+      else IndexLifecycle.Relayout((kept, fresh) => kept.drop(graft.sources.KeyedSidecar.BucketCol)
+        .write.mode(SaveMode.ErrorIfExists).parquet(fresh))),
     IndexLifecycle.Table("hashes", IndexLifecycle.keyed("doc_id"))))
 
   def delete(spark: SparkSession, path: String, ids: DataFrame): Unit =

@@ -1,48 +1,170 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 
-/** The crash-safe table swap every persisted index compact uses, plus the
-  * open-time recovery that closes its one residual window.
+/** The crash-safe commits every persisted index compact uses, plus the
+  * open-time recovery that closes their windows.
   *
-  * The swap (`rewrite`): the compacted table writes into a FRESH sibling
-  * directory (`<table>._compact`), the live directory is staged aside to
+  * The file commit (`stageFiles`, then its `commit`), the lifecycle's
+  * default: only the files that hold a deleted key are replaced. Their
+  * replacements are written into a hidden staging sibling
+  * (`.<table>._stage`), then the table commits through a hidden
+  * roll-forward journal (`.<table>._journal`, written as `.._journal.tmp`
+  * and renamed, so it is never read torn) listing each replaced file with
+  * its replacement: the replacements rename into the replaced files'
+  * directories, the replaced files drop, then the staging directory and
+  * the journal drop.
+  * Before the journal exists nothing visible has changed; once it exists,
+  * `recover` finishes the commit. Untouched files keep their path, length
+  * and mtime, so the readers that hold files on the driver
+  * ([[ResidentFiles]]) keep holding them.
+  *
+  * The table swap (`rewrite`), for a rewrite of a whole directory (a
+  * compaction that changes the layout, `IvfIndex.retrain`,
+  * `ParagraphIndex.delete`, `VectorIndex`'s dirty days): the
+  * compacted table writes into a FRESH sibling directory
+  * (`<table>._compact`), the live directory is staged aside to
   * `<table>._old`, the fresh one renames into place, and the staged copy
   * drops. The live directory is never a write target, so a crash during
   * the (long) rewrite job loses nothing. What remains is the two-rename
   * metadata window: a writer dying between "live → ._old" and
-  * "._compact → live" leaves NO live directory — readers fail, and before
-  * this helper existed the only copies were a `._old` the next compact's
-  * dead-writer sweep would have deleted.
+  * "._compact → live" leaves NO live directory.
   *
-  * The recovery (`recover`): on open, live missing + `._old` present →
-  * rename `._old` back. The crash happened before the fresh table landed,
-  * so `._old` IS the authoritative pre-compact state, and the tombstone
-  * log — dropped only after every table swaps — is still present, keeping
-  * the pending deletes masked on read (conservative failure: the compact
-  * is undone, never half-applied). The OTHER crash point — live present
-  * with `._old` or `._compact` leftovers (died before the cleanup
-  * deletes) — needs no recovery; the next compact sweeps them. Idempotent
-  * and cheap: one exists() per table, metadata-only.
+  * The recovery (`recover`): a journal rolls forward; live missing +
+  * `._old` present → rename `._old` back. The crash happened before the
+  * fresh table landed, so `._old` IS the authoritative pre-compact state,
+  * and the tombstone log — dropped only after every table commits — is
+  * still present, keeping the pending deletes masked on read
+  * (conservative failure: the compact is undone, never half-applied).
+  * Leftover staging, `._old` or `._compact` siblings next to a live table
+  * need no recovery; the next compact sweeps them. Idempotent and cheap:
+  * two exists() per table, metadata-only.
   *
-  * Which tables swap, in what order, and when the tombstone log drops is
+  * Which tables commit, in what order, and when the tombstone log drops is
   * [[IndexLifecycle]]'s job.
   */
 object CompactSwap {
 
-  /** Restore any table whose live directory vanished in a compact-swap
-    * crash. Call at the top of every public entry point that reads or
-    * writes the index ("on open").
+  /** Finish any table's journaled file commit, and restore any table whose
+    * live directory vanished in a swap crash. Call at the top of every
+    * public entry point that reads or writes the index ("on open").
     */
   def recover(spark: SparkSession, base: String, tables: Seq[String]): Unit = {
     val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
     tables.foreach { t =>
+      val journal = journalOf(base, t)
+      if (fs.exists(journal)) rollForward(fs, base, t, readJournal(fs, journal))
       val live = new Path(s"$base/$t")
       val old = new Path(s"$base/$t._old")
       if (!fs.exists(live) && fs.exists(old))
         require(fs.rename(old, live), s"swap recovery: cannot restore $t at $base")
     }
+  }
+
+  /** Stage replacements for `dirty` data files of `base/table`. `write`
+    * receives the staging path and must write there, in one job, output
+    * part `i` (the `part-0000i-` file Spark names after its task) with the
+    * kept rows of `dirty(i)`, as ONE file: a part split across files (a
+    * write under a `maxRecordsPerFile` cap) fails the staging loudly. A
+    * part with no kept rows replaces its file with nothing. Spark writes
+    * part 0 even when it holds no rows; that empty file is dropped, except
+    * when it is the only staged file, where it keeps the table's schema on
+    * disk in case every dirty file was its last. Nothing visible changes
+    * until the returned commit runs: each replacement lands in its
+    * replaced file's directory under the part's own (unique) name, through
+    * the journal.
+    */
+  def stageFiles(spark: SparkSession, base: String, table: String, dirty: Seq[Path])(
+      write: String => Unit): Staged = {
+    val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stage = stageOf(base, table)
+    val tmp = journalOf(base, table).suffix(".tmp")
+    Seq(stage, tmp).foreach(p => if (fs.exists(p)) fs.delete(p, true)) // dead-writer leftovers
+    write(stage.toString)
+    val parts = fs.listStatus(stage).toSeq
+      .flatMap(st => PartFile.findFirstMatchIn(st.getPath.getName).map(_.group(1).toInt -> st))
+      .groupBy(_._1).map { case (i, sts) =>
+        require(sts.size == 1, s"compact: part $i of $table at $base staged as ${sts.size} files")
+        i -> sts.head._2
+      }
+    require(parts.keys.forall(_ < dirty.size), s"compact: stray staged part for $table at $base")
+    val kept = parts.filter { case (i, st) => i != 0 || parts.size == 1 || rowCount(fs, st) > 0 }
+    val root = fs.makeQualified(new Path(base)).toUri.getPath.stripSuffix("/") + "/"
+    new Staged(fs, base, table, dirty.zipWithIndex.map { case (old, i) =>
+      val path = old.toUri.getPath
+      require(path.startsWith(root), s"compact: $old is not under $base")
+      Entry(path.stripPrefix(root), kept.get(i).map(_.getPath.getName))
+    })
+  }
+
+  private def rowCount(fs: FileSystem, file: FileStatus): Long = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, fs.getConf))
+    try reader.getRecordCount finally reader.close()
+  }
+
+  /** A table's staged replacements. `commit` writes the journal (as
+    * `.._journal.tmp`, renamed, so it is never read torn) and rolls it
+    * forward. The journal names files relative to the index base, so a
+    * copied or moved index still recovers.
+    */
+  final class Staged private[CompactSwap] (fs: FileSystem, base: String, table: String,
+      entries: Seq[Entry]) {
+    def commit(): Unit = {
+      val journal = journalOf(base, table)
+      val tmp = journal.suffix(".tmp")
+      val out = fs.create(tmp, true)
+      try out.write(entries.map(e => (e.old +: e.fresh.toSeq).mkString("\t"))
+        .mkString("", "\n", "\n").getBytes(UTF_8)) finally out.close()
+      require(fs.rename(tmp, journal), s"compact: cannot commit the journal of $table at $base")
+      rollForward(fs, base, table, entries)
+    }
+  }
+
+  /** One replaced file, relative to the index base, and the name of its
+    * staged replacement, None when no row of it is kept.
+    */
+  private[CompactSwap] final case class Entry(old: String, fresh: Option[String])
+
+  private val PartFile = """^part-(\d+)-.*\.parquet$""".r
+
+  private def stageOf(base: String, table: String) = new Path(s"$base/.$table._stage")
+  private def journalOf(base: String, table: String) = new Path(s"$base/.$table._journal")
+
+  private def readJournal(fs: FileSystem, journal: Path): Seq[Entry] = {
+    val in = fs.open(journal)
+    val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
+    text.split("\n").toSeq.filter(_.nonEmpty).map(_.split("\t") match {
+      case Array(old) => Entry(old, None)
+      case Array(old, fresh) => Entry(old, Some(fresh))
+      case other => throw new IllegalStateException(
+        s"compact journal $journal: bad entry ${other.mkString(" ")}")
+    })
+  }
+
+  /** The journaled commit, from any point it may have stopped at: make
+    * every replacement visible, drop every replaced file, then the staging
+    * directory, then the journal. A replacement found neither staged nor
+    * in place fails loudly before any replaced file drops.
+    */
+  private def rollForward(fs: FileSystem, base: String, table: String,
+      entries: Seq[Entry]): Unit = {
+    val stage = stageOf(base, table)
+    val olds = entries.map(e => new Path(s"$base/${e.old}"))
+    entries.zip(olds).foreach { case (e, old) => e.fresh.foreach { name =>
+      val (staged, fin) = (new Path(stage, name), new Path(old.getParent, name))
+      if (fs.exists(staged))
+        require(fs.rename(staged, fin), s"compact: cannot place $fin at $base")
+      else require(fs.exists(fin), s"compact: replacement $fin of $table is lost")
+    }}
+    olds.foreach(fs.delete(_, false))
+    fs.delete(stage, true)
+    fs.delete(journalOf(base, table), false)
+    // the commit changed the table without a write() on its path
+    KeyedSidecar.invalidateSize(s"$base/$table")
   }
 
   /** The swap for tables living INSIDE a partition-discovered layout (a

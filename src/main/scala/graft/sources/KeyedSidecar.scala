@@ -124,7 +124,8 @@ object KeyedSidecar {
     * RESIDENT layout (mixing flat files and partition dirs inside one
     * table breaks partition discovery) — bucketed residents extend
     * bucketed, flat residents extend flat. A flat table that outgrows the
-    * threshold through appends upgrades at the next compaction rewrite.
+    * threshold through appends upgrades at the next compaction
+    * (`IndexLifecycle.keyed`).
     *
     * Bucketed shape: bucket-partitioned, key-sorted within each file,
     * small pages. One shuffle of the written rows — the standard price of
@@ -198,14 +199,15 @@ object KeyedSidecar {
     * the appended frame's size estimate (in-memory stats ≥ on-disk bytes —
     * errs toward pruning early, the safe direction: pruning is
     * restriction-only and the threshold only gates its economics),
-    * overwrites and compaction swaps invalidate (next lookup re-walks
+    * overwrites and compaction commits invalidate (next lookup re-walks
     * once). Steady-state ingest pays ONE walk per table per session.
     */
   private val sizeCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   /** Drop the cached size for a path — compaction swaps rename fresh
-    * directories into place without going through [[write]] on the live
-    * path, so [[CompactSwap]] calls this on every swap.
+    * directories into place, and file commits rename fresh files in,
+    * without going through [[write]] on the live path, so [[CompactSwap]]
+    * calls this on every commit.
     */
   private[sources] def invalidateSize(path: String): Unit = {
     sizeCache.remove(path); ()

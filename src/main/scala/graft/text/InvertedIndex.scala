@@ -113,13 +113,11 @@ object InvertedIndex {
     * contract: removing a doc from its posting lists in place would
     * rewrite every bucket its terms hash into. The append id-gate keys on
     * doclens, so doclens compacts LAST — a mid-compaction crash keeps
-    * deleted ids burned. Compaction is per-bucket embarrassingly parallel
-    * and would run bucket-at-a-time against a 100-TB layout; the
-    * whole-table form keeps this surface small.
+    * deleted ids burned. Compaction rewrites only the posting files that
+    * hold a deleted doc, each in its own bucket directory.
     */
   private[graft] val Lifecycle = IndexLifecycle("doc_id", IndexLifecycle.Inside, Seq(
-    IndexLifecycle.Table("postings", (_, kept, fresh) =>
-      writePostings(kept, fresh, SaveMode.ErrorIfExists)),
+    IndexLifecycle.Table("postings"),
     IndexLifecycle.Table("doclens", IndexLifecycle.keyed("doc_id"))))
 
   def delete(spark: SparkSession, path: String, ids: DataFrame): Unit =

@@ -243,13 +243,14 @@ object LshIndex {
     * contract. Table order: the gate tables go LAST — `hashes`, then the
     * `ids` authority — so a crash mid-compaction keeps the deleted ids
     * burned in the disjointness gate. Legacy layouts predate `winnow` and
-    * `ids`. Each keyed table rewrites through the size-adaptive writer;
-    * bands keep their own band_id-partitioned shape.
+    * `ids`. Compaction rewrites only the files holding a deleted doc: the
+    * band_key-sorted bands files keep their order and small pages, and a
+    * flat keyed table that outgrew the prune bound upgrades to bucketed.
     */
   private[graft] val Lifecycle = IndexLifecycle("doc_id", IndexLifecycle.Inside, Seq(
     Table("shingles", keyed("doc_id")),
     Table("sizes", keyed("doc_id")),
-    Table("bands", (_, kept, fresh) => writeBands(kept, fresh, SaveMode.ErrorIfExists)),
+    Table("bands", (_, _) => IndexLifecycle.DirtyFiles(smallPages = true)),
     Table("winnow", keyed("fp"), optional = true),
     Table("hashes", keyed("text_hash")),
     Table("ids", keyed("doc_id"), optional = true)))

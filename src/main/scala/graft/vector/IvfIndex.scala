@@ -238,7 +238,7 @@ object IvfIndex {
     // Callers that already run a radii aggregation pass their counts in
     // (cellRadiiCounts — the counts then cost nothing); IvfPqIndex.build
     // derives them from its checkpointed residuals. The remaining fallback
-    // users (compact here; IvfPqIndex.appendBatch / ServeIndex.build via
+    // users (IvfPqIndex.appendBatch / ServeIndex.build via
     // checkpointed inputs) pay one column-pruned agg over MATERIALIZED
     // rows — never a re-derivation of an assignment/encode projection.
     val counts = knownCounts.getOrElse(
@@ -426,8 +426,9 @@ object IvfIndex {
     * serving path (`search`/`knnJoin`/`rangeSearch`, and the dedupIngest
     * candidate side) anti-joins the log, while the dedupIngest id gate
     * still sees a tombstoned id until `compact`. Shared by [[IvfPqIndex]],
-    * whose layout is identical: every column (incl. `codes`) and the
-    * `cell × ingest_date` partitioning are preserved row-for-row.
+    * whose layout is identical: compaction rewrites only the cell files
+    * holding a deleted id, each in its own directory, so every column
+    * (incl. `codes`) and the `cell × ingest_date` partitioning survive.
     *
     * Table order: `vectors` first, the `ids` gate sidecar LAST (a crash
     * between the two leaves deleted ids burned longer); legacy/PQ layouts
@@ -438,9 +439,7 @@ object IvfIndex {
     * triangle-inequality bound (the appendBatch crash-ordering contract).
     */
   private[graft] val Lifecycle = IndexLifecycle("vec_id", IndexLifecycle.Inside, Seq(
-    IndexLifecycle.Table("vectors", (path, kept, fresh) =>
-      writeCells(kept, fresh, SaveMode.ErrorIfExists,
-        dateMajor = layoutDateMajor(kept.sparkSession, path))),
+    IndexLifecycle.Table("vectors"),
     IndexLifecycle.Table("ids", IndexLifecycle.keyed("vec_id"), optional = true)))
 
   def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {

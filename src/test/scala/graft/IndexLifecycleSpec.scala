@@ -3,7 +3,7 @@ package graft
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.{IndexLifecycle, Parquet}
 import graft.sources.IndexLifecycle.Table
@@ -21,7 +21,7 @@ class IndexLifecycleSpec extends SparkSpec {
     java.nio.file.Files.createTempDirectory(s"graft-lc-$tag").toString
 
   /** Three tables of ids 0..9 — `a`, `b` and the id gate `gate` — and a
-    * lifecycle whose writers log (table, log present) as they run and
+    * lifecycle whose table rules log (table, log present) as they run and
     * throw for any table named in `failOn`.
     */
   private class Fixture(optionalB: Boolean = false) {
@@ -31,14 +31,14 @@ class IndexLifecycleSpec extends SparkSpec {
     names.foreach(t => (0L until 10L).toDF("id").write.parquet(s"$dir/$t"))
     val calls = ArrayBuffer.empty[(String, Boolean)]
     var failOn = Set.empty[String]
-    private def writer(t: String): IndexLifecycle.Writer = (path, kept, fresh) => {
-      calls += t -> fs.exists(new Path(lc.log(path)))
+    private def rule(t: String): IndexLifecycle.Rule = (_, _) => {
+      calls += t -> logExists
       if (failOn(t)) throw new IllegalStateException(s"writer $t dies")
-      kept.write.mode(SaveMode.ErrorIfExists).parquet(fresh)
+      IndexLifecycle.DirtyFiles(smallPages = false)
     }
     val lc: IndexLifecycle = IndexLifecycle("id", IndexLifecycle.Inside, Seq(
-      Table("a", writer("a")), Table("b", writer("b"), optional = optionalB),
-      Table("gate", writer("gate"))))
+      Table("a", rule("a")), Table("b", rule("b"), optional = optionalB),
+      Table("gate", rule("gate"))))
     def ids(t: String): Set[Long] =
       Parquet.read(spark, s"$dir/$t").collect().map(_.getLong(0)).toSet
     def served(t: String): Set[Long] =
@@ -60,9 +60,8 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(f.calls.toSeq == Seq("a" -> true, "b" -> true, "gate" -> true))
     assert(!f.logExists && f.lc.tombstones(spark, f.dir).isEmpty)
     f.names.foreach(t => assert(f.ids(t) == all -- Set(3L, 7L), s"$t folded"))
-    f.names.foreach { t =>
-      assert(!fs.exists(new Path(s"${f.dir}/$t._compact")) && !fs.exists(new Path(s"${f.dir}/$t._old")))
-    }
+    assert(fs.listStatus(new Path(f.dir)).map(_.getPath.getName).sorted.toSeq == f.names,
+      "no staging, journal or swap sibling is left")
   }
 
   test("a gate writer that throws: earlier tables swapped, log kept, ids masked and burned; next compact completes") {
