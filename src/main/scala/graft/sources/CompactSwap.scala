@@ -9,23 +9,27 @@ import org.apache.spark.sql.SparkSession
 /** The crash-safe commits every persisted index compact uses, plus the
   * open-time recovery that closes their windows.
   *
-  * The file commit (`stageFiles`, then its `commit`), the lifecycle's
-  * default: only the files that hold a deleted key are replaced. Their
-  * replacements are written into a hidden staging sibling
+  * The file commit (`stageFiles`, then its `commit`), which every
+  * tombstoned index's `compact` runs through [[IndexLifecycle.compact]]:
+  * only the files that hold a deleted key are replaced. Their
+  * replacements are written into a hidden staging directory
   * (`.<table>._stage`), then the table commits through a hidden
   * roll-forward journal (`.<table>._journal`, written as `.._journal.tmp`
   * and renamed, so it is never read torn) listing each replaced file with
   * its replacement: the replacements rename into the replaced files'
   * directories, the replaced files drop, then the staging directory and
-  * the journal drop.
+  * the journal drop. A table named by the empty name is the index root
+  * itself (the flat `VectorIndex`'s `ingest_date=` layout): its staging
+  * and journal are `<root>/._stage` and `<root>/._journal`, hidden names
+  * that partition discovery skips.
   * Before the journal exists nothing visible has changed; once it exists,
   * `recover` finishes the commit. Untouched files keep their path, length
   * and mtime, so the readers that hold files on the driver
   * ([[ResidentFiles]]) keep holding them.
   *
-  * The table swap (`rewrite`), for a rewrite of a whole directory (a
-  * compaction that changes the layout, `IvfIndex.retrain`,
-  * `ParagraphIndex.delete`, `VectorIndex`'s dirty days): the
+  * The table swap (`rewrite`), for a rewrite of a whole directory: a
+  * compaction that changes the layout (`IndexLifecycle.Relayout`),
+  * `IvfIndex.retrain` and `ParagraphIndex.delete`. The
   * compacted table writes into a FRESH sibling directory
   * (`<table>._compact`), the live directory is staged aside to
   * `<table>._old`, the fresh one renames into place, and the staged copy
@@ -58,12 +62,18 @@ object CompactSwap {
     tables.foreach { t =>
       val journal = journalOf(base, t)
       if (fs.exists(journal)) rollForward(fs, base, t, readJournal(fs, journal))
-      val live = new Path(s"$base/$t")
+      val live = new Path(dirOf(base, t))
       val old = new Path(s"$base/$t._old")
       if (!fs.exists(live) && fs.exists(old))
         require(fs.rename(old, live), s"swap recovery: cannot restore $t at $base")
     }
   }
+
+  /** The directory of `table` under `base`: the empty name is `base`
+    * itself, an index whose root is its one table.
+    */
+  private[sources] def dirOf(base: String, table: String): String =
+    if (table.isEmpty) base else s"$base/$table"
 
   /** Stage replacements for `dirty` data files of `base/table`. `write`
     * receives the staging path and must write there, in one job, output
@@ -88,10 +98,12 @@ object CompactSwap {
     val parts = fs.listStatus(stage).toSeq
       .flatMap(st => PartFile.findFirstMatchIn(st.getPath.getName).map(_.group(1).toInt -> st))
       .groupBy(_._1).map { case (i, sts) =>
-        require(sts.size == 1, s"compact: part $i of $table at $base staged as ${sts.size} files")
+        require(sts.size == 1,
+          s"compact: part $i of ${dirOf(base, table)} staged as ${sts.size} files")
         i -> sts.head._2
       }
-    require(parts.keys.forall(_ < dirty.size), s"compact: stray staged part for $table at $base")
+    require(parts.keys.forall(_ < dirty.size),
+      s"compact: stray staged part for ${dirOf(base, table)}")
     val kept = parts.filter { case (i, st) => i != 0 || parts.size == 1 || rowCount(fs, st) > 0 }
     val root = fs.makeQualified(new Path(base)).toUri.getPath.stripSuffix("/") + "/"
     new Staged(fs, base, table, dirty.zipWithIndex.map { case (old, i) =>
@@ -119,7 +131,8 @@ object CompactSwap {
       val out = fs.create(tmp, true)
       try out.write(entries.map(e => (e.old +: e.fresh.toSeq).mkString("\t"))
         .mkString("", "\n", "\n").getBytes(UTF_8)) finally out.close()
-      require(fs.rename(tmp, journal), s"compact: cannot commit the journal of $table at $base")
+      require(fs.rename(tmp, journal),
+        s"compact: cannot commit the journal of ${dirOf(base, table)}")
       rollForward(fs, base, table, entries)
     }
   }
@@ -158,65 +171,24 @@ object CompactSwap {
       val (staged, fin) = (new Path(stage, name), new Path(old.getParent, name))
       if (fs.exists(staged))
         require(fs.rename(staged, fin), s"compact: cannot place $fin at $base")
-      else require(fs.exists(fin), s"compact: replacement $fin of $table is lost")
+      else require(fs.exists(fin), s"compact: replacement $fin of ${dirOf(base, table)} is lost")
     }}
     olds.foreach(fs.delete(_, false))
     fs.delete(stage, true)
     fs.delete(journalOf(base, table), false)
     // the commit changed the table without a write() on its path
-    KeyedSidecar.invalidateSize(s"$base/$table")
-  }
-
-  /** The swap for tables living INSIDE a partition-discovered layout (a
-    * date-partitioned store's `ingest_date=…` directories): staging
-    * siblings are DOT-PREFIXED (`.{table}._compact` / `.{table}._old`)
-    * because Spark's file index skips hidden names, while an un-hidden
-    * `ingest_date=X._old` would itself parse as a partition directory and
-    * corrupt discovery for every concurrent reader.
-    */
-  def rewriteHidden(spark: SparkSession, base: String, table: String)(write: String => Unit): Unit =
-    swap(spark, base, table, s".$table")(write)
-
-  /** `recover` for `rewriteHidden` layouts, where table names are dynamic:
-    * restore EVERY `.{table}._old` sibling whose live directory vanished.
-    * Returns the listing of `base` after recovery (empty when `base` is
-    * missing): one directory listing, a second only when something was
-    * restored.
-    */
-  def recoverAllHidden(spark: SparkSession, base: String): Seq[FileStatus] = {
-    val basePath = new Path(base)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(basePath)) return Seq.empty
-    val listed = fs.listStatus(basePath).toSeq
-    val restored = listed
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(".") &&
-        st.getPath.getName.endsWith("._old"))
-      .filter { st =>
-        val live = new Path(basePath,
-          st.getPath.getName.stripPrefix(".").stripSuffix("._old"))
-        !fs.exists(live) && {
-          require(fs.rename(st.getPath, live),
-            s"swap recovery: cannot restore ${live.getName} at $base")
-          true
-        }
-      }
-    if (restored.isEmpty) listed else fs.listStatus(basePath).toSeq
+    KeyedSidecar.invalidateSize(dirOf(base, table))
   }
 
   /** The swap itself: `write` receives the fresh sibling's path and must
     * fully materialize the compacted table there (ErrorIfExists mode —
     * leftovers are swept first).
     */
-  def rewrite(spark: SparkSession, base: String, table: String)(write: String => Unit): Unit =
-    swap(spark, base, table, table)(write)
-
-  /** The one swap body; `staged` names the `._compact`/`._old` siblings. */
-  private def swap(spark: SparkSession, base: String, table: String, staged: String)(
-      write: String => Unit): Unit = {
+  def rewrite(spark: SparkSession, base: String, table: String)(write: String => Unit): Unit = {
     val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fresh = new Path(s"$base/$staged._compact")
+    val fresh = new Path(s"$base/$table._compact")
     val live = new Path(s"$base/$table")
-    val old = new Path(s"$base/$staged._old")
+    val old = new Path(s"$base/$table._old")
     fs.delete(fresh, true); fs.delete(old, true) // dead-writer leftovers
     write(fresh.toString)
     require(fs.rename(live, old), s"compact: cannot stage $table aside at $base")

@@ -26,6 +26,8 @@ import org.apache.spark.sql.types.StructType
   * in its own directory, so sort order and partitioning survive and the
   * replacement depends on that file's rows alone. Only a table whose
   * layout must change rewrites whole, through [[CompactSwap.rewrite]].
+  * A table is a directory under the index root, or the root itself (see
+  * [[IndexLifecycle.Table]]).
   *
   * Burn order: the id-gate authority table is declared LAST. A crash
   * mid-sequence leaves the earlier tables compacted and the later ones
@@ -68,14 +70,6 @@ final case class IndexLifecycle(key: String, log: String => String,
   def dropTombstoned(spark: SparkSession, path: String, df: DataFrame): DataFrame =
     tombstones(spark, path).fold(df)(ts => df.join(broadcast(ts), Seq(key), "left_anti"))
 
-  /** Recover; if a log exists, hand it (read once) to `body`, then drop the
-    * log last. With no log nothing runs and no table is touched.
-    */
-  def fold(spark: SparkSession, path: String)(body: DataFrame => Unit): Unit = {
-    recover(spark, path)
-    tombstones(spark, path).foreach { ts => body(ts); dropLog(spark, path) }
-  }
-
   private def dropLog(spark: SparkSession, path: String): Unit = {
     val p = new Path(log(path))
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
@@ -88,7 +82,10 @@ final case class IndexLifecycle(key: String, log: String => String,
     * run in declared order; the dirty-file rewrites then stage at once
     * (staging changes nothing visible), and the commits run in declared
     * order, the first failure — a rule's, a staging's or a commit's —
-    * stopping the sequence with the earlier tables committed.
+    * stopping the sequence with the earlier tables committed. The dirty
+    * files of one table stage in one write, so they must agree on their
+    * columns: files that differ fail the staging, before the table's
+    * journal exists, and nothing of that table changes.
     */
   def compact(spark: SparkSession, path: String): Unit = {
     recover(spark, path)
@@ -98,7 +95,7 @@ final case class IndexLifecycle(key: String, log: String => String,
     val logFrame = Parquet.read(spark, log(path)).select(col(key))
     val ids = logFrame.collect().distinct.toSeq
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val present = tables.filter(t => !t.optional || fs.exists(new Path(s"$path/${t.name}")))
+    val present = tables.filter(t => !t.optional || fs.exists(new Path(t.dir(path))))
     // up to the parquet IN-pushdown cap the ids filter as literals; past
     // it a literal list only bloats every plan (parquet sees a min/max
     // range), so a broadcast join against the driver-held ids takes over
@@ -114,9 +111,9 @@ final case class IndexLifecycle(key: String, log: String => String,
       }
     def kept(df: DataFrame): DataFrame = select(df, keep = true)
     val dirty = if (ids.isEmpty) Map.empty[String, Seq[Path]]
-      else dirtyFiles(spark, path, present.map(_.name), select(_, keep = false))
+      else dirtyFiles(spark, path, present, select(_, keep = false))
     val ruled = {
-      val all = present.iterator.map(t => t -> Try(t.rule(spark, s"$path/${t.name}")))
+      val all = present.iterator.map(t => t -> Try(t.rule(spark, t.dir(path))))
       val (ok, failed) = all.span(_._2.isSuccess)
       ok.toList ++ failed.take(1).toList
     }
@@ -133,6 +130,13 @@ final case class IndexLifecycle(key: String, log: String => String,
         // replacement lands back in the file's own directory
         val reads = dirty(t).map(f => kept(Parquet.read(spark, f.toString)))
         val schema = reads.head.schema
+        // one write has one schema: files of one table that differ in
+        // columns (appends of different batches) fail before the journal
+        def columns(s: StructType) = s.fields.map(c => c.name -> c.dataType).toSet
+        require(reads.forall(r => columns(r.schema) == columns(schema)),
+          s"compact: the dirty files of ${CompactSwap.dirOf(path, t)} differ in columns: " +
+            dirty(t).zip(reads).map { case (f, r) => s"${f.getName} ${r.schema.simpleString}" }
+              .mkString(", "))
         val w = spark.createDataFrame(spark.sparkContext.union(reads.map(
           _.select(schema.fieldNames.map(col): _*).rdd.coalesce(1))), schema)
           .write.mode(SaveMode.ErrorIfExists).option("maxRecordsPerFile", 0L)
@@ -144,7 +148,7 @@ final case class IndexLifecycle(key: String, log: String => String,
       rule.get match {
         case Relayout(write) =>
           CompactSwap.rewrite(spark, path, t.name)(fresh =>
-            write(kept(Parquet.read(spark, s"$path/${t.name}")), fresh))
+            write(kept(Parquet.read(spark, t.dir(path))), fresh))
         case DirtyFiles(_) => staged.get(t.name).foreach(_.get.commit())
       }
     }
@@ -152,16 +156,16 @@ final case class IndexLifecycle(key: String, log: String => String,
   }
 
   /** Per table, the data files holding a logged key: one job over the
-    * key column of every table with `input_file_name` (the column-pruned
-    * scan `VectorIndex.compact` runs to find its dirty days), its matches
-    * collected once.
+    * key column of every table with `input_file_name`, its matches
+    * collected once. A root table's read discovers its partition
+    * directories; only the key and the file name are selected.
     */
-  private def dirtyFiles(spark: SparkSession, path: String, names: Seq[String],
+  private def dirtyFiles(spark: SparkSession, path: String, present: Seq[Table],
       holding: DataFrame => DataFrame): Map[String, Seq[Path]] =
-    if (names.isEmpty) Map.empty
-    else names.map { t =>
-      holding(Parquet.read(spark, s"$path/$t").select(col(key), input_file_name().as("f")))
-        .select(lit(t).as("t"), col("f"))
+    if (present.isEmpty) Map.empty
+    else present.map { t =>
+      holding(Parquet.read(spark, t.dir(path)).select(col(key), input_file_name().as("f")))
+        .select(lit(t.name).as("t"), col("f"))
     }.reduce(_ union _).collect()
       .map(r => r.getString(0) -> r.getString(1)).distinct
       .groupBy(_._1).map { case (t, fs) =>
@@ -191,9 +195,16 @@ object IndexLifecycle {
   /** Picks a table's [[Rewrite]] from (session, table path). */
   type Rule = (SparkSession, String) => Rewrite
 
-  /** One table of an index; `optional` tables may be missing on legacy layouts. */
+  /** One table of an index: the directory `name` under the index root, or
+    * the root itself for the empty name (a partition-discovered layout
+    * whose data files are the table: the flat `VectorIndex`, its
+    * `ingest_date=` directories). `optional` tables may be missing on
+    * legacy layouts.
+    */
   final case class Table(name: String,
-      rule: Rule = (_, _) => DirtyFiles(smallPages = false), optional: Boolean = false)
+      rule: Rule = (_, _) => DirtyFiles(smallPages = false), optional: Boolean = false) {
+    def dir(path: String): String = CompactSwap.dirOf(path, name)
+  }
 
   /** The log as a table of the index: `<path>/tombstones`. */
   val Inside: String => String = path => s"$path/tombstones"

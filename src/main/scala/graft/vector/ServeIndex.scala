@@ -306,7 +306,7 @@ object ServeIndex {
     // hot arm: the watermark day (and anything newer within the window)
     // straight from the flat source of truth — appends since the build
     // are here, brute-forced; a row without an embedding never ranks
-    graft.sources.CompactSwap.recoverAllHidden(spark, indexPath)
+    VectorIndex.Lifecycle.recover(spark, indexPath)
     val hot = VectorIndex.Lifecycle.dropTombstoned(spark, indexPath,
       Parquet.read(spark, indexPath)
         .filter(col("ingest_date") >= lit(m) && col("ingest_date") <= lit(anchor) &&
@@ -401,7 +401,7 @@ object ServeIndex {
           .select(col("query_id"), col("vec_id"), col("d2"),
             col("data_type"), col("data_json"))
       }
-    graft.sources.CompactSwap.recoverAllHidden(spark, indexPath)
+    VectorIndex.Lifecycle.recover(spark, indexPath)
     val hot = q.crossJoin(
         VectorIndex.Lifecycle.dropTombstoned(spark, indexPath,
           Parquet.read(spark, indexPath)

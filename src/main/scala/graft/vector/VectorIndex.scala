@@ -1,10 +1,11 @@
 package graft.vector
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
-import graft.sources.{CompactSwap, IndexLifecycle, Parquet}
+import graft.sources.{IndexLifecycle, Parquet}
 
 /** The vector-store subsystem: Spark-native replacement for the reference's
   * per-day FAISS index files (`faiss_manager.py`).
@@ -23,7 +24,11 @@ import graft.sources.{CompactSwap, IndexLifecycle, Parquet}
   *    scale);
   *  - index/metadata positional drift (FAISS's parallel-array hazard,
   *    `faiss_manager.py:278-285`) is impossible: vector and metadata live in
-  *    the same row.
+  *    the same row;
+  *  - point deletes and compaction are [[graft.sources.IndexLifecycle]]'s,
+  *    with the root as its one table: `compact` rewrites only the files
+  *    that hold a deleted id, through the same journaled commit as every
+  *    other tombstoned index, and every entry point recovers first.
   *
   * The search tool (`IndexPipeline.searchIndex`) does not scan on every
   * call: [[ResidentWindow]] holds the retained window's files on the driver,
@@ -41,49 +46,34 @@ object VectorIndex {
 
   /** Point deletes — the takedown/GDPR path the reference lacks entirely
     * (its only removal is whole-day retention, `faiss_manager.py:151-172`);
-    * the contract is [[graft.sources.IndexLifecycle]]'s. The log lives
-    * BESIDE the index root: anything inside the root would enter partition
-    * discovery. No declared tables: the layout is partition-discovered, so
-    * [[compact]] keeps its own dirty-day swap loop.
+    * the contract is [[graft.sources.IndexLifecycle]]'s. The one table is
+    * the index root: its data files are the `ingest_date=` directories'.
+    * The log lives BESIDE the root, since anything non-hidden inside it
+    * would enter partition discovery; the compaction's staging and journal
+    * are hidden names inside it (`._stage`, `._journal`), which discovery,
+    * [[graft.sources.Parquet]] and the resident window's listings skip.
     */
   private[graft] val Lifecycle =
-    IndexLifecycle("vec_id", IndexLifecycle.Beside, Seq.empty)
+    IndexLifecycle("vec_id", IndexLifecycle.Beside, Seq(IndexLifecycle.Table("")))
 
   /** Deleting a vec_id removes EVERY copy (a record re-ingested on several
     * days dies everywhere — the semantics a takedown wants).
     */
-  def delete(spark: SparkSession, indexPath: String, ids: DataFrame): Unit = {
-    CompactSwap.recoverAllHidden(spark, indexPath)
+  def delete(spark: SparkSession, indexPath: String, ids: DataFrame): Unit =
     Lifecycle.delete(spark, indexPath, ids)
-  }
 
-  /** Fold the tombstone log into the layout — rewriting ONLY the dirty
-    * ingest-day directories (found by one column-pruned scan of
-    * (vec_id, ingest_date)), each through the hidden-sibling crash-safe
-    * swap; the log drops last. At 100 TB a handful of days rewrite, the
-    * rest of the layout is untouched.
+  /** Fold the tombstone log into the layout, as every tombstoned index
+    * does ([[graft.sources.IndexLifecycle.compact]]): one column-pruned
+    * `(vec_id, input_file_name)` job finds the data files holding a deleted
+    * id, and each rewrites alone, back into its own day directory, through
+    * the hidden roll-forward journal; the log drops last. A file read
+    * alone carries no `ingest_date` column; the directory it lands in
+    * gives it back on the next read. At 100 TB a handful of files rewrite;
+    * every other file, in a dirty day or not, keeps its identity, so the
+    * resident window keeps holding it.
     */
-  def compact(spark: SparkSession, indexPath: String): Unit = {
-    CompactSwap.recoverAllHidden(spark, indexPath)
-    Lifecycle.fold(spark, indexPath) { log =>
-      val ts = log.localCheckpoint(true)
-      val dirtyDays = Parquet.read(spark, indexPath)
-        .select(col("vec_id"), col("ingest_date"))
-        .join(broadcast(ts), "vec_id")
-        .select(date_format(col("ingest_date"), "yyyy-MM-dd")).distinct()
-        .collect().map(_.getString(0))
-      dirtyDays.foreach { day =>
-        CompactSwap.rewriteHidden(spark, indexPath, s"ingest_date=$day") { fresh =>
-          // reading the day directory directly drops the (directory-encoded)
-          // partition column; the rewrite lands under the same dir name, so
-          // discovery re-derives it
-          Parquet.read(spark, s"$indexPath/ingest_date=$day")
-            .join(broadcast(ts), Seq("vec_id"), "left_anti")
-            .write.mode(SaveMode.ErrorIfExists).parquet(fresh)
-        }
-      }
-    }
-  }
+  def compact(spark: SparkSession, indexPath: String): Unit =
+    Lifecycle.compact(spark, indexPath)
 
   /** S11 load-side: only the `maxDays` daily partitions in `(asOf−maxDays,
     * asOf]`, as a pruning predicate (reference reloads recent files,
@@ -95,7 +85,7 @@ object VectorIndex {
     */
   def loadRecent(spark: SparkSession, indexPath: String, asOf: java.sql.Date,
       maxDays: Int = RetentionDays): DataFrame = {
-    CompactSwap.recoverAllHidden(spark, indexPath)
+    Lifecycle.recover(spark, indexPath)
     Lifecycle.dropTombstoned(spark, indexPath,
       IvfIndex.retained(Parquet.read(spark, indexPath), asOf, maxDays))
   }
@@ -108,19 +98,23 @@ object VectorIndex {
     ingestDays(spark, indexPath).map(_._1).maxOption.map(java.sql.Date.valueOf)
 
   /** Open-time recovery, then the layout's `ingest_date=` directories by
-    * day, from the one root listing the recovery makes. A name that is not
-    * an ISO date (a null day's `__HIVE_DEFAULT_PARTITION__`) is no day: the
-    * window's date filter never keeps its rows either.
+    * day, from one listing of the root (none when it is missing). A name
+    * that is not an ISO date (a null day's `__HIVE_DEFAULT_PARTITION__`) is
+    * no day: the window's date filter never keeps its rows either.
     */
   private[vector] def ingestDays(spark: SparkSession,
-      indexPath: String): Seq[(java.time.LocalDate, org.apache.hadoop.fs.Path)] =
+      indexPath: String): Seq[(java.time.LocalDate, Path)] =
     // driver-side metadata IO rides the transient-retry policy — one
     // throttled listStatus against object storage must not fail the query
     // (graft.sources.RetryingIO: the reference connector's 3×-backoff
     // contract; Spark only retries EXECUTOR-side task IO)
     graft.sources.RetryingIO.withRetry(s"ingestDays($indexPath)") {
-      CompactSwap.recoverAllHidden(spark, indexPath)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("ingest_date="))
+      Lifecycle.recover(spark, indexPath)
+      val root = new Path(indexPath)
+      val listed =
+        try root.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(root).toSeq
+        catch { case _: java.io.FileNotFoundException => Nil }
+      listed.filter(st => st.isDirectory && st.getPath.getName.startsWith("ingest_date="))
         .flatMap { st =>
           scala.util.Try(java.time.LocalDate.parse(st.getPath.getName.stripPrefix("ingest_date=")))
             .toOption.map(_ -> st.getPath)
@@ -129,6 +123,8 @@ object VectorIndex {
 
   /** S11 delete-side: physically drop partitions older than the window
     * (reference: `_remove_old_indexes`, `faiss_manager.py:151-172`).
+    * Recovery runs first, so no journal of a crashed compact names a file
+    * in a dropped day; a directory that is no day (a null day's) is kept.
     *
     * Uses the Hadoop FileSystem API, so it works identically on local FS,
     * HDFS, and S3A — the 100-TB deployment targets. Cost is one directory
@@ -136,19 +132,10 @@ object VectorIndex {
     */
   def retain(spark: SparkSession, indexPath: String, asOf: java.sql.Date,
       maxDays: Int = RetentionDays): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val cutoff = asOf.toLocalDate.minusDays(maxDays)
-    val root = new Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
-    val dropped = fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("ingest_date="))
-      .filter { st =>
-        val day = java.time.LocalDate.parse(st.getPath.getName.stripPrefix("ingest_date="))
-        !day.isAfter(cutoff)
-      }
-    dropped.foreach(st => fs.delete(st.getPath, true))
-    dropped.map(_.getPath.getName)
+    val dropped = ingestDays(spark, indexPath).filterNot(_._1.isAfter(cutoff)).map(_._2)
+    dropped.foreach(d => d.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(d, true))
+    dropped.map(_.getName)
   }
 
   /** The reference's search (`faiss_manager.py:254-296` + `utils.py:100-108`):

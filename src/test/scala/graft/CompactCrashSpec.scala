@@ -8,13 +8,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.{IndexLifecycle, Parquet}
 
-/** `compact` crashed at every write boundary, for the LSH, IVF, pHash and
-  * inverted indexes. The boundaries are counted, not picked: an
-  * uninterrupted compact runs once on [[CrashFs]] to count them (every
-  * mutating filesystem call outside a staging directory, plus one crash
-  * inside each staged write); then for every k a fresh copy of the same
-  * index (deletes logged, not compacted) is compacted with a crash at the
-  * k-th. At the crashed state — after `recover`, run by a public read — and
+/** `compact` crashed at every write boundary, for the LSH, IVF, pHash,
+  * inverted and flat vector indexes. The boundaries are counted, not
+  * picked: an uninterrupted compact runs once on [[CrashFs]] to count them
+  * (every mutating filesystem call outside a staging directory, plus one
+  * crash inside each staged write); then for every k a fresh copy of the
+  * same index (deletes logged, not compacted) is compacted with a crash at
+  * the k-th. At the crashed state — after `recover`, run by a public read — and
   * again after a retried compact:
   *   - each table's rows, as a multiset, are the uninterrupted run's before
   *     or after compaction (after the retry: after), so no row is lost or
@@ -22,6 +22,10 @@ import graft.sources.{IndexLifecycle, Parquet}
   *   - no tombstoned id is visible: while the log is gone every table is
   *     compacted;
   *   - a replayed batch gets the uninterrupted run's verdicts.
+  * A table is read as its index reads it: the flat index's root table with
+  * partition discovery, so a stray partition directory at any crash point
+  * fails the comparison. A log kept beside the root counts as part of the
+  * index: it is copied with it and its drop is a boundary.
   * The crash runs share one pool of four threads, each under its own root.
   */
 class CompactCrashSpec extends SparkSpec {
@@ -122,6 +126,37 @@ class CompactCrashSpec extends SparkSpec {
       Set.empty, deleted)
   }
 
+  private def flat: Family = {
+    import graft.vector.{HashingEmbedder, IndexPipeline, VectorIndex}
+    val embedder = new HashingEmbedder()
+    val docs = Tables.documents(spark, sf).filter(col("text").isNotNull).orderBy("doc_id")
+      .limit(30).select(col("doc_id"), col("text")).localCheckpoint(true)
+    val all = docs.select("doc_id").collect().map(_.getLong(0)).toSeq
+    val texts = docs.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    // five appends of six docs: two files on each of the first two days,
+    // one on the newest; a clean file stays in each dirty day but the last
+    def page(i: Int, day: Int): DataFrame =
+      docs.filter(col("doc_id").isin(all.slice(6 * i, 6 * i + 6): _*))
+        .select(col("doc_id").as("vec_id"), embedder.embedCol(col("text")).as("embedding"),
+          lit("doc").as("data_type"), to_json(struct(col("doc_id"), col("text"))).as("data_json"),
+          lit(java.sql.Date.valueOf(s"2024-03-0$day")).as("ingest_date"))
+        .coalesce(1)
+    val deleted = Set(all(1), all(13), all(25))
+    val probes = Seq(texts(all(1)), texts(all(8)), texts(all(25)), "spark table index")
+    Family("flat", VectorIndex.Lifecycle,
+      dir => {
+        Seq(0 -> 1, 1 -> 1, 2 -> 2, 3 -> 2, 4 -> 3).foreach { case (i, d) =>
+          VectorIndex.append(page(i, d), dir) }
+        VectorIndex.delete(spark, dir, ids(deleted, "vec_id"))
+      },
+      VectorIndex.compact(spark, _),
+      // the search tool's top-k: the scan while the log exists, the
+      // resident window after compaction
+      dir => probes.map(p => IndexPipeline.searchIndex(spark, dir, p, k = 5).toJSON.collect()
+        .mkString(s"$p -> [", ",", "]")).toSet,
+      Set.empty, deleted)
+  }
+
   private def ids(xs: Set[Long], key: String = "doc_id"): DataFrame = {
     import spark.implicits._
     xs.toSeq.toDF(key)
@@ -131,12 +166,12 @@ class CompactCrashSpec extends SparkSpec {
     * rows a replay appended; one job.
     */
   private def tableRows(f: Family, dir: String): Map[String, Map[String, Int]] = {
-    val present = f.lc.tables.map(_.name).filter(t => Files.exists(local(dir).resolve(t)))
+    val present = f.lc.tables.filter(t => Files.exists(local(t.dir(dir))))
     val got = present.map { t =>
-      Parquet.read(spark, s"$dir/$t").filter(!col(f.lc.key).isin(f.replayIds.toSeq: _*))
-        .select(lit(t).as("t"), to_json(struct(col("*"))).as("j"))
+      Parquet.read(spark, t.dir(dir)).filter(!col(f.lc.key).isin(f.replayIds.toSeq: _*))
+        .select(lit(t.name).as("t"), to_json(struct(col("*"))).as("j"))
     }.reduce(_ union _).collect().groupBy(_.getString(0))
-    present.map(t => t -> got.getOrElse(t, Array.empty[org.apache.spark.sql.Row])
+    present.map(_.name).map(t => t -> got.getOrElse(t, Array.empty[org.apache.spark.sql.Row])
       .groupBy(_.getString(1)).map { case (j, same) => j -> same.length }).toMap
   }
 
@@ -145,11 +180,32 @@ class CompactCrashSpec extends SparkSpec {
     */
   private def replayOnCopy(f: Family, dir: String,
       rows: Boolean): (Set[String], Map[String, Map[String, Int]]) = {
-    val copy = copyOf(dir, s"${local(dir).getFileName}-replay")
+    val copy = copyOf(f, dir, s"${local(dir).getFileName}-replay")
     try {
       val v = f.replay(copy)
       (v, if (rows) tableRows(f, copy) else Map.empty)
-    } finally delete(local(copy))
+    } finally deleteIndex(f, copy)
+  }
+
+  /** The paths a family's index at `dir` writes: its root, and its log
+    * when that lives beside the root.
+    */
+  private def roots(f: Family, dir: String): Seq[String] = Seq(dir, f.lc.log(dir))
+
+  private def deleteIndex(f: Family, dir: String): Unit =
+    roots(f, dir).foreach(r => delete(local(r)))
+
+  /** A plain file copy of the index at `dir` (its log included) next to it,
+    * named `name`; Spark's in-flight task outputs (`_temporary`) are not
+    * part of it.
+    */
+  private def copyOf(f: Family, dir: String, name: String): String = {
+    val copy = CrashFs.path(local(dir).resolveSibling(name).toString)
+    deleteIndex(f, copy)
+    copyTree(local(dir), local(copy))
+    if (!local(f.lc.log(dir)).startsWith(local(dir)))
+      copyTree(local(f.lc.log(dir)), local(f.lc.log(copy)))
+    copy
   }
 
   /** A family's index with its deletes logged, and the uninterrupted
@@ -165,27 +221,28 @@ class CompactCrashSpec extends SparkSpec {
     val pristine = CrashFs.path(base.resolve("pristine").toString)
     f.build(pristine)
     val before = tableRows(f, pristine)
-    val ref = copyOf(pristine, "ref")
-    CrashFs.arm(ref, Int.MaxValue)
+    val ref = copyOf(f, pristine, "ref")
+    CrashFs.arm(roots(f, ref), Int.MaxValue)
     f.compact(ref)
-    val n = CrashFs.disarm(ref)
+    val n = CrashFs.disarm(roots(f, ref))
     val after = tableRows(f, ref)
     val verdicts = replayOnCopy(f, ref, rows = false)._1
     assert(replayOnCopy(f, pristine, rows = false)._1 == verdicts,
       s"${f.name}: the replay must not depend on compaction")
     assert(before.keySet == after.keySet && before != after, s"${f.name}: compact changed nothing")
-    after.keys.foreach(t => assert(Parquet.read(spark, s"$ref/$t")
-      .filter(col(f.lc.key).isin(f.deleted.toSeq: _*)).count() == 0, s"${f.name}/$t kept a deleted id"))
+    f.lc.tables.filter(t => after.contains(t.name)).foreach(t => assert(
+      Parquet.read(spark, t.dir(ref)).filter(col(f.lc.key).isin(f.deleted.toSeq: _*)).count() == 0,
+      s"${f.name}/${t.name} kept a deleted id"))
     assert(n >= 10, s"${f.name}: only $n boundaries counted")
     Reference(f, pristine, n, before, after, verdicts)
   }
 
   private def crashAt(r: Reference, k: Int): Unit = {
     val f = r.f
-    val dir = copyOf(r.pristine, s"k$k")
-    CrashFs.arm(dir, k)
+    val dir = copyOf(f, r.pristine, s"k$k")
+    CrashFs.arm(roots(f, dir), k)
     val crashed = scala.util.Try(f.compact(dir))
-    CrashFs.disarm(dir)
+    CrashFs.disarm(roots(f, dir))
     val at = s"${f.name} crashed at $k/${r.n}"
     assert(crashed.isFailure, s"$at: no crash")
     // the crashed state, recovered by the replay's public read
@@ -194,11 +251,11 @@ class CompactCrashSpec extends SparkSpec {
     r1.foreach { case (t, rs) =>
       assert(rs == r.before(t) || rs == r.after(t), s"$at: $t is neither uncompacted nor compacted")
     }
-    if (!Files.exists(local(dir).resolve("tombstones")))
+    if (!Files.exists(local(f.lc.log(dir))))
       assert(r1 == r.after, s"$at: the log dropped before every table compacted")
     // the retry completes the compaction
     f.compact(dir)
-    assert(!Files.exists(local(dir).resolve("tombstones")), s"$at: retry left the log")
+    assert(!Files.exists(local(f.lc.log(dir))), s"$at: retry left the log")
     assert(tableRows(f, dir) == r.after, s"$at: retry rows differ from the uninterrupted run")
     val v2 = replayOnCopy(f, dir, rows = false)._1
     assert(v2 == r.verdicts, s"$at: verdicts after the retry $v2 vs ${r.verdicts}")
@@ -206,17 +263,17 @@ class CompactCrashSpec extends SparkSpec {
     val hidden = try listed.iterator().asScala.map(_.getFileName.toString)
       .filter(_.startsWith(".")).toList finally listed.close()
     assert(hidden.isEmpty, s"$at: retry left $hidden")
-    delete(local(dir))
+    deleteIndex(f, dir)
   }
 
-  test("compact survives a crash at every write boundary: LSH, IVF, pHash, inverted") {
+  /** Every crash point of every family, on one pool. */
+  private def crashEvery(families: => Seq[Family]): Unit = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     // every injected crash is a failed task; keep its stack traces out of the log
     spark.sparkContext.setLogLevel("OFF")
     try {
-      val refs = Await.result(Future.sequence(Seq(lsh, ivf, phash, inverted)
-        .map(f => Future(reference(f)))), 10.minutes)
+      val refs = Await.result(Future.sequence(families.map(f => Future(reference(f)))), 10.minutes)
       // every (family, k) on one pool, interleaved so no family runs last alone
       val runs = refs.flatMap(r => (1 to r.n).map(k => (k, r))).sortBy(_._1)
       Await.result(Future.traverse(runs) { case (k, r) => Future(crashAt(r, k)) }, 20.minutes)
@@ -227,19 +284,21 @@ class CompactCrashSpec extends SparkSpec {
       delete(root)
     }
   }
+
+  test("compact survives a crash at every write boundary: LSH, IVF, pHash, inverted") {
+    crashEvery(Seq(lsh, ivf, phash, inverted))
+  }
+
+  test("compact survives a crash at every write boundary: flat vector index") {
+    crashEvery(Seq(flat))
+  }
 }
 
 object CompactCrashSpec {
   private def local(dir: String): JPath =
     java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(dir).toUri.getPath)
 
-  /** A plain file copy of the index at `dir` next to it, named `name`;
-    * Spark's in-flight task outputs (`_temporary`) are not part of it.
-    */
-  private def copyOf(dir: String, name: String): String = {
-    val src = local(dir)
-    val dst = src.resolveSibling(name)
-    delete(dst)
+  private def copyTree(src: JPath, dst: JPath): Unit = if (Files.exists(src)) {
     val s = Files.walk(src)
     try s.iterator().asScala.toList.foreach { p =>
       val rel = src.relativize(p)
@@ -251,7 +310,6 @@ object CompactCrashSpec {
         } catch { case _: java.nio.file.NoSuchFileException => () }
       }
     } finally s.close()
-    CrashFs.path(dst.toString)
   }
 
   private def delete(p: JPath): Unit =

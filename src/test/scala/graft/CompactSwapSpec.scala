@@ -115,35 +115,6 @@ class CompactSwapSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getDouble(2))).toSeq == expected)
   }
 
-  test("flat VectorIndex: hidden-sibling swap crash recovers; partition discovery never corrupts") {
-    import graft.vector.VectorIndex
-    val emb = Tables.embeddings(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft-flatcr").toString + "/idx"
-    VectorIndex.append(VectorIndex.fromEmbeddings(emb), dir)
-    val asOf = VectorIndex.maxIngestDate(spark, dir).get
-    VectorIndex.delete(spark, dir, spark.range(5, 6).select(col("id").as("vec_id")))
-    val expected = VectorIndex.loadRecent(spark, dir, asOf)
-      .select(col("vec_id")).collect().map(_.getLong(0)).sorted.toSeq
-    assert(!expected.contains(5L))
-    // the crash, hidden-staging form: live day dir staged to a DOT-prefixed
-    // sibling (an un-hidden `ingest_date=X._old` would itself parse as a
-    // partition value), junk ._compact left behind
-    val day = "ingest_date=2024-01-06" // vec_id % 10 == 5 lives here
-    require(fs.rename(new Path(s"$dir/$day"), new Path(s"$dir/.$day._old")))
-    val out = fs.create(new Path(s"$dir/.$day._compact/part-junk"))
-    out.write(Array[Byte](9)); out.close()
-    // reads recover the staged day and still mask the tombstone
-    val recovered = VectorIndex.loadRecent(spark, dir, asOf)
-      .select(col("vec_id")).collect().map(_.getLong(0)).sorted.toSeq
-    assert(recovered == expected)
-    // compact recovers too, completes, and serves identically
-    require(fs.rename(new Path(s"$dir/$day"), new Path(s"$dir/.$day._old")))
-    VectorIndex.compact(spark, dir)
-    assert(!fs.exists(new Path(dir.stripSuffix("/") + "._tombstones")))
-    assert(VectorIndex.loadRecent(spark, dir, asOf)
-      .select(col("vec_id")).collect().map(_.getLong(0)).sorted.toSeq == expected)
-  }
-
   test("PhashIndex: ingest gate recovers from a crashed hashes swap") {
     import graft.multimodal.{Multimodal, PhashIndex, PngCodec}
     import spark.implicits._

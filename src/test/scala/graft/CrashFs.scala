@@ -9,7 +9,7 @@ import org.apache.hadoop.util.Progressable
 
 /** The local filesystem on the private scheme `crashfs` (`crashfs:///tmp/x`
   * is `/tmp/x`), which counts the mutating calls (create, rename, delete,
-  * mkdirs) made under an armed root and throws on the k-th: a crash at
+  * mkdirs) made on or under an armed root and throws on the k-th: a crash at
   * every write boundary of whatever runs there.
   *
   * Boundaries: every mutating call outside a staging directory — a path
@@ -17,8 +17,8 @@ import org.apache.hadoop.util.Progressable
   * reader lists — plus one inside each staged write, the first create
   * under its staging directory (a task's output file). Calls a mutating
   * call makes internally (a create's parent mkdirs) are one boundary with
-  * it. Each root keeps its own count, so indexes under different roots
-  * run concurrently.
+  * it. Each armed set of roots keeps its own count, so indexes under
+  * different roots run concurrently.
   */
 class CrashFs extends RawLocalFileSystem {
   override def getScheme: String = CrashFs.Scheme
@@ -74,15 +74,18 @@ object CrashFs {
   private val armed = scala.collection.mutable.Map.empty[String, Armed]
   private val depth = ThreadLocal.withInitial[Integer](() => 0)
 
-  /** Count boundaries under `root` from now on, crashing at the `crashAt`-th
-    * (1-based; `Int.MaxValue` only counts).
+  /** Count boundaries under `roots` (an index root, and its tombstone log
+    * when that lives beside it) from now on, in one count, crashing at the
+    * `crashAt`-th (1-based; `Int.MaxValue` only counts).
     */
-  def arm(root: String, crashAt: Int): Unit = armed.synchronized {
-    armed(local(root)) = new Armed(crashAt); ()
+  def arm(roots: Seq[String], crashAt: Int): Unit = armed.synchronized {
+    val a = new Armed(crashAt)
+    roots.foreach(r => armed(local(r)) = a)
   }
 
-  /** Stop counting under `root`; the boundaries counted while armed. */
-  def disarm(root: String): Int = armed.synchronized(armed.remove(local(root)).fold(0)(_.count))
+  /** Stop counting under `roots`; the boundaries counted while armed. */
+  def disarm(roots: Seq[String]): Int = armed.synchronized(
+    roots.flatMap(r => armed.remove(local(r))).headOption.fold(0)(_.count))
 
   private def local(root: String): String = new Path(root).toUri.getPath.stripSuffix("/")
 
@@ -97,7 +100,7 @@ object CrashFs {
     val outer = depth.get == 0
     if (outer) armed.synchronized {
       val p = paths.head.toUri.getPath
-      armed.find { case (r, _) => p.startsWith(r + "/") }.foreach { case (_, a) =>
+      armed.find { case (r, _) => p == r || p.startsWith(r + "/") }.foreach { case (_, a) =>
         val stages = paths.map(stagedUnder)
         val counts =
           if (stages.exists(_.isEmpty)) true

@@ -251,4 +251,34 @@ class DirtyCompactSpec extends SparkSpec {
     assert(ids(s"$dir/g") == (0L until n).filter(_ % 2 == 1).toSet)
     assert(!lc.logged(spark, dir))
   }
+
+  test("dirty files of one table with different columns fail the compact before its journal") {
+    import graft.vector.VectorIndex
+    val dir = tmp("graft-dc-cols") + "/idx"
+    val day = java.sql.Date.valueOf("2024-05-01")
+    def rows(from: Long) = emb.filter(col("vec_id") >= from && col("vec_id") < from + 10L)
+      .select(col("vec_id"), col("embedding"), lit("embedding").as("data_type"),
+        to_json(struct(col("vec_id"))).as("data_json"), lit(day).as("ingest_date"))
+      .coalesce(1)
+    // two appends to one day, the second with a column the first lacks
+    VectorIndex.append(rows(0L), dir)
+    VectorIndex.append(rows(10L).withColumn("extras", concat(lit("x"), col("vec_id"))), dir)
+    val dayDir = s"$dir/ingest_date=$day"
+    val before = dataFiles(dayDir)
+    assert(before.size == 2)
+    val rowsBefore = before.keys.map(f => f -> fileRows(s"$dayDir/$f")).toMap
+    VectorIndex.delete(spark, dir, Seq(3L, 13L).toDF("vec_id"))
+    val err = intercept[IllegalArgumentException](VectorIndex.compact(spark, dir))
+    assert(err.getMessage.contains("differ in columns"), err.getMessage)
+    // nothing changed: the same files, their rows and columns, and the log
+    assert(dataFiles(dayDir) == before)
+    before.keys.foreach(f => assert(fileRows(s"$dayDir/$f") == rowsBefore(f), s"$f changed"))
+    assert(before.keys.map(f => spark.read.parquet(s"$dayDir/$f").columns.toSet) ==
+      Set(Set("vec_id", "embedding", "data_type", "data_json"),
+        Set("vec_id", "embedding", "data_type", "data_json", "extras")))
+    assert(VectorIndex.Lifecycle.logged(spark, dir))
+    assert(!Files.exists(Paths.get(dir, "._journal")), "the journal was written")
+    assert(!VectorIndex.loadRecent(spark, dir, day).filter(col("vec_id").isin(3L, 13L))
+      .head(1).nonEmpty, "the log still masks the deleted ids")
+  }
 }

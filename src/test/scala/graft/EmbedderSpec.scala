@@ -123,7 +123,9 @@ class EmbedderSpec extends SparkSpec {
     import org.apache.hadoop.fs.Path
     val emb = Tables.embeddings(spark, sf)
     val dir = java.nio.file.Files.createTempDirectory("graft-flatdel").toString + "/idx"
-    VectorIndex.append(VectorIndex.fromEmbeddings(emb), dir)
+    // two appends: every ingest day (vec_id % 10) holds at least two files
+    Seq(true, false).foreach(h => VectorIndex.append(
+      VectorIndex.fromEmbeddings(emb.filter((col("vec_id") % 20 < 10) === h)), dir))
     val asOf = VectorIndex.maxIngestDate(spark, dir).get
     val qv = emb.filter(col("vec_id") === 3L).select("embedding").head.getSeq[Float](0)
     def topJsons(path: String): Seq[String] =
@@ -144,22 +146,32 @@ class EmbedderSpec extends SparkSpec {
       spark.sql("SELECT 1 AS query_id, 'probe text' AS query_text"), k = 50).collect()
       .map(r => idOf(r.getAs[String]("data_json")))
     assert(!batchIds.exists(victims.contains))
-    // compact rewrites ONLY the victims' ingest-day dirs
+    // compact replaces ONLY the files holding a victim: every other file,
+    // in a victim's day or not, keeps its path, length and mtime
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dayDirs: Map[String, Long] = fs.listStatus(new Path(dir)).toSeq
-      .filter(_.getPath.getName.startsWith("ingest_date="))
-      .map(st => st.getPath.getName -> fs.listStatus(st.getPath).map(_.getModificationTime).max)
-      .toMap
-    val before = dayDirs
-    val dirtyDays = victims.map(v => f"ingest_date=2024-01-${1 + v % 10}%02d").toSet
+    def dayDirs = fs.listStatus(new Path(dir)).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("ingest_date=")).sorted
+    def files: Map[String, (Long, Long)] = dayDirs.flatMap(d =>
+      fs.listStatus(new Path(s"$dir/$d")).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
+        .map(st => s"$d/${st.getPath.getName}" -> (st.getLen, st.getModificationTime))).toMap
+    val daysBefore = dayDirs
+    val before = files
+    val dirty = before.keySet.filter(f => spark.read.parquet(s"$dir/$f")
+      .filter(col("vec_id").isin(victims: _*)).count() > 0)
+    assert(dirty.nonEmpty && dirty.size <= victims.size)
+    val dirtyDays = dirty.map(_.takeWhile(_ != '/'))
+    assert((before.keySet -- dirty).exists(f => dirtyDays(f.takeWhile(_ != '/'))),
+      "a victim's day holds a file without a victim")
     VectorIndex.compact(spark, dir)
     assert(!fs.exists(new Path(dir.stripSuffix("/") + "._tombstones")))
-    val after = dayDirs
-    assert(after.keySet == before.keySet, "no day directory may vanish")
-    before.keys.foreach { d =>
-      if (dirtyDays(d)) assert(after(d) != before(d), s"dirty $d must rewrite")
-      else assert(after(d) == before(d), s"clean $d must not rewrite")
-    }
+    val after = files
+    assert(dayDirs == daysBefore, "no day directory may vanish")
+    (before.keySet -- dirty).foreach(f =>
+      assert(after.get(f).contains(before(f)), s"clean $f must keep its path, length and mtime"))
+    dirty.foreach(f => assert(!after.contains(f), s"dirty $f must be replaced"))
+    val fresh = after.keySet -- before.keySet
+    assert(fresh.size <= dirty.size && fresh.forall(f => dirtyDays(f.takeWhile(_ != '/'))),
+      s"each replacement lands in its dirty file's day: $fresh")
     // compacted layout ≡ a fresh build without the victims
     val dir2 = java.nio.file.Files.createTempDirectory("graft-flatdel2").toString + "/idx"
     VectorIndex.append(VectorIndex.fromEmbeddings(

@@ -134,4 +134,44 @@ class ResidentWindowSpec extends SparkSpec {
     same(dir, probes, day(1))
     assert(same(dir, probes, day(1)) == 0)
   }
+
+  test("a flat compact keeps a dirty day's clean files held; the next search reads the rewrites") {
+    val dir = tmp("graft-resident-compact")
+    // another writer's pages, unique vec_ids: two files on day 1, one on day 2
+    def external(i: Int, base: Long, d: Date): Unit =
+      VectorIndex.append(page(i).select((col("doc_id") + base).as("vec_id"),
+        embedder.embedCol(col("text")).as("embedding"), lit("external").as("data_type"),
+        to_json(struct(col("doc_id"), col("text"))).as("data_json"),
+        lit(d).as("ingest_date")).coalesce(1), dir)
+    external(0, 1L << 40, day(1)); external(1, 2L << 40, day(1)); external(2, 3L << 40, day(2))
+    val fs = ResidentFiles.fileSystem(spark, new org.apache.hadoop.fs.Path(dir))
+    def listed = Seq(1, 2).flatMap(d => ResidentFiles.visible(fs,
+      new org.apache.hadoop.fs.Path(s"$dir/ingest_date=${day(d)}"))).filter(ResidentFiles.dataFile)
+    def held = ResidentFiles.snapshot[Any](listed).keySet
+    val probes = Seq(text(3), text(14), "spark table index")
+    assert(same(dir, probes, day(2)) == 1, "the first searches read the window in one job")
+    val before = listed.map(ResidentFiles.key).toSet
+    assert(before.size == 3 && held == before)
+
+    VectorIndex.delete(spark, dir, Seq(docs(3).getLong(0) + (1L << 40)).toDF("vec_id"))
+    VectorIndex.compact(spark, dir)
+    val after = listed
+    val afterKeys = after.map(ResidentFiles.key).toSet
+    val (rewritten, gone) = (afterKeys -- before, before -- afterKeys)
+    assert(rewritten.size == 1 && gone.size == 1, s"one file of day 1 rewrites, got $rewritten")
+    assert(held == before.intersect(afterKeys),
+      "the clean files, one of them in the dirty day, stay held")
+    val held0 = ResidentFiles.bytesHeld
+    val (_, jobs) = JobCounter(spark)(GraftApi.searchData(spark, dir, probes.head, K))
+    assert(jobs <= 1, s"the first search after compact ran $jobs jobs")
+    assert(held == afterKeys && !held.exists(gone),
+      "the search holds the rewritten file and drops the replaced one")
+    val fresh = after.filter(f => rewritten(ResidentFiles.key(f)))
+    assert(ResidentFiles.bytesHeld - held0 <= fresh.map(_.getLen).sum,
+      "the search re-read files it held")
+    assert(same(dir, probes, day(2)) == 0)
+    probes.foreach(p => assert(!GraftApi.searchData(spark, dir, p, 60).results
+      .exists(_.data_json.contains(s""""doc_id":${docs(3).getLong(0)},""")),
+      "the deleted record stays gone"))
+  }
 }
