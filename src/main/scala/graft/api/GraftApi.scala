@@ -131,13 +131,21 @@ object GraftApi {
     * retained day-partitions — the reference's search always loads just the
     * ≤7 recent day-indexes (`faiss_manager.py:91-99,270-272`); `asOf`
     * anchors the window (default: the index's newest ingest day). The
-    * window is held on the driver ([[graft.vector.IndexPipeline.searchIndex]]).
+    * window is held on the driver ([[graft.vector.IndexPipeline.searchIndex]]),
+    * and its ranked rows become the hits directly: a search whose files are
+    * all held runs no Spark job and no SQL execution. Only the scan (a
+    * tombstone log, a window past the byte bound, a layout without day
+    * directories) is collected typed. Either way the hits are
+    * `searchIndex(..).as[SearchHit].collect()`, bit for bit.
     */
   def searchData(s: SparkSession, indexPath: String, query: String,
       limit: Int = 10, asOf: java.sql.Date = null): Page[SearchHit] = {
     import s.implicits._
-    val rows = graft.vector.IndexPipeline.searchIndex(s, indexPath, query, limit, asOf)
-      .as[SearchHit].collect().toSeq
+    val rows = graft.vector.IndexPipeline.search(s, indexPath, query, limit, asOf) match {
+      case Right(hits) => hits.map(r =>
+        SearchHit(r.getLong(0), r.getDouble(1), r.getString(2), r.getString(3)))
+      case Left(scan) => scan.as[SearchHit].collect().toSeq
+    }
     Page(rows, rows.size.toLong, None)
   }
 

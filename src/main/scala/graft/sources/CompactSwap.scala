@@ -75,41 +75,54 @@ object CompactSwap {
   private[sources] def dirOf(base: String, table: String): String =
     if (table.isEmpty) base else s"$base/$table"
 
-  /** Stage replacements for `dirty` data files of `base/table`. `write`
-    * receives the staging path and must write there, in one job, output
-    * part `i` (the `part-0000i-` file Spark names after its task) with the
-    * kept rows of `dirty(i)`, as ONE file: a part split across files (a
-    * write under a `maxRecordsPerFile` cap) fails the staging loudly. A
-    * part with no kept rows replaces its file with nothing. Spark writes
-    * part 0 even when it holds no rows; that empty file is dropped, except
-    * when it is the only staged file, where it keeps the table's schema on
-    * disk in case every dirty file was its last. Nothing visible changes
-    * until the returned commit runs: each replacement lands in its
-    * replaced file's directory under the part's own (unique) name, through
-    * the journal.
+  /** Stage replacements for the dirty data files of `base/table`, given in
+    * `groups` (files that one write can hold: the same columns). `write`
+    * receives a group and a staging path and must write there, in one job,
+    * output part `i` (the `part-0000i-` file Spark names after its task)
+    * with the kept rows of the group's file `i`, as ONE file: a part split
+    * across files (a write under a `maxRecordsPerFile` cap) fails the
+    * staging loudly. One group writes into the staging directory itself;
+    * several write into its numbered subdirectories, one each. A part with
+    * no kept rows replaces its file with nothing. Spark writes part 0 of
+    * each write even when it holds no rows; such an empty file is dropped,
+    * except when no staged file holds a row, where the first one stays to
+    * keep the table's schema on disk in case every dirty file was its last.
+    * Nothing visible changes until the returned commit runs: each
+    * replacement lands in its replaced file's directory under the part's
+    * own (unique) name, through the journal.
     */
-  def stageFiles(spark: SparkSession, base: String, table: String, dirty: Seq[Path])(
-      write: String => Unit): Staged = {
+  def stageFiles(spark: SparkSession, base: String, table: String, groups: Seq[Seq[Path]])(
+      write: (Seq[Path], String) => Unit): Staged = {
     val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stage = stageOf(base, table)
     val tmp = journalOf(base, table).suffix(".tmp")
     Seq(stage, tmp).foreach(p => if (fs.exists(p)) fs.delete(p, true)) // dead-writer leftovers
-    write(stage.toString)
-    val parts = fs.listStatus(stage).toSeq
-      .flatMap(st => PartFile.findFirstMatchIn(st.getPath.getName).map(_.group(1).toInt -> st))
-      .groupBy(_._1).map { case (i, sts) =>
-        require(sts.size == 1,
-          s"compact: part $i of ${dirOf(base, table)} staged as ${sts.size} files")
-        i -> sts.head._2
-      }
-    require(parts.keys.forall(_ < dirty.size),
-      s"compact: stray staged part for ${dirOf(base, table)}")
-    val kept = parts.filter { case (i, st) => i != 0 || parts.size == 1 || rowCount(fs, st) > 0 }
+    // each group's directory, and its prefix in a journaled name
+    val dirs = if (groups.size == 1) Seq(stage -> "")
+      else groups.indices.map(j => new Path(stage, j.toString) -> s"$j/")
+    // (dirty file, its part number, the staged name, the staged file)
+    val staged = groups.zip(dirs).flatMap { case (dirty, (dir, prefix)) =>
+      write(dirty, dir.toString)
+      val parts = fs.listStatus(dir).toSeq
+        .flatMap(st => PartFile.findFirstMatchIn(st.getPath.getName).map(_.group(1).toInt -> st))
+        .groupBy(_._1).map { case (i, sts) =>
+          require(sts.size == 1,
+            s"compact: part $i of ${dirOf(base, table)} staged as ${sts.size} files")
+          i -> sts.head._2
+        }
+      require(parts.keys.forall(_ < dirty.size),
+        s"compact: stray staged part for ${dirOf(base, table)}")
+      parts.toSeq.sortBy(_._1).map { case (i, st) => (dirty(i), i, prefix + st.getPath.getName, st) }
+    }
+    val empty = staged.filter { case (_, i, _, st) =>
+      i == 0 && staged.size > 1 && rowCount(fs, st) == 0 }
+    val kept = (if (empty.size == staged.size) staged.take(1) else staged.diff(empty))
+      .map { case (old, _, name, _) => old -> name }.toMap
     val root = fs.makeQualified(new Path(base)).toUri.getPath.stripSuffix("/") + "/"
-    new Staged(fs, base, table, dirty.zipWithIndex.map { case (old, i) =>
+    new Staged(fs, base, table, groups.flatten.map { old =>
       val path = old.toUri.getPath
       require(path.startsWith(root), s"compact: $old is not under $base")
-      Entry(path.stripPrefix(root), kept.get(i).map(_.getPath.getName))
+      Entry(path.stripPrefix(root), kept.get(old))
     })
   }
 
@@ -137,8 +150,9 @@ object CompactSwap {
     }
   }
 
-  /** One replaced file, relative to the index base, and the name of its
-    * staged replacement, None when no row of it is kept.
+  /** One replaced file, relative to the index base, and its staged
+    * replacement relative to the staging directory (its name, or
+    * `<group>/<name>`), None when no row of it is kept.
     */
   private[CompactSwap] final case class Entry(old: String, fresh: Option[String])
 
@@ -168,7 +182,8 @@ object CompactSwap {
     val stage = stageOf(base, table)
     val olds = entries.map(e => new Path(s"$base/${e.old}"))
     entries.zip(olds).foreach { case (e, old) => e.fresh.foreach { name =>
-      val (staged, fin) = (new Path(stage, name), new Path(old.getParent, name))
+      val staged = new Path(stage, name)
+      val fin = new Path(old.getParent, staged.getName)
       if (fs.exists(staged))
         require(fs.rename(staged, fin), s"compact: cannot place $fin at $base")
       else require(fs.exists(fin), s"compact: replacement $fin of ${dirOf(base, table)} is lost")

@@ -83,9 +83,9 @@ final case class IndexLifecycle(key: String, log: String => String,
     * (staging changes nothing visible), and the commits run in declared
     * order, the first failure — a rule's, a staging's or a commit's —
     * stopping the sequence with the earlier tables committed. The dirty
-    * files of one table stage in one write, so they must agree on their
-    * columns: files that differ fail the staging, before the table's
-    * journal exists, and nothing of that table changes.
+    * files of one table stage in one write per column set (name → type):
+    * files that differ in columns (appends of different batches) each
+    * keep their own.
     */
   def compact(spark: SparkSession, path: String): Unit = {
     recover(spark, path)
@@ -121,28 +121,28 @@ final case class IndexLifecycle(key: String, log: String => String,
       case (t, Success(DirtyFiles(smallPages))) if dirty.contains(t.name) => (t.name, smallPages)
     }
     val staged = toStage.map(_._1).zip(ConcurrentJobs.run(toStage.map { case (t, smallPages) =>
-      () => Try(CompactSwap.stageFiles(spark, path, t, dirty(t)) { stage =>
-        // one partition per dirty file, its rows in file order (a Dataset
-        // union of single-partition frames would zip them into one), and
-        // one file per partition (maxRecordsPerFile 0 lifts the session
-        // cap: a replacement never holds more rows than its file); a file
-        // path read alone carries no partition columns, and its
+      () => Try {
+        // a file path read alone carries no partition columns, and its
         // replacement lands back in the file's own directory
-        val reads = dirty(t).map(f => kept(Parquet.read(spark, f.toString)))
-        val schema = reads.head.schema
+        val reads = dirty(t).map(f => f -> kept(Parquet.read(spark, f.toString))).toMap
         // one write has one schema: files of one table that differ in
-        // columns (appends of different batches) fail before the journal
-        def columns(s: StructType) = s.fields.map(c => c.name -> c.dataType).toSet
-        require(reads.forall(r => columns(r.schema) == columns(schema)),
-          s"compact: the dirty files of ${CompactSwap.dirOf(path, t)} differ in columns: " +
-            dirty(t).zip(reads).map { case (f, r) => s"${f.getName} ${r.schema.simpleString}" }
-              .mkString(", "))
-        val w = spark.createDataFrame(spark.sparkContext.union(reads.map(
-          _.select(schema.fieldNames.map(col): _*).rdd.coalesce(1))), schema)
-          .write.mode(SaveMode.ErrorIfExists).option("maxRecordsPerFile", 0L)
-        (if (smallPages) w.option("parquet.page.row.count.limit",
-          KeyedSidecar.PageRowLimit.toString) else w).parquet(stage)
-      })
+        // columns (appends of different batches) stage in one write per
+        // column set
+        def columns(f: Path) = reads(f).schema.fields.map(c => c.name -> c.dataType).toSet
+        val groups = dirty(t).map(columns).distinct.map(c => dirty(t).filter(columns(_) == c))
+        CompactSwap.stageFiles(spark, path, t, groups) { (files, stage) =>
+          // one partition per dirty file, its rows in file order (a Dataset
+          // union of single-partition frames would zip them into one), and
+          // one file per partition (maxRecordsPerFile 0 lifts the session
+          // cap: a replacement never holds more rows than its file)
+          val schema = reads(files.head).schema
+          val w = spark.createDataFrame(spark.sparkContext.union(files.map(f =>
+            reads(f).select(schema.fieldNames.map(col): _*).rdd.coalesce(1))), schema)
+            .write.mode(SaveMode.ErrorIfExists).option("maxRecordsPerFile", 0L)
+          (if (smallPages) w.option("parquet.page.row.count.limit",
+            KeyedSidecar.PageRowLimit.toString) else w).parquet(stage)
+        }
+      }
     })).toMap
     ruled.foreach { case (t, rule) =>
       rule.get match {

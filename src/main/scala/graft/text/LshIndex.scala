@@ -86,8 +86,8 @@ object LshIndex {
     * — near the cliff it existed to prevent). The measurement (r13, the
     * r12 verdict's third option): the candidate set is ALREADY
     * `localCheckpoint(true)`-materialized, so its actual block sizes sit
-    * in the block manager — [[materializedBytes]] reads them off
-    * `getRDDStorageInfo`, a driver-side metadata call: exact-as-stored,
+    * in the block manager — [[materializedBytes]] asks the block-manager
+    * master for them, a driver-side metadata call: exact-as-stored,
     * ZERO extra jobs. (r12 ran a full string-length scan job per gate
     * call — exact but ~0.3–0.5 s each; a sampled-width shortcut before it
     * was reverted because `limit` drains the first partitions of a
@@ -114,16 +114,18 @@ object LshIndex {
 
   /** Measured bytes of an eagerly local-checkpointed DataFrame, straight
     * off the block manager (memSize + diskSize across its cached
-    * partitions). Returns None when the plan is not the expected
-    * LogicalRDD or the blocks are not registered — callers must fall back
-    * to an exact measurement, never assume small.
+    * partitions), asked synchronously of the block-manager master
+    * ([[org.apache.spark.GraftStorageBridge]]): the listener-fed
+    * `getRDDStorageInfo` could miss blocks stored moments before. Returns
+    * None when the plan is not the expected LogicalRDD or the blocks are
+    * not registered — callers must fall back to an exact measurement,
+    * never assume small.
     */
   private[graft] def materializedBytes(spark: SparkSession,
       df: DataFrame): Option[Long] =
     df.queryExecution.optimizedPlan.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }.flatMap(id => spark.sparkContext.getRDDStorageInfo.find(_.id == id)
-      .map(i => i.memSize + i.diskSize))
+    }.flatMap(org.apache.spark.GraftStorageBridge.rddBytes(spark.sparkContext, _))
 
   /** Derive and persist every index table for the corpus (the r13
     * bucketed sidecar layout — see the object doc).

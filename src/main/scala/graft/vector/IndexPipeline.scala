@@ -1,8 +1,9 @@
 package graft.vector
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import graft.sources.LocalFrame
 
 /** The defining dataflow of the reference (SURVEY.md §3.2 step 6): every
   * read tool embeds its result rows and appends them to the vector index;
@@ -61,24 +62,36 @@ object IndexPipeline {
     * When no `asOf` is given the anchor defaults to the index's newest
     * ingest day. One listing of the index root gives the anchor and the
     * window's day directories; [[ResidentWindow]] answers from the window
-    * held on the driver, reading only the files it does not hold, and the
-    * result is a local frame (no job when it holds them all). The
+    * held on the driver, reading only the files it does not hold, and its
+    * ranked hit rows are the result, wrapped here in a local frame (no job
+    * when it holds them all; `GraftApi.searchData` takes the rows through
+    * [[search]] and runs no Spark SQL execution either). The
     * partition-pruned scan of [[VectorIndex.loadRecent]] answers instead
     * while a tombstone log exists, when the window is larger than
-    * [[ResidentWindow.MaxBytes]], and on a layout without `ingest_date=`
-    * directories. Both give the same hits, scores and schema.
+    * [[graft.sources.ResidentFiles.MaxBytes]], and on a layout without
+    * `ingest_date=` directories. Both give the same hits, scores and schema.
     */
   def searchIndex(spark: SparkSession, indexPath: String, queryText: String,
       k: Int = 10, asOf: java.sql.Date = null,
-      embedder: Embedder = new HashingEmbedder()): DataFrame = {
+      embedder: Embedder = new HashingEmbedder()): DataFrame =
+    search(spark, indexPath, queryText, k, asOf, embedder)
+      .fold(identity, LocalFrame.of(spark, ResidentWindow.HitSchema, _))
+
+  /** [[searchIndex]]'s one ranking: Right, the hits [[ResidentWindow]]
+    * ranked (rows of its `HitSchema`, in rank order); Left, the scan frame,
+    * when the scan must answer.
+    */
+  private[graft] def search(spark: SparkSession, indexPath: String, queryText: String,
+      k: Int = 10, asOf: java.sql.Date = null,
+      embedder: Embedder = new HashingEmbedder()): Either[DataFrame, Seq[Row]] = {
     val q = embedder.embedText(queryText)
     val days = VectorIndex.ingestDays(spark, indexPath)
     Option(asOf).map(_.toLocalDate).orElse(days.map(_._1).maxOption) match {
       case Some(anchor) if days.nonEmpty =>
-        ResidentWindow.search(spark, indexPath, days, anchor, q, k).getOrElse(
+        ResidentWindow.search(spark, indexPath, days, anchor, q, k).toRight(
           VectorIndex.search(VectorIndex.loadRecent(spark, indexPath,
             Option(asOf).getOrElse(java.sql.Date.valueOf(anchor))), q.toSeq, k))
-      case _ => VectorIndex.search(retained(spark, indexPath, asOf), q.toSeq, k)
+      case _ => Left(VectorIndex.search(retained(spark, indexPath, asOf), q.toSeq, k))
     }
   }
 

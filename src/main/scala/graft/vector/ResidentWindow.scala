@@ -1,11 +1,11 @@
 package graft.vector
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types._
-import graft.sources.{LocalFrame, ResidentFiles}
+import graft.sources.ResidentFiles
 
 /** The flat index's retained window, resident on the driver: the search
   * tool's half of [[graft.sources.ResidentFiles]], for the parquet layout of
@@ -18,7 +18,9 @@ import graft.sources.{LocalFrame, ResidentFiles}
   * reuses the files the store holds, reads every other listed file in one
   * job, and ranks the window on the driver over the decoded rows. An append
   * by another writer, `retain`, `delete` and `compact` all show in the
-  * listing.
+  * listing. The result is the ranked hit rows themselves, in [[HitSchema]]:
+  * the search tool builds its hits from them with no Spark SQL execution,
+  * and [[IndexPipeline.searchIndex]] wraps the same rows in a local frame.
   *
   * The search answers only when the scan would read exactly what the window
   * holds; it returns None (the caller scans) while a tombstone log exists,
@@ -31,8 +33,10 @@ private[graft] object ResidentWindow {
   private final case class Vec(vecId: java.lang.Long, emb: Array[Float],
       dataType: String, dataJson: String)
 
-  /** The scan path's output schema ([[VectorIndex.search]]). */
-  private val HitSchema = StructType(Seq(
+  /** The scan path's output schema ([[VectorIndex.search]]), the schema of
+    * the rows [[search]] returns.
+    */
+  private[vector] val HitSchema = StructType(Seq(
     StructField("rank", LongType, nullable = false),
     StructField("similarity_score", DoubleType),
     StructField("data_type", StringType),
@@ -57,11 +61,11 @@ private[graft] object ResidentWindow {
   }
 
   /** Top-`k` of the window `(anchor − RetentionDays, anchor]` of the index
-    * whose visible day directories are `days`, with the scan's ranking and
-    * schema; None when the scan must answer.
+    * whose visible day directories are `days`, as rows of [[HitSchema]] in
+    * rank order, with the scan's ranking; None when the scan must answer.
     */
   def search(spark: SparkSession, indexPath: String, days: Seq[(java.time.LocalDate, Path)],
-      anchor: java.time.LocalDate, query: Array[Float], k: Int): Option[DataFrame] = {
+      anchor: java.time.LocalDate, query: Array[Float], k: Int): Option[Seq[Row]] = {
     val fs = ResidentFiles.fileSystem(spark, new Path(indexPath))
     if (VectorIndex.Lifecycle.logged(spark, indexPath)) return None
     val from = anchor.minusDays(VectorIndex.RetentionDays)
@@ -85,7 +89,7 @@ private[graft] object ResidentWindow {
       ResidentFiles.hold(missing.map(f => f -> loaded.getOrElse(key(f), IndexedSeq.empty)),
         keys, stale)
       val rows = files.flatMap(f => have.getOrElse(key(f), loaded.getOrElse(key(f), Nil)))
-      LocalFrame.of(spark, HitSchema, rank(rows, query, k))
+      rank(rows, query, k)
     }
   }
 

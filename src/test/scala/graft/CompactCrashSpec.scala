@@ -130,22 +130,27 @@ class CompactCrashSpec extends SparkSpec {
     import graft.vector.{HashingEmbedder, IndexPipeline, VectorIndex}
     val embedder = new HashingEmbedder()
     val docs = Tables.documents(spark, sf).filter(col("text").isNotNull).orderBy("doc_id")
-      .limit(30).select(col("doc_id"), col("text")).localCheckpoint(true)
+      .limit(36).select(col("doc_id"), col("text")).localCheckpoint(true)
     val all = docs.select("doc_id").collect().map(_.getLong(0)).toSeq
     val texts = docs.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    // five appends of six docs: two files on each of the first two days,
-    // one on the newest; a clean file stays in each dirty day but the last
-    def page(i: Int, day: Int): DataFrame =
-      docs.filter(col("doc_id").isin(all.slice(6 * i, 6 * i + 6): _*))
+    // six appends of six docs: two files on each day; a clean file stays
+    // in each of the first two dirty days, and the newest day mixes
+    // columns (its second file has an `extras` column), both its files
+    // dirty, so the compaction stages one write per column set
+    def page(i: Int, day: Int): DataFrame = {
+      val rows = docs.filter(col("doc_id").isin(all.slice(6 * i, 6 * i + 6): _*))
         .select(col("doc_id").as("vec_id"), embedder.embedCol(col("text")).as("embedding"),
           lit("doc").as("data_type"), to_json(struct(col("doc_id"), col("text"))).as("data_json"),
           lit(java.sql.Date.valueOf(s"2024-03-0$day")).as("ingest_date"))
+      (if (i == 5) rows.withColumn("extras", concat(lit("x"), col("vec_id"))) else rows)
         .coalesce(1)
-    val deleted = Set(all(1), all(13), all(25))
-    val probes = Seq(texts(all(1)), texts(all(8)), texts(all(25)), "spark table index")
+    }
+    val deleted = Set(all(1), all(13), all(25), all(31))
+    val probes = Seq(texts(all(1)), texts(all(8)), texts(all(25)), texts(all(33)),
+      "spark table index")
     Family("flat", VectorIndex.Lifecycle,
       dir => {
-        Seq(0 -> 1, 1 -> 1, 2 -> 2, 3 -> 2, 4 -> 3).foreach { case (i, d) =>
+        Seq(0 -> 1, 1 -> 1, 2 -> 2, 3 -> 2, 4 -> 3, 5 -> 3).foreach { case (i, d) =>
           VectorIndex.append(page(i, d), dir) }
         VectorIndex.delete(spark, dir, ids(deleted, "vec_id"))
       },

@@ -15,7 +15,8 @@ import org.apache.hadoop.util.Progressable
   * Boundaries: every mutating call outside a staging directory — a path
   * strictly under a directory named `*._stage` or `*._compact`, which no
   * reader lists — plus one inside each staged write, the first create
-  * under its staging directory (a task's output file). Calls a mutating
+  * under its staging directory, or under its numbered group directory in
+  * one (a task's output file). Calls a mutating
   * call makes internally (a create's parent mkdirs) are one boundary with
   * it. Each armed set of roots keeps its own count, so indexes under
   * different roots run concurrently.
@@ -89,11 +90,16 @@ object CrashFs {
 
   private def local(root: String): String = new Path(root).toUri.getPath.stripSuffix("/")
 
-  /** The staging directory `p` lies strictly under, if any. */
+  /** The staged write's directory `p` lies strictly under, if any: a
+    * staging directory, or a numbered group directory in one (a compaction
+    * that stages one write per column set).
+    */
   private def stagedUnder(p: Path): Option[String] = {
     val parts = p.toUri.getPath.split('/')
     val i = parts.dropRight(1).indexWhere(n => n.endsWith("._stage") || n.endsWith("._compact"))
-    if (i < 0) None else Some(parts.take(i + 1).mkString("/"))
+    val group = i >= 0 && i + 2 < parts.length && parts(i + 1).nonEmpty &&
+      parts(i + 1).forall(_.isDigit)
+    if (i < 0) None else Some(parts.take(if (group) i + 2 else i + 1).mkString("/"))
   }
 
   private def step[T](isCreate: Boolean, paths: Seq[Path])(body: => T): T = {

@@ -252,7 +252,7 @@ class DirtyCompactSpec extends SparkSpec {
     assert(!lc.logged(spark, dir))
   }
 
-  test("dirty files of one table with different columns fail the compact before its journal") {
+  test("dirty files of one table with different columns each keep their own columns") {
     import graft.vector.VectorIndex
     val dir = tmp("graft-dc-cols") + "/idx"
     val day = java.sql.Date.valueOf("2024-05-01")
@@ -264,21 +264,23 @@ class DirtyCompactSpec extends SparkSpec {
     VectorIndex.append(rows(0L), dir)
     VectorIndex.append(rows(10L).withColumn("extras", concat(lit("x"), col("vec_id"))), dir)
     val dayDir = s"$dir/ingest_date=$day"
-    val before = dataFiles(dayDir)
+    def byColumns = dataFiles(dayDir).keys.map { f =>
+      spark.read.parquet(s"$dayDir/$f").columns.toSeq -> fileRows(s"$dayDir/$f") }.toMap
+    val before = byColumns
     assert(before.size == 2)
-    val rowsBefore = before.keys.map(f => f -> fileRows(s"$dayDir/$f")).toMap
-    VectorIndex.delete(spark, dir, Seq(3L, 13L).toDF("vec_id"))
-    val err = intercept[IllegalArgumentException](VectorIndex.compact(spark, dir))
-    assert(err.getMessage.contains("differ in columns"), err.getMessage)
-    // nothing changed: the same files, their rows and columns, and the log
-    assert(dataFiles(dayDir) == before)
-    before.keys.foreach(f => assert(fileRows(s"$dayDir/$f") == rowsBefore(f), s"$f changed"))
-    assert(before.keys.map(f => spark.read.parquet(s"$dayDir/$f").columns.toSet) ==
-      Set(Set("vec_id", "embedding", "data_type", "data_json"),
-        Set("vec_id", "embedding", "data_type", "data_json", "extras")))
-    assert(VectorIndex.Lifecycle.logged(spark, dir))
-    assert(!Files.exists(Paths.get(dir, "._journal")), "the journal was written")
-    assert(!VectorIndex.loadRecent(spark, dir, day).filter(col("vec_id").isin(3L, 13L))
-      .head(1).nonEmpty, "the log still masks the deleted ids")
+    val deleted = Set(3L, 13L)
+    VectorIndex.delete(spark, dir, deleted.toSeq.toDF("vec_id"))
+    VectorIndex.compact(spark, dir)
+    val after = byColumns
+    assert(dataFiles(dayDir).size == 2 && after.keySet == before.keySet,
+      s"each file keeps its own columns: ${after.keys}")
+    before.foreach { case (cols, rs) =>
+      assert(after(cols) == rs.filterNot(r => deleted(r.getLong(0))),
+        s"${cols.mkString(",")}: the kept rows, in file order")
+    }
+    assert(!VectorIndex.Lifecycle.logged(spark, dir), "the log stays")
+    assert(!Files.exists(Paths.get(dir, "._journal")) && !Files.exists(Paths.get(dir, "._stage")))
+    assert(VectorIndex.loadRecent(spark, dir, day).select("vec_id").as[Long].collect().toSet ==
+      (0L until 20L).toSet -- deleted, "every kept row reads back, no deleted id")
   }
 }

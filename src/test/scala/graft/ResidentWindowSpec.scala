@@ -47,19 +47,26 @@ class ResidentWindowSpec extends SparkSpec {
     bits(scan.as[GraftApi.SearchHit].collect().toSeq)
   }
 
-  /** searchData for each probe ≡ the scan at `anchor`; the Spark jobs the
-    * searches ran, in total.
+  /** searchIndex's hits, collected typed: what searchData must return. */
+  private def typed(dir: String, text: String, asOf: Date) =
+    bits(IndexPipeline.searchIndex(spark, dir, text, K, asOf).as[GraftApi.SearchHit].collect().toSeq)
+
+  /** searchData for each probe ≡ searchIndex collected typed ≡ the scan at
+    * `anchor`; the Spark jobs and SQL executions the searches ran, in total.
     */
   private def same(dir: String, probes: Seq[String], anchor: Date,
-      asOf: Date = null): Int = {
-    val (got, jobs) = JobCounter(spark)(
+      asOf: Date = null): (Int, Int) = {
+    val (got, jobs, sqls) = JobCounter.withSql(spark)(
       probes.map(p => bits(GraftApi.searchData(spark, dir, p, K, asOf).results)))
     probes.zip(got).foreach { case (p, g) =>
       assert(g.nonEmpty, s"no hits for '$p'")
+      assert(g == typed(dir, p, asOf), s"searchData differs from searchIndex for '$p'")
       assert(g == scanBits(dir, p, anchor), s"searchData differs from the scan for '$p'")
     }
-    jobs
+    (jobs, sqls)
   }
+
+  private val Held = (0, 0)
 
   private def text(i: Int) = docs(i).getString(1)
 
@@ -70,12 +77,13 @@ class ResidentWindowSpec extends SparkSpec {
     // index-leg pages on three days: each search reads nothing back
     (1 to 3).foreach { d =>
       IndexPipeline.indexRecords(page(d - 1), "text", s"day$d", dir, day(d))
-      assert(same(dir, probes, day(d)) == 0, s"a search after the day-$d append ran a job")
+      assert(same(dir, probes, day(d)) == Held,
+        s"a search after the day-$d append ran a job or a SQL execution")
     }
 
     // retention drops 2024-03-01; the held day goes with its directory
     assert(VectorIndex.retain(spark, dir, day(8)) == Seq("ingest_date=2024-03-01"))
-    assert(same(dir, probes, day(3)) == 0)
+    assert(same(dir, probes, day(3)) == Held)
 
     // another writer appends: the first search reads its files in one job,
     // the other searches read nothing
@@ -84,7 +92,8 @@ class ResidentWindowSpec extends SparkSpec {
       to_json(struct(col("doc_id"), col("text"))).as("data_json"),
       lit(day(4)).as("ingest_date"))
     VectorIndex.append(external, dir)
-    assert(same(dir, probes, day(4)) == 1, "searches after an external append: one job in all")
+    assert(same(dir, probes, day(4))._1 == 1, "searches after an external append: one job in all")
+    assert(same(dir, probes, day(4)) == Held)
 
     // a delete: the scan answers while the log exists; the id stays gone
     val deleted = 2L
@@ -104,10 +113,10 @@ class ResidentWindowSpec extends SparkSpec {
 
     // one more index-leg page
     IndexPipeline.indexRecords(page(4), "text", "day5", dir, day(5))
-    assert(same(dir, probes :+ text(44), day(5)) == 0)
+    assert(same(dir, probes :+ text(44), day(5)) == Held)
 
     // an explicit past anchor
-    same(dir, probes, day(3), asOf = day(3))
+    assert(same(dir, probes, day(3), asOf = day(3)) == Held)
   }
 
   test("a window over the byte bound is answered by the scan, correctly") {
@@ -127,12 +136,12 @@ class ResidentWindowSpec extends SparkSpec {
 
     val probes = Seq(text(3), "x x x")
     // every search scans: the over-bound window is never held
-    assert(same(dir, probes, day(1)) >= probes.size)
-    assert(same(dir, probes, day(1)) >= probes.size)
+    assert(same(dir, probes, day(1))._1 >= probes.size)
+    assert(same(dir, probes, day(1))._1 >= probes.size)
     // under the bound again, the window is held from the next search on
     bulk.head.delete()
     same(dir, probes, day(1))
-    assert(same(dir, probes, day(1)) == 0)
+    assert(same(dir, probes, day(1)) == Held)
   }
 
   test("a flat compact keeps a dirty day's clean files held; the next search reads the rewrites") {
@@ -149,7 +158,7 @@ class ResidentWindowSpec extends SparkSpec {
       new org.apache.hadoop.fs.Path(s"$dir/ingest_date=${day(d)}"))).filter(ResidentFiles.dataFile)
     def held = ResidentFiles.snapshot[Any](listed).keySet
     val probes = Seq(text(3), text(14), "spark table index")
-    assert(same(dir, probes, day(2)) == 1, "the first searches read the window in one job")
+    assert(same(dir, probes, day(2))._1 == 1, "the first searches read the window in one job")
     val before = listed.map(ResidentFiles.key).toSet
     assert(before.size == 3 && held == before)
 
@@ -169,9 +178,37 @@ class ResidentWindowSpec extends SparkSpec {
     val fresh = after.filter(f => rewritten(ResidentFiles.key(f)))
     assert(ResidentFiles.bytesHeld - held0 <= fresh.map(_.getLen).sum,
       "the search re-read files it held")
-    assert(same(dir, probes, day(2)) == 0)
+    assert(same(dir, probes, day(2)) == Held)
     probes.foreach(p => assert(!GraftApi.searchData(spark, dir, p, 60).results
       .exists(_.data_json.contains(s""""doc_id":${docs(3).getLong(0)},""")),
       "the deleted record stays gone"))
+  }
+
+  test("searchData ≡ searchIndex collected typed: a null-text row, no day directory, a missing index") {
+    // a null text indexes a null embedding, which never ranks
+    val dir = tmp("graft-resident-null")
+    val withNull = LocalFrame.of(spark, docSchema,
+      docs.slice(0, 10) :+ org.apache.spark.sql.Row(docs.last.getLong(0) + 1L, null))
+    IndexPipeline.indexRecords(withNull, "text", "page", dir, day(1))
+    val probes = Seq(text(3), "spark table index")
+    assert(same(dir, probes, day(1)) == Held)
+
+    // index rows written without day directories: the scan answers
+    val flat = tmp("graft-resident-flat")
+    page(1).select((col("doc_id") + 500L).as("vec_id"),
+        embedder.embedCol(col("text")).as("embedding"), lit("flat").as("data_type"),
+        to_json(struct(col("doc_id"), col("text"))).as("data_json"))
+      .coalesce(1).write.parquet(flat)
+    probes.foreach { p =>
+      val got = bits(GraftApi.searchData(spark, flat, p, K).results)
+      assert(got.nonEmpty && got == typed(flat, p, null), s"no-day layout differs for '$p'")
+    }
+
+    // a missing index fails as searchIndex does
+    val missing = tmp("graft-resident-missing")
+    val viaApi = intercept[Exception](GraftApi.searchData(spark, missing, "x", K))
+    val viaIndex = intercept[Exception](typed(missing, "x", null))
+    assert(viaApi.getClass == viaIndex.getClass && viaApi.getMessage == viaIndex.getMessage,
+      s"$viaApi vs $viaIndex")
   }
 }
